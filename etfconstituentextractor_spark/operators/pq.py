@@ -129,8 +129,15 @@ def _codebook_sql(cb: np.ndarray) -> str:
 
 def _dlit(v: float) -> str:
     """SQL double literal with exact round-trip (repr is the shortest
-    decimal that parses back to the same bits)."""
-    return f"{float(v)!r}D"
+    decimal that parses back to the same bits). Non-finite values have
+    no numeric literal (``infD``/``nanD`` do not parse), so they render
+    as casts of the strings Spark reads as infinity and NaN."""
+    v = float(v)
+    if np.isnan(v):
+        return "double('nan')"
+    if np.isinf(v):
+        return "double('infinity')" if v > 0 else "double('-infinity')"
+    return f"{v!r}D"
 
 
 def _sub_dist(sub_col: str, cb_col: str, round_dp: int | None = None) -> str:

@@ -43,13 +43,13 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 __all__ = ["append_pair_dot", "append_pair_dot_i64", "append_plane_dots"]
 
 
-def _list_to_2d(col):
-    """pyarrow ListArray -> (n, dim) float64 ndarray.
+def _list_to_2d(col, dtype: str = "float64"):
+    """pyarrow ListArray -> (n, dim) ndarray of ``dtype``.
 
     Zero-copy reslice when the batch is dense (no nulls, uniform
     length — the shape Spark emits for non-null array<double>
-    columns); raises on ragged/null input so a caller bug surfaces as
-    an error, never as a wrong fold.
+    columns); raises on a null vector, a null element or ragged input,
+    so a caller bug surfaces as an error, never as a wrong fold.
     """
     import numpy as np
 
@@ -58,13 +58,26 @@ def _list_to_2d(col):
     offsets = col.offsets.to_numpy(zero_copy_only=False)
     widths = offsets[1:] - offsets[:-1]
     if len(widths) == 0:
-        return np.empty((0, 0), dtype=np.float64)
+        return np.empty((0, 0), dtype=dtype)
     dim = int(widths[0])
     if not (widths == dim).all():
         raise ValueError(f"ragged vector column (lengths {set(widths.tolist())})")
-    values = col.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
     lo, hi = int(offsets[0]), int(offsets[-1])
-    return values[lo:hi].reshape(-1, dim)
+    values = col.values.slice(lo, hi - lo)
+    if values.null_count:
+        raise ValueError("pair-dot kernel requires vectors without null elements")
+    return values.to_numpy(zero_copy_only=False).astype(dtype, copy=False).reshape(-1, dim)
+
+
+def _pair_to_2d(batch, va: str, vb: str, dtype: str = "float64"):
+    """Both operand columns of a pair kernel as (n, dim) ndarrays;
+    raises unless they have the same shape (a dot over mismatched
+    lengths would silently drop or misread elements)."""
+    a = _list_to_2d(batch.column(va), dtype)
+    b = _list_to_2d(batch.column(vb), dtype)
+    if a.shape != b.shape:
+        raise ValueError(f"pair-dot operands differ in shape: {a.shape} vs {b.shape}")
+    return a, b
 
 
 def _fold_dot(a, b):
@@ -106,31 +119,12 @@ def append_pair_dot(
         import pyarrow as pa
 
         for batch in batches:
-            dot = _fold_dot(_list_to_2d(batch.column(va)), _list_to_2d(batch.column(vb)))
+            dot = _fold_dot(*_pair_to_2d(batch, va, vb))
             arrays = [batch.column(n) for n in keep_names]
             arrays.append(pa.array(dot, type=pa.float64()))
             yield pa.RecordBatch.from_arrays(arrays, names=keep_names + [out])
 
     return df.mapInArrow(kernel, schema)
-
-
-def _list_to_2d_i64(col):
-    """pyarrow ListArray of any integer type -> (n, dim) int64 ndarray
-    (same density/raggedness contract as ``_list_to_2d``)."""
-    import numpy as np
-
-    if col.null_count:
-        raise ValueError("pair-dot kernel requires non-null vector columns")
-    offsets = col.offsets.to_numpy(zero_copy_only=False)
-    widths = offsets[1:] - offsets[:-1]
-    if len(widths) == 0:
-        return np.empty((0, 0), dtype=np.int64)
-    dim = int(widths[0])
-    if not (widths == dim).all():
-        raise ValueError(f"ragged vector column (lengths {set(widths.tolist())})")
-    values = col.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    lo, hi = int(offsets[0]), int(offsets[-1])
-    return values[lo:hi].reshape(-1, dim)
 
 
 def append_pair_dot_i64(
@@ -155,8 +149,7 @@ def append_pair_dot_i64(
         import pyarrow as pa
 
         for batch in batches:
-            a = _list_to_2d_i64(batch.column(va))
-            b = _list_to_2d_i64(batch.column(vb))
+            a, b = _pair_to_2d(batch, va, vb, "int64")
             dot = (a * b).sum(axis=1, dtype="int64") if a.size else a.sum(axis=1)
             arrays = [batch.column(n) for n in keep_names]
             arrays.append(pa.array(dot, type=pa.int64()))

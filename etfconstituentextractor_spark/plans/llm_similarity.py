@@ -234,49 +234,6 @@ def _pqfp_recipe() -> str:
     return hashlib.md5(src.encode()).hexdigest()
 
 
-#: In-PROCESS memo of q70's driver-trained seed codebook (round-15
-#: verdict ask #5: cache PLAN-CONSTRUCTION literal tables in the
-#: builders, never results). train_pq_codebooks' hash-ordered sample
-#: is one collect job per build; within a session the codebook is a
-#: pure function of (corpus fingerprint, params, trainer source), so
-#: re-collecting it per bench run measures a cost no running system
-#: pays — a deployment trains once and serves. Process-local only
-#: (dies with the interpreter): every NEW bench/oracle invocation
-#: still derives it from parquet inside its own timed region, and the
-#: DuckDB oracle re-derives the same codebook relationally on every
-#: correctness run, so a stale entry cannot pass the hash.
-_PQ_CB_MEMO: dict[str, "object"] = {}
-
-
-def _pq_codebooks_memo(sf_dir: str, emb: DataFrame, train):
-    import hashlib
-    import inspect
-    import json
-
-    from etfconstituentextractor_spark.operators import pq as pq_mod
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
-
-    key = json.dumps(
-        {
-            "fp": table_fingerprint(sf_dir, "embeddings"),
-            "m": _PQ_M,
-            "ksub": _PQ_KSUB,
-            "sample_n": _PQ_KSUB,
-            "iters": 0,
-            # live trainer source: an algorithm edit invalidates the
-            # memo without a hand-bumped version (the _pqfp_recipe rule)
-            "recipe": hashlib.md5(inspect.getsource(pq_mod).encode()).hexdigest(),
-        },
-        sort_keys=True,
-    )
-    cb = _PQ_CB_MEMO.get(key)
-    if cb is None:
-        cb = train(emb, m=_PQ_M, ksub=_PQ_KSUB, sample_n=_PQ_KSUB, iters=0)
-        _PQ_CB_MEMO.clear()  # one corpus/config live at a time — no growth
-        _PQ_CB_MEMO[key] = cb
-    return cb
-
-
 def _pqfp_codebook_cached(spark, sf_dir: str, fcand, train) -> DataFrame:
     """The trained fixed-point codebook, cached by corpus fingerprint
     + training params — the q22 bucketed-tables / replay staged-chunks
@@ -487,7 +444,7 @@ def q70_similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REFINEMENT stays the pytest-only training surface, the q51/BPE
     # precedent), rounded-encode so both engines pick identical codes,
     # then the in-plan LUT-join ADC scan.
-    cb = _pq_codebooks_memo(sf_dir, emb, train_pq_codebooks)
+    cb = train_pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB, sample_n=_PQ_KSUB, iters=0)
     enc = pq_encode(
         emb.filter(F.col("vec_id") >= _N_QUERIES), cb, round_dp=9
     )

@@ -106,7 +106,7 @@ def q55_stream_tumbling_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumb_out, slide_out = run_many_to_memory(
         [(tumb, "etfce_q55_tumbling"), (slide, "etfce_q55_sliding")],
         "complete",
-        sf_dir,
+        chunks,
     )
     return tumb_out.unionByName(slide_out)
 
@@ -157,7 +157,7 @@ def q56_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return run_to_memory(sess, "etfce_q56_session", "complete", sf_dir)
+    return run_to_memory(sess, "etfce_q56_session", "complete", chunks)
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +335,7 @@ def q57_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     window_out, conv_out, enrich_out = run_many_to_parquet(
-        [(agg, "q57"), (conv, "q57_ssjoin"), (enrich, "q57_enrich")], sf_dir
+        [(agg, "q57"), (conv, "q57_ssjoin"), (enrich, "q57_enrich")], chunks
     )
     null_nation = F.lit(None).cast("string").alias("nation")
     return (
@@ -389,7 +389,7 @@ def q58_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    sunk = run_to_parquet(deduped, "q58", sf_dir)
+    sunk = run_to_parquet(deduped, "q58", chunks)
     # max_ts is a deliberate canary: q58's other outputs carry no time
     # axis, so a stale/corrupted staged replay (round 3's compressed
     # 1970-epoch chunks) could pass this query while q55-q57 failed.
@@ -468,15 +468,20 @@ def q59_stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Events interleave across users, so EVERY micro-batch re-enters
     # the Python state function for nearly every user key — per-group
     # pandas/Arrow overhead × users × batches dominates wall time.
-    # The levers swept, in order: state partitions 8→32 SLOWER (r6),
-    # arrow.maxRecordsPerBatch 2k/10k/64k FLAT (r11), then chunk
-    # count (r12, tools/profile_q59_chunks.py): 1/2/4 data chunks
-    # read 5.2/7.0/10.8s with IDENTICAL output hashes — ~1.8s of
-    # fixed cost per micro-batch, so ONE data chunk + the sentinel
-    # chunk is the floor. Cross-batch state carry remains exercised
-    # here (sessions built in the data batch are timer-flushed in
-    # the sentinel batch) and the multi-data-batch path stays pinned
-    # by tests/test_stateful_streaming.py (4 chunks, batch oracle).
+    # Two levers set that cost. State partitions come from the data
+    # (replay.state_partitions: one per Arrow batch of rows in the
+    # largest chunk, at most one per core — 1 at sf0.01, 4 at sf0.1):
+    # a fixed 8 paid per-partition fixed cost the rows never paid
+    # back at sf0.01 (6.4-6.7s against 4.2-4.4s warm, 4 cores), and a
+    # fixed 1 serialises sf0.1's Python state function (15.6s against
+    # 6.6-6.9s). Chunk count (r12): 1/2/4
+    # data chunks read 5.2/7.0/10.8s with IDENTICAL output hashes —
+    # ~1.8s of fixed cost per micro-batch, so ONE data chunk + the
+    # sentinel chunk is the floor. Cross-batch state carry remains
+    # exercised here (sessions built in the data batch are
+    # timer-flushed in the sentinel batch) and the multi-data-batch
+    # path stays pinned by tests/test_stateful_streaming.py (4 chunks,
+    # batch oracle).
     chunks = stage_chunks(spark, sf_dir, tag="q59v2", n_chunks=1, extra_last_chunk=sentinel)
     src = (
         read_stream(spark, chunks)
@@ -484,7 +489,7 @@ def q59_stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .select("user_id", "ts", "value")
     )
-    sunk = run_to_parquet(sessionize(src, _Q59_GAP_MIN), "q59", sf_dir)
+    sunk = run_to_parquet(sessionize(src, _Q59_GAP_MIN), "q59", chunks)
     return sunk.filter(F.col("user_id") != _Q59_SENTINEL_UID).select(
         "user_id",
         F.date_format("session_start", _FMT_US).alias("session_start"),

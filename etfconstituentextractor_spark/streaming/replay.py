@@ -29,6 +29,7 @@ test-local.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -222,52 +223,86 @@ def read_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:
     )
 
 
-#: state-store partition count for replay runs. A stateful streaming
-#: op creates shuffle.partitions state partitions PER BATCH; at replay
-#: volume (1e5-ish rows over a handful of micro-batches) the per-
-#: partition fixed cost dominates — 8 vs 32 partitions is ~2x wall
-#: time. A production deployment sizes this to sustained throughput
-#: instead (the count is frozen into the checkpoint at first start).
-REPLAY_SHUFFLE_PARTITIONS = 8
+#: the Arrow batch size the session pins (session.py); it is also the
+#: unit of state-partition sizing below.
+ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-class _replay_shuffle:
-    """Temporarily pin shuffle.partitions for a stream start (the
-    query captures the value at planning time), then restore.
+def partitions_for(rows: int, batch_rows: int, cores: int) -> int:
+    """State partitions for a micro-batch of ``rows`` rows:
+    ceil(rows / batch_rows), clamped to [1, cores].
 
-    ``n`` overrides the replay default: JVM-side stateful ops want FEW
-    partitions (per-partition state-store fixed cost dominates at
-    replay volume), but a PYTHON-side stateful op
-    (applyInPandasWithState) is throughput-bound on Python workers —
-    its wall time scales with partition count up to the core count, so
-    those callers pass a higher n."""
-
-    def __init__(self, spark, n: int | None = None):
-        self.spark = spark
-        self.n = n or REPLAY_SHUFFLE_PARTITIONS
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+    A stateful streaming op creates shuffle.partitions state
+    partitions, and each one costs a task, a state-store load and
+    commit, and delta/checksum files in EVERY micro-batch, whatever
+    rows it holds. Below one Arrow batch of rows, another partition
+    adds that fixed cost (and, for the Python-side stateful ops, a
+    Python round trip) but no vectorised work; above the core count
+    the extra partitions only queue as a second task wave. The count
+    is frozen into the checkpoint at first start, so a deployment
+    sizes it to its sustained batch the same way."""
+    if batch_rows <= 0:  # Spark's "no limit": one batch holds them all
+        return 1
+    return max(1, min(cores, -(-rows // batch_rows)))
 
 
-def run_to_memory(sdf: DataFrame, name: str, mode: str, sf_dir: str) -> DataFrame:
+def state_partitions(spark: SparkSession, chunk_dir: str) -> int:
+    """``partitions_for`` the largest staged chunk in ``chunk_dir`` —
+    each chunk is one micro-batch (``maxFilesPerTrigger=1``). Row
+    counts come from the parquet footers: a metadata read, no Spark
+    job."""
+    import pyarrow.parquet as pq
+
+    rows = max(
+        (
+            pq.read_metadata(os.path.join(chunk_dir, f)).num_rows
+            for f in os.listdir(chunk_dir)
+            if f.endswith(".parquet")
+        ),
+        default=0,
+    )
+    return partitions_for(
+        rows,
+        int(spark.conf.get(ARROW_BATCH_CONF)),
+        spark.sparkContext.defaultParallelism,
+    )
+
+
+@contextlib.contextmanager
+def _replay_shuffle(spark: SparkSession, chunk_dir: str):
+    """Pin shuffle.partitions to ``state_partitions`` of the staged
+    chunks for a stream start (the query captures the value at
+    planning time), then restore."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(state_partitions(spark, chunk_dir)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def scratch_dir(chunk_dir: str, name: str) -> str:
+    """A stream's own scratch directory (checkpoint, sink), named after
+    the staged chunks it replays — a sibling, never inside the
+    directory the file source lists."""
+    return f"{chunk_dir.rstrip('/')}_{name}"
+
+
+def run_to_memory(sdf: DataFrame, name: str, mode: str, chunk_dir: str) -> DataFrame:
     """Drain the stream into an in-memory table (bounded aggregate
     results only) and return it as a batch DataFrame."""
-    return run_many_to_memory([(sdf, name)], mode, sf_dir)[0]
+    return run_many_to_memory([(sdf, name)], mode, chunk_dir)[0]
 
 
 def run_many_to_memory(
-    named: list[tuple[DataFrame, str]], mode: str, sf_dir: str
+    named: list[tuple[DataFrame, str]], mode: str, chunk_dir: str
 ) -> list[DataFrame]:
-    """Drain several independent streams CONCURRENTLY into in-memory
-    tables; returns their batch DataFrames in input order. Raises
-    ValueError on an empty stream list (rather than a confusing
-    IndexError from the session lookup).
+    """Drain several independent streams over the chunks staged in
+    ``chunk_dir`` CONCURRENTLY into in-memory tables; returns their
+    batch DataFrames in input order. Raises ValueError on an empty
+    stream list (rather than a confusing IndexError from the session
+    lookup).
 
     Spark allows one stateful aggregation per stream, so a query
     needing two (q55's tumbling + sliding) runs two streams — but
@@ -280,9 +315,9 @@ def run_many_to_memory(
         raise ValueError("run_many_to_memory needs at least one stream")
     spark = named[0][0].sparkSession
     qs = []
-    with _replay_shuffle(spark):
+    with _replay_shuffle(spark, chunk_dir):
         for sdf, name in named:
-            ckpt = work_dir(sf_dir, f"ckpt_{name}")
+            ckpt = scratch_dir(chunk_dir, f"ckpt_{name}")
             _clean(ckpt)
             qs.append(
                 sdf.writeStream.format("memory")
@@ -297,32 +332,29 @@ def run_many_to_memory(
     return [spark.table(name) for _, name in named]
 
 
-def run_to_parquet(
-    sdf: DataFrame, tag: str, sf_dir: str, shuffle_partitions: int | None = None
-) -> DataFrame:
+def run_to_parquet(sdf: DataFrame, tag: str, chunk_dir: str) -> DataFrame:
     """Drain the stream into a parquet file sink (append mode — the
     scale-correct sink: nothing collects to the driver) and return the
     sink's contents."""
-    return run_many_to_parquet([(sdf, tag)], sf_dir, shuffle_partitions)[0]
+    return run_many_to_parquet([(sdf, tag)], chunk_dir)[0]
 
 
 def run_many_to_parquet(
-    tagged: list[tuple[DataFrame, str]],
-    sf_dir: str,
-    shuffle_partitions: int | None = None,
+    tagged: list[tuple[DataFrame, str]], chunk_dir: str
 ) -> list[DataFrame]:
-    """Drain several independent append-mode streams CONCURRENTLY into
-    parquet file sinks (the run_many_to_memory overlap, for sinks that
-    must not collect): all streams start before any is awaited, so the
-    per-micro-batch fixed costs overlap on the idle pool."""
+    """Drain several independent append-mode streams over the chunks
+    staged in ``chunk_dir`` CONCURRENTLY into parquet file sinks (the
+    run_many_to_memory overlap, for sinks that must not collect): all
+    streams start before any is awaited, so the per-micro-batch fixed
+    costs overlap on the idle pool."""
     if not tagged:
         raise ValueError("run_many_to_parquet needs at least one stream")
     spark = tagged[0][0].sparkSession
     outs, qs = [], []
-    with _replay_shuffle(spark, shuffle_partitions):
+    with _replay_shuffle(spark, chunk_dir):
         for sdf, tag in tagged:
-            out = work_dir(sf_dir, f"sink_{tag}")
-            ckpt = work_dir(sf_dir, f"ckpt_{tag}")
+            out = scratch_dir(chunk_dir, f"sink_{tag}")
+            ckpt = scratch_dir(chunk_dir, f"ckpt_{tag}")
             _clean(out)
             _clean(ckpt)
             outs.append(out)

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from etfconstituentextractor_spark.operators.pq import (
+    _codebook_lit,
     _hash_order_sample,
     pq_adc_topk,
     pq_encode,
@@ -144,3 +145,14 @@ def test_pq_adc_join_topk_matches_per_query_driver_path(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
+
+
+def test_codebook_literal_round_trips_non_finite(spark):
+    """A codebook holding inf/-inf/nan still plans, and every value —
+    finite ones included, bit for bit — reads back unchanged."""
+    cb = np.array([[1.5, np.inf, -0.0], [-np.inf, np.nan, 5e-324]])
+    got = np.array(
+        spark.range(1).select(_codebook_lit(cb).alias("cb")).first()["cb"], dtype=float
+    )
+    assert np.array_equal(got, cb, equal_nan=True)
+    assert np.array_equal(np.signbit(got), np.signbit(cb))  # -0.0 stays negative

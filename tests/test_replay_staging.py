@@ -25,6 +25,7 @@ import duckdb
 from etfconstituentextractor_spark.sources.tables import load
 from etfconstituentextractor_spark.streaming.replay import (
     _corpus_fingerprint,
+    partitions_for,
     stage_chunks,
     work_dir,
 )
@@ -155,6 +156,20 @@ def test_extra_chunk_layout_spans_corpus_plus_extra(spark, sf_dir):
     assert s_n == c_n + 1
     assert (s_min, s_max) == (c_min, c_max)
     assert s_max - s_min > datetime.timedelta(days=1)
+
+
+def test_state_partitions_rule():
+    """One state partition per Arrow batch of micro-batch rows,
+    never fewer than one, never more than the cores."""
+    batch, cores = 10_000, 4
+    assert partitions_for(0, batch, cores) == 1
+    assert partitions_for(1, batch, cores) == 1
+    assert partitions_for(batch, batch, cores) == 1
+    assert partitions_for(batch + 1, batch, cores) == 2
+    assert partitions_for(cores * batch, batch, cores) == cores
+    assert partitions_for(cores * batch + 1, batch, cores) == cores
+    # a batch size <= 0 is Spark's "no limit": every micro-batch fits one
+    assert partitions_for(cores * batch, 0, cores) == 1
 
 
 def test_corpus_text_is_free_of_bpe_separator(sf_dir):

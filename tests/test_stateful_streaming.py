@@ -64,11 +64,7 @@ def _batch_sessions(sf_dir: str) -> pd.DataFrame:
         con.close()
 
 
-def test_custom_sessionize_matches_batch(spark, sf_dir):
-    # events.parquet stores TIMESTAMP(NANOS); DuckDB truncates to
-    # micros exactly like the typed loader, so both sides see the
-    # same microsecond timestamps.
-    chunks = stage_chunks(spark, sf_dir, tag="stateful_test")
+def _sessionize_replay(spark, chunks: str, tag: str) -> pd.DataFrame:
     from pyspark.sql import functions as F
 
     src = (
@@ -77,10 +73,11 @@ def test_custom_sessionize_matches_batch(spark, sf_dir):
         .withWatermark("ts", "1 hour")
         .select("user_id", "ts", "value")
     )
-    got = run_to_parquet(sessionize(src, _GAP_MIN), "stateful_test", sf_dir).toPandas()
+    return run_to_parquet(sessionize(src, _GAP_MIN), tag, chunks).toPandas()
 
+
+def _assert_matches_batch(got: pd.DataFrame, sf_dir: str) -> None:
     want = _batch_sessions(sf_dir)
-    key = ["user_id", "session_start"]
     got_k = {
         (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6))
         for r in got.itertuples()
@@ -104,6 +101,43 @@ def test_custom_sessionize_matches_batch(spark, sf_dir):
     assert not missing, f"data-closed sessions not emitted: {missing[:5]}"
     # sanity: the operator emitted a meaningful share of all sessions
     assert len(got_k) >= 0.5 * len(want_k), (len(got_k), len(want_k))
+
+
+def test_custom_sessionize_matches_batch(spark, sf_dir):
+    # events.parquet stores TIMESTAMP(NANOS); DuckDB truncates to
+    # micros exactly like the typed loader, so both sides see the
+    # same microsecond timestamps.
+    chunks = stage_chunks(spark, sf_dir, tag="stateful_test")
+    _assert_matches_batch(_sessionize_replay(spark, chunks, "stateful_test"), sf_dir)
+
+
+def test_custom_sessionize_multi_partition_state(spark, sf_dir):
+    """The test corpora are small enough that replays size their state
+    to ONE partition (replay.state_partitions). Lowering the Arrow
+    batch size makes the same chunks need several, which keeps the
+    multi-partition state path (each user's rows routed to one
+    partition's store, every store committed per batch) under the
+    batch oracle."""
+    import os
+
+    from etfconstituentextractor_spark.streaming.replay import (
+        ARROW_BATCH_CONF,
+        scratch_dir,
+        state_partitions,
+    )
+
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    old = spark.conf.get(ARROW_BATCH_CONF)
+    spark.conf.set(ARROW_BATCH_CONF, "100")
+    try:
+        n = state_partitions(spark, chunks)
+        got = _sessionize_replay(spark, chunks, "stateful_parts")
+    finally:
+        spark.conf.set(ARROW_BATCH_CONF, old)
+    assert n > 1
+    state = os.path.join(scratch_dir(chunks, "ckpt_stateful_parts"), "state", "0")
+    assert sorted(int(d) for d in os.listdir(state) if d.isdigit()) == list(range(n))
+    _assert_matches_batch(got, sf_dir)
 
 
 def test_tws_sessionize_matches_v1_and_batch(spark, sf_dir):
@@ -155,7 +189,7 @@ def test_tws_sessionize_matches_v1_and_batch(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        got = run_to_parquet(sessionize_tws(src, _GAP_MIN), "tws_test", sf_dir).toPandas()
+        got = run_to_parquet(sessionize_tws(src, _GAP_MIN), "tws_test", chunks).toPandas()
     finally:
         if before is None:
             spark.conf.unset(provider_key)
@@ -191,7 +225,7 @@ def test_tws_sessionize_matches_v1_and_batch(spark, sf_dir):
         .withWatermark("ts", "1 hour")
         .select("user_id", "ts", "value")
     )
-    v1 = run_to_parquet(sessionize(src_v1, _GAP_MIN), "tws_v1_twin", sf_dir).toPandas()
+    v1 = run_to_parquet(sessionize(src_v1, _GAP_MIN), "tws_v1_twin", chunks_v1).toPandas()
     v1_k = {
         (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6))
         for r in v1.itertuples()
@@ -488,7 +522,7 @@ def test_stream_stream_interval_join_batch_equivalent(spark, sf_dir):
     ).select("c_uid", "c_id", "p_id")
     got = {
         (r.c_uid, r.c_id, r.p_id)
-        for r in run_to_parquet(joined, "ss_join_test", sf_dir).collect()
+        for r in run_to_parquet(joined, "ss_join_test", chunks).collect()
     }
 
     ev = load(spark, sf_dir, "events")
@@ -696,7 +730,7 @@ def test_stream_stream_left_outer_join_eviction_semantics(spark, sf_dir, tmp_pat
         for r in run_to_parquet(
             cside("view", "a").join(cside("click", "b"), cond, "leftOuter"),
             "ss_louter_test",
-            sf_dir,
+            chunks,
         ).collect()
     }
 
@@ -834,7 +868,7 @@ def test_stream_static_dimension_join(spark, sf_dir):
     )
     got = {
         r.tier: r.n
-        for r in run_to_memory(enriched, "etfce_ss_dim_test", "complete", sf_dir).collect()
+        for r in run_to_memory(enriched, "etfce_ss_dim_test", "complete", chunks).collect()
     }
     want = {
         r.tier: r.n
@@ -875,7 +909,7 @@ def test_funnel_stream_matches_batch(spark, sf_dir):
         .select("user_id", "ts", "event_type")
     )
     got_df = run_to_parquet(
-        funnel_stream(src, steps, flush_gap_minutes=60), "funnel_stream", sf_dir
+        funnel_stream(src, steps, flush_gap_minutes=60), "funnel_stream", chunks
     )
     got = {
         r.user_id: (r.stage, r.funnel_sec)

@@ -16,7 +16,10 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.operators.veckernel import append_pair_dot
+from etfconstituentextractor_spark.operators.veckernel import (
+    append_pair_dot,
+    append_pair_dot_i64,
+)
 
 _HOF = "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
@@ -108,6 +111,32 @@ def test_pair_dot_rejects_ragged(spark):
     ).coalesce(1)
     with pytest.raises(Exception, match="ragged"):
         append_pair_dot(df, "a", "b", "d").collect()
+
+
+_KERNELS = pytest.mark.parametrize(
+    "kernel, elem", [(append_pair_dot, "double"), (append_pair_dot_i64, "bigint")]
+)
+
+
+def _pair(spark, elem, a, b):
+    return spark.createDataFrame(
+        [(1, a, b)], "id bigint, a array<bigint>, b array<bigint>"
+    ).selectExpr("id", f"CAST(a AS array<{elem}>) AS a", f"CAST(b AS array<{elem}>) AS b")
+
+
+@_KERNELS
+def test_pair_dot_rejects_null_element(spark, kernel, elem):
+    df = _pair(spark, elem, [1, None], [1, 2])
+    with pytest.raises(Exception, match="without null elements"):
+        kernel(df, "a", "b", "d").collect()
+
+
+@_KERNELS
+def test_pair_dot_rejects_mismatched_lengths(spark, kernel, elem):
+    # b's extra element would otherwise be dropped without a word
+    df = _pair(spark, elem, [1, 2], [1, 2, 3])
+    with pytest.raises(Exception, match="differ in shape"):
+        kernel(df, "a", "b", "d").collect()
 
 
 def test_pair_dot_matches_python_fold(spark):
