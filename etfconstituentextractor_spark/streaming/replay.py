@@ -282,7 +282,7 @@ def _replay_shuffle(spark: SparkSession, chunk_dir: str):
         spark.conf.set(key, old)
 
 
-def scratch_dir(chunk_dir: str, name: str) -> str:
+def stream_dir(chunk_dir: str, name: str) -> str:
     """A stream's own scratch directory (checkpoint, sink), named after
     the staged chunks it replays — a sibling, never inside the
     directory the file source lists."""
@@ -317,7 +317,7 @@ def run_many_to_memory(
     qs = []
     with _replay_shuffle(spark, chunk_dir):
         for sdf, name in named:
-            ckpt = scratch_dir(chunk_dir, f"ckpt_{name}")
+            ckpt = stream_dir(chunk_dir, f"ckpt_{name}")
             _clean(ckpt)
             qs.append(
                 sdf.writeStream.format("memory")
@@ -353,8 +353,8 @@ def run_many_to_parquet(
     outs, qs = [], []
     with _replay_shuffle(spark, chunk_dir):
         for sdf, tag in tagged:
-            out = scratch_dir(chunk_dir, f"sink_{tag}")
-            ckpt = scratch_dir(chunk_dir, f"ckpt_{tag}")
+            out = stream_dir(chunk_dir, f"sink_{tag}")
+            ckpt = stream_dir(chunk_dir, f"ckpt_{tag}")
             _clean(out)
             _clean(ckpt)
             outs.append(out)

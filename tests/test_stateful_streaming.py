@@ -122,7 +122,7 @@ def test_custom_sessionize_multi_partition_state(spark, sf_dir):
 
     from etfconstituentextractor_spark.streaming.replay import (
         ARROW_BATCH_CONF,
-        scratch_dir,
+        stream_dir,
         state_partitions,
     )
 
@@ -135,7 +135,7 @@ def test_custom_sessionize_multi_partition_state(spark, sf_dir):
     finally:
         spark.conf.set(ARROW_BATCH_CONF, old)
     assert n > 1
-    state = os.path.join(scratch_dir(chunks, "ckpt_stateful_parts"), "state", "0")
+    state = os.path.join(stream_dir(chunks, "ckpt_stateful_parts"), "state", "0")
     assert sorted(int(d) for d in os.listdir(state) if d.isdigit()) == list(range(n))
     _assert_matches_batch(got, sf_dir)
 
