@@ -90,10 +90,8 @@ def hll_registers(
 ) -> DataFrame:
     """The sketch STATE: (group_cols..., __b, __reg) — one row per
     occupied register per group. Registers are a per-bucket MAX, so
-    two register frames max-merge (mergeable-sketch property;
-    `operators/incremental_hll.py` maintains a distinct-count MV
-    through a CDC feed this way). ``hll_finalize`` turns state into
-    the estimate columns."""
+    two register frames max-merge (mergeable-sketch property).
+    ``hll_finalize`` turns state into the estimate columns."""
     m, wbits, rmax, _ = _consts(p)
     # NULLs never enter the sketch (COUNT(DISTINCT) semantics; also
     # md5(NULL) is NULL and would consume a register differently per
