@@ -1,8 +1,8 @@
 """Versioned snapshot tables — manifest-committed parquet with
 time-travel reads (SURVEY.md §4 "layout levers"; the catalog/manifest
-indirection `operators/compaction.py`'s consistency contract says
-concurrent readers need — no reference counterpart, the reference
-overwrites one CSV per run, `ETFQuarterlyHoldingsExtractor.py:135-143`).
+indirection that lets readers run concurrently with rewrites — no
+reference counterpart, the reference overwrites one CSV per run,
+`ETFQuarterlyHoldingsExtractor.py:135-143`).
 
 This is the lakehouse commit protocol (Iceberg/Delta's core idea) in
 its minimal single-manifest form:
@@ -27,8 +27,8 @@ Scale posture: data writes are ordinary distributed Spark writes; the
 commit itself is O(1) metadata (one rename), independent of data
 size; reads plan from the manifest's file list so a version's scan
 never depends on directory listing races. All filesystem access goes
-through the Hadoop FileSystem API (object-store parity, the
-compaction.py discipline), with the single caveat real table formats
+through the Hadoop FileSystem API (object-store parity, never a
+local-only os.walk), with the single caveat real table formats
 solve harder: rename-without-overwrite is atomic on HDFS/local but
 only best-effort on some object stores — production systems use a
 catalog conditional-swap there; the protocol shape is identical.
@@ -79,9 +79,9 @@ than a scan-integrated position mask (an engine-owned format pushes
 the mask into the reader; the join spelling is what composes on stock
 Spark, AQE broadcasts the DV while it is small). ``snapshot_compact``
 consolidates small files as just another versioned commit — the
-reader-safe answer to the small-file problem operators/compaction.py
-refuses to touch near manifests. ``snapshot_vacuum`` is the retention
-sweep: expire old versions and remove unreferenced data dirs
+reader-safe answer to the small-file problem, where an in-place
+directory rewrite would race concurrent readers. ``snapshot_vacuum``
+is the retention sweep: expire old versions and remove unreferenced data dirs
 (deletion-vector dirs included), manifests-first so a crash can only
 leave garbage, never break a readable version.
 """
@@ -1726,9 +1726,8 @@ def snapshot_compact(
     files already at size carry over by relpath. Returns the new
     version, or None when fewer than two small files exist (nothing
     to consolidate). This is the reader-safe answer to the small-file
-    problem operators/compaction.py refuses to touch near manifests:
-    under the snapshot protocol, compaction is just another commit —
-    concurrent readers keep planning from whatever manifest they
+    problem: under the snapshot protocol, compaction is just another
+    commit — concurrent readers keep planning from whatever manifest they
     resolved, and the swap is the same atomic claim every commit uses
     (a racing writer surfaces as ConcurrentCommitError, never a
     half-compacted table).

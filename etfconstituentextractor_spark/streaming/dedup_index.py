@@ -243,7 +243,7 @@ def lsh_index_batch_handler(state_dir: str):
         # (~32 near-empty files per dir) made every later batch's base
         # read list dozens of KB-sized files (measured ~1s/drain). A
         # deployment whose deltas outgrow one file sizes this by delta
-        # volume or runs operators/compaction.py over the state dir.
+        # volume.
         out = (
             _tagged(pairs, "pairs")
             .unionByName(_tagged(bands_d, "bands"))
