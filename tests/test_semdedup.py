@@ -94,37 +94,6 @@ def test_semdedup_cap_excludes_cluster_but_keeps_rows(spark, sf_dir):
     assert all(r["is_kept"] and r["n_close"] == 0 for r in out)
 
 
-def test_semdedup_composes_with_lloyd_refined_centroids(spark, sf_dir):
-    """lloyd_kmeans' centroid frame is a drop-in for the seeds
-    argument (the q64-'semantic' upgrade path kept pytest-side: the
-    oracle can't replay Lloyd's iterations, so the refined variant is
-    covered here instead of demoting the driver leg to rows-only).
-    Invariants: one row per vector, keep-first holds per cluster, the
-    planted near-dup families still fire, and refined assignment
-    affinity beats raw seeds on this corpus."""
-    from etfconstituentextractor_spark.operators.kmeans import lloyd_kmeans
-
-    e = _vec(load(spark, sf_dir, "embeddings"))
-    total = e.count()
-    refined = lloyd_kmeans(e, N_SEEDS, 3)
-    assigned = assign_clusters(e, refined)
-    out = semantic_dedup(assigned, TAU, CAP).collect()
-    assert len(out) == total
-    by_cell: dict[int, list] = {}
-    for r in out:
-        by_cell.setdefault(r["cell"], []).append(r)
-    for rows in by_cell.values():
-        lowest = min(r["vec_id"] for r in rows)
-        assert next(r for r in rows if r["vec_id"] == lowest)["is_kept"]
-    assert any(not r["is_kept"] for r in out)
-
-    seeds_aff = (
-        assign_clusters(e, semantic_seeds(e, N_SEEDS)).agg(F.avg("cent_cos")).first()[0]
-    )
-    refined_aff = assigned.agg(F.avg("cent_cos")).first()[0]
-    assert refined_aff > seeds_aff
-
-
 def test_assign_clusters_broadcasts_seeds_and_never_shuffles_vectors(spark, sf_dir):
     e = _vec(load(spark, sf_dir, "embeddings"))
     plan = assign_clusters(e, semantic_seeds(e, N_SEEDS))._jdf.queryExecution().executedPlan().toString()
