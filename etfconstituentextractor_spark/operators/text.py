@@ -34,8 +34,8 @@ STOPWORDS = LANG_STOPWORDS["en"]
 def nonempty_tokens(col: str = "text") -> str:
     """THE corpus word-tokenization expression (whitespace split,
     empties dropped) as a SQL fragment — one definition for every
-    operator that tokenizes this way (substring dedup, unigram, the
-    q80 LM frame): a tokenization change must happen in one place."""
+    operator that tokenizes this way (substring dedup, the q80 LM
+    frame): a tokenization change must happen in one place."""
     return f"filter(split({col}, ' '), x -> x != '')"
 
 
