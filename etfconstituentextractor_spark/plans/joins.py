@@ -540,10 +540,9 @@ def q27_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q28 — interval-overlap join: user activity intervals (per event_type)
 # that overlap between two types for the same user. The per-user span
 # table is tiny (≤ types² rows per user), so the plain equi-join on
-# user + overlap predicate is the right plan; for large×large overlap
-# joins without an equi key, use operators/intervals.py
-# (bucketed_interval_join — coarse-bucket equi-prejoin, unit-tested
-# against the naive cross+filter).
+# user + overlap predicate is the right plan, and the one kept on
+# purpose: no registered query joins large×large intervals without an
+# equi key, which is what a coarse-bucket equi-prejoin would be for.
 # ---------------------------------------------------------------------------
 @query(
     "q28_join_interval_overlap",

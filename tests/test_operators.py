@@ -140,46 +140,6 @@ def test_decode_stub_refuses_real_decode():
         _decode_meta(b"abc", real_decode=True)
 
 
-def test_bucketed_interval_join_vs_naive(spark):
-    """Equi-bucket formulation must produce exactly the naive
-    cross+filter result, once per pair, across bucket boundaries."""
-    from etfconstituentextractor_spark.operators.intervals import bucketed_interval_join
-
-    left = spark.createDataFrame(
-        [(1, 0, 5), (2, 10, 30), (3, 95, 105), (4, 50, 50)],
-        "lid bigint, ls bigint, le bigint",
-    )
-    right = spark.createDataFrame(
-        [(10, 4, 12), (11, 28, 29), (12, 100, 200), (13, 60, 70), (14, 50, 50)],
-        "rid bigint, rs bigint, re bigint",
-    )
-    got = sorted(
-        (r.lid, r.rid)
-        for r in bucketed_interval_join(
-            left, right, l_start="ls", l_end="le", r_start="rs", r_end="re",
-            bucket_width=10,
-        ).collect()
-    )
-    naive = sorted(
-        (r.lid, r.rid)
-        for r in left.crossJoin(right)
-        .filter("ls <= re AND rs <= le")
-        .collect()
-    )
-    assert got == naive == [(1, 10), (2, 10), (2, 11), (3, 12), (4, 14)]
-
-
-def test_bucketed_interval_join_rejects_column_overlap(spark):
-    import pytest
-
-    from etfconstituentextractor_spark.operators.intervals import bucketed_interval_join
-
-    df = spark.createDataFrame([(1, 2, 3)], "a bigint, s bigint, e bigint")
-    with pytest.raises(ValueError, match="rename"):
-        bucketed_interval_join(df, df, l_start="s", l_end="e", r_start="s",
-                               r_end="e", bucket_width=10)
-
-
 def test_connected_components_micro(spark):
     from etfconstituentextractor_spark.operators.components import connected_components
 

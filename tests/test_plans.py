@@ -260,31 +260,6 @@ def test_connected_components_raises_on_truncation(spark):
     assert set(labels.values()) == {0}
 
 
-def test_bucketed_interval_join_exact_at_large_magnitude(spark):
-    """Bucket assignment uses exact integer floor-division: near 2^53
-    double division would round across a bucket boundary and miss the
-    pair."""
-    from etfconstituentextractor_spark.operators.intervals import bucketed_interval_join
-
-    # 2^53 + 1 is not representable as a double; double floor-div by 10
-    # would place both endpoints in the same bucket as 2^53 and can
-    # mis-bucket. The overlap below must be found regardless.
-    base = 2**53
-    left = spark.createDataFrame([(1, base + 1, base + 5)], "lid long, ls long, le long")
-    right = spark.createDataFrame([(2, base + 3, base + 9)], "rid long, rs long, re long")
-    got = bucketed_interval_join(
-        left, right, l_start="ls", l_end="le", r_start="rs", r_end="re", bucket_width=10
-    ).collect()
-    assert [(r.lid, r.rid) for r in got] == [(1, 2)]
-    # negative bounds keep floor (not truncate-toward-zero) semantics
-    nleft = spark.createDataFrame([(1, -15, -11)], "lid long, ls long, le long")
-    nright = spark.createDataFrame([(2, -12, -2)], "rid long, rs long, re long")
-    got2 = bucketed_interval_join(
-        nleft, nright, l_start="ls", l_end="le", r_start="rs", r_end="re", bucket_width=10
-    ).collect()
-    assert [(r.lid, r.rid) for r in got2] == [(1, 2)]
-
-
 def test_q72_ivf_broadcasts_centroids_and_queries(spark, sf_dir):
     """IVF scale posture: centroid and probe frames broadcast; the big
     vector side joins them without shuffling its vectors; no Python in

@@ -105,38 +105,6 @@ def test_parse_money_matches_duckdb(spark, strings):
     assert got == want
 
 
-@settings(**_SETTINGS)
-@given(
-    left=st.lists(st.tuples(st.integers(0, 80), st.integers(0, 40)), min_size=1, max_size=10),
-    right=st.lists(st.tuples(st.integers(0, 80), st.integers(0, 40)), min_size=1, max_size=10),
-    width=st.sampled_from([1, 7, 10, 100]),
-)
-def test_bucketed_interval_join_matches_naive(spark, left, right, width):
-    """The equi-bucket overlap join emits exactly the naive
-    cross+filter pairs, once each, for arbitrary intervals and bucket
-    widths (boundary-crossing, zero-length, containment)."""
-    from etfconstituentextractor_spark.operators.intervals import bucketed_interval_join
-
-    ldf = spark.createDataFrame(
-        [(i, s, s + d) for i, (s, d) in enumerate(left)], "lid bigint, ls bigint, le bigint"
-    )
-    rdf = spark.createDataFrame(
-        [(i, s, s + d) for i, (s, d) in enumerate(right)], "rid bigint, rs bigint, re bigint"
-    )
-    got = sorted(
-        (r.lid, r.rid)
-        for r in bucketed_interval_join(
-            ldf, rdf, l_start="ls", l_end="le", r_start="rs", r_end="re",
-            bucket_width=width,
-        ).collect()
-    )
-    want = sorted(
-        (r.lid, r.rid)
-        for r in ldf.crossJoin(rdf).filter("ls <= re AND rs <= le").collect()
-    )
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # connected_components (q65's engine) vs an independent union-find.
 # ---------------------------------------------------------------------------
