@@ -18,8 +18,10 @@ Layout
                    dedup families, similarity search, text analysis).
 - ``plans``      — the named query catalog (the driver-facing surface).
 - ``streaming``  — Structured Streaming replay + windowed queries.
-- ``pipeline``   — the reference's document→rows scraper as a distributed
-                   mapInPandas stage with injectable fetch.
+- ``pipeline``   — the corpus-curation pipeline as one audited plan.
+
+The engine starts from corpus tables; fetching documents over HTTP is
+outside it.
 """
 
 from etfconstituentextractor_spark.session import get_session

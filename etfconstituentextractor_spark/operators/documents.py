@@ -6,10 +6,10 @@ sequential scraper: per filing it fetches HTML (:58-63), parses a DOM
 N holding rows (:87-130), skipping failures (:61-63, :80-82). Here the
 same capability is a distributed pipeline stage:
 
-- **fetch is injectable** — tests/queries render deterministic fixture
-  HTML as a DataFrame column (`render_filing_html`), production would
-  fetch inside the same `mapInPandas` stage (per-partition HTTP
-  session, executor-side). No network is required or used here.
+- **fetch is outside the engine** — tests/queries render deterministic
+  fixture HTML as a DataFrame column (`render_filing_html`); the stage
+  parses an HTML column whatever produced it. No network is required
+  or used here.
 - **parse runs on executors** via `mapInPandas` (Arrow batches in/out),
   one task per partition of the filing index — the parallelization
   point the reference lacks (its driver-side `iterrows` loop, :153-158).

@@ -12,9 +12,9 @@ decode stage (`plans/multimodal.py`) and is out of scope here.
 No reference counterpart (the reference republishes scraped filings
 verbatim); SURVEY.md §2B "LLM-pipeline" tier. The synthetic
 `documents` corpus contains no PII-shaped strings (verified: zero
-digits), so this operator is exercised by planted-fixture unit tests
-(`tests/test_pii.py`) rather than a registered driver query — the
-same treatment as the HTTP fetch stage (`operators/fetch.py`).
+digits), so q84 (`plans/llm_text.py`) plants PII-shaped text in both
+engines before scrubbing, and the planted-fixture unit tests
+(`tests/test_pii.py`) cover each pattern.
 
 Pattern order matters when redacting: longer/more-specific patterns
 run first so a 16-digit card number is not first mangled by the
