@@ -39,24 +39,29 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
+#: Plan modules whose @query decorators make up the catalog, in
+#: registration order.
+PLAN_MODULES = (
+    "relational",
+    "joins",
+    "aggregates",
+    "windows",
+    "llm_text",
+    "llm_sampling",
+    "llm_refresh",
+    "llm_dedup",
+    "llm_similarity",
+    "udf_surface",
+    "multimodal",
+    "streaming_queries",
+    "document_pipeline",
+    "pipeline_query",
+)
+
+
 def load_catalog() -> None:
     """Import every plan module so its @query decorators run."""
     import importlib
 
-    for mod in (
-        "relational",
-        "joins",
-        "aggregates",
-        "windows",
-        "llm_text",
-        "llm_sampling",
-        "llm_refresh",
-        "llm_dedup",
-        "llm_similarity",
-        "udf_surface",
-        "multimodal",
-        "streaming_queries",
-        "document_pipeline",
-        "pipeline_query",
-    ):
+    for mod in PLAN_MODULES:
         importlib.import_module(f"etfconstituentextractor_spark.plans.{mod}")
