@@ -608,6 +608,11 @@ def main() -> None:
         # measurement protocol
         "catalog_fp": _catalog_fingerprint(),
         "bench_fp": _bench_fingerprint(),
+        # host keys for minwin: a 4-core window's minima must never mix
+        # with 32-core windows' (a 4-core 138.5s run once merged with
+        # two 32-core windows into a "coherent" 60.9s headline)
+        "cpus": len(os.sched_getaffinity(0)),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
         **settle,
     }
     line = json.dumps(payload)
@@ -679,13 +684,20 @@ def _write_minwin_summary(outdir: str, payload: dict) -> None:
     added to prevent. Windows predating the bench_fp stamp are
     excluded from the headline (they survive in the cross-commit
     view); the coherent set therefore resets whenever the harness
-    semantics change, which is the point."""
+    semantics change, which is the point.
+
+    Coherence also requires the window's ``cpus`` and
+    ``defaultParallelism`` to equal the current run's, so windows from
+    hosts or core counts other than this run's never feed its minima.
+    Windows predating that stamp are excluded like unstamped bench_fp
+    windows."""
     import glob
 
     sf = payload.get("sf")
     fp = payload.get("catalog_fp")
     bfp = payload.get("bench_fp")
     order = payload.get("order")
+    host = (payload.get("cpus"), payload.get("defaultParallelism"))
     runs = []  # newest 8 windows at this SF, any code (cross-commit view)
     coherent = []  # newest 512 COHERENT windows — scans as deep as needed:
     # aging-out exists to drop numbers from displaced code, but a
@@ -726,6 +738,8 @@ def _write_minwin_summary(outdir: str, payload: dict) -> None:
             and r.get("order") == order
             and bfp
             and r.get("bench_fp") == bfp
+            and None not in host
+            and (r.get("cpus"), r.get("defaultParallelism")) == host
         ):
             coherent.append((os.path.basename(p), r))
     if not runs:
@@ -742,6 +756,8 @@ def _write_minwin_summary(outdir: str, payload: dict) -> None:
         "catalog_fp": fp,
         "bench_fp": bfp,
         "order": order,
+        "cpus": host[0],
+        "defaultParallelism": host[1],
         "windows": [f for f, _ in coherent],
         "window_rev": {f: r.get("git_rev") for f, r in coherent},
         "value": round(sum(mins.values()), 3),

@@ -27,6 +27,8 @@ def _run_file(
     catalog_fp="fp-cur",
     bench_fp="bfp-cur",
     order="default",
+    cpus=4,
+    default_parallelism=4,
 ):
     payload = {
         "sf": sf,
@@ -35,6 +37,8 @@ def _run_file(
         "catalog_fp": catalog_fp,
         "bench_fp": bench_fp,
         "order": order,
+        "cpus": cpus,
+        "defaultParallelism": default_parallelism,
     }
     with open(os.path.join(outdir, name), "w") as fh:
         fh.write(json.dumps(payload) + "\n")
@@ -96,7 +100,10 @@ def test_minwin_headline_requires_matching_order_and_bench_fp(tmp_path):
     minima could mix orderings and harness versions. Coherence now
     also requires order equality and a matching bench_fp; windows
     predating the bench_fp stamp are excluded from the headline (they
-    survive in the cross-commit view)."""
+    survive in the cross-commit view). Coherence also requires the
+    window's cpus and defaultParallelism to equal the current run's:
+    a window from another core count, or one predating that stamp, is
+    not coherent either."""
     out = str(tmp_path)
     # same engine source, but rotated execution order — q59's min here
     # must NOT feed the default-order headline
@@ -108,6 +115,15 @@ def test_minwin_headline_requires_matching_order_and_bench_fp(tmp_path):
     # same engine source, a DIFFERENT harness semantics hash
     _run_file(out, "run_20260103T000000_1.json", {"q59": 0.8, "q01": 1.4},
               bench_fp="bfp-old")
+    # same engine source and harness, but a 32-core host
+    _run_file(out, "run_20260103T060000_1.json", {"q59": 0.6, "q01": 0.9},
+              cpus=32, default_parallelism=32)
+    # same core count, but a different local[N] parallelism
+    _run_file(out, "run_20260103T120000_1.json", {"q59": 0.9, "q01": 1.0},
+              default_parallelism=8)
+    # same engine source and harness, predating the host stamp
+    _run_file(out, "run_20260103T180000_1.json", {"q59": 1.0, "q01": 1.1},
+              cpus=None, default_parallelism=None)
     # two fully coherent windows
     _run_file(out, "run_20260104T000000_1.json", {"q59": 1.8, "q01": 1.2})
     cur = _run_file(out, "run_20260105T000000_1.json", {"q59": 1.6, "q01": 1.4})
@@ -120,6 +136,7 @@ def test_minwin_headline_requires_matching_order_and_bench_fp(tmp_path):
         "run_20260104T000000_1.json", "run_20260105T000000_1.json",
     }
     assert s["order"] == "default" and s["bench_fp"] == "bfp-cur"
+    assert s["cpus"] == 4 and s["defaultParallelism"] == 4
     # the mixed view still exists, explicitly named
     assert s["queries_cross_commit"]["q59"] == 0.5
 
