@@ -81,9 +81,9 @@ Spark, AQE broadcasts the DV while it is small). ``snapshot_compact``
 consolidates small files as just another versioned commit — the
 reader-safe answer to the small-file problem, where an in-place
 directory rewrite would race concurrent readers. ``snapshot_vacuum``
-is the retention sweep: expire old versions and remove unreferenced data dirs
-(deletion-vector dirs included), manifests-first so a crash can only
-leave garbage, never break a readable version.
+is the retention sweep: expire old versions and remove unreferenced
+data dirs (deletion-vector dirs included), manifests-first so a crash
+can only leave garbage, never break a readable version.
 """
 
 from __future__ import annotations
