@@ -35,24 +35,17 @@ def _module_files() -> dict[str, Path]:
     return mods
 
 
-def _imported_names(path: Path, module: str) -> set[str]:
-    """Every dotted name an import statement in ``path`` may load."""
-    is_pkg = path.name == "__init__.py"
+def _imported_names(path: Path) -> set[str]:
+    """Every dotted name an import statement in ``path`` may load (the
+    package uses absolute imports only)."""
     names: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
-        elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = module.split(".")
-                drop = node.level - 1 if is_pkg else node.level
-                base = base[: len(base) - drop] if drop else base
-                prefix = ".".join(base + ([node.module] if node.module else []))
-            else:
-                prefix = node.module or ""
-            names.add(prefix)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names.add(node.module)
             # ``from pkg import sub`` loads the submodule ``pkg.sub``.
-            names.update(f"{prefix}.{alias.name}" for alias in node.names)
+            names.update(f"{node.module}.{alias.name}" for alias in node.names)
     return names
 
 
@@ -67,7 +60,7 @@ def _reached(mods: dict[str, Path], roots: list[str]) -> set[str]:
             mod = ".".join(parts[:i])
             if mod in mods and mod not in seen:
                 seen.add(mod)
-                todo.extend(_imported_names(mods[mod], mod))
+                todo.extend(_imported_names(mods[mod]))
     return seen
 
 
