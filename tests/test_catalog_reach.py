@@ -7,6 +7,12 @@ the checked queries can run. A module outside that import closure is
 reached by nothing but its own tests, so it must either become a leg of
 a registered query or be deleted.
 
+One cluster is named as outside the catalog on purpose: ``media`` and
+the codecs and fingerprints built on it, which no query decodes through
+and which are checked by their own tests only. The test pins that set
+exactly, so a new unreached module fails it, and so does a named module
+that is deleted or wired in without the name leaving the list.
+
 The graph is static: it parses every ``.py`` file under the package and
 follows ``import`` / ``from ... import`` statements anywhere in the
 file, including those inside function bodies, without importing
@@ -22,6 +28,11 @@ from etfconstituentextractor_spark.plans.registry import PLAN_MODULES
 
 PKG = "etfconstituentextractor_spark"
 PKG_DIR = Path(__file__).resolve().parents[1] / PKG
+
+OUTSIDE_CATALOG = frozenset(
+    f"{PKG}.operators.{m}"
+    for m in ("media", "adpcm", "gif", "jpeg", "png", "vp8l", "phash", "audio_fp")
+)
 
 
 def _module_files() -> dict[str, Path]:
@@ -68,8 +79,11 @@ def test_every_engine_module_is_reachable_from_the_catalog():
     mods = _module_files()
     roots = [f"{PKG}.plans.registry"] + [f"{PKG}.plans.{m}" for m in PLAN_MODULES]
     assert all(r in mods for r in roots), roots
-    unreached = sorted(set(mods) - _reached(mods, roots))
-    assert not unreached, (
-        f"{len(unreached)} engine module(s) no registered query reaches: "
-        f"{unreached}; wire each into a hash-checked query or delete it"
+    unreached = set(mods) - _reached(mods, roots)
+    orphans = sorted(unreached - OUTSIDE_CATALOG)
+    assert not orphans, (
+        f"{len(orphans)} engine module(s) no registered query reaches: "
+        f"{orphans}; wire each into a hash-checked query or delete it"
     )
+    stale = sorted(OUTSIDE_CATALOG - unreached)
+    assert not stale, f"drop these from OUTSIDE_CATALOG: {stale}"
