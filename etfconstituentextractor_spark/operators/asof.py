@@ -12,6 +12,12 @@ range predicate. This beats ``pd.merge_asof`` inside
 ``applyInPandas`` (which shuffles the same data AND crosses the
 Python boundary) and beats the naive non-equi join (quadratic per
 key).
+
+A tolerance is not a second join: for a backward as-of the only
+candidate inside a tolerance window is the overall last match, so
+``within_tolerance`` is a predicate over the one carried timestamp
+(``F.when(within_tolerance(...), payload)``), and the carry runs once
+however many tolerances a query reports.
 """
 
 from __future__ import annotations
@@ -28,7 +34,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: dict[str, str],
-    tolerance: Column | None = None,
     right_tiebreak: str | None = None,
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
@@ -37,8 +42,6 @@ def asof_join(
     rows keep null payloads (LEFT semantics).
 
     right_payload maps output column name -> right column name.
-    tolerance: optional max ``left_ts - right_ts`` as a Column
-    (e.g. ``F.expr("INTERVAL 1 HOUR")``); older matches are nulled.
     right_tiebreak: right column that breaks ties among right rows
     sharing (key, right_ts) — the row with the LARGEST value wins.
     Defaults to the first right_payload source column, so the carried
@@ -95,28 +98,23 @@ def asof_join(
     for out in right_payload:
         unioned = unioned.withColumn(out, F.last(payload_tmp[out], ignorenulls=True).over(w))
 
-    result = unioned.filter(F.col("__side") == 0)
-
-    if tolerance is not None:
-        # Identify the carried right timestamp to apply the tolerance.
-        ts_out = next(
-            (out for out, rc in right_payload.items() if rc == right_ts), None
-        )
-        if ts_out is None:
-            raise ValueError("tolerance requires right_ts to be part of right_payload")
-        # materialize the flag first — nulling the carried timestamp
-        # in-place would corrupt the condition for the later columns
-        result = result.withColumn(
-            "__too_old",
-            F.col("__t").cast("timestamp") - F.col(ts_out).cast("timestamp") > tolerance,
-        )
-        for out in right_payload:
-            result = result.withColumn(
-                out, F.when(F.col("__too_old"), F.lit(None)).otherwise(F.col(out))
-            )
-
-    return result.select(
+    return unioned.filter(F.col("__side") == 0).select(
         *on_cols,
         *left_rest,
         *right_payload.keys(),
     )
+
+
+def within_tolerance(left_ts: str, carried_ts: str, tolerance: Column) -> Column:
+    """True where an as-of match is at most ``tolerance`` older than
+    its left row: ``left_ts - carried_ts <= tolerance``, with
+    ``carried_ts`` the right timestamp carried through ``asof_join``'s
+    payload and ``tolerance`` an interval Column (e.g.
+    ``F.expr("INTERVAL 1 HOUR")``). Both sides go through
+    ``cast("timestamp")``, so bigint (seconds) and ``timestamp_ntz``
+    timestamps compare alike. NULL where there is no match, so
+    ``F.when(within_tolerance(...), payload)`` nulls unmatched and
+    too-old rows exactly like SQL's ``CASE WHEN gap <= tol THEN ...``.
+    """
+    gap = F.col(left_ts).cast("timestamp") - F.col(carried_ts).cast("timestamp")
+    return gap <= tolerance

@@ -333,32 +333,37 @@ def epoch_shard_shuffle(
     )
 
 
-def temperature_rates(
-    counts: Mapping[str, int], alpha: float, keep_fraction: float = 1.0
-) -> dict[str, float]:
-    """Temperature-weighted mixture rates: sampled share of stratum s
-    is proportional to count(s)**alpha — the standard multilingual /
-    multi-source rebalancing scheme (alpha=1 keeps natural
-    proportions, alpha=0 equalizes strata, alpha~0.3 is the usual
-    compromise). Returns per-stratum KEEP rates for
-    ``hash_rate_sample`` / ``hash_oversample`` such that the total
-    kept volume is ``keep_fraction`` of the corpus; scarce strata may
-    get rates above 1 (epochs — feed those to ``hash_oversample``).
+def temperature_thresholds(
+    counts: DataFrame, *, strat_col: str, alpha: float, keep_fraction: float = 1.0
+) -> DataFrame:
+    """Temperature-weighted mixture thresholds, built in the plan:
+    sampled share of stratum s is proportional to count(s)**alpha —
+    the standard multilingual / multi-source rebalancing scheme
+    (alpha=1 keeps natural proportions, alpha=0 equalizes strata,
+    alpha~0.3 is the usual compromise).
 
-    Driver-side math over per-stratum totals (a handful of scalars —
-    the aggregate that produced them is the only cluster work).
+    ``counts`` holds one row per stratum: ``strat_col`` and its row
+    count ``n``. Returns ``strat_col``, the KEEP ``rate`` (total kept
+    volume is ``keep_fraction`` of the corpus; scarce strata may get
+    rates above 1 — epochs) and ``thresh``, the bucket bound
+    ``ROUND(ROUND(rate, 4) * BUCKETS)``: rounding at 4 dp makes
+    rate·BUCKETS integer-exact, so engines that differ in pow()'s last
+    ulp still derive the same thresholds. Join it (broadcast — one row
+    per stratum) on the stratum and keep ``bucket < thresh``. The two
+    totals are windows over the whole count frame, so nothing is
+    collected and building the plan starts no job.
     """
-    if not counts:
-        return {}
     if alpha < 0:
         raise ValueError(f"alpha must be >= 0, got {alpha}")
-    total = sum(counts.values())
-    weights = {s: (n ** alpha if n > 0 else 0.0) for s, n in counts.items()}
-    wsum = sum(weights.values())
-    if wsum == 0 or total == 0:
-        return {s: 0.0 for s in counts}
-    budget = keep_fraction * total
-    return {
-        s: (budget * weights[s] / wsum) / counts[s] if counts[s] else 0.0
-        for s in counts
-    }
+    n = F.col("n")
+    everything = W.partitionBy()
+    total = F.sum(n).over(everything)
+    wsum = F.sum("__w").over(everything)
+    rate = F.when((n == 0) | (total == 0) | (wsum == 0), F.lit(0.0)).otherwise(
+        F.lit(keep_fraction) * total * F.col("__w") / wsum / n
+    )
+    return (
+        counts.withColumn("__w", F.when(n > 0, F.pow(n, F.lit(alpha))).otherwise(F.lit(0.0)))
+        .select(strat_col, rate.alias("rate"))
+        .withColumn("thresh", F.round(F.round("rate", 4) * BUCKETS).cast("bigint"))
+    )

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.functions.parity import dec, dsum
-from etfconstituentextractor_spark.operators.asof import asof_join
+from etfconstituentextractor_spark.operators.asof import asof_join, within_tolerance
 from etfconstituentextractor_spark.plans.registry import query
 from etfconstituentextractor_spark.sources.tables import load
 
@@ -485,12 +485,12 @@ def q26_join_nonequi_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # simultaneous) click by the same user. Implemented distributedly in
 # operators/asof.py (union + last() over an ordered window — one shuffle
 # on the key, no per-group pandas); oracle is DuckDB's native ASOF JOIN.
-# Both operator branches run under the oracle: the unbounded backward
-# as-of AND the tolerance branch (matches older than 1 hour nulled),
-# reconciled on the unique purchase key. The oracle spells tolerance as
-# a gap CASE over the native ASOF result — for a backward as-of the
-# only candidate inside the tolerance window is the overall last match,
-# so the two formulations provably coincide.
+# The 1-hour tolerance is a predicate over that single carry
+# (asof.within_tolerance), not a second as-of pass: for a backward
+# as-of the only candidate inside the tolerance window is the overall
+# last match, so the oracle's gap CASE over the native ASOF result and
+# the F.when over the carried click coincide. Plan: one union of two
+# pushed-filter scans, one Exchange on user_id, one Sort, one Window.
 # ---------------------------------------------------------------------------
 @query(
     "q27_join_asof",
@@ -515,25 +515,24 @@ def q27_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
     )
-    base = asof_join(
+    carried = asof_join(
         purchases,
         clicks,
         on="user_id",
         left_ts="purchase_ts",
         right_ts="click_ts",
         right_payload={"last_click_ts": "click_ts", "last_click_id": "click_id"},
-        tolerance=None,
     )
-    tol = asof_join(
-        purchases,
-        clicks,
-        on="user_id",
-        left_ts="purchase_ts",
-        right_ts="click_ts",
-        right_payload={"click_ts_1h": "click_ts", "click_id_1h": "click_id"},
-        tolerance=F.expr("INTERVAL 1 HOUR"),
-    ).select("purchase_id", "click_ts_1h", "click_id_1h")
-    return base.join(tol, "purchase_id")
+    in_1h = within_tolerance("purchase_ts", "last_click_ts", F.expr("INTERVAL 1 HOUR"))
+    return carried.select(
+        "purchase_id",
+        "user_id",
+        "purchase_ts",
+        "last_click_ts",
+        "last_click_id",
+        F.when(in_1h, F.col("last_click_ts")).alias("click_ts_1h"),
+        F.when(in_1h, F.col("last_click_id")).alias("click_id_1h"),
+    )
 
 
 # ---------------------------------------------------------------------------

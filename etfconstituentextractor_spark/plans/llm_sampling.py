@@ -19,10 +19,11 @@ from etfconstituentextractor_spark.operators.sampling import (
     BUCKETS,
     _WES_DENOM,
     epoch_shard_shuffle,
+    hash_bucket,
     hash_oversample,
     hash_rate_sample,
     stratified_quota_sample,
-    temperature_rates,
+    temperature_thresholds,
     token_budget_sample,
     weighted_reservoir_sample,
 )
@@ -132,9 +133,9 @@ def _sql_budget_case() -> str:
 #   `cum_before` exposes the decision. One window shuffle carrying
 #   (key, counts) — text never moves.
 # - 'temperature' leg (round 6): count**alpha temperature rebalancing
-#   (operators/sampling.py: temperature_rates → hash_rate_sample).
-#   Per-stratum counts are a control-plane aggregate (5 scalars to the
-#   driver — the only cluster work before the codegen filter); rates
+#   (operators/sampling.py: temperature_thresholds). The per-stratum
+#   counts, their two totals and the thresholds stay in the plan — a
+#   5-row frame broadcast-joined on lang, nothing collected; rates
 #   round at 4 dp so rate·BUCKETS is integer-exact and both engines
 #   derive the SAME thresholds from their own pow() (the 6dp-ln
 #   precedent, one notch coarser because the value feeds an integer
@@ -288,19 +289,17 @@ def q83_sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("int").alias("rn"),
         F.col("cum_before").cast("bigint").alias("cum_before"),
     )
-    # Control-plane aggregate: per-stratum counts (a handful of
-    # scalars) drive the temperature rates; rounding at 4 dp makes
-    # rate·BUCKETS integer-exact so both engines compute identical
-    # thresholds from their own pow() (see the leg comment above).
-    counts = {
-        r["lang"]: r["n"]
-        for r in d.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    t_rates = {
-        s: round(r, 4)
-        for s, r in temperature_rates(counts, TEMP_ALPHA, TEMP_KEEP).items()
-    }
-    temp_leg = hash_rate_sample(d, t_rates, strat_col="lang", key_col="doc_id").select(
+    thresholds = temperature_thresholds(
+        d.groupBy("lang").agg(F.count(F.lit(1)).alias("n")),
+        strat_col="lang",
+        alpha=TEMP_ALPHA,
+        keep_fraction=TEMP_KEEP,
+    )
+    temp_leg = (
+        d.withColumn("bucket", hash_bucket("doc_id"))
+        .join(F.broadcast(thresholds.select("lang", "thresh")), "lang")
+        .filter(F.col("bucket") < F.col("thresh"))
+    ).select(
         F.lit("temperature").alias("leg"),
         "doc_id",
         "lang",

@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.operators.asof import asof_join
+from etfconstituentextractor_spark.operators.asof import asof_join, within_tolerance
 from etfconstituentextractor_spark.plans.registry import QUERIES, load_catalog
 
 load_catalog()
@@ -47,7 +47,8 @@ def test_asof_join_tolerance(spark):
     out = asof_join(
         left, right, on="k", left_ts="lts", right_ts="rts",
         right_payload={"rts": "rts", "v": "v"},
-        tolerance=F.expr("INTERVAL 1 HOUR"),
+    ).select(
+        F.when(within_tolerance("lts", "rts", F.expr("INTERVAL 1 HOUR")), F.col("v")).alias("v")
     ).collect()
     assert out[0].v is None  # match exists but is older than tolerance
 
@@ -998,41 +999,46 @@ def test_simhash_pairs_plan_is_python_free(spark, sf_dir):
         assert marker not in plan
 
 
-def test_temperature_rates_properties():
+def _temperature_rates(spark, counts, alpha, keep_fraction=1.0):
+    from etfconstituentextractor_spark.operators.sampling import temperature_thresholds
+
+    frame = spark.createDataFrame(list(counts.items()), "lang string, n bigint")
+    out = temperature_thresholds(
+        frame, strat_col="lang", alpha=alpha, keep_fraction=keep_fraction
+    )
+    return {r.lang: r.rate for r in out.collect()}
+
+
+def test_temperature_rates_properties(spark):
     """alpha=1 keeps natural proportions; alpha=0 equalizes strata;
     the kept-volume budget holds; scarce strata can exceed rate 1."""
-    from etfconstituentextractor_spark.operators.sampling import temperature_rates
-
     counts = {"en": 8000, "zh": 1500, "sw": 500}
-    natural = temperature_rates(counts, alpha=1.0, keep_fraction=0.5)
+    natural = _temperature_rates(spark, counts, alpha=1.0, keep_fraction=0.5)
     assert all(abs(r - 0.5) < 1e-12 for r in natural.values())
 
-    flat = temperature_rates(counts, alpha=0.0, keep_fraction=0.3)
+    flat = _temperature_rates(spark, counts, alpha=0.0, keep_fraction=0.3)
     kept = {s: flat[s] * counts[s] for s in counts}
     assert max(kept.values()) - min(kept.values()) < 1e-6  # equal share
     assert abs(sum(kept.values()) - 0.3 * 10000) < 1e-6
 
-    mid = temperature_rates(counts, alpha=0.3, keep_fraction=1.0)
+    mid = _temperature_rates(spark, counts, alpha=0.3, keep_fraction=1.0)
     assert mid["sw"] > 1.0 > mid["en"]  # scarce oversampled, dominant cut
     assert abs(sum(mid[s] * counts[s] for s in counts) - 10000) < 1e-6
 
-    assert temperature_rates({}, 0.3) == {}
-    assert temperature_rates({"a": 0}, 0.3) == {"a": 0.0}
+    assert _temperature_rates(spark, {}, 0.3) == {}
+    assert _temperature_rates(spark, {"a": 0}, 0.3) == {"a": 0.0}
 
 
 def test_temperature_rates_drive_the_mixture(spark, sf_dir):
     """Composition: per-lang counts -> temperature rates -> the
     deterministic mixture legs. Kept share per stratum approaches
     count**alpha proportions (hash-Bernoulli tolerance)."""
-    from etfconstituentextractor_spark.operators.sampling import (
-        hash_rate_sample,
-        temperature_rates,
-    )
+    from etfconstituentextractor_spark.operators.sampling import hash_rate_sample
     from etfconstituentextractor_spark.sources.tables import load
 
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = {r.lang: r.n for r in d.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    rates = temperature_rates(counts, alpha=0.0, keep_fraction=0.4)
+    rates = _temperature_rates(spark, counts, alpha=0.0, keep_fraction=0.4)
     capped = {s: min(1.0, r) for s, r in rates.items()}
     kept = hash_rate_sample(d, capped, strat_col="lang", key_col="doc_id")
     got = {r.lang: r.n for r in kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}

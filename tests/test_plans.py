@@ -769,6 +769,19 @@ def test_catalog_wide_plan_hygiene(spark, sf_dir):
     assert not offenders, offenders
 
 
+def test_q27_single_asof_pass(spark, sf_dir):
+    """q27's 1-hour tolerance is a predicate over its one as-of carry:
+    a single union of the two pushed-filter event scans, ONE exchange
+    on user_id feeding ONE window, and no join back on purchase_id (a
+    second as-of pass would add a window, an exchange and a join)."""
+    plan = _plan(spark, sf_dir, "q27_join_asof")
+    nodes = [ln.lstrip(" :+-").split(" ", 1)[0] for ln in plan.splitlines()]
+    assert nodes.count("Window") == 1, plan
+    assert nodes.count("Exchange") == 1, plan
+    for absent in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastExchange"):
+        assert absent not in nodes, plan
+
+
 def test_q44_rank_trio_adds_no_exchange(spark, sf_dir):
     """All of q44's window families — running frames, lag/lead, and
     the round-6 ntile/percent_rank/cume_dist trio — share one

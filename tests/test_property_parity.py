@@ -16,7 +16,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from etfconstituentextractor_spark.functions.boundary import parse_money
-from etfconstituentextractor_spark.operators.asof import asof_join
+from etfconstituentextractor_spark.operators.asof import asof_join, within_tolerance
 
 # ETFCE_FUZZ_EXAMPLES raises the per-test example budget for one-off
 # deep hunts (CI default stays small: each example runs Spark jobs)
@@ -251,9 +251,9 @@ def test_ngram_contamination_vs_python(spark, train, eval_, n):
     tol=st.integers(0, 12),
 )
 def test_asof_join_tolerance_matches_duckdb(spark, left, right, tol):
-    """The tolerance branch (q27's second leg): a backward as-of match
-    older than `tol` seconds must null out, exactly like DuckDB ASOF
-    plus a gap filter — fuzzed over arbitrary layouts including
+    """The tolerance predicate (q27's 1-hour columns): a backward as-of
+    match older than `tol` seconds must null out, exactly like DuckDB
+    ASOF plus a gap CASE — fuzzed over arbitrary layouts including
     tolerance=0 (only simultaneous rows survive)."""
     from pyspark.sql import functions as F
 
@@ -268,7 +268,12 @@ def test_asof_join_tolerance_matches_duckdb(spark, left, right, tol):
         for r in asof_join(
             ldf, rdf, on="k", left_ts="lts", right_ts="rts",
             right_payload={"rts": "rts", "v": "v"},
-            tolerance=F.expr(f"INTERVAL {tol} SECONDS"),
+        ).select(
+            "k",
+            "lts",
+            F.when(
+                within_tolerance("lts", "rts", F.expr(f"INTERVAL {tol} SECONDS")), F.col("v")
+            ).alias("v"),
         ).collect()
     )
 
