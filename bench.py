@@ -285,14 +285,11 @@ def _git_rev() -> str | None:
 
 def _catalog_fingerprint() -> str | None:
     """md5 over the QUERY-DEFINING source (the package's .py files +
-    __spark_entry__.py), or None on any surprise. Round-13 verdict:
-    minwin's per-query minima mixed windows from different commits, so
-    a cited best could point at code that no longer runs (q42's 1.212s
-    predated the gapfill_pk leg). git_rev alone is too coarse the
-    other way — it changes on docs/tests/bench edits that cannot move
-    a query. This fingerprint changes exactly when engine source
-    changes, works on a dirty tree (hashes the actual files, not
-    HEAD), and is the coherence key for the headline minima."""
+    __spark_entry__.py), or None on any surprise. git_rev alone is too
+    coarse: it changes on docs/tests/bench edits that cannot move a
+    query. This fingerprint changes exactly when engine source
+    changes, and works on a dirty tree (hashes the actual files, not
+    HEAD)."""
     import glob
     import hashlib
 
@@ -595,189 +592,19 @@ def main() -> None:
                 else None
             ),
         ),
-        # code attribution (round 12): minwin mixes windows across
-        # commits — the recorded hash makes every per-query best
-        # attributable to the exact code that produced it
         "order": order,
+        # provenance: which code (commit, engine-source hash) and which
+        # host shape produced these numbers, so two runs are compared
+        # only when they match
         "git_rev": _git_rev(),
-        # coherence keys for minwin (round 13 + 14): minima only
-        # aggregate windows whose engine source is byte-identical
-        # (catalog_fp), whose harness measurement semantics match
-        # (bench_fp), and whose execution order matches (order) — a
-        # per-query best can never cite displaced code OR a different
-        # measurement protocol
         "catalog_fp": _catalog_fingerprint(),
         "bench_fp": _bench_fingerprint(),
-        # host keys for minwin: a 4-core window's minima must never mix
-        # with 32-core windows' (a 4-core 138.5s run once merged with
-        # two 32-core windows into a "coherent" 60.9s headline)
         "cpus": len(os.sched_getaffinity(0)),
         "defaultParallelism": spark.sparkContext.defaultParallelism,
         **settle,
     }
-    line = json.dumps(payload)
-    # Archive EVERY run's full per-query JSON (round-10 verdict: a
-    # "re-timed fine in window X" claim is unverifiable unless window
-    # X's per-query numbers are committed). One file per run under
-    # bench_runs/, named by wall-clock start so windows sort; the
-    # stdout line stays the driver contract, the archive is the
-    # settled-window evidence trail. The archive write happens BEFORE
-    # the stdout print (round 13): a consumer piping through `head`
-    # SIGPIPEs the process on the print, which used to lose the whole
-    # window's evidence.
-    try:
-        import datetime
-
-        outdir = os.environ.get(
-            "SPARK_GRAFT_BENCH_ARCHIVE",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs"),
-        )
-        os.makedirs(outdir, exist_ok=True)
-        # pid suffix: two runs starting the same second must not
-        # clobber each other's evidence file (round-11 review)
-        stamp = datetime.datetime.now().strftime("%Y%m%dT%H%M%S")
-        with open(os.path.join(outdir, f"run_{stamp}_{os.getpid()}.json"), "w") as fh:
-            fh.write(line + "\n")
-        _write_minwin_summary(outdir, payload)
-    except OSError as e:  # archiving must never fail the bench
-        print(f"# bench archive skipped: {e}", file=sys.stderr)
-    print(line)
+    print(json.dumps(payload))
     spark.stop()
-
-
-def _minwin_mins(runs: list) -> tuple[dict, dict]:
-    """Per-query (min, backing-window) across ``runs`` = [(file, payload)]."""
-    names = set()
-    for _, r in runs:
-        names |= set(r["queries"])
-    mins, backing = {}, {}
-    for n in sorted(names):
-        vals = [(r["queries"][n], f) for f, r in runs if n in r["queries"]]
-        best, bf = min(vals)
-        mins[n], backing[n] = best, bf
-    return mins, backing
-
-
-def _write_minwin_summary(outdir: str, payload: dict) -> None:
-    """Per-query MIN across the most recent archived windows at this
-    SF (round-11 verdict: settled windows disagree up to 19% with
-    identical code, so a perf claim resting on ONE window is a
-    best-case selection — the min-of-windows convention, previously
-    applied by hand, becomes a mechanical artifact every run).
-    Windows are capped at the newest 8 so numbers from long-displaced
-    code age out; contributing files are listed so a reader can audit
-    which windows back each min.
-
-    Round 13 (verdict + advice): the HEADLINE minima are restricted to
-    COHERENT windows — git_rev stamped AND catalog_fp equal to the
-    current run's (byte-identical engine source), so a cited best can
-    never point at code that no longer runs (r12's q42 min predated
-    the gapfill_pk leg). The old cross-commit aggregate survives under
-    explicitly-named ``*_cross_commit`` fields for continuity — its
-    mixing is now in the name, not a trap.
-
-    Round 14 (advice): coherence additionally requires the window's
-    ``order`` to equal the current run's AND its ``bench_fp`` (the
-    harness-measurement-semantics hash) to match — catalog_fp alone
-    let stream_early-rotated windows and changed-HEADLINE harnesses
-    feed the same minima, the exact incoherence the fingerprint was
-    added to prevent. Windows predating the bench_fp stamp are
-    excluded from the headline (they survive in the cross-commit
-    view); the coherent set therefore resets whenever the harness
-    semantics change, which is the point.
-
-    Coherence also requires the window's ``cpus`` and
-    ``defaultParallelism`` to equal the current run's, so windows from
-    hosts or core counts other than this run's never feed its minima.
-    Windows predating that stamp are excluded like unstamped bench_fp
-    windows."""
-    import glob
-
-    sf = payload.get("sf")
-    fp = payload.get("catalog_fp")
-    bfp = payload.get("bench_fp")
-    order = payload.get("order")
-    host = (payload.get("cpus"), payload.get("defaultParallelism"))
-    runs = []  # newest 8 windows at this SF, any code (cross-commit view)
-    coherent = []  # newest 512 COHERENT windows — scans as deep as needed:
-    # aging-out exists to drop numbers from displaced code, but a
-    # fp-matching window IS current code however old it is (round-13
-    # second pass: the 8-newest-overall cap was rolling the round's
-    # best same-code window out from under its own minima; within one
-    # fingerprint every window is a valid sample of identical code, so
-    # the cap is a file-read bound, not a staleness rule. Round 14
-    # raised it 16 -> 48 -> 128 -> 512 by the same principle: each
-    # smaller cap was measured rolling the round's own early — fastest,
-    # pre-daytime-throttle — samples out from under its minima (48 cap:
-    # headline crept 58.406 -> 58.717 across w82-w89 with zero engine
-    # change; 128 cap: the closing accumulation crossed 128 same-fp
-    # windows at w166 and the counter pinned, so the next fast window
-    # would have displaced the round's early minima the same way).
-    # The artifact lists every backing window, so
-    # the sample count stays auditable; the cap is not part of
-    # _bench_fingerprint() because it changes only how the minwin
-    # ARTIFACT aggregates already-recorded windows, never what any
-    # per-query number means)
-    for p in sorted(glob.glob(os.path.join(outdir, "run_*.json")))[::-1]:
-        if len(runs) >= 8 and len(coherent) >= 512:
-            break
-        try:
-            with open(p) as fh:
-                r = json.loads(fh.readline())
-        except (OSError, ValueError):
-            continue
-        if r.get("sf") != sf or not r.get("queries"):
-            continue
-        if len(runs) < 8:
-            runs.append((os.path.basename(p), r))
-        if (
-            len(coherent) < 512
-            and r.get("git_rev")
-            and fp
-            and r.get("catalog_fp") == fp
-            and r.get("order") == order
-            and bfp
-            and r.get("bench_fp") == bfp
-            and None not in host
-            and (r.get("cpus"), r.get("defaultParallelism")) == host
-        ):
-            coherent.append((os.path.basename(p), r))
-    if not runs:
-        return
-    if not coherent:
-        # the current run itself is always coherent with itself; only
-        # a fingerprint failure (fp None) lands here — degrade loudly
-        coherent = runs[:1]
-    mins, backing = _minwin_mins(coherent)
-    xmins, xbacking = _minwin_mins(runs)
-    summary = {
-        "metric": "headline_queries_min_across_windows_sec",
-        "sf": sf,
-        "catalog_fp": fp,
-        "bench_fp": bfp,
-        "order": order,
-        "cpus": host[0],
-        "defaultParallelism": host[1],
-        "windows": [f for f, _ in coherent],
-        "window_rev": {f: r.get("git_rev") for f, r in coherent},
-        "value": round(sum(mins.values()), 3),
-        "queries": mins,
-        "query_window": backing,
-        # cross-commit view (pre-round-13 semantics), explicitly named:
-        # a total no single code version may ever have achieved
-        "windows_cross_commit": [f for f, _ in runs],
-        "value_cross_commit": round(sum(xmins.values()), 3),
-        "queries_cross_commit": xmins,
-        "query_window_cross_commit": xbacking,
-    }
-    with open(os.path.join(outdir, f"minwin_sf{sf}.json"), "w") as fh:
-        json.dump(summary, fh, indent=1)
-    print(
-        f"# min-across-{len(coherent)}-coherent-windows total: "
-        f"{summary['value']}s (cross-commit over {len(runs)}: "
-        f"{summary['value_cross_commit']}s) -> {outdir}/minwin_sf{sf}.json",
-        file=sys.stderr,
-    )
 
 
 if __name__ == "__main__":

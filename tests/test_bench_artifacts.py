@@ -1,14 +1,9 @@
-"""bench.py evidence-artifact rules (round 13).
-
-The minwin summary is the repo's headline perf evidence; the round-12
-verdict found its per-query minima mixing windows from different
-commits (a cited best could point at code that no longer runs). These
-tests pin the coherence rule WITHOUT running Spark: _write_minwin_summary
-is pure file I/O over archived run JSONs.
+"""bench.py's harness rules, checked without running its timing loop:
+the headline set, the provenance stamps and the scratch-directory
+defaults.
 """
 
 import importlib.util
-import json
 import os
 
 _spec = importlib.util.spec_from_file_location(
@@ -16,129 +11,6 @@ _spec = importlib.util.spec_from_file_location(
 )
 bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
-
-
-def _run_file(
-    outdir,
-    name,
-    queries,
-    sf=0.1,
-    git_rev="abc1234",
-    catalog_fp="fp-cur",
-    bench_fp="bfp-cur",
-    order="default",
-    cpus=4,
-    default_parallelism=4,
-):
-    payload = {
-        "sf": sf,
-        "queries": queries,
-        "git_rev": git_rev,
-        "catalog_fp": catalog_fp,
-        "bench_fp": bench_fp,
-        "order": order,
-        "cpus": cpus,
-        "defaultParallelism": default_parallelism,
-    }
-    with open(os.path.join(outdir, name), "w") as fh:
-        fh.write(json.dumps(payload) + "\n")
-    return payload
-
-
-def test_minwin_headline_excludes_unstamped_and_stale_surface_windows(tmp_path):
-    """Headline minima aggregate ONLY windows that are git_rev-stamped
-    AND share the current run's catalog fingerprint; unstamped or
-    different-source windows survive only in the *_cross_commit view."""
-    out = str(tmp_path)
-    # oldest: unstamped (pre-round-12 archive) with a tempting 0.5s min
-    _run_file(out, "run_20260101T000000_1.json", {"q42": 0.5, "q01": 2.0},
-              git_rev=None, catalog_fp=None)
-    # stale surface: stamped but DIFFERENT engine source, q42 fast
-    _run_file(out, "run_20260102T000000_1.json", {"q42": 0.9, "q01": 1.5},
-              git_rev="old1111", catalog_fp="fp-old")
-    # two coherent windows (current source)
-    _run_file(out, "run_20260103T000000_1.json", {"q42": 1.8, "q01": 1.2})
-    cur = _run_file(out, "run_20260104T000000_1.json", {"q42": 1.6, "q01": 1.4})
-
-    bench._write_minwin_summary(out, cur)
-    with open(os.path.join(out, "minwin_sf0.1.json")) as fh:
-        s = json.load(fh)
-
-    # headline: minima across the two coherent windows only
-    assert s["queries"] == {"q42": 1.6, "q01": 1.2}
-    assert s["value"] == 2.8
-    assert set(s["windows"]) == {
-        "run_20260103T000000_1.json", "run_20260104T000000_1.json",
-    }
-    # every cited backing window for the headline is coherent
-    assert set(s["query_window"].values()) <= set(s["windows"])
-    assert all(s["window_rev"].values())
-    # the cross-commit view keeps the old semantics, explicitly named
-    assert s["queries_cross_commit"] == {"q42": 0.5, "q01": 1.2}
-    assert len(s["windows_cross_commit"]) == 4
-
-
-def test_minwin_degrades_to_current_window_when_fp_unavailable(tmp_path):
-    """A fingerprint failure (catalog_fp None) must not kill the
-    artifact: the headline falls back to the newest window alone."""
-    out = str(tmp_path)
-    _run_file(out, "run_20260101T000000_1.json", {"q01": 0.7})
-    cur = _run_file(out, "run_20260102T000000_1.json", {"q01": 1.1},
-                    catalog_fp=None)
-    cur["catalog_fp"] = None
-    bench._write_minwin_summary(out, cur)
-    with open(os.path.join(out, "minwin_sf0.1.json")) as fh:
-        s = json.load(fh)
-    assert s["queries"] == {"q01": 1.1}
-    assert s["windows"] == ["run_20260102T000000_1.json"]
-
-
-def test_minwin_headline_requires_matching_order_and_bench_fp(tmp_path):
-    """Round-14 advice: catalog_fp hashes only engine source, so
-    windows run with SPARK_GRAFT_BENCH_ORDER=stream_early or under a
-    changed HEADLINE/harness still counted as coherent — headline
-    minima could mix orderings and harness versions. Coherence now
-    also requires order equality and a matching bench_fp; windows
-    predating the bench_fp stamp are excluded from the headline (they
-    survive in the cross-commit view). Coherence also requires the
-    window's cpus and defaultParallelism to equal the current run's:
-    a window from another core count, or one predating that stamp, is
-    not coherent either."""
-    out = str(tmp_path)
-    # same engine source, but rotated execution order — q59's min here
-    # must NOT feed the default-order headline
-    _run_file(out, "run_20260101T000000_1.json", {"q59": 0.5, "q01": 2.0},
-              order="stream_early")
-    # same engine source, but an OLDER harness (no bench_fp stamp)
-    _run_file(out, "run_20260102T000000_1.json", {"q59": 0.7, "q01": 1.5},
-              bench_fp=None)
-    # same engine source, a DIFFERENT harness semantics hash
-    _run_file(out, "run_20260103T000000_1.json", {"q59": 0.8, "q01": 1.4},
-              bench_fp="bfp-old")
-    # same engine source and harness, but a 32-core host
-    _run_file(out, "run_20260103T060000_1.json", {"q59": 0.6, "q01": 0.9},
-              cpus=32, default_parallelism=32)
-    # same core count, but a different local[N] parallelism
-    _run_file(out, "run_20260103T120000_1.json", {"q59": 0.9, "q01": 1.0},
-              default_parallelism=8)
-    # same engine source and harness, predating the host stamp
-    _run_file(out, "run_20260103T180000_1.json", {"q59": 1.0, "q01": 1.1},
-              cpus=None, default_parallelism=None)
-    # two fully coherent windows
-    _run_file(out, "run_20260104T000000_1.json", {"q59": 1.8, "q01": 1.2})
-    cur = _run_file(out, "run_20260105T000000_1.json", {"q59": 1.6, "q01": 1.4})
-
-    bench._write_minwin_summary(out, cur)
-    with open(os.path.join(out, "minwin_sf0.1.json")) as fh:
-        s = json.load(fh)
-    assert s["queries"] == {"q59": 1.6, "q01": 1.2}
-    assert set(s["windows"]) == {
-        "run_20260104T000000_1.json", "run_20260105T000000_1.json",
-    }
-    assert s["order"] == "default" and s["bench_fp"] == "bfp-cur"
-    assert s["cpus"] == 4 and s["defaultParallelism"] == 4
-    # the mixed view still exists, explicitly named
-    assert s["queries_cross_commit"]["q59"] == 0.5
 
 
 def test_bench_fingerprint_tracks_harness_semantics():
@@ -209,36 +81,9 @@ def test_ordered_headline_rotation_preserves_the_set():
     assert set(early[1:4]) == bench._CLASS_QUERIES["stream"]
 
 
-def test_survey_round_close_block_matches_artifacts():
-    """Round-14 verdict ask #2: closing numbers are GENERATED, not
-    typed. SURVEY.md's ROUND-CLOSE block must equal what
-    tools/round_close.py would emit right now from the committed
-    artifacts — so archiving a new bench window (which can displace a
-    cited min) without re-running --update-survey fails the suite
-    instead of shipping stale prose (the r12/r13 drift class)."""
-    spec = importlib.util.spec_from_file_location(
-        "round_close",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "round_close.py"),
-    )
-    rc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rc)
-    with open(rc.SURVEY) as fh:
-        survey = fh.read()
-    assert rc.BEGIN in survey and rc.END in survey, (
-        "SURVEY.md is missing the ROUND-CLOSE block — run "
-        "`python tools/round_close.py --update-survey`"
-    )
-    quoted = survey.split(rc.BEGIN, 1)[1].split(rc.END, 1)[0]
-    rebuilt = rc.build_block()
-    assert rc.BEGIN + quoted + rc.END == rebuilt, (
-        "SURVEY.md's closing block is stale against the artifacts — "
-        "re-run `python tools/round_close.py --update-survey`"
-    )
-
-
 def test_catalog_fingerprint_tracks_engine_source():
     """The fingerprint is stable across calls and keyed to engine
-    source bytes (it is the minwin coherence key)."""
+    source bytes."""
     a = bench._catalog_fingerprint()
     b = bench._catalog_fingerprint()
     assert a is not None and a == b and len(a) == 12
@@ -275,26 +120,3 @@ def test_bench_defaults_scratch_out_of_wiped_tmp():
         [_sys.executable, "-c", probe], env=env, capture_output=True, text=True, check=True
     ).stdout.splitlines()
     assert out == ["/dev/shm", "/dev/shm"]
-
-
-def test_minwin_coherent_scan_keeps_a_full_rounds_windows(tmp_path):
-    """Within one fingerprint every window is a valid sample of
-    identical code, so the coherent cap is a file-read bound, not a
-    staleness rule. Round 14's closing accumulation archived >128
-    same-fp windows; the 16, 48 and then the 128 cap each rolled the
-    round's own early samples out from under its minima (measured at
-    48: headline crept 58.406 -> 58.717 across w82-w89 with zero
-    engine change; at 128 the coherent counter pinned at w166). The
-    140th-newest coherent window — beyond the old 128 cap — must
-    still back the min (cap now 512)."""
-    out = str(tmp_path)
-    # oldest coherent window holds the unique best q01
-    _run_file(out, "run_20260101T000000_0.json", {"q01": 0.31})
-    for i in range(1, 140):
-        cur = _run_file(out, "run_20260101T%06d_1.json" % (i * 100), {"q01": 1.0 + i / 100})
-    bench._write_minwin_summary(out, cur)
-    with open(os.path.join(out, "minwin_sf0.1.json")) as fh:
-        s = json.load(fh)
-    assert s["queries"] == {"q01": 0.31}
-    assert s["query_window"]["q01"] == "run_20260101T000000_0.json"
-    assert len(s["windows"]) == 140
