@@ -168,8 +168,7 @@ _CLASS_QUERIES = {
 _CLASS_BETA = {"jvm": 0.15, "py": 1.0, "stream": 0.9, "io": 0.6}
 
 #: Queries whose best run is under this get a THIRD run (see the
-#: timing loop); module-level because it is part of the measurement
-#: semantics folded into _bench_fingerprint().
+#: timing loop).
 _EXTRA_RUN_UNDER_SEC = 12.0
 
 
@@ -311,32 +310,6 @@ def _catalog_fingerprint() -> str | None:
         return None
 
 
-def _bench_fingerprint() -> str:
-    """md5 over the HARNESS measurement semantics (round-14 advice):
-    catalog_fp hashes only engine source, so windows run under a
-    different HEADLINE set, a different runs-per-query rule, or a
-    rotated execution order still counted as coherent — per-query
-    minima could mix harness versions, the exact incoherence the
-    fingerprint was added to prevent. This key folds in everything
-    that changes WHAT a per-query number means without touching
-    engine source: the headline set (and its default order), the
-    min-of-N rule, and the third-run threshold. Execution order is
-    deliberately NOT folded in here — it is recorded as its own
-    payload field and matched separately, so a reader can still see
-    how many windows each ordering contributed."""
-    import hashlib
-
-    semantics = {
-        "headline": HEADLINE,
-        "runs_per_query": 3,
-        "extra_run_under_sec": _EXTRA_RUN_UNDER_SEC,
-        "sink": "noop",
-    }
-    return hashlib.md5(
-        json.dumps(semantics, sort_keys=True).encode()
-    ).hexdigest()[:12]
-
-
 def _meminfo_kb(key: str) -> int | None:
     """One field from /proc/meminfo (kB), or None off-Linux."""
     try:
@@ -376,28 +349,11 @@ def _settle() -> dict:
     }
 
 
-def _ordered_headline(order: str) -> list[str]:
-    """Bench execution order (round-13 verdict ask #5): the streaming
-    class runs LAST by default, which means it systematically pays
-    whatever driver/codegen-state tax ~60 prior query executions
-    accumulate — min-of-windows then treats that ordering artifact as
-    if it were independent noise. SPARK_GRAFT_BENCH_ORDER=stream_early
-    moves the streaming queries to right after the flagship (cleanest
-    JVM), turning the position-tax assumption into a measurable A/B
-    across archived windows (each payload records its 'order')."""
-    if order == "stream_early":
-        stream = [n for n in HEADLINE if _class_of(n) == "stream"]
-        rest = [n for n in HEADLINE if _class_of(n) != "stream"]
-        return rest[:1] + stream + rest[1:]
-    return list(HEADLINE)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    order = os.environ.get("SPARK_GRAFT_BENCH_ORDER", "default")
     load_catalog()
-    names = [n for n in _ordered_headline(order) if n in QUERIES]
+    names = [n for n in HEADLINE if n in QUERIES]
 
     settle = _settle()
     print(f"# settle: {settle}", file=sys.stderr)
@@ -592,13 +548,11 @@ def main() -> None:
                 else None
             ),
         ),
-        "order": order,
         # provenance: which code (commit, engine-source hash) and which
         # host shape produced these numbers, so two runs are compared
         # only when they match
         "git_rev": _git_rev(),
         "catalog_fp": _catalog_fingerprint(),
-        "bench_fp": _bench_fingerprint(),
         "cpus": len(os.sched_getaffinity(0)),
         "defaultParallelism": spark.sparkContext.defaultParallelism,
         **settle,
