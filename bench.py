@@ -86,179 +86,9 @@ HEADLINE = [
     "q95_multimodal_binary",
 ]
 
-#: Quiet-host reference for the calibration probe (min-of-3 on an idle
-#: local[32] host, measured round 5/6). The probe is fixed code that
-#: this repo never touches, so probe drift IS host drift; dividing the
-#: headline total by (probe / reference) removes whole-host load from
-#: round-over-round comparisons.
-_REF_CALIBRATION_SEC = 0.16
-
-#: Quiet-host reference for the PARALLEL contention probe (round 8,
-#: min-of-3 on the round's quietest window — the same full-bench run
-#: read probe1 at 0.15 vs its 0.16 quiet reference, so the window is
-#: genuinely quiet). The 30M-row probe above finishes before all 32
-#: threads saturate, so it tracks single-core host speed but not
-#: cross-core contention — the gap that made round 7's normalized
-#: figure soft (SURVEY §6). This probe runs the same fixed
-#: arithmetic over 400M rows / 32 partitions, saturating every core
-#: for ~0.5s; under whole-host contention its ratio moves when
-#: probe1's does not. Both ratios are emitted; read the one that
-#: better explains a run's drift.
-_REF_CALIBRATION32_SEC = 0.395
-
-#: Quiet-host reference for the PYTHON-WORKER probe (round 12,
-#: min-of-3 on a settled window). Rounds 10-11 showed the
-#: Python-worker query class (q59/q55/q58/q83) swinging ±50% across
-#: settled windows while BOTH JVM probes sat near 1.0 — whatever
-#: throttles Python worker processes (cgroup CPU shares, fork-time
-#: page-cache state, daemon scheduling) is invisible to JVM-side
-#: arithmetic. This probe runs fixed numpy arithmetic through
-#: mapInPandas over 32 partitions: same worker pool, same Arrow
-#: boundary, zero repo code — its ratio moves iff the Python class
-#: is being throttled, which is exactly the signal the other two
-#: probes cannot see. Reference = min across the round-12 settled
-#: windows (0.456 / 0.710 on two back-to-back load1<1 windows — the
-#: 1.56x spread between them IS the throttle the probe exists to
-#: expose; the JVM probes read 0.90/1.08 across the same pair).
-_REF_CALIBRATION_PY_SEC = 0.456
-
-
-#: Quiet-host reference for the cold-read IO probe (round 13): best
-#: observed throughput across the round-12/13 archived windows
-#: (1787.9 MB/s on run_20260816T123435). The virtualized disk was
-#: measured throttling 28x (37.5 vs 1345 MB/s back-to-back), so this
-#: reference is "the disk when the hypervisor isn't squeezing it".
-_REF_CALIBRATION_IO_MBPS = 1800.0
-
-#: Per-class normalization (round-13 verdict ask #2): each query
-#: class's wall time is damped by its DOMINANT-resource probe —
-#: t / (1 + beta * (ratio - 1)) — rather than dividing the whole
-#: total by one CPU ratio (which over-corrects: under load1=11 the
-#: c32 probe read 2.08x while the actual workload slowed only 1.38x).
-#: Classes by code path: 'py' = mapInPandas/UDTF-dominated, 'stream'
-#: = micro-batch loops (python-worker bound per round-10/11 data),
-#: 'io' = queries reading cached on-disk artifacts (snapshot tables,
-#: LSH standing index, bucketed tables), 'jvm' = everything else.
-#: Betas fitted on the six attributable archived sf0.1 windows
-#: (tools/validate_normalization.py reproduces the fit): spread
-#: (max-min)/mean fell 33.6% -> 11.5%. The seventh window
-#: (run_20260816T104941, 94.1s) is excluded from the fit because it
-#: predates the io probe — its disk throttle is unattributable by
-#: construction, which is WHY the probe now exists. Six windows /
-#: four params is thin; the betas are committed constants so every
-#: future window is out-of-sample validation.
-_CLASS_QUERIES = {
-    "stream": {
-        "q55_stream_tumbling_sliding",
-        "q58_stream_dedup_watermark",
-        "q59_stream_custom_sessionize",
-    },
-    "py": {
-        "q50_doc_extract_holdings",
-        "q52_doc_pipeline_e2e",
-        "q91_udtf_udaf",
-        "q95_multimodal_binary",
-    },
-    "io": {
-        "q86_snapshot_diff",
-        "q62_dedup_minhash_lsh",
-        "q22_join_shuffle_factfact",
-    },
-}
-_CLASS_BETA = {"jvm": 0.15, "py": 1.0, "stream": 0.9, "io": 0.6}
-
 #: Queries whose best run is under this get a THIRD run (see the
 #: timing loop).
 _EXTRA_RUN_UNDER_SEC = 12.0
-
-
-def _class_of(name: str) -> str:
-    for cls, names in _CLASS_QUERIES.items():
-        if name in names:
-            return cls
-    return "jvm"
-
-
-def _normalized_vector(timings: dict, c32_ratio, py_ratio, io_ratio) -> dict | None:
-    """The per-class damped normalization. Returns None when the JVM
-    ratio is unavailable (non-32-way session — the references do not
-    apply). A missing io probe falls back to the JVM ratio: disk
-    throttling then stays invisible, exactly as it did pre-probe, but
-    the field stays comparable instead of vanishing."""
-    if c32_ratio is None or py_ratio is None:
-        return None
-    ratios = {
-        "jvm": c32_ratio,
-        "py": py_ratio,
-        "stream": py_ratio,
-        "io": io_ratio if io_ratio is not None else c32_ratio,
-    }
-    cls_tot: dict[str, float] = {k: 0.0 for k in ratios}
-    for q, t in timings.items():
-        cls_tot[_class_of(q)] += t
-    out = {
-        k: round(v / (1 + _CLASS_BETA[k] * (ratios[k] - 1)), 3)
-        for k, v in cls_tot.items()
-    }
-    out["total"] = round(sum(out.values()), 3)
-    out["class_ratios"] = {k: round(v, 3) for k, v in ratios.items()}
-    return out
-
-
-def _py_probe_seconds(spark) -> float:
-    """One timed pass of the fixed Python-worker probe."""
-    import pandas as pd
-
-    def work(it):
-        import numpy as np
-
-        for pdf in it:
-            x = pdf["id"].to_numpy(dtype="float64")
-            for _ in range(40):
-                x = np.sin(x) * 1.0001 + 0.1
-            yield pd.DataFrame({"s": [float(x.sum())]})
-
-    t0 = time.perf_counter()
-    spark.range(3_200_000, numPartitions=32).mapInPandas(
-        work, "s double"
-    ).selectExpr("sum(s)").collect()
-    return round(time.perf_counter() - t0, 3)
-
-
-def _io_probe_mbps(sf_dir: str) -> float | None:
-    """COLD-read disk throughput (MB/s): fadvise-DONTNEED a fixed
-    corpus file out of the page cache, then stream it back. Round-12
-    motivation: a quiet-probes window read 94s where its twin read
-    69s — q62/q86/q42 (the IO-heavy class: /tmp parquet caches,
-    snapshot table builds, cold scans) slowed 1.6x while ALL THREE
-    CPU-class probes read FAST, i.e. the swinging resource was disk
-    read throughput (virtualized-disk token buckets), the one class
-    the probe family could not see. Measured the moment the probe
-    landed: 37.5 / 1041 / 1345 MB/s back-to-back — a 28x first-read
-    throttle invisible to every CPU probe. fadvise is advisory, so
-    later passes may be partially cached: the FIRST sample is the
-    coldest, the min across samples is the throttle floor, the max
-    the page-cache-assisted ceiling (both emitted). None where
-    fadvise is unavailable — the probe must never fail the bench."""
-    p = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        size = os.path.getsize(p)
-        fd = os.open(p, os.O_RDONLY)
-        try:
-            os.posix_fadvise(fd, 0, 0, os.POSIX_FADV_DONTNEED)
-            t0 = time.perf_counter()
-            n = 0
-            while True:
-                b = os.read(fd, 1 << 20)
-                if not b:
-                    break
-                n += len(b)
-            dt = time.perf_counter() - t0
-        finally:
-            os.close(fd)
-        return round(n / (1 << 20) / dt, 1) if dt > 0 and n == size else None
-    except (OSError, AttributeError):
-        return None
 
 
 def _git_rev() -> str | None:
@@ -385,53 +215,6 @@ def main() -> None:
         lambda pdf: _pd.DataFrame({"n": [len(pdf)]}), "n bigint"
     ).write.format("noop").mode("overwrite").save()
 
-    # Host-speed calibration: a fixed CPU-bound probe (no I/O, no code
-    # that this repo changes), min-of-3. Two back-to-back bench runs
-    # measured 50.7s vs 40.1s with EVERY query moving the same
-    # direction — whole-host load, which per-query min-of-N cannot
-    # remove. The probe time normalizes round-over-round totals before
-    # drift is attributed to code: `calibration_ratio` is this run's
-    # probe over the committed quiet-host reference, and
-    # `value_normalized` divides the total by it — two identical-code
-    # runs should agree on value_normalized within ~10% even when the
-    # raw totals are 25% apart (that is the enforceable form of the
-    # "within 2x of baseline" gate). Caveat measured across round-6
-    # runs: the probe is a ~0.2s job, so its own min-of-3 can still
-    # wobble 30-50% under bursty load while the minutes-long workload
-    # moves less — `calibration_spread_sec` is emitted so a reader can
-    # discount value_normalized when the probe itself was unstable;
-    # raw totals ACROSS runs remain the most trustworthy signal.
-    calib_runs = []
-    calib32_runs = []
-    calib_py_runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(30_000_000).selectExpr(
-            "sum(sin(id * 1e-6))", "max(sqrt(id))"
-        ).collect()
-        calib_runs.append(round(time.perf_counter() - t0, 3))
-        t0 = time.perf_counter()
-        spark.range(400_000_000).selectExpr(
-            "sum(sin(id * 1e-6))", "max(sqrt(id))"
-        ).collect()
-        calib32_runs.append(round(time.perf_counter() - t0, 3))
-        calib_py_runs.append(_py_probe_seconds(spark))
-    io_runs = [m for m in (_io_probe_mbps(sf_dir) for _ in range(3)) if m]
-    calibration = min(calib_runs)
-    calibration32 = min(calib32_runs)
-    calibration_py = min(calib_py_runs)
-    calibration_io = max(io_runs) if io_runs else None  # best-case throughput
-    print(f"# calibration probe: {calibration}s (runs: {calib_runs})", file=sys.stderr)
-    print(
-        f"# contention probe (32-way): {calibration32}s (runs: {calib32_runs})",
-        file=sys.stderr,
-    )
-    print(
-        f"# python-worker probe: {calibration_py}s (runs: {calib_py_runs})",
-        file=sys.stderr,
-    )
-    print(f"# cold-read IO probe: {calibration_io} MB/s (runs: {io_runs})", file=sys.stderr)
-
     # Each query runs at least TWICE and reports the fastest run: the
     # first execution pays one-time costs a long-running cluster
     # amortizes (whole-stage-codegen compilation, Python worker
@@ -474,80 +257,12 @@ def main() -> None:
         )
 
     total = round(sum(timings.values()), 3)
-    ratio = round(calibration / _REF_CALIBRATION_SEC, 3)
-    # The contention probe's quiet reference was measured on local[32];
-    # on a narrower session its 32 partitions run in waves and the
-    # ratio reads ~cores/32 slower regardless of host state. The wave
-    # behavior is governed by the SESSION's actual parallelism, not
-    # the host's core count (round-8 advice: an env/cpu_count gate
-    # mis-fires whenever the session master differs from the host) —
-    # gate on defaultParallelism. Emit the raw seconds always
-    # (auditable); the ratio/normalized pair only where the reference
-    # applies.
-    ratio32 = (
-        round(calibration32 / _REF_CALIBRATION32_SEC, 3)
-        if spark.sparkContext.defaultParallelism == 32
-        else None
-    )
     payload = {
         "metric": "headline_queries_wall_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "calibration_sec": calibration,
-        "calibration_spread_sec": round(max(calib_runs) - min(calib_runs), 3),
-        "calibration_ratio": ratio,
-        "value_normalized": round(total / ratio, 3),
-        "calibration32_sec": calibration32,
-        "calibration32_spread_sec": round(
-            max(calib32_runs) - min(calib32_runs), 3
-        ),
-        "calibration32_ratio": ratio32,
-        "value_normalized32": (
-            round(total / ratio32, 3) if ratio32 else None
-        ),
-        "calibration_py_sec": calibration_py,
-        "calibration_py_spread_sec": round(
-            max(calib_py_runs) - min(calib_py_runs), 3
-        ),
-        # same gating rule as the 32-probe: the reference was measured
-        # on 32-way parallelism; emit seconds always, ratio only where
-        # the reference applies
-        "calibration_py_ratio": (
-            round(calibration_py / _REF_CALIBRATION_PY_SEC, 3)
-            if spark.sparkContext.defaultParallelism == 32
-            else None
-        ),
-        "calibration_io_mbps": calibration_io,
-        "calibration_io_min_mbps": min(io_runs) if io_runs else None,
-        # round-13 per-class normalization, DEMOTED round 14 (verdict
-        # ask #1): the betas fitted on six windows failed out-of-sample
-        # (validator at r13 close: raw 28.4% -> normalized 39.7%, i.e.
-        # WORSE), and a 2-fold CV over all 23 full-vector windows
-        # picked contradictory dominant classes per fold (jvm-only vs
-        # py-only) — the start-of-window probe vector cannot describe
-        # bursty mid-window throttles, so ANY damping fit here is
-        # underdetermined. The field stays emitted under an explicitly
-        # experimental name (the class ratios remain useful per-window
-        # ATTRIBUTION diagnostics); it must not be quoted as a
-        # comparable headline — the raw rev-coherent minwin is the
-        # only cross-window number (tools/validate_normalization.py
-        # re-checks the verdict every round).
-        "value_normalized_vector_experimental": _normalized_vector(
-            timings,
-            ratio32,
-            (
-                round(calibration_py / _REF_CALIBRATION_PY_SEC, 3)
-                if spark.sparkContext.defaultParallelism == 32
-                else None
-            ),
-            (
-                round(_REF_CALIBRATION_IO_MBPS / calibration_io, 3)
-                if calibration_io
-                else None
-            ),
-        ),
         # provenance: which code (commit, engine-source hash) and which
         # host shape produced these numbers, so two runs are compared
         # only when they match

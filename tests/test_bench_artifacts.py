@@ -13,49 +13,6 @@ bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
 
 
-def test_normalized_vector_damps_by_class_probe():
-    """Round-13 verdict ask #2: each class's wall time is damped by
-    its dominant-resource probe, t / (1 + beta*(ratio-1)) — a 2x CPU
-    probe must NOT halve the jvm class (beta_jvm=0.15 from the fit),
-    while the python class follows its probe ~1:1."""
-    timings = {
-        "q01_pricing_summary": 10.0,  # jvm
-        "q91_udtf_udaf": 10.0,  # py
-        "q59_stream_custom_sessionize": 10.0,  # stream
-        "q86_snapshot_diff": 10.0,  # io
-    }
-    v = bench._normalized_vector(timings, 2.0, 2.0, 2.0)
-    assert v["jvm"] == round(10 / 1.15, 3)
-    assert v["py"] == 5.0
-    assert v["stream"] == round(10 / 1.9, 3)
-    assert v["io"] == 6.25
-    assert v["total"] == round(v["jvm"] + v["py"] + v["stream"] + v["io"], 3)
-    # quiet host: ratios 1.0 -> identity
-    u = bench._normalized_vector(timings, 1.0, 1.0, 1.0)
-    assert u["total"] == 40.0
-    # missing io probe falls back to the jvm ratio (comparable, not
-    # vanished); missing jvm/py ratios -> None (references don't apply)
-    w = bench._normalized_vector(timings, 1.0, 1.0, None)
-    assert w["io"] == 10.0
-    assert bench._normalized_vector(timings, None, 1.0, 1.0) is None
-
-
-def test_class_assignment_covers_headline():
-    """Every headline query lands in exactly one class; unknown names
-    default to jvm."""
-    seen = {}
-    for n in bench.HEADLINE:
-        seen.setdefault(bench._class_of(n), []).append(n)
-    assert set(seen) <= {"jvm", "py", "stream", "io"}
-    assert "q59_stream_custom_sessionize" in seen["stream"]
-    assert "q95_multimodal_binary" in seen["py"]
-    assert "q86_snapshot_diff" in seen["io"]
-    assert bench._class_of("q_not_a_query") == "jvm"
-    # classes reference only real headline names (catch renames)
-    for names in bench._CLASS_QUERIES.values():
-        assert names <= set(bench.HEADLINE)
-
-
 def test_catalog_fingerprint_tracks_engine_source():
     """The fingerprint is stable across calls and keyed to engine
     source bytes."""
