@@ -140,53 +140,15 @@ def _catalog_fingerprint() -> str | None:
         return None
 
 
-def _meminfo_kb(key: str) -> int | None:
-    """One field from /proc/meminfo (kB), or None off-Linux."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith(key + ":"):
-                    return int(line.split()[1])
-    except OSError:
-        pass
-    return None
-
-
-def _settle() -> dict:
-    """Pre-run settle step (round-8 postmortem, SURVEY §6): two
-    back-to-back benches read +8-15% apart from dirty-page writeback
-    that NEITHER probe sees — the pages belong to the previous run.
-    sync() forces the writeback now (outside the timed region), then
-    wait $SPARK_GRAFT_SETTLE_SEC (default 0 — the driver's cadence
-    usually provides idle time; set 300 for a by-the-book quiet run).
-    The Dirty/Writeback readouts land in the bench JSON so a reader
-    can see whether the run STARTED settled, instead of inferring it
-    from probe entrails afterwards."""
-    before_dirty = _meminfo_kb("Dirty")
-    t0 = time.perf_counter()
-    if hasattr(os, "sync"):
-        os.sync()
-    idle = float(os.environ.get("SPARK_GRAFT_SETTLE_SEC", "0"))
-    if idle > 0:
-        time.sleep(idle)
-    return {
-        "settle_dirty_kb_before": before_dirty,
-        "settle_dirty_kb_after": _meminfo_kb("Dirty"),
-        "settle_writeback_kb": _meminfo_kb("Writeback"),
-        "settle_idle_sec": idle,
-        "settle_sync_sec": round(time.perf_counter() - t0 - idle, 3),
-        "settle_load1": round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     load_catalog()
     names = [n for n in HEADLINE if n in QUERIES]
 
-    settle = _settle()
-    print(f"# settle: {settle}", file=sys.stderr)
+    # Flush dirty pages left by whatever ran before, so their writeback
+    # does not land inside the timed region.
+    os.sync()
 
     spark = get_session(app_name="etfce-bench")
     # Warm the JVM codegen paths and each table's parquet footer with a
@@ -270,7 +232,6 @@ def main() -> None:
         "catalog_fp": _catalog_fingerprint(),
         "cpus": len(os.sched_getaffinity(0)),
         "defaultParallelism": spark.sparkContext.defaultParallelism,
-        **settle,
     }
     print(json.dumps(payload))
     spark.stop()
