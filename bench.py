@@ -144,7 +144,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     load_catalog()
-    names = [n for n in HEADLINE if n in QUERIES]
 
     # Flush dirty pages left by whatever ran before, so their writeback
     # does not land inside the timed region.
@@ -193,7 +192,7 @@ def main() -> None:
     # spread stays auditable; the cap exists so a future pathological
     # regression doesn't triple its own cost.
     timings: dict[str, float] = {}
-    for name in names:
+    for name in HEADLINE:
         runs: list[float] = []
         for i in range(3):
             if i == 2 and min(runs) >= _EXTRA_RUN_UNDER_SEC:

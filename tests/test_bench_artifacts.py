@@ -13,6 +13,16 @@ bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
 
 
+def test_headline_is_36_registered_queries():
+    """bench.py times HEADLINE as written: a renamed or unregistered
+    name must fail the run (KeyError), not shrink the headline the
+    driver compares round over round."""
+    bench.load_catalog()
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)) == 36
+    assert set(bench.HEADLINE) <= set(bench.QUERIES)
+    assert len(set(bench.QUERIES) - set(bench.HEADLINE)) == 14
+
+
 def test_catalog_fingerprint_tracks_engine_source():
     """The fingerprint is stable across calls and keyed to engine
     source bytes."""
