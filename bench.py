@@ -3,11 +3,15 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "git_rev": ..., "catalog_fp": ..., "cpus": N, "defaultParallelism": N}
 
 Each query executes end-to-end via the `noop` sink — the full plan runs
 (scan → shuffle → agg), nothing collects to the driver, so the timing
 reflects engine throughput rather than toPandas serialization.
+
+This script keeps no history and writes nothing outside `.spark-scratch/`.
+To compare two trees, use perfbench's paired runs (perfbench/README.md).
 """
 
 from __future__ import annotations
