@@ -15,8 +15,8 @@ _spec.loader.exec_module(bench)
 
 def test_headline_is_36_registered_queries():
     """bench.py times HEADLINE as written: a renamed or unregistered
-    name must fail the run (KeyError), not shrink the headline the
-    driver compares round over round."""
+    name must fail the run (KeyError), not shrink the headline to a
+    total no longer comparable with earlier 36-query runs."""
     bench.load_catalog()
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE)) == 36
     assert set(bench.HEADLINE) <= set(bench.QUERIES)
