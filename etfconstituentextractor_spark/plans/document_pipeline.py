@@ -328,8 +328,7 @@ def q50_doc_extract_holdings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q52_doc_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+    from etfconstituentextractor_spark.sources.tables import scratch_dir
 
     # index: original (seq 0) + amendment (seq 1) + a non-NPORT filing
     # (seq 2, form OTHER) per nation; seqs 0/1 share a reporting date —
@@ -354,10 +353,7 @@ def q52_doc_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "issuer",
         parse_money("value_str").alias("value_usd"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"etfce_doc_sink_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir("etfce_doc_sink", sf_dir)
     (
         typed.repartition("reporting_date")
         .write.mode("overwrite")

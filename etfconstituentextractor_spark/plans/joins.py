@@ -117,13 +117,11 @@ def q20_join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q22_join_shuffle_factfact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
     import os
-    import tempfile
 
     from etfconstituentextractor_spark.operators.bloom import bloom_reduced_join
     from etfconstituentextractor_spark.operators.skew import salted_join
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.sources.derived import derived
 
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
@@ -187,105 +185,38 @@ def q22_join_shuffle_factfact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bucketed: both sides as bucketBy(8, key) external tables
     # (projected to the columns the query needs), joined bucket-aligned
     # — NO exchange at all. The write is the once-a-day cost the daily
-    # joins amortize, and the code says so: the tables are
-    # corpus-fingerprinted (shared sources/fingerprint.py identity:
-    # per-file name+size+mtime_ns, the replay.py postmortem's rule)
-    # and only rewritten when the corpus changed — repeat calls in a
-    # fresh session re-DECLARE the bucket spec over the existing files
-    # (DDL only, no data movement), exactly how a persistent metastore
-    # would carry it. That makes the measured steady-state cost the
-    # read-side one, which is the operator's actual claim. The marker
-    # also records the exact data-file count per table: PARTIAL loss
-    # (tmp cleanup eating some bucket files) must rewrite, not
-    # silently undercount.
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"etfce_bucketed_{tag}")
-    li_t, o_t = f"etfce_bkt_li_{tag}", f"etfce_bkt_o_{tag}"
-
-    def _data_files(sub: str) -> list[str]:
-        d = os.path.join(base, sub)
-        if not os.path.isdir(d):
-            return []
-        return sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
-
-    fp = {
-        "src": {t: table_fingerprint(sf_dir, t) for t in ("lineitem", "orders")},
-    }
-    marker = os.path.join(base, "_fingerprint.json")
-    fresh = False
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                saved = json.load(fh)
-            fresh = saved.get("src") == fp["src"] and all(
-                _data_files(sub) == saved.get("files", {}).get(sub)
-                for sub in ("lineitem", "orders")
-            )
-        except (OSError, ValueError):
-            fresh = False
+    # joins amortize, and the code says so: the tables are a
+    # corpus-fingerprinted sources/derived.py layout, written only
+    # when the corpus changed — repeat calls in a fresh session
+    # re-DECLARE the bucket spec over the existing files (DDL only, no
+    # data movement), exactly how a persistent metastore would carry
+    # it. That makes the measured steady-state cost the read-side
+    # one, which is the operator's actual claim.
+    #
+    # DPP: orders partitioned by o_orderpriority on disk, dim filtered
+    # on its NON-partition tag column — only the runtime subquery can
+    # prune the fact scan. Same layout, same fingerprint.
     specs = [
-        (li_t, li.select("l_orderkey", "l_shipdate", "l_extendedprice"),
-         "l_orderkey", os.path.join(base, "lineitem")),
-        (o_t, o.select("o_orderkey", "o_orderdate", "o_orderpriority"),
-         "o_orderkey", os.path.join(base, "orders")),
+        ("li", li.select("l_orderkey", "l_shipdate", "l_extendedprice"), "l_orderkey", "lineitem"),
+        ("o", o.select("o_orderkey", "o_orderdate", "o_orderpriority"), "o_orderkey", "orders"),
     ]
-    if fresh:
-        for tname, df, key, path in specs:
-            if not spark.catalog.tableExists(tname):
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {tname} ({cols}) USING parquet "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
-                    f"LOCATION '{path}'"
-                )
-    else:
-        for tname, df, key, path in specs:
+
+    def build(dest):
+        # bucketBy needs saveAsTable: write through a throwaway
+        # external table whose files land in the build dir, then drop
+        # it (its files stay) — the published dir is declared below
+        for short, df, key, sub in specs:
+            tmp_t = f"etfce_bkt_build_{short}_{os.getpid()}"
             (
                 df.write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", path)
+                .option("path", os.path.join(dest, sub))
                 .mode("overwrite")
                 .format("parquet")
-                .saveAsTable(tname)
+                .saveAsTable(tmp_t)
             )
-        fp["files"] = {sub: _data_files(sub) for sub in ("lineitem", "orders")}
-        with open(marker, "w") as fh:
-            json.dump(fp, fh)
-    li_b, o_b = spark.table(li_t), spark.table(o_t)
-    bucketed = agg_leg(li_b.join(o_b, li_b.l_orderkey == o_b.o_orderkey), "bucketed")
-
-    # DPP: orders partitioned by o_orderpriority on disk, dim filtered
-    # on its NON-partition tag column — only the runtime subquery can
-    # prune the fact scan. Same fingerprint discipline as the bucketed
-    # tables (full recursive file-list equality; partial loss rewrites).
-    part_dir = os.path.join(base, "orders_part")
-    dim_dir = os.path.join(base, "prio_dim")
-
-    def _tree_files(d: str) -> list[str]:
-        out = []
-        for root, _, names in os.walk(d):
-            for n in names:
-                if n.endswith(".parquet"):
-                    out.append(os.path.relpath(os.path.join(root, n), d))
-        return sorted(out)
-
-    fp2 = {"src": table_fingerprint(sf_dir, "orders")}
-    marker2 = os.path.join(base, "_fingerprint_dpp.json")
-    fresh2 = False
-    if os.path.exists(marker2):
-        try:
-            with open(marker2) as fh:
-                saved2 = json.load(fh)
-            fresh2 = saved2.get("src") == fp2["src"] and all(
-                _tree_files(d) == saved2.get("files", {}).get(key)
-                for key, d in (("part", part_dir), ("dim", dim_dir))
-            )
-        except (OSError, ValueError):
-            fresh2 = False
-    if not fresh2:
-        o.write.partitionBy("o_orderpriority").mode("overwrite").parquet(part_dir)
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_t}")
+        o.write.partitionBy("o_orderpriority").parquet(os.path.join(dest, "orders_part"))
         (
             o.select("o_orderpriority")
             .distinct()
@@ -295,17 +226,28 @@ def q22_join_shuffle_factfact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise("drop")
                 .alias("tag"),
             )
-            .write.mode("overwrite")
-            .parquet(dim_dir)
+            .write.parquet(os.path.join(dest, "prio_dim"))
         )
-        fp2["files"] = {"part": _tree_files(part_dir), "dim": _tree_files(dim_dir)}
-        with open(marker2, "w") as fh:
-            json.dump(fp2, fh)
-    fact = spark.read.parquet(part_dir).select(
+
+    base = derived("q22_tables", sf_dir, ["lineitem", "orders"], {"buckets": 8}, build)
+    # re-declared per call: the layout may have been rebuilt at the same
+    # path, and a session's cached table would keep its old file list
+    for short, df, key, sub in specs:
+        cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+        spark.sql(f"DROP TABLE IF EXISTS etfce_bkt_{short}")
+        spark.sql(
+            f"CREATE TABLE etfce_bkt_{short} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
+            f"LOCATION '{os.path.join(base, sub)}'"
+        )
+    li_b, o_b = spark.table("etfce_bkt_li"), spark.table("etfce_bkt_o")
+    bucketed = agg_leg(li_b.join(o_b, li_b.l_orderkey == o_b.o_orderkey), "bucketed")
+
+    fact = spark.read.parquet(os.path.join(base, "orders_part")).select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderdate", "o_orderpriority"
     )
     dim = (
-        spark.read.parquet(dim_dir)
+        spark.read.parquet(os.path.join(base, "prio_dim"))
         .filter(F.col("tag") == "keep")
         .select("o_orderpriority")
     )

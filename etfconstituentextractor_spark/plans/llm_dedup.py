@@ -511,41 +511,24 @@ def _q62_stream_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from etfconstituentextractor_spark.sources.derived import derived
     from etfconstituentextractor_spark.streaming.dedup_index import (
         read_pairs,
         run_stream_dedup,
         stage_doc_chunks,
     )
-    from etfconstituentextractor_spark.streaming.replay import (
-        marker_ok,
-        work_dir,
-        write_marker,
-    )
-
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.streaming.replay import work_dir
 
     root = work_dir(sf_dir, "q62_stream")
     # STATE and CHECKPOINT wipe per call — the q55-q59 convention:
-    # re-runs never resume. The staged SOURCE chunks are reused across
-    # runs under the replay.py marker discipline (a deterministic
-    # function of the corpus; fingerprint invalidates on refresh) —
-    # re-staging them per run cost ~0.5s of the leg's fixed budget.
+    # re-runs never resume. The staged SOURCE chunks are a derived
+    # layout reused across runs (a deterministic function of the
+    # corpus) — re-staging them per run cost ~0.5s of the leg's fixed
+    # budget.
     for sub in ("state", "ckpt"):
         shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    src = os.path.join(root, "src")
-    sig = (
-        f"q62src|{_STREAM_SLICE_MOD}|{_STREAM_CHUNKS}|{sf_dir}|"
-        f"{table_fingerprint(sf_dir, 'documents')}"
-    )
-    if not marker_ok(src, sig):
-        # build-then-rename publish, the stage_chunks discipline: the
-        # work_dir is process-SHARED (tag+sf keyed), so staging in
-        # place would let two processes seeing a stale marker
-        # destructively interleave rmtree+stage (round-9 review
-        # finding). A killed run leaves only scratch; a lost rename
-        # race adopts the winner's (bit-identical) layout.
-        build = f"{src}.build-{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
+
+    def stage(dest):
         d = (
             load(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -553,23 +536,15 @@ def _q62_stream_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stage_doc_chunks(
             d,
-            build,
+            dest,
             _STREAM_CHUNKS,
             # arrival batch: interleave by the quotient so family
             # members (nearby ids) land in DIFFERENT chunks
             F.pmod(F.floor(F.col("doc_id") / _STREAM_SLICE_MOD), _STREAM_CHUNKS),
         )
-        # marker inside the build, BEFORE the publish rename: the
-        # rename is what makes it visible
-        write_marker(build, sig)
-        try:
-            shutil.rmtree(src, ignore_errors=True)
-            os.rename(build, src)
-        except OSError:
-            if marker_ok(src, sig):  # lost the race to a valid winner
-                shutil.rmtree(build, ignore_errors=True)
-            else:
-                src = build  # fall back to our scratch layout
+
+    recipe = {"mod": _STREAM_SLICE_MOD, "chunks": _STREAM_CHUNKS}
+    src = derived("q62_stream_src", sf_dir, ["documents"], recipe, stage)
     # foreachBatch runs with AQE DISABLED (streaming limitation), so
     # the handler's unhinted joins keep their static
     # shuffle-partition count; pin it low for the drain — per-batch
@@ -593,74 +568,34 @@ def _q62_stream_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_and_bands_cached(spark, sf_dir, d):
-    """The v1 LSH index as a corpus-fingerprinted parquet cache
+    """The v1 LSH index as a corpus-fingerprinted derived layout
     (round 11): the band index of the STANDING corpus is index state
     by the q62 family's own narrative — a deployment builds it once
     per corpus version (the premise the incremental and stream legs
     maintain), so rebuilding it per bench run was paying an amortized
-    cost on every measurement (the q22-bucketed-tables / PQ-codebook
-    discipline applied to the LSH index; the hash oracle re-derives
-    the full index relationally every correctness run, so a stale
-    cache cannot pass). Build-then-rename publish, process-shared
-    work dir — the stage_chunks race discipline. Falls back to the
-    in-memory build on any staging failure."""
+    cost on every measurement (the hash oracle re-derives the full
+    index relationally every correctness run, so a stale cache cannot
+    pass). Falls back to the in-memory build on any staging failure:
+    staging is an optimization, and a full /tmp must not fail the
+    query."""
     import os
-    import shutil
 
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
-    from etfconstituentextractor_spark.streaming.replay import (
-        marker_ok,
-        work_dir,
-        write_marker,
-    )
+    from etfconstituentextractor_spark.sources.derived import derived
 
-    root = work_dir(sf_dir, "q62_index")
-    # the signature must key EVERY parameter the index derives from —
-    # _N_SALTS alone under-keyed it (a band-count change can leave the
-    # salt count unchanged and serve a stale layout, round-11 second
-    # review); the trailing integer is the manual recipe version for
-    # code changes the constants cannot see (shingle width etc.)
-    sig = (
-        f"q62idx|b{_N_BANDS}|r{_ROWS_PER_BAND}|s{_N_SALTS}|v1|{sf_dir}|"
-        f"{table_fingerprint(sf_dir, 'documents')}"
-    )
-    if not marker_ok(root, sig):
-        build = f"{root}.build-{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
+    def build(dest):
         sh, bands = _shingle_and_bands(d)
-        try:
-            sh.write.parquet(os.path.join(build, "shingles"))
-            bands.write.parquet(os.path.join(build, "bands"))
-            write_marker(build, sig)
-        except Exception:
-            # staging is an OPTIMIZATION: a full /tmp must not fail
-            # the query — serve the in-memory build (docstring
-            # contract; round-11 second review)
-            shutil.rmtree(build, ignore_errors=True)
-            return sh, bands
-        # rename-if-absent publish: NEVER rmtree a path another
-        # process may have just published and be lazily scanning
-        # (round-11 second review — the loser previously destroyed
-        # the winner's live directory before renaming)
-        try:
-            os.rename(build, root)
-        except OSError:
-            if marker_ok(root, sig):  # lost the race to a valid winner
-                shutil.rmtree(build, ignore_errors=True)
-            else:
-                # root exists but is STALE (old corpus/recipe): move
-                # it aside, then claim; any failure serves scratch.
-                # The moved-aside generation stays ON DISK (round-12
-                # advice): a concurrent run that resolved the old
-                # root may still be lazily scanning its files — the
-                # dangling-frame discipline _merge_table's generation
-                # dirs use. Bounded: one aside per corpus refresh.
-                try:
-                    aside = f"{root}.stale-{os.getpid()}"
-                    os.rename(root, aside)
-                    os.rename(build, root)
-                except OSError:
-                    root = build  # serve our scratch layout
+        sh.write.parquet(os.path.join(dest, "shingles"))
+        bands.write.parquet(os.path.join(dest, "bands"))
+
+    try:
+        # the recipe must key EVERY parameter the index derives from —
+        # _N_SALTS alone under-keyed it (a band-count change can leave
+        # the salt count unchanged); "v" is the manual version for code
+        # changes the constants cannot see (shingle width etc.)
+        recipe = {"b": _N_BANDS, "r": _ROWS_PER_BAND, "s": _N_SALTS, "v": 1}
+        root = derived("q62_index", sf_dir, ["documents"], recipe, build)
+    except Exception:
+        return _shingle_and_bands(d)
     return (
         spark.read.schema("doc_id bigint, shingles array<string>").parquet(
             os.path.join(root, "shingles")

@@ -429,55 +429,22 @@ def _merge_table(spark, sf_dir):
     of the familiar perturbation source (every 13th revised, every
     11th re-inserted under key+shift), v2 = ``snapshot_restore(0)``.
 
-    Fingerprint-cached like _timetravel_table (round-11 trim: the
+    A derived layout like _timetravel_table (round-11 trim: the
     fresh-table-per-run build cost ~1.1-1.3s of every q86 run).
     "Merge mutates version history" is why an in-place table can't be
     re-merged — but the COMPLETED v0→v1→v2 chain is immutable once
-    built, so reruns only READ it; a corpus refresh (or any missing
-    manifest/data file) invalidates and rebuilds, and the merged /
-    restored VALUES stay under the q86 hash oracle every run, so a
-    stale or partial cache cannot pass. The merge PROTOCOL semantics
-    (rewrite minimality, concurrency, DV carry) stay pinned per-run
-    in tests/test_snapshot_table.py, where tables are always fresh."""
-    import json as _json
+    built, so reruns only READ it; the merged / restored VALUES stay
+    under the q86 hash oracle every run, so a stale or partial cache
+    cannot pass. The merge PROTOCOL semantics (rewrite minimality,
+    concurrency, DV carry) stay pinned per-run in
+    tests/test_snapshot_table.py, where tables are always fresh."""
     import os
-    import shutil
-    import tempfile
 
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.sources.derived import derived
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_merge
 
-    import hashlib
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"etfce_mergetbl_{tag}")
-    fp = {"documents": table_fingerprint(sf_dir, "documents"), "recipe": 2}
-    # GENERATION dir keyed by the fingerprint: a corpus refresh builds
-    # a NEW generation instead of rmtree'ing the served path — a lazy
-    # q86 frame returned before the refresh still references its own
-    # generation's files (the round-9 dangling-frame hazard the
-    # unique-per-call design guarded against; round-11 review caught
-    # the cache reintroducing it). Stale generations are bounded by
-    # corpus refreshes and swept only when provably not this one.
-    gen = hashlib.md5(
-        _json.dumps(fp, sort_keys=True).encode()
-    ).hexdigest()[:12]
-    gdir = os.path.join(base, f"gen-{gen}")
-    table = os.path.join(gdir, "table")
-    marker = os.path.join(gdir, "_fingerprint.json")
-    if not _snapshot_cache_fresh(table, marker, fp, 3):
-        # build-then-rename publish (the stage_chunks discipline —
-        # round-11 third review: two processes cold-starting the same
-        # generation previously rmtree'd each other's in-flight
-        # build); a lost rename race adopts the winner's identical
-        # generation, any other failure serves the scratch build
-        build = f"{gdir}.build-{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        os.makedirs(build)
-        gdir_final = gdir
-        gdir = build
-        table = os.path.join(gdir, "table")
-        marker = os.path.join(gdir, "_fingerprint.json")
+    def build(dest):
+        table = os.path.join(dest, "table")
         d = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
         # one-file base + no stats: each stats pass is an extra agg
         # job; the stats-assisted merge path is pinned at pytest tier
@@ -501,233 +468,29 @@ def _merge_table(spark, sf_dir):
         assert mv == 1, f"merge expected to commit v1, got v{mv}"
         rv = snapshot_restore(spark, table, 0)
         assert rv == 2, f"restore expected to commit v2, got v{rv}"
-        with open(marker, "w") as fh:
-            _json.dump(fp, fh)
-        try:
-            os.rename(gdir, gdir_final)
-            table = os.path.join(gdir_final, "table")
-        except OSError:
-            if _snapshot_cache_fresh(
-                os.path.join(gdir_final, "table"),
-                os.path.join(gdir_final, "_fingerprint.json"),
-                fp,
-                3,
-            ):  # lost the race to a valid winner
-                shutil.rmtree(gdir, ignore_errors=True)
-                table = os.path.join(gdir_final, "table")
-            else:
-                # gdir_final exists but is STALE/PARTIAL (a killed
-                # build published, or tmp cleanup ate data files):
-                # without healing, the rename fails on every future
-                # run and each leaks a fresh .build-<pid> (round-12
-                # advice). Move the carcass aside and claim — the
-                # aside stays on disk (dangling-frame discipline:
-                # a concurrent run may still be lazily scanning it).
-                try:
-                    os.rename(gdir_final, f"{gdir_final}.stale-{os.getpid()}")
-                    os.rename(gdir, gdir_final)
-                    table = os.path.join(gdir_final, "table")
-                except OSError:
-                    pass  # serve the scratch build at `table` as-is
-        _sweep_dead_builds(base)
-    return table
 
-
-#: scratch builds / stale asides younger than this are never swept.
-#: Builds take seconds and aside-scanning frames live minutes, so six
-#: hours is conservative; the constant exists so tests can tighten it.
-#: Deployments override per-host via $SPARK_GRAFT_SWEEP_AGE_SEC
-#: (round-14 verdict ask: the bench host's 6h is not a law of nature —
-#: a 100 TB shared-fs table may want it looser, a disk-tight CI
-#: tighter). Read at sweep time so a long-lived service picks up an
-#: operator's change without a restart.
-_SWEEP_AGE_SEC = 6 * 3600
-
-
-def _sweep_age_sec() -> float:
-    import os
-
-    try:
-        return float(os.environ["SPARK_GRAFT_SWEEP_AGE_SEC"])
-    except (KeyError, ValueError):
-        return float(_SWEEP_AGE_SEC)
-
-
-def _subtree_newest_mtime(p):
-    """Newest mtime across ``p`` and everything under it, or None when
-    the subtree vanished. A top-level dir's mtime reflects only its
-    DIRECT children (round-14 advice): a slow build writing under
-    build/table/ keeps the deep files fresh while the top-level dir
-    ages past any cutoff — liveness must be judged on the subtree."""
-    import os
-
-    newest = None
-    try:
-        st = os.stat(p)
-        newest = st.st_mtime
-    except OSError:
-        return None
-    for dirpath, dirnames, filenames in os.walk(p):
-        for name in dirnames + filenames:
-            try:
-                m = os.stat(os.path.join(dirpath, name)).st_mtime
-            except OSError:
-                continue
-            if m > newest:
-                newest = m
-    return newest
-
-
-def _sweep_dead_builds(base):
-    """Remove abandoned ``*.build-<pid>`` scratch dirs and aged
-    ``*.stale-*`` asides (round-12 advice; rule revised round 13, and
-    again round 14 on advice). History of the gate: the original local
-    ``os.kill(pid, 0)`` probe alone was wrong twice over — on a shared
-    filesystem another HOST's in-flight build looks dead and got
-    rmtree'd mid-build, while local pid RECYCLING could keep a dead
-    carcass alive indefinitely. Round 13 switched to top-level dir
-    mtime age, which over-corrected (round-14 advice): a directory's
-    mtime reflects only its DIRECT children, so a slow build writing
-    deep under build/table/ — or an aside a reader is still lazily
-    scanning past the cutoff — aged out at the top level while its
-    subtree was demonstrably alive. The gate is now TWO conditions,
-    both required to sweep:
-
-    1. the NEWEST mtime anywhere in the subtree is older than the
-       cutoff (a writer anywhere keeps the whole tree alive), and
-    2. the owner pid embedded in the name is not alive locally (the
-       conservative direction of the old probe: a live pid always
-       keeps its dir; a recycled pid merely delays the sweep until
-       that pid exits, which only leaks disk, never data).
-
-    Residual caveat, documented not solved: a pure READER on another
-    shared-fs host updates no mtimes and owns no local pid — it is
-    protected only by the age cutoff, which is why the cutoff is
-    hours, not minutes, and per-deployment tunable
-    ($SPARK_GRAFT_SWEEP_AGE_SEC)."""
-    import os
-    import re as _re
-    import shutil
-    import time
-
-    try:
-        names = os.listdir(base)
-    except OSError:
-        return
-    cutoff = time.time() - _sweep_age_sec()
-    for n in names:
-        m = _re.search(r"\.(?:build|stale)-(\d+)$", n)
-        if m is None:
-            # unowned name shapes (e.g. legacy ``.stale-`` without a
-            # pid suffix) fall back to the age-only rule
-            if not (".build-" in n or ".stale-" in n):
-                continue
-            pid = None
-        else:
-            pid = int(m.group(1))
-        p = os.path.join(base, n)
-        newest = _subtree_newest_mtime(p)
-        if newest is None:
-            continue  # vanished under us — someone else swept it
-        if newest >= cutoff:
-            continue  # fresh somewhere in the subtree: in flight
-        if pid is not None:
-            try:
-                os.kill(pid, 0)
-                continue  # owner alive locally — never sweep
-            except ProcessLookupError:
-                pass  # owner gone: old AND orphaned -> sweep
-            except OSError:
-                continue  # EPERM etc.: someone owns it — keep
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _snapshot_cache_fresh(table, marker, fp, n_roots):
-    """Shared freshness check for fingerprint-cached snapshot tables
-    (_timetravel_table, _merge_table): marker matches AND every root
-    manifest is present with every referenced data file and DV dir on
-    disk (tmp cleanup can eat the large data files while keeping the
-    small marker — that must rebuild, never serve a partial read)."""
-    import json as _json
-    import os
-    import re as _re
-
-    if not os.path.exists(marker):
-        return False
-    try:
-        with open(marker) as fh:
-            if _json.load(fh) != fp:
-                return False
-        mdir = os.path.join(table, "_manifests")
-        names = sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []
-        # ROOT manifests only: vN-shard-*.json files also end in
-        # .json, so a sharded inventory would make this count never
-        # equal the expected roots and the cache would rebuild every
-        # run — perf-only, but silently (round-10 advice)
-        manifests = [n for n in names if _re.match(r"^v\d{8}\.json$", n)]
-        if len(manifests) != n_roots:
-            return False
-        for n in manifests:
-            with open(os.path.join(mdir, n)) as fh:
-                m = _json.load(fh)
-            if "files" in m:
-                files = m["files"]
-            else:
-                # sharded inventory: resolve each shard doc (round-11
-                # review — m["files"] KeyError'd into the blanket
-                # except, silently rebuilding every run)
-                files = []
-                for ref in m.get("shards", []):
-                    with open(os.path.join(table, ref["path"])) as fh:
-                        files += _json.load(fh)["files"]
-            if not all(os.path.exists(os.path.join(table, f)) for f in files):
-                return False
-            dv = m.get("dv")
-            if dv and not os.path.isdir(os.path.join(table, dv["dir"])):
-                return False
-        return True
-    except (OSError, ValueError, KeyError):
-        return False
+    return os.path.join(derived("q86_merge", sf_dir, ["documents"], {"v": 2}, build), "table")
 
 
 def _timetravel_table(spark, sf_dir, commits, deletes=()):
     """Build (or reuse) the q86 snapshot table: one commit per
     (frame, mode) in order, then one merge-on-read
-    ``snapshot_delete`` per ``deletes`` where-tuple (round 10).
-    Corpus-fingerprinted with the shared sources/fingerprint.py
-    identity (per-file name+size+mtime_ns — the replay.py
-    postmortem's rule); a refresh of documents.parquet invalidates
-    and rebuilds, and so does ANY missing manifest, data file, or
-    deletion-vector dir (tmp cleanup can eat the large data files
-    while keeping the small marker — that must rebuild, never serve a
-    partial or permanently-crashing read; a missing DV dir would
-    crash the reads that mask by it)."""
-    import json as _json
+    ``snapshot_delete`` per ``deletes`` where-tuple (round 10). A
+    corpus-fingerprinted derived layout: a refresh of
+    documents.parquet rebuilds, and so does ANY missing or truncated
+    manifest, data file or deletion-vector file (a missing DV file
+    would crash the reads that mask by it)."""
     import os
-    import shutil
-    import tempfile
 
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.sources.derived import derived
+    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"etfce_snaptable_{tag}")
-    table = os.path.join(base, "table")
-    fp = {
-        "documents": table_fingerprint(sf_dir, "documents"),
-        "deletes": [list(w) for w in deletes],
-        "recipe": 6,
-    }
-    marker = os.path.join(base, "_fingerprint.json")
-    fresh = _snapshot_cache_fresh(table, marker, fp, len(commits) + len(deletes))
-    if not fresh:
-        from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base)
+    def build(dest):
+        table = os.path.join(dest, "table")
         for frame, mode in commits:
             snapshot_commit(frame, table, mode=mode, stats_cols=["doc_id"])
         for w in deletes:
             snapshot_delete(spark, table, where=tuple(w))
-        with open(marker, "w") as fh:
-            _json.dump(fp, fh)
-    return table
+
+    recipe = {"deletes": [list(w) for w in deletes], "v": 6}
+    return os.path.join(derived("q86_timetravel", sf_dir, ["documents"], recipe, build), "table")

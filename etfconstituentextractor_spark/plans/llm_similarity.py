@@ -249,65 +249,37 @@ def _pqfp_codebook_cached(spark, sf_dir: str, fcand, train) -> DataFrame:
     SAME codebook relationally on every correctness run — a stale or
     corrupted cache cannot pass the hash. Value = the M*K codebook
     rows (index metadata, never corpus data)."""
-    import hashlib
     import json
     import os
-    import tempfile
 
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.sources.derived import derived
 
-    sig = json.dumps(
-        {
-            "fp": table_fingerprint(sf_dir, "embeddings"),
-            "m": _PQFP_M,
-            "k": _PQFP_K,
-            "iters": _PQFP_ITERS,
-            "dsub": _PQFP_DSUB,
-            "scale": _PQFP_SCALE,
-            "nq": _N_QUERIES,
-            # params + corpus identify the INPUT, not the code that
-            # trains on it — the recipe term hashes the LIVE SOURCE of
-            # the trainer module and the in-plan candidate derivation,
-            # so any algorithm edit invalidates the cache without a
-            # hand-bumped integer anyone can forget (round-9 review
-            # found the forgetting; round-10 advice found the
-            # hand-bump's blind spot: candidate-derivation changes)
-            "recipe": _pqfp_recipe(),
-        },
-        sort_keys=True,
-    )
-    schema = "sub_id bigint, code int, cv array<bigint>"
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    # uid in the name: /tmp is world-shared — publishing over another
-    # user's cache file would EPERM under the sticky bit (round-9
-    # review finding); per-user caches sidestep it entirely
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(tempfile.gettempdir(), f"etfce_pqfp_cb_u{uid}_{key}.json")
-    if os.path.isfile(path):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            doc = None
-        if doc and doc.get("sig") == sig:
-            return spark.createDataFrame(
-                [tuple(r) for r in doc["rows"]], schema=schema
-            )
-    fcb = train(fcand, k=_PQFP_K, iters=_PQFP_ITERS, dsub=_PQFP_DSUB)
-    rows = sorted((r["sub_id"], r["code"], list(r["cv"])) for r in fcb.collect())
-    tmp = f"{path}.tmp-{os.getpid()}"
-    try:
-        with open(tmp, "w") as fh:
-            json.dump({"sig": sig, "rows": rows}, fh)
-        os.replace(tmp, path)  # atomic publish; racers write identical bytes
-    except OSError:
-        # cache publish is best-effort: a permission/space failure must
-        # not fail the query — the trained frame is already in hand
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-    return spark.createDataFrame(rows, schema=schema)
+    recipe = {
+        "m": _PQFP_M,
+        "k": _PQFP_K,
+        "iters": _PQFP_ITERS,
+        "dsub": _PQFP_DSUB,
+        "scale": _PQFP_SCALE,
+        "nq": _N_QUERIES,
+        # params + corpus identify the INPUT, not the code that trains
+        # on it — the recipe term hashes the LIVE SOURCE of the
+        # trainer module and the in-plan candidate derivation, so any
+        # algorithm edit invalidates the cache without a hand-bumped
+        # integer anyone can forget (round-9 review found the
+        # forgetting; round-10 advice found the hand-bump's blind
+        # spot: candidate-derivation changes)
+        "recipe": _pqfp_recipe(),
+    }
+    def build(dest):
+        fcb = train(fcand, k=_PQFP_K, iters=_PQFP_ITERS, dsub=_PQFP_DSUB)
+        rows = sorted((r["sub_id"], r["code"], list(r["cv"])) for r in fcb.collect())
+        with open(os.path.join(dest, "codebook.json"), "w") as fh:
+            json.dump(rows, fh)
+
+    d = derived("q70_pq_codebook", sf_dir, ["embeddings"], recipe, build)
+    with open(os.path.join(d, "codebook.json")) as fh:
+        rows = [tuple(r) for r in json.load(fh)]
+    return spark.createDataFrame(rows, schema="sub_id bigint, code int, cv array<bigint>")
 
 
 @query(

@@ -373,18 +373,20 @@ def q12_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q15_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from etfconstituentextractor_spark.sources.tables import scratch_dir
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
         dec("o_totalprice").alias("o_totalprice"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    csv_out = os.path.join(tempfile.gettempdir(), f"etfce_csv_roundtrip_{tag}")
-    pq_out = os.path.join(tempfile.gettempdir(), f"etfce_pq_roundtrip_{tag}")
-    orc_out = os.path.join(tempfile.gettempdir(), f"etfce_orc_roundtrip_{tag}")
-    json_out = os.path.join(tempfile.gettempdir(), f"etfce_jsonl_roundtrip_{tag}")
+    # process-private: two processes sharing tmp, or two datasets with
+    # the same basename, must not overwrite each other's sinks mid-read
+    root = scratch_dir("etfce_roundtrip", sf_dir)
+    csv_out, pq_out, orc_out, json_out, z_out = (
+        os.path.join(root, f) for f in ("csv", "pq", "orc", "jsonl", "zorder")
+    )
     (
         o.repartition("o_orderstatus")
         .write.mode("overwrite")
@@ -419,7 +421,6 @@ def q15_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_zorder.py).
     from etfconstituentextractor_spark.operators.zorder import write_zordered
 
-    z_out = os.path.join(tempfile.gettempdir(), f"etfce_zorder_roundtrip_{tag}")
     write_zordered(
         o.withColumn("o_totalprice", F.col("o_totalprice").cast("double")),
         z_out,
@@ -445,8 +446,6 @@ def q15_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_read,
         snapshot_stream_ingest,
     )
-    from etfconstituentextractor_spark.sources.tables import scratch_dir
-
     slice_ = o.filter(F.col("o_orderkey") % 10 == 0)
     ttbl = scratch_dir("etfce_ingesttbl", sf_dir, unique=True)
     handler = snapshot_stream_ingest(ttbl, "q15-ingest")

@@ -93,10 +93,10 @@ def q55_stream_tumbling_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunks prove the incremental path at half the fixed per-batch
     # cost; the watermark tests (q57/q58) keep finer chunking because
     # their semantics depend on watermark advancement between batches.
-    # The plain 2-chunk layout is SHARED with q56 (reuse=True): the
-    # corpus is read-only and staging deterministic, so the second
-    # query's staging is a marker-file check.
-    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    # The plain 2-chunk layout is SHARED with q56: the corpus is
+    # read-only and staging deterministic, so the second query's
+    # staging is a manifest check.
+    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     tumb = _win_agg(read_stream(spark, chunks), F.window("ts", "1 day"), "tumbling")
     slide = _win_agg(
         read_stream(spark, chunks), F.window("ts", "2 days", "1 day"), "sliding"
@@ -144,7 +144,7 @@ def q55_stream_tumbling_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q56_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     sess = (
         read_stream(spark, chunks)
         .groupBy("user_id", F.session_window("ts", "6 hours").alias("w"))
@@ -374,15 +374,13 @@ def q58_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     doubled = ev.unionByName(ev)
     # the doubled layout is a deterministic function of the corpus, so
-    # reuse shares it across bench/verify runs like the plain layouts.
+    # it is shared across bench/verify runs like the plain layouts.
     # Two chunks, not four: both copies of an event_id share a chunk by
     # construction (equal-width id ranges), so dedup correctness never
     # depended on chunk boundaries; what needs batches is state carry +
     # watermark advancement, which two still exercise — at half the
     # per-batch fixed cost (measured: 3.2s → 2.1s, hash unchanged).
-    chunks = stage_chunks(
-        spark, sf_dir, tag="q58_doubled2", n_chunks=2, source=doubled, reuse=True
-    )
+    chunks = stage_chunks(spark, sf_dir, tag="q58_doubled2", n_chunks=2, source=doubled)
     deduped = (
         read_stream(spark, chunks)
         .withColumn("ts", F.col("ts").cast("timestamp"))

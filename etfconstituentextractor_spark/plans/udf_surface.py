@@ -74,7 +74,7 @@ def _gross_vec_py(qty: pd.Series, price: pd.Series) -> pd.Series:
 )
 def q90_udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
-    qty_band = udf(_qty_band_py, "string")
+    qty_band = udf(_qty_band_py, "string", useArrow=False)
     gross_vec = pandas_udf(_gross_vec_py, "double")
     return li.select(
         "l_orderkey",

@@ -19,8 +19,9 @@ batch shortcut:
   makes the run a finite, deterministic function of the input — the
   batch-equivalent SQL over the same parquet is therefore a valid
   DuckDB oracle (hash-matched, not rows-only);
-- chunk/checkpoint/sink dirs are wiped per call: every invocation is
-  a fresh stream, never a checkpoint resume.
+- checkpoint/sink dirs are wiped per call: every invocation is a
+  fresh stream, never a checkpoint resume (the staged chunks are a
+  corpus-keyed ``sources/derived.py`` layout, shared across runs).
 
 At production scale the same query text runs unchanged against a real
 unbounded source (kafka/files); only this fixture staging is
@@ -38,7 +39,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+from etfconstituentextractor_spark.sources.derived import derived
 from etfconstituentextractor_spark.sources.tables import load
 
 #: schema of the staged chunk files (ts already normalized to
@@ -51,22 +52,6 @@ EVENTS_DDL = (
 
 def _clean(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
-
-
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Identity of the corpus `events` table: per-file (name, size,
-    mtime_ns), so an in-place corpus refresh (new mtime) or rewrite
-    (new size) invalidates every staged layout derived from it.
-
-    Round-4 postmortem: the reuse marker was content-blind
-    (``tag|n_chunks|sf_dir``), so chunk files staged BEFORE a corpus
-    refresh kept replaying afterward — four red driver rows traced to
-    one missing term in this signature. Every layout recipe here
-    (plain chunks, the q58 doubled stream, hardlinked extra-chunk
-    dirs) is a deterministic function of (tag, corpus), so tag +
-    corpus identity is a COMPLETE cache key.
-    """
-    return table_fingerprint(sf_dir, "events")
 
 
 def work_dir(sf_dir: str, tag: str) -> str:
@@ -94,26 +79,6 @@ def _write_chunk(df: DataFrame, base: str, idx: int, mtime: float) -> None:
     os.utime(dst, (mtime, mtime))
 
 
-
-def marker_ok(dir_: str, sig: str) -> bool:
-    """True iff ``dir_``'s reuse marker exists and matches ``sig`` —
-    ONE implementation of the staged-layout staleness check (the
-    round-4 postmortem's rule lives here and only here; q62's stream
-    staging and stage_chunks both call it)."""
-    try:
-        with open(os.path.join(dir_, "_STAGED_OK")) as fh:
-            return fh.read() == sig
-    except OSError:
-        return False
-
-
-def write_marker(dir_: str, sig: str) -> None:
-    """Publish ``dir_``'s reuse marker — written LAST by callers, so
-    an interrupted staging has no marker and re-stages."""
-    with open(os.path.join(dir_, "_STAGED_OK"), "w") as fh:
-        fh.write(sig)
-
-
 def stage_chunks(
     spark: SparkSession,
     sf_dir: str,
@@ -121,7 +86,6 @@ def stage_chunks(
     n_chunks: int = 4,
     source: DataFrame | None = None,
     extra_last_chunk: DataFrame | None = None,
-    reuse: bool = False,
 ) -> str:
     """Write `events` (or ``source``) as ``n_chunks`` single parquet
     files in event-time order with increasing mtimes; returns the
@@ -136,59 +100,47 @@ def stage_chunks(
     ONE partition once per chunk and spammed every bench log with
     `WindowExec: No Partition Defined`.
 
+    Every layout is a deterministic function of its tag plus the
+    corpus `events` table, so it is a ``sources/derived.py`` layout
+    named by the tag: identical layouts are shared across queries and
+    runs, and a corpus refresh re-stages. (If a tag's recipe ever
+    changes in code, bump the tag; a ``source`` must be derived from
+    the corpus events table.)
+
     ``extra_last_chunk`` rows become their OWN final chunk (one extra
     micro-batch after the data batches) — the late-arrival / sentinel
     fixture: by the time they arrive, the watermark has advanced past
     the data's event time. Writing them as a separate file (rather
     than unioning into the last data chunk) keeps the data chunks
-    identical to the plain layout, so the query dir is built from
-    HARDLINKS to the shared ``plain{n}`` staging plus one tiny write —
-    per-query staging cost drops from two full scans+writes to a
-    marker check.
-
-    ``reuse=True`` returns an existing staging directory when its
-    marker matches (tag, n_chunks, sf_dir, corpus fingerprint) — every
-    layout recipe is a deterministic function of its tag plus the
-    corpus, so identical layouts are shared across queries and runs,
-    and a corpus refresh (changed size/mtime of events.parquet)
-    invalidates the marker and re-stages. (If a tag's recipe ever
-    changes in code, bump the tag. A caller passing a ``source`` NOT
-    derived from the corpus events table must not set reuse.) Not
-    honored for ``extra_last_chunk`` callers: extras frames can embed
-    query-specific values, and their staging is near-free anyway. The
-    marker is written last: an interrupted staging has no marker and
-    re-stages.
+    identical to the plain layout, so the query dir ``work_dir(sf_dir,
+    tag)`` is rebuilt per call from HARDLINKS to the shared
+    ``plain{n}`` staging plus one tiny write. It is not cached: extras
+    frames can embed query-specific values.
     """
+    if extra_last_chunk is None:
+        return derived(
+            tag, sf_dir, ["events"], {"n_chunks": n_chunks},
+            lambda d: _stage(spark, sf_dir, d, n_chunks, source),
+        )
+    if source is not None:
+        raise ValueError("extra_last_chunk stages over the corpus events only")
+    shared = stage_chunks(spark, sf_dir, f"plain{n_chunks}", n_chunks)
     base = work_dir(sf_dir, tag)
-    marker = os.path.join(base, "_STAGED_OK")
-    sig = f"{tag}|{n_chunks}|{sf_dir}|{_corpus_fingerprint(sf_dir)}"
-    if reuse and extra_last_chunk is None and marker_ok(base, sig):
-        return base
+    _clean(base)
+    os.makedirs(base, exist_ok=True)
+    for f in sorted(os.listdir(shared)):
+        if f.endswith(".parquet"):
+            try:
+                os.link(os.path.join(shared, f), os.path.join(base, f))
+            except OSError:  # cross-device fallback
+                shutil.copy2(os.path.join(shared, f), os.path.join(base, f))
+    # shared chunk mtimes are ~an hour in the past; "now" is
+    # strictly later, so the extra chunk is the final micro-batch
+    _write_chunk(extra_last_chunk, base, n_chunks, time.time())
+    return base
 
-    if source is None and extra_last_chunk is not None:
-        # data chunks == the shared plain layout: link, don't re-stage
-        shared = stage_chunks(spark, sf_dir, f"plain{n_chunks}", n_chunks, reuse=True)
-        _clean(base)
-        os.makedirs(base, exist_ok=True)
-        for f in sorted(os.listdir(shared)):
-            if f.endswith(".parquet"):
-                try:
-                    os.link(os.path.join(shared, f), os.path.join(base, f))
-                except OSError:  # cross-device fallback
-                    shutil.copy2(os.path.join(shared, f), os.path.join(base, f))
-        # shared chunk mtimes are ~an hour in the past; "now" is
-        # strictly later, so the extra chunk is the final micro-batch
-        _write_chunk(extra_last_chunk, base, n_chunks, time.time())
-        return base
 
-    # Reusable layouts are built in a scratch dir and atomically
-    # renamed into place: a killed run leaves only scratch (no marker,
-    # never half-read), and if a concurrent process won the rename we
-    # adopt its directory — marker-valid layouts are bit-identical by
-    # construction.
-    build = f"{base}.build-{os.getpid()}" if reuse else base
-    _clean(build)
-    os.makedirs(build, exist_ok=True)
+def _stage(spark: SparkSession, sf_dir: str, dest: str, n_chunks: int, source) -> None:
     ev = source if source is not None else load(spark, sf_dir, "events")
     ev = ev.select(*[f.split(" ")[0] for f in EVENTS_DDL.split(", ")])
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
@@ -198,21 +150,7 @@ def stage_chunks(
         cond = F.col("event_id") >= int(lo) + i * width
         if i < n_chunks - 1:
             cond = cond & (F.col("event_id") < int(lo) + (i + 1) * width)
-        _write_chunk(ev.filter(cond), build, i, t0 + i * 10)
-    if not reuse:
-        return base
-    write_marker(build, sig)
-    try:
-        _clean(base)
-        os.rename(build, base)
-    except OSError:
-        # lost the race: keep the winner's layout if its marker is
-        # valid, else fall back to our scratch build
-        if marker_ok(base, sig):
-            _clean(build)
-        else:
-            return build
-    return base
+        _write_chunk(ev.filter(cond), dest, i, t0 + i * 10)
 
 
 def read_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

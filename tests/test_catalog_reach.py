@@ -87,3 +87,37 @@ def test_every_engine_module_is_reachable_from_the_catalog():
     )
     stale = sorted(OUTSIDE_CATALOG - unreached)
     assert not stale, f"drop these from OUTSIDE_CATALOG: {stale}"
+
+
+#: the modules that may resolve the process temp dir: the derived-state
+#: primitive, per-process scratch (``sources.tables.scratch_dir``), the
+#: session's warehouse, and the per-call stream checkpoint/sink dirs
+TEMPDIR_USERS = frozenset(
+    f"{PKG}.{m}" for m in ("sources.derived", "sources.tables", "session", "streaming.replay")
+)
+
+
+def _names_used(path: Path) -> set[str]:
+    """Every identifier ``path`` names: variables, attributes and
+    imported names."""
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
+def test_cross_run_state_has_one_path():
+    """Every cache that outlives a run goes through
+    ``sources/derived.py``: no other module keys anything on a table
+    fingerprint, and no other module picks its own spot in the temp
+    dir, where a hand-rolled cache would live."""
+    mods = _module_files()
+    keyed = {m for m, p in mods.items() if "table_fingerprint" in _names_used(p)}
+    assert keyed == {f"{PKG}.sources.derived"}
+    tmp = {m for m, p in mods.items() if "gettempdir" in _names_used(p)}
+    assert tmp <= TEMPDIR_USERS, sorted(tmp - TEMPDIR_USERS)

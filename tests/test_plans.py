@@ -24,6 +24,31 @@ def _plan(spark, sf_dir, name: str) -> str:
     return QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
 
+def _published(name: str, sf_dir: str) -> str:
+    """The published ``sources/derived.py`` layout ``name`` built from
+    ``sf_dir``'s current tables (the newest, should several recipes
+    share the temp dir)."""
+    import glob
+    import json
+    import tempfile
+
+    from etfconstituentextractor_spark.sources.derived import MANIFEST, table_fingerprint
+
+    found = []
+    for d in glob.glob(os.path.join(tempfile.gettempdir(), f"etfce_derived_u*_{name}_{'[0-9a-f]' * 16}")):
+        try:
+            with open(os.path.join(d, MANIFEST)) as fh:
+                key = json.load(fh)["key"]
+        except OSError:
+            continue
+        if key["sf_dir"] == sf_dir and all(
+            table_fingerprint(sf_dir, t) == fp for t, fp in key["tables"].items()
+        ):
+            found.append(d)
+    assert found, f"no published {name} layout for {sf_dir}"
+    return max(found, key=os.path.getmtime)
+
+
 def test_q01_filter_and_projection_reach_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q01_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -138,23 +163,21 @@ def test_q22_bucketed_fingerprint_cache(spark, sf_dir):
     second call returns the same rows, and a fingerprint whose DATA
     was deleted (tmp cleanup) must trigger a rewrite, never an empty
     bucketed scan."""
-    import os
     import shutil
-    import tempfile
 
     from etfconstituentextractor_spark.plans.joins import q22_join_shuffle_factfact
+    from etfconstituentextractor_spark.sources.derived import MANIFEST
 
     def rows():
         return sorted(
             map(tuple, q22_join_shuffle_factfact(spark, sf_dir).collect())
         )
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"etfce_bucketed_{tag}")
     first = rows()
-    assert os.path.exists(os.path.join(base, "_fingerprint.json"))
+    base = _published("q22_tables", sf_dir)
+    assert os.path.exists(os.path.join(base, MANIFEST))
     assert rows() == first  # cached-path call, same result
-    # stale marker with deleted data: must rewrite, not go empty
+    # stale manifest with deleted data: must rewrite, not go empty
     shutil.rmtree(os.path.join(base, "lineitem"))
     assert rows() == first
 
@@ -769,6 +792,21 @@ def test_catalog_wide_plan_hygiene(spark, sf_dir):
     assert not offenders, offenders
 
 
+
+def test_q90_build_warns_nothing(spark, sf_dir):
+    """q90's row-at-a-time UDF names its eval type: without it PySpark
+    tries to infer one from the function's plain type hints and warns
+    on every build."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = QUERIES["q90_udf_scalar_pandas"](spark, sf_dir)
+    assert not [w for w in caught if "eval type" in str(w.message)], [
+        str(w.message) for w in caught
+    ]
+    assert "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString()
+
 def test_q27_single_asof_pass(spark, sf_dir):
     """q27's 1-hour tolerance is a predicate over its one as-of carry:
     a single union of the two pushed-filter event scans, ONE exchange
@@ -807,11 +845,8 @@ def test_q86_prune_leg_plans_fewer_files(spark, sf_dir):
     # cached, so this is cheap when q86 already ran this session)
     q86_snapshot_diff(spark, sf_dir).write.format("noop").mode("overwrite").save()
     import glob
-    import os
-    import tempfile
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = os.path.join(tempfile.gettempdir(), f"etfce_snaptable_{tag}", "table")
+    tbl = os.path.join(_published("q86_timetravel", sf_dir), "table")
     assert glob.glob(os.path.join(tbl, "_manifests", "*.json"))
     full = snapshot_read(spark, tbl, 2)
     pruned = snapshot_read(spark, tbl, 2, where=("doc_id", ">=", 2 * _INSERT_SHIFT))
@@ -830,8 +865,6 @@ def test_q86_dv_leg_is_merge_on_read(spark, sf_dir):
     exactly the deleted range, and v2 still time-travels to the
     pre-delete rows."""
     import json
-    import os
-    import tempfile
 
     from etfconstituentextractor_spark.plans.llm_refresh import (
         _DV_DELETE_LT,
@@ -840,8 +873,7 @@ def test_q86_dv_leg_is_merge_on_read(spark, sf_dir):
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_read
 
     q86_snapshot_diff(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = os.path.join(tempfile.gettempdir(), f"etfce_snaptable_{tag}", "table")
+    tbl = os.path.join(_published("q86_timetravel", sf_dir), "table")
     m2 = json.load(open(os.path.join(tbl, "_manifests", "v00000002.json")))
     m3 = json.load(open(os.path.join(tbl, "_manifests", "v00000003.json")))
     assert m3["op"] == "delete" and m3["files"] == m2["files"]

@@ -193,8 +193,8 @@ def test_assignment_plan_is_broadcast_map_no_point_shuffle(pq_fp, spark):
         assert marker not in plan
 
 
-def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
-    """Round-10 advice regression: the /tmp codebook cache sig must
+def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path, monkeypatch):
+    """Round-10 advice regression: the codebook cache key must
     carry a SOURCE-derived recipe term (trainer module + in-plan
     candidate derivation), not a hand-bumped integer — params + corpus
     identify the input, and a code edit that skips the bump keeps
@@ -206,8 +206,9 @@ def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
 
     from etfconstituentextractor_spark.plans import llm_similarity as sim
 
-    # unique corpus fingerprint so this test can never collide with a
-    # real testdata cache entry
+    # unique corpus fingerprint and a private temp dir, so this test can
+    # never collide with a real testdata cache entry
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
     sf = tmp_path / "sf"
     sf.mkdir()
     spark.range(3).selectExpr(
@@ -236,32 +237,25 @@ def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
     # tamper the published entry: same params/corpus, different recipe
     # — exactly what an edited trainer under a forgotten hand-bump
     # looked like; it must be treated as stale
-    import glob
-    import hashlib
     import os
-    import tempfile
 
-    sig = json.dumps(
+    from etfconstituentextractor_spark.sources.derived import MANIFEST, _key_dir
+
+    _, path = _key_dir(
+        "q70_pq_codebook",
+        str(sf),
+        ["embeddings"],
         {
-            "fp": __import__(
-                "etfconstituentextractor_spark.sources.fingerprint",
-                fromlist=["table_fingerprint"],
-            ).table_fingerprint(str(sf), "embeddings"),
             "m": sim._PQFP_M, "k": sim._PQFP_K, "iters": sim._PQFP_ITERS,
             "dsub": sim._PQFP_DSUB, "scale": sim._PQFP_SCALE,
             "nq": sim._N_QUERIES, "recipe": sim._pqfp_recipe(),
         },
-        sort_keys=True,
     )
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(tempfile.gettempdir(), f"etfce_pqfp_cb_u{uid}_{key}.json")
-    assert os.path.isfile(path), "publish should have landed at the sig-keyed path"
-    doc = json.load(open(path))
-    stale_sig = json.loads(doc["sig"])
-    stale_sig["recipe"] = "0" * 32
-    doc["sig"] = json.dumps(stale_sig, sort_keys=True)
-    json.dump(doc, open(path, "w"))
+    assert os.path.isdir(path), "publish should have landed at the key-named path"
+    manifest = os.path.join(path, MANIFEST)
+    doc = json.load(open(manifest))
+    doc["key"]["recipe"]["recipe"] = "0" * 32
+    json.dump(doc, open(manifest, "w"))
 
     calls.clear()
     cb3 = sim._pqfp_codebook_cached(spark, str(sf), fcand, stub_train)
@@ -271,4 +265,3 @@ def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
     # the recipe is a function of live source text
     r = sim._pqfp_recipe()
     assert r == sim._pqfp_recipe() and len(r) == 32
-    os.remove(path)

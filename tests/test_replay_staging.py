@@ -2,12 +2,12 @@
 
 Round 4's four red driver rows all traced to ONE cause: the streaming
 replay staging cache reused chunk files staged before a corpus
-refresh, because the ``_STAGED_OK`` marker signature was content-blind
+refresh, because the reuse marker's signature was content-blind
 (``tag|n_chunks|sf_dir``). The engine code was correct; the fixture
 was stale. These tests make the next corpus refresh a non-event:
 
-1. the marker signature must include corpus identity, and a stale
-   marker must force a re-stage (cache-invalidation contract);
+1. the staged layout's key must include corpus identity, and a stale
+   key must force a re-stage (cache-invalidation contract);
 2. every staged layout's event-time span must MATCH the corpus span
    (> 1 day, year >= 2020 — the round-3 stale layouts spanned 21
    minutes of 1970), and the q58 doubled layout must hold exactly
@@ -18,13 +18,14 @@ was stale. These tests make the next corpus refresh a non-event:
 from __future__ import annotations
 
 import datetime
+import json
 import os
 
 import duckdb
 
+from etfconstituentextractor_spark.sources.derived import MANIFEST, table_fingerprint
 from etfconstituentextractor_spark.sources.tables import load
 from etfconstituentextractor_spark.streaming.replay import (
-    _corpus_fingerprint,
     partitions_for,
     stage_chunks,
     work_dir,
@@ -61,8 +62,6 @@ def test_fingerprint_sees_partition_moves(tmp_path):
     keying was blind to this)."""
     import shutil
 
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
-
     root = tmp_path / "t.parquet"
     (root / "lang=en").mkdir(parents=True)
     (root / "lang=de").mkdir()
@@ -78,35 +77,37 @@ def test_fingerprint_sees_partition_moves(tmp_path):
 
 
 def test_reuse_marker_invalidates_on_corpus_change(spark, sf_dir):
-    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
-    marker = os.path.join(chunks, "_STAGED_OK")
-    sig = open(marker).read()
-    # the signature must carry corpus identity, not just the recipe
-    assert _corpus_fingerprint(sf_dir) in sig
-    assert _corpus_fingerprint(sf_dir) != "missing"
+    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
+    manifest = os.path.join(chunks, MANIFEST)
+    with open(manifest) as fh:
+        doc = json.load(fh)
+    # the key must carry corpus identity, not just the recipe
+    assert doc["key"]["tables"]["events"] == table_fingerprint(sf_dir, "events")
+    assert table_fingerprint(sf_dir, "events") != "missing"
 
     # a reuse hit must NOT rebuild (same inode set)
     inodes_before = {
         f: os.stat(os.path.join(chunks, f)).st_ino for f in sorted(os.listdir(chunks))
     }
-    again = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    again = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     assert again == chunks
     inodes_reuse = {
         f: os.stat(os.path.join(chunks, f)).st_ino for f in sorted(os.listdir(chunks))
     }
     assert inodes_reuse == inodes_before
 
-    # simulate the round-4 failure: a marker written by an older code
-    # version (content-blind sig) guarding chunks from an older corpus
-    with open(marker, "w") as fh:
-        fh.write(f"plain2|2|{sf_dir}")
-    rebuilt = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    # simulate the round-4 failure: a manifest written by an older code
+    # version (content-blind key) guarding chunks from an older corpus
+    with open(manifest, "w") as fh:
+        json.dump(dict(doc, key=dict(doc["key"], tables={})), fh)
+    rebuilt = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     assert rebuilt == chunks
-    assert open(marker).read() == sig  # fresh, fingerprint-bearing sig
+    with open(manifest) as fh:
+        assert json.load(fh)["key"] == doc["key"]  # fresh, fingerprint-bearing key
     inodes_after = {
         f: os.stat(os.path.join(chunks, f)).st_ino for f in sorted(os.listdir(chunks))
     }
-    # the whole layout was re-staged (scratch-build + atomic rename)
+    # the whole layout was re-staged (private build + atomic rename)
     assert all(
         inodes_after[f] != inodes_before[f]
         for f in inodes_after
@@ -115,7 +116,7 @@ def test_reuse_marker_invalidates_on_corpus_change(spark, sf_dir):
 
 
 def test_staged_plain_layout_span_matches_corpus(spark, sf_dir):
-    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     s_min, s_max, s_n = _staged_stats(chunks)
     c_min, c_max, c_n = _corpus_stats(sf_dir)
     assert (s_min, s_max, s_n) == (c_min, c_max, c_n)
@@ -128,7 +129,7 @@ def test_staged_plain_layout_span_matches_corpus(spark, sf_dir):
 def test_staged_doubled_layout_is_exactly_twice_corpus(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     doubled = ev.unionByName(ev)
-    chunks = stage_chunks(spark, sf_dir, tag="q58_doubled", source=doubled, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="q58_doubled", source=doubled)
     s_min, s_max, s_n = _staged_stats(chunks)
     c_min, c_max, c_n = _corpus_stats(sf_dir)
     assert s_n == 2 * c_n

@@ -126,7 +126,7 @@ def test_custom_sessionize_multi_partition_state(spark, sf_dir):
         state_partitions,
     )
 
-    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
     old = spark.conf.get(ARROW_BATCH_CONF)
     spark.conf.set(ARROW_BATCH_CONF, "100")
     try:
@@ -452,7 +452,7 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
         # it overwrites
         merged.localCheckpoint().write.mode("overwrite").parquet(target)
 
-    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
     ckpt = work_dir(sf_dir, "ckpt_upsert_test")
     import shutil
 
@@ -496,7 +496,7 @@ def test_stream_stream_interval_join_batch_equivalent(spark, sf_dir):
         stage_chunks,
     )
 
-    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
 
     def side(kind, alias_ts, alias_uid, alias_id):
         return (
@@ -560,7 +560,7 @@ def test_checkpoint_recovery_resumes_windowed_agg(spark, sf_dir, tmp_path):
         stage_chunks,
     )
 
-    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
 
     def build():
         return (
@@ -710,7 +710,7 @@ def test_stream_stream_left_outer_join_eviction_semantics(spark, sf_dir, tmp_pat
     assert all(u != 7 for u, _ in got)
 
     # real-corpus equivalence against the batch statement of the rule
-    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
 
     def cside(t, pre):
         return (
@@ -852,7 +852,7 @@ def test_stream_static_dimension_join(spark, sf_dir):
         stage_chunks,
     )
 
-    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2, reuse=True)
+    chunks = stage_chunks(spark, sf_dir, tag="plain2", n_chunks=2)
     ev = load(spark, sf_dir, "events")
     dim = (
         ev.select("user_id")

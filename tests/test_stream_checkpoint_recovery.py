@@ -54,7 +54,7 @@ def _drain(spark, chunk_dir, sink, ckpt):
 
 
 def test_windowed_agg_survives_checkpoint_restart(spark, sf_dir):
-    shared = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4, reuse=True)
+    shared = stage_chunks(spark, sf_dir, tag="plain4", n_chunks=4)
     files = sorted(f for f in os.listdir(shared) if f.endswith(".parquet"))
     assert len(files) == 4
 
