@@ -182,9 +182,12 @@ def _same_dataset(p: str, sf_dir: str) -> bool:
 
 def _sweep_dead_builds(final: str, sf_dir: str) -> None:
     """Remove the leftovers of layout ``final``'s name beside it:
-    ``.build-<pid>`` private builds, ``.stale-<pid>-<ns>`` asides, and
-    published generations of the same dataset other than ``final``.
-    Each is removed only when BOTH hold:
+    ``.build-<pid>`` private builds, ``.stale-<pid>-<ns>`` asides,
+    published generations of the same dataset other than ``final``, and
+    the per-run dirs named after a generation (a stream's checkpoint and
+    sink, ``streaming/replay.py:stream_dir``), which a new generation
+    would otherwise leave behind for good. Each is removed only when
+    BOTH hold:
 
     1. the NEWEST mtime anywhere in its subtree is older than
        ``SWEEP_AGE_SEC`` (a writer anywhere keeps the whole tree
@@ -199,7 +202,7 @@ def _sweep_dead_builds(final: str, sf_dir: str) -> None:
     the cutoff is hours, not minutes. Generations of other datasets
     with the same name are left alone: they are not superseded."""
     top, me = os.path.split(final)
-    gen = re.compile(re.escape(me[:-16]) + r"[0-9a-f]{16}(?:\.(?:build|stale)-(\d+)(?:-\d+)?)?$")
+    gen = re.compile(re.escape(me[:-16]) + r"[0-9a-f]{16}(?:\.(?:build|stale)-(\d+)(?:-\d+)?|_\w+)?$")
     cutoff = time.time() - SWEEP_AGE_SEC
     for n in os.listdir(top):
         m = gen.match(n)
