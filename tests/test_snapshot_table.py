@@ -3195,13 +3195,12 @@ def test_merge_widening_date_targets_ntz_not_zoned_timestamp(spark, tmp_path):
         )
 
 
-def test_merge_table_second_call_is_a_hit(spark, tmp_path, monkeypatch):
+def test_merge_table_second_call_is_a_hit(spark, sf_dir, tmp_path, monkeypatch):
     """q86's merge/restore table is a derived layout: the second
     resolution serves the published table without rebuilding it (the
     build and heal rules themselves are pinned in tests/test_derived.py)."""
     import etfconstituentextractor_spark.plans.llm_refresh as lr
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
     monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
     table = lr._merge_table(spark, sf_dir)
     assert snapshot_read(spark, table, 2).count() > 0
