@@ -357,8 +357,9 @@ def q86_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # 'dv' leg (round 10): v3 is a merge-on-read DELETE — the rows
     # with doc_id < threshold are masked by a positional deletion
-    # vector (no data file rewritten; the manifest's file list at v3
-    # == v2's, pinned in tests/test_snapshot_table.py). The read
+    # vector (no data file rewritten; the manifest's file list is
+    # unchanged by a delete, pinned in tests/test_snapshot_table.py::
+    # test_delete_is_merge_on_read_and_time_travels). The read
     # anti-joins the DV on (file key, row position); the oracle
     # restates v2 minus the range, so the hash match IS correct DV
     # application. Note v2's timetravel leg above reads the SAME
@@ -395,7 +396,8 @@ def q86_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key+shift), then aggregated. The oracle restates the merged
     # world relationally; the copy-on-write minimality half (which
     # files rewrote) is manifest-level and stays pinned in
-    # tests/test_snapshot_table.py. Round 11: the table is
+    # tests/test_snapshot_table.py::test_merge_rewrites_only_touched_files.
+    # Round 11: the table is
     # fingerprint-CACHED (_merge_table) — the completed
     # base→merge→restore chain is immutable once built, so reruns
     # read v1/v2 instead of re-running ~1.2s of commit machinery;
@@ -406,9 +408,10 @@ def q86_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back head must restate the ORIGINAL slice exactly: the oracle is
     # the pre-merge base, so the hash match proves the rollback
     # surfaced the old data AND that the merge's rewrite didn't
-    # disturb the files v0 still references (protocol half — expired
-    # targets, DV/watermark carry, vacuum liveness — pinned in
-    # tests/test_snapshot_table.py).
+    # disturb the files v0 still references (protocol half — missing
+    # targets, DV/watermark carry — pinned in tests/test_snapshot_table.py::
+    # test_restore_rolls_back_as_new_commit and
+    # ::test_restore_carries_dv_and_txn_watermark).
     restored = _leg_frame(_lang_agg(snapshot_read(spark, mtbl, 2)), "restore")
 
     out = (
@@ -435,9 +438,11 @@ def _merge_table(spark, sf_dir):
     re-merged — but the COMPLETED v0→v1→v2 chain is immutable once
     built, so reruns only READ it; the merged / restored VALUES stay
     under the q86 hash oracle every run, so a stale or partial cache
-    cannot pass. The merge PROTOCOL semantics (rewrite minimality,
-    concurrency, DV carry) stay pinned per-run in
-    tests/test_snapshot_table.py, where tables are always fresh."""
+    cannot pass. The merge PROTOCOL semantics (rewrite minimality, DV
+    carry) stay pinned per-run in tests/test_snapshot_table.py
+    (``test_merge_rewrites_only_touched_files``,
+    ``test_merge_materializes_deletes_and_drops_coverage``), where
+    tables are always fresh."""
     import os
 
     from etfconstituentextractor_spark.sources.derived import derived

@@ -440,7 +440,8 @@ def q15_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate: one duplicated batch doubles a count and breaks the
     # hash. Fresh table per run (ingest mutates version history, the
     # q86 merge-leg convention); the real-stream + checkpoint-loss
-    # drill stays in tests/test_snapshot_table.py.
+    # drill stays in tests/test_snapshot_table.py::
+    # test_stream_ingest_real_stream_survives_checkpoint_loss.
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_commit,
         snapshot_read,

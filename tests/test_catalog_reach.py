@@ -16,7 +16,9 @@ that is deleted or wired in without the name leaving the list.
 The graph is static: it parses every ``.py`` file under the package and
 follows ``import`` / ``from ... import`` statements anywhere in the
 file, including those inside function bodies, without importing
-anything.
+anything. ``sources/snapshot_table.py`` is also checked per function:
+each of its public functions must be imported by name inside that
+closure.
 """
 
 from __future__ import annotations
@@ -75,11 +77,15 @@ def _reached(mods: dict[str, Path], roots: list[str]) -> set[str]:
     return seen
 
 
-def test_every_engine_module_is_reachable_from_the_catalog():
-    mods = _module_files()
+def _catalog_closure(mods: dict[str, Path]) -> set[str]:
     roots = [f"{PKG}.plans.registry"] + [f"{PKG}.plans.{m}" for m in PLAN_MODULES]
     assert all(r in mods for r in roots), roots
-    unreached = set(mods) - _reached(mods, roots)
+    return _reached(mods, roots)
+
+
+def test_every_engine_module_is_reachable_from_the_catalog():
+    mods = _module_files()
+    unreached = set(mods) - _catalog_closure(mods)
     orphans = sorted(unreached - OUTSIDE_CATALOG)
     assert not orphans, (
         f"{len(orphans)} engine module(s) no registered query reaches: "
@@ -89,11 +95,50 @@ def test_every_engine_module_is_reachable_from_the_catalog():
     assert not stale, f"drop these from OUTSIDE_CATALOG: {stale}"
 
 
+def _names_imported_from(path: Path, module: str) -> set[str]:
+    """The names ``path`` imports with ``from <module> import ...``."""
+    return {
+        alias.name
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.ImportFrom) and node.module == module
+        for alias in node.names
+    }
+
+
+def test_every_snapshot_table_function_is_reached_by_the_catalog():
+    """Function-level reach for ``sources/snapshot_table.py``: every
+    public function is imported by name from a module the catalog
+    reaches, and ``__all__`` lists exactly the public functions and
+    classes."""
+    mods = _module_files()
+    name = f"{PKG}.sources.snapshot_table"
+    tree = ast.parse(mods[name].read_text())
+    funcs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    classes = {n.name for n in tree.body if isinstance(n, ast.ClassDef)}
+    public_funcs = {f for f in funcs if not f.startswith("_")}
+    (exported,) = (
+        ast.literal_eval(n.value)
+        for n in tree.body
+        if isinstance(n, ast.Assign) and [getattr(t, "id", None) for t in n.targets] == ["__all__"]
+    )
+    assert len(exported) == len(set(exported)), exported
+    public = public_funcs | {c for c in classes if not c.startswith("_")}
+    assert set(exported) == public, sorted(set(exported) ^ public)
+    imported = set().union(
+        *(_names_imported_from(mods[m], name) for m in _catalog_closure(mods) if m != name)
+    )
+    unreached = sorted(public_funcs - imported)
+    assert not unreached, (
+        f"no registered query reaches {unreached}; wire each into a "
+        "hash-checked query or delete it"
+    )
+
+
 #: the modules that may resolve the process temp dir: the derived-state
-#: primitive, per-process scratch (``sources.tables.scratch_dir``), the
-#: session's warehouse, and the per-call stream checkpoint/sink dirs
+#: primitive, per-process scratch (``sources.tables.scratch_dir``) and
+#: the session's warehouse
 TEMPDIR_USERS = frozenset(
-    f"{PKG}.{m}" for m in ("sources.derived", "sources.tables", "session", "streaming.replay")
+    f"{PKG}.{m}" for m in ("sources.derived", "sources.tables", "session")
 )
 
 

@@ -1,11 +1,14 @@
 """Versioned snapshot tables (sources/snapshot_table.py): commit
-protocol, snapshot isolation, time travel, and the concurrent-commit
-race — the manifest-indirection layer compaction.py's consistency
-contract points at."""
+protocol, snapshot isolation, time travel, merge, deletion vectors,
+manifest sharding, blooms, exactly-once ingest, restore and the change
+feed. Tests inspect a table's history through ``snapshot_read`` or its
+``_manifests/vNNNNNNNN.json`` files."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,12 +17,43 @@ from etfconstituentextractor_spark.sources.snapshot_table import (
     ConcurrentCommitError,
     snapshot_commit,
     snapshot_read,
-    snapshot_versions,
 )
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "id bigint, v string")
+
+
+def _manifest(t, version):
+    with open(os.path.join(t, "_manifests", f"v{version:08d}.json")) as fh:
+        return json.load(fh)
+
+
+def _manifests(t):
+    """Every committed root manifest of table ``t``, oldest first."""
+    names = os.listdir(os.path.join(t, "_manifests"))
+    return [
+        _manifest(t, int(n[1:9])) for n in sorted(names) if re.fullmatch(r"v\d{8}\.json", n)
+    ]
+
+
+def _watermark(t, writer_id):
+    """The latest manifest's idempotent-writer watermark for
+    ``writer_id`` (None if it never committed)."""
+    return (_manifests(t)[-1].get("txn") or {}).get(writer_id)
+
+
+def _unreferenced_data_dirs(t):
+    """Top-level ``data/`` dirs no manifest references through its
+    inline files, deletion vector or bloom sidecars (tables here are
+    never sharded)."""
+    live = set()
+    for m in _manifests(t):
+        live.update("/".join(f.split("/")[:2]) for f in m["files"])
+        if m.get("dv"):
+            live.add(m["dv"]["dir"])
+        live.update(b["dir"] for b in m.get("bloom") or [])
+    return {f"data/{d}" for d in os.listdir(os.path.join(t, "data"))} - live
 
 
 def test_versions_are_immutable_and_time_travelable(spark, tmp_path):
@@ -37,7 +71,7 @@ def test_versions_are_immutable_and_time_travelable(spark, tmp_path):
     assert ids(2) == [9]  # overwrite started fresh
     assert ids() == [9]  # latest == v2
 
-    meta = snapshot_versions(spark, t)
+    meta = _manifests(t)
     assert [m["version"] for m in meta] == [0, 1, 2]
     assert [m["op"] for m in meta] == ["overwrite", "append", "overwrite"]
     assert meta[1]["parent"] == 0
@@ -46,7 +80,7 @@ def test_versions_are_immutable_and_time_travelable(spark, tmp_path):
 def test_first_append_is_a_plain_write_and_missing_version_raises(spark, tmp_path):
     t = str(tmp_path / "tbl")
     snapshot_commit(_df(spark, [(1, "a")]), t, mode="append")
-    assert snapshot_versions(spark, t)[0]["op"] == "overwrite"
+    assert _manifests(t)[0]["op"] == "overwrite"
     with pytest.raises(FileNotFoundError):
         snapshot_read(spark, t, version=7)
     with pytest.raises(FileNotFoundError):
@@ -86,7 +120,7 @@ def test_concurrent_commit_loser_raises_and_table_stays_consistent(spark, tmp_pa
         st._read_manifest = real_read
 
     # the winner's commit is version 1; the loser left no manifest
-    assert [m["version"] for m in snapshot_versions(spark, t)] == [0, 1]
+    assert [m["version"] for m in _manifests(t)] == [0, 1]
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1, 7]
 
 
@@ -98,56 +132,6 @@ def test_reader_ignores_uncommitted_writer_garbage(spark, tmp_path):
     # orphan: data written, no manifest published (simulated crash)
     _df(spark, [(666, "orphan")]).write.parquet(os.path.join(t, "data/v00000001-dead"))
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1]
-
-
-def test_vacuum_removes_orphans_keeps_shared_lineage(spark, tmp_path):
-    """Vacuum with no expiry: failed-commit orphans go, every file any
-    version references stays — including v0's files that v1 (append)
-    shares."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_vacuum
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t)
-    snapshot_commit(_df(spark, [(2, "b")]), t, mode="append")
-    # a failed commit's orphan for an already-decided version
-    _df(spark, [(666, "x")]).write.parquet(os.path.join(t, "data/v00000001-dead"))
-    # an in-flight commit's dir for the NEXT version: must be left alone
-    _df(spark, [(777, "y")]).write.parquet(os.path.join(t, "data/v00000002-wip"))
-
-    stats = snapshot_vacuum(spark, t)
-    assert stats["expired_versions"] == 0 and stats["removed_dirs"] == 1
-    assert not os.path.exists(os.path.join(t, "data/v00000001-dead"))
-    assert os.path.exists(os.path.join(t, "data/v00000002-wip"))
-    assert sorted(r.id for r in snapshot_read(spark, t, 0).collect()) == [1]
-    assert sorted(r.id for r in snapshot_read(spark, t, 1).collect()) == [1, 2]
-
-
-def test_vacuum_expiry_ends_time_travel_but_keeps_shared_files(spark, tmp_path):
-    """keep_last=1 expires v0's manifest; v1 (append) still reads its
-    inherited v0 files — expiry deletes history, never live data."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_vacuum
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t)
-    snapshot_commit(_df(spark, [(2, "b")]), t, mode="append")
-    snapshot_commit(_df(spark, [(9, "z")]), t, mode="overwrite")
-
-    stats = snapshot_vacuum(spark, t, keep_last=2)
-    assert stats["expired_versions"] == 1
-    assert stats["surviving_versions"] == [1, 2]
-    # v0 is gone from history...
-    with pytest.raises(FileNotFoundError):
-        snapshot_read(spark, t, 0)
-    # ...but v1 still reads the files it shared with v0
-    assert sorted(r.id for r in snapshot_read(spark, t, 1).collect()) == [1, 2]
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [9]
-    # second sweep with keep_last=1 drops v1 AND the now-dead v0 files
-    stats2 = snapshot_vacuum(spark, t, keep_last=1)
-    assert stats2["surviving_versions"] == [2]
-    assert stats2["removed_dirs"] == 2  # v0's and v1's data dirs
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [9]
-    with pytest.raises(ValueError):
-        snapshot_vacuum(spark, t, keep_last=0)
 
 
 def test_cdc_between_snapshot_versions(spark, tmp_path):
@@ -210,6 +194,24 @@ def test_stats_pruning_plans_fewer_files(spark, tmp_path):
     assert none.count() == 0
     assert none.columns == full.columns
 
+    # a conjunction of where-tuples prunes by EVERY predicate: one
+    # file per (a, b) quadrant, so each predicate alone plans two
+    # files and both together plan one
+    q = str(tmp_path / "quadrants")
+    grid = spark.range(4096).selectExpr(
+        "id",
+        "CAST(pmod(hash(id), 1024) AS BIGINT) AS a",
+        "CAST(pmod(hash(id * 7 + 3), 1024) AS BIGINT) AS b",
+    )
+    for i, cond in enumerate(("a < 512 AND b < 512", "a < 512 AND b >= 512",
+                              "a >= 512 AND b < 512", "a >= 512 AND b >= 512")):
+        snapshot_commit(grid.filter(cond).coalesce(1), q,
+                        mode="append" if i else "overwrite", stats_cols=["a", "b"])
+    one = snapshot_read(spark, q, where=("a", "<", 64))
+    both = snapshot_read(spark, q, where=[("a", "<", 64), ("b", "<", 64)])
+    assert len(one.inputFiles()) == 2 and len(both.inputFiles()) == 1
+    assert both.count() == snapshot_read(spark, q).filter("a < 64 AND b < 64").count()
+
 
 def test_stats_pruning_is_conservative_without_stats(spark, tmp_path):
     """Files from commits WITHOUT stats (or columns never covered)
@@ -244,7 +246,6 @@ def test_merge_rewrites_only_touched_files(spark, tmp_path):
     the stats prove untouched carry over BY RELPATH, never rewritten;
     the exact membership probe also spares a stats-candidate file
     whose rows don't actually hit a source key."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_merge,
@@ -290,7 +291,6 @@ def test_merge_exact_probe_spares_range_straddlers(spark, tmp_path):
     """A file whose [min,max] straddles the source keys but contains
     NONE of them must survive unrewritten — the exact key probe, not
     just the stats range, decides the rewrite set."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_merge,
@@ -339,41 +339,12 @@ def test_merge_matches_full_recompute_property(spark, tmp_path):
     assert got == want
 
 
-def test_vacuum_after_merge_keeps_carried_files(spark, tmp_path):
-    """Vacuuming away the pre-merge version must not remove data dirs
-    the merged version still references (liveness is per-FILE-LIST
-    union, not version ancestry), and the merged table stays fully
-    readable afterwards."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    base = (
-        spark.range(0, 400)
-        .select(F.col("id"), F.lit("old").alias("v"))
-        .repartitionByRange(4, "id")
-    )
-    snapshot_commit(base, t, mode="overwrite", stats_cols=["id"])
-    src = spark.range(0, 50).select(F.col("id"), F.lit("new").alias("v"))
-    v1 = snapshot_merge(src, t, key="id", stats_cols=["id"])
-    out = snapshot_vacuum(spark, t, keep_last=1)
-    assert out["surviving_versions"] == [v1]
-    got = {r.id: r.v for r in snapshot_read(spark, t).collect()}
-    want = {i: ("new" if i < 50 else "old") for i in range(400)}
-    assert got == want
-    with pytest.raises(FileNotFoundError):
-        snapshot_read(spark, t, 0)
-
-
 def test_partitioned_commits_prune_and_merge(spark, tmp_path):
     """partition_by tables: files land under k=v dirs inside each
     version dir, readers reconstruct the column via basePath,
     equality `where` on the partition column prunes by the relpath
     alone (no stats needed), appends must repeat the spec, and MERGE
     preserves the layout (rewritten files land partitioned too)."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_merge,
@@ -412,6 +383,25 @@ def test_partitioned_commits_prune_and_merge(spark, tmp_path):
     want = {(i, str(i % 3)) for i in range(30, 300)} | {(i, "9") for i in range(30)}
     assert got == want
 
+    # PARTITION SPEC EVOLUTION across overwrites: each version's
+    # manifest carries its own spec, reads are per version dir, and
+    # appends enforce the CURRENT spec
+    vu = snapshot_commit(
+        spark.range(500, 510).selectExpr("id", "'z' AS lang"), t, mode="overwrite"
+    )
+    assert sorted(r.id for r in snapshot_read(spark, t, vu).collect()) == list(range(500, 510))
+    assert snapshot_read(spark, t, v).count() == 300  # time travel across the change
+    with pytest.raises(ValueError, match="partition_by"):
+        snapshot_commit(
+            spark.range(5).selectExpr("id", "'q' AS lang"), t, mode="append",
+            partition_by=["lang"],
+        )
+    snapshot_commit(
+        spark.range(40, 50).selectExpr("id", "CAST(id % 5 AS STRING) AS lang"), t,
+        mode="overwrite", partition_by=["lang"],
+    )
+    assert snapshot_read(spark, t).count() == 10
+
 
 def test_prune_equals_full_filter_property(spark, tmp_path):
     """Hypothesis-style sweep (deterministic grid — the operators are
@@ -446,23 +436,6 @@ def test_prune_equals_full_filter_property(spark, tmp_path):
                 assert got == want, (col, op, val, len(got), len(want))
 
 
-def test_vacuum_keeps_live_partitioned_versions(spark, tmp_path):
-    """Round-9 review regression: liveness must key on the top-level
-    version dir — partitioned relpaths have k=v segments between it
-    and the file, and dirname()-keyed liveness deleted LIVE
-    partitioned versions on any vacuum."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 60).select("id", (F.col("id") % 2).cast("string").alias("p"))
-    snapshot_commit(df, t, mode="overwrite", partition_by=["p"])
-    out = snapshot_vacuum(spark, t)  # expires nothing; sweeps orphans
-    assert out["removed_dirs"] == 0
-    assert snapshot_read(spark, t).count() == 60
-
-
 def test_bool_partition_pruning(spark, tmp_path):
     """Round-9 review regression: bool('false') is True — the False
     partition must NOT be pruned away when probed with where=(...,
@@ -484,7 +457,6 @@ def test_stats_survive_basename_collisions(spark, tmp_path):
     dirs emits identically-named part files — stats must key on the
     full relpath, or one file's range lands on its sibling and the
     pruner silently drops real rows."""
-    import json
 
     t = str(tmp_path / "tbl")
     # coalesce(1): ONE task writes both partition dirs -> same part
@@ -512,7 +484,6 @@ def test_merge_on_partition_key_prunes_candidates(spark, tmp_path):
     """Round-9 review: merging ON the partition column must prune
     candidates by the relpath value (stats never cover partition
     cols), and only the matched partition's files rewrite."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_merge,
@@ -536,99 +507,6 @@ def test_merge_on_partition_key_prunes_candidates(spark, tmp_path):
     assert got == want
 
 
-def test_compact_consolidates_small_files_only(spark, tmp_path):
-    """snapshot_compact: small files rewrite into one, at-size files
-    carry by relpath, stats continue on the rewritten file, rows and
-    time travel are untouched, and vacuum can then drop the
-    pre-compaction version's exclusive dirs."""
-    import json
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    # 6 tiny files + appends: all well under the small threshold
-    snapshot_commit(
-        spark.range(0, 600).select("id").repartition(6),
-        t,
-        mode="overwrite",
-        stats_cols=["id"],
-    )
-    snapshot_commit(
-        spark.range(600, 700).select("id").coalesce(1),
-        t,
-        mode="append",
-        stats_cols=["id"],
-    )
-    before = snapshot_read(spark, t)
-    assert len(before.inputFiles()) == 7
-    v = snapshot_compact(spark, t)
-    m = json.load(open(f"{t}/_manifests/v{v:08d}.json"))
-    assert m["op"] == "compact"
-    after = snapshot_read(spark, t, v)
-    assert len(after.inputFiles()) == 1
-    assert sorted(r.id for r in after.collect()) == list(range(700))
-    # stat discipline continued: the consolidated file carries id stats
-    (only_file,) = m["files"]
-    assert m["stats"][only_file]["id"] == [0, 699]
-    # pre-compaction version still time-travels
-    assert snapshot_read(spark, t, 1).count() == 700
-    # nothing left to compact
-    assert snapshot_compact(spark, t) is None
-    # expiring history releases the old small files
-    out = snapshot_vacuum(spark, t, keep_last=1)
-    assert out["removed_dirs"] >= 2
-    assert snapshot_read(spark, t).count() == 700
-
-
-def test_compact_partitioned_one_file_per_value(spark, tmp_path):
-    """Partitioned compaction emits ~one file per partition value and
-    keeps the spec + pruning working."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 300).select(
-        "id", (F.col("id") % 3).cast("string").alias("lang")
-    )
-    snapshot_commit(df, t, mode="overwrite", partition_by=["lang"], stats_cols=["id"])
-    v = snapshot_compact(spark, t)
-    after = snapshot_read(spark, t, v)
-    assert after.count() == 300
-    files = after.inputFiles()
-    assert len(files) == 3 and all("lang=" in f for f in files)
-    pr = snapshot_read(spark, t, v, where=("lang", "=", "2"))
-    assert len(pr.inputFiles()) == 1
-    assert sorted(r.id for r in pr.collect()) == [i for i in range(300) if i % 3 == 2]
-
-
-def test_compact_preserves_evolved_schema(spark, tmp_path):
-    """Round-9 review regression: compacting a schema-evolved table
-    must keep later-added columns (merge_schema read) — without it the
-    rewrite silently dropped whichever columns the sampled footer
-    lacked."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(spark.range(0, 50).select("id").coalesce(1), t, mode="overwrite")
-    snapshot_commit(
-        spark.range(50, 100).select("id", (F.col("id") * 2).alias("extra")).coalesce(1),
-        t,
-        mode="append",
-    )
-    v = snapshot_compact(spark, t)
-    after = snapshot_read(spark, t, v, merge_schema=True)
-    assert set(after.columns) == {"id", "extra"}
-    rows = {r.id: r.extra for r in after.collect()}
-    assert len(rows) == 100
-    assert rows[75] == 150 and rows[10] is None
-
-
 def test_partition_pruning_compares_in_column_domain(spark, tmp_path):
     """Round-9 review regression: a STRING probe on a NUMERIC
     partition column must compare numerically (mirroring the in-plan
@@ -649,7 +527,6 @@ def test_non_primitive_stats_record_none_not_strings(spark, tmp_path):
     record as unusable (None) rather than stringified bounds — a
     lexical '50.00' < '9.50' comparison pruned files whose rows the
     numeric in-plan filter matches."""
-    import json
 
     t = str(tmp_path / "tbl")
     df = spark.range(0, 100).select(
@@ -674,7 +551,6 @@ def test_partition_values_with_reserved_chars_roundtrip(spark, tmp_path):
     and the post-read filter cannot rescue a file that was never
     planned. Merge keyed on such a column must likewise still find
     the files that genuinely contain matched keys."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_merge,
@@ -712,7 +588,6 @@ def test_partition_values_with_reserved_chars_roundtrip(spark, tmp_path):
 
 
 def _dv_of(t, version):
-    import json
 
     return json.load(open(f"{t}/_manifests/v{version:08d}.json")).get("dv")
 
@@ -722,7 +597,6 @@ def test_delete_is_merge_on_read_and_time_travels(spark, tmp_path):
     (the manifest's file list is unchanged — the whole point of the
     DV shape), older versions must still see the rows, and the op
     must be audit-visible."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
 
@@ -746,6 +620,15 @@ def test_delete_is_merge_on_read_and_time_travels(spark, tmp_path):
         r.id for r in snapshot_read(spark, t, where=("id", "<", 20)).collect()
     )
     assert pr == list(range(10, 20))
+
+    # on a hive-partitioned table, partition pruning feeds the
+    # candidate set
+    p = str(tmp_path / "ptbl")
+    df = spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS lang")
+    snapshot_commit(df, p, mode="overwrite", stats_cols=["id"], partition_by=["lang"])
+    snapshot_delete(spark, p, where=("lang", "=", "2"))
+    got = sorted(r.id for r in snapshot_read(spark, p).collect())
+    assert got == [i for i in range(40) if i % 4 != 2]
 
 
 def test_delete_accumulates_and_is_idempotent(spark, tmp_path):
@@ -846,47 +729,6 @@ def test_merge_on_deleted_key_inserts_not_resurrects(spark, tmp_path):
     assert len(got) == 10
 
 
-def test_compact_materializes_deletes(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-        snapshot_delete,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(60).selectExpr("id", "CAST(id AS STRING) AS v")
-    snapshot_commit(df.repartition(4), t, mode="overwrite", stats_cols=["id"])
-    snapshot_delete(spark, t, where=("id", "<", 12))
-    vc = snapshot_compact(spark, t, small_bytes=1 << 30)  # everything is small
-    assert vc is not None
-    assert sorted(r.id for r in snapshot_read(spark, t, vc).collect()) == list(
-        range(12, 60)
-    ), "compact must apply the DV, not resurrect deleted rows"
-    assert _dv_of(t, vc) is None, "all covered files rewritten -> coverage gone"
-
-
-def test_partitioned_delete_and_vacuum_keeps_dv_dirs(spark, tmp_path):
-    """DVs on a hive-partitioned table (partition pruning feeds the
-    candidate set), and vacuum must treat a surviving version's DV dir
-    as live while still removing orphans."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_delete,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS lang")
-    snapshot_commit(df, t, mode="overwrite", stats_cols=["id"], partition_by=["lang"])
-    snapshot_delete(spark, t, where=("lang", "=", "2"))
-    got = sorted(r.id for r in snapshot_read(spark, t).collect())
-    assert got == [i for i in range(40) if i % 4 != 2]
-
-    res = snapshot_vacuum(spark, t, keep_last=1)
-    assert res["surviving_versions"] == [1]
-    # the DV dir survived the sweep: the masked rows stay masked
-    got2 = sorted(r.id for r in snapshot_read(spark, t).collect())
-    assert got2 == got
-
-
 # ---------------------------------------------------------------------------
 # round 10: manifest sharding (Iceberg manifest-list shape)
 
@@ -900,7 +742,6 @@ def small_shards(monkeypatch):
 
 
 def _root(t, version):
-    import json
 
     return json.load(open(f"{t}/_manifests/v{version:08d}.json"))
 
@@ -933,6 +774,13 @@ def test_sharded_commit_roundtrip_and_append_shares_shards(
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(150))
     # time travel still resolves the old root's shards
     assert snapshot_read(spark, t, 0).count() == 100
+
+    # a DV delete must not touch the inventory: same shard refs verbatim
+    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
+
+    v2 = snapshot_delete(spark, t, where=("id", "<", 10))
+    assert [s["path"] for s in _root(t, v2)["shards"]] == [s["path"] for s in m1["shards"]]
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(10, 150))
 
 
 def test_sharded_pruned_read_skips_loading_shards(spark, tmp_path, small_shards):
@@ -1015,60 +863,6 @@ def test_sharded_merge_rewrites_only_touched_shards(spark, tmp_path, small_shard
     assert len(got) == 301
 
 
-def test_sharded_delete_shares_all_shards_and_vacuum_gc(
-    spark, tmp_path, small_shards
-):
-    """A DV delete on a sharded table must not touch the inventory
-    (same shard refs verbatim); vacuum must GC the shard files of
-    expired versions while keeping every live one readable."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_delete,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        spark.range(100).selectExpr("id", "'x' AS v").repartition(4), t,
-        mode="overwrite", stats_cols=["id"],
-    )
-    snapshot_delete(spark, t, where=("id", "<", 10))
-    m0, m1 = _root(t, 0), _root(t, 1)
-    assert [s["path"] for s in m1["shards"]] == [s["path"] for s in m0["shards"]]
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(10, 100))
-
-    # overwrite orphans v0/v1's shards once they expire
-    snapshot_commit(
-        spark.range(500, 520).selectExpr("id", "'y' AS v").repartition(4), t,
-        mode="overwrite", stats_cols=["id"],
-    )
-    res = snapshot_vacuum(spark, t, keep_last=1)
-    assert res["removed_shards"] >= 2, res
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(
-        range(500, 520)
-    )
-
-
-def test_sharded_compact_shares_untouched_shards(spark, tmp_path, small_shards):
-    """Compact on a sharded table rewrites only shards holding small
-    files; value equality and stat continuity hold."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_compact
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        spark.range(60).selectExpr("id", "'x' AS v").repartition(6), t,
-        mode="overwrite", stats_cols=["id"],
-    )
-    vc = snapshot_compact(spark, t, small_bytes=1 << 30, target_rows_per_file=None)
-    assert vc is not None
-    assert sorted(r.id for r in snapshot_read(spark, t, vc).collect()) == list(range(60))
-    m = _root(t, vc)
-    # everything was small -> consolidated to one file, inline again
-    assert m["n_files"] == 1 and "files" in m
-    # pruning still works from the re-gathered stats
-    pr = snapshot_read(spark, t, where=("id", ">=", 30))
-    assert pr.count() == 30
-
-
 # ---------------------------------------------------------------------------
 # round 10: exactly-once streaming ingest (txn watermarks)
 
@@ -1079,7 +873,6 @@ def test_stream_ingest_handler_is_idempotent_per_batch(spark, tmp_path):
     survive interleaved commits of every other op type."""
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_delete,
-        snapshot_last_txn,
         snapshot_merge,
         snapshot_stream_ingest,
     )
@@ -1090,7 +883,7 @@ def test_stream_ingest_handler_is_idempotent_per_batch(spark, tmp_path):
     b1 = spark.createDataFrame([(i, f"v{i}") for i in range(5, 10)], "id bigint, v string")
     h(b0, 0)
     h(b1, 1)
-    assert snapshot_last_txn(spark, t, "writerA") == 1
+    assert _watermark(t, "writerA") == 1
     # redeliver both (crash-restart replays the tail; a lost
     # checkpoint replays everything)
     h(b1, 1)
@@ -1106,7 +899,7 @@ def test_stream_ingest_handler_is_idempotent_per_batch(spark, tmp_path):
     snapshot_commit(
         spark.createDataFrame([(100, "ow")], "id bigint, v string"), t, mode="overwrite"
     )
-    assert snapshot_last_txn(spark, t, "writerA") == 1
+    assert _watermark(t, "writerA") == 1
     h(b0, 0)  # still a replay: must skip
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [100]
     # a genuinely NEW batch commits
@@ -1115,8 +908,8 @@ def test_stream_ingest_handler_is_idempotent_per_batch(spark, tmp_path):
     # independent writers keep independent watermarks
     h2 = snapshot_stream_ingest(t, "writerB")
     h2(spark.createDataFrame([(300, "wb")], "id bigint, v string"), 0)
-    assert snapshot_last_txn(spark, t, "writerB") == 0
-    assert snapshot_last_txn(spark, t, "writerA") == 2
+    assert _watermark(t, "writerB") == 0
+    assert _watermark(t, "writerA") == 2
 
 
 def test_stream_ingest_retries_through_commit_race(spark, tmp_path, monkeypatch):
@@ -1150,40 +943,36 @@ def test_stream_ingest_retries_through_commit_race(spark, tmp_path, monkeypatch)
     assert state["calls"] == 2
     got = sorted(r.id for r in snapshot_read(spark, t).collect())
     assert got == [0, 1, 99]
-    assert st.snapshot_last_txn(spark, t, "w") == 0
+    assert _watermark(t, "w") == 0
 
 
 def test_stream_ingest_real_stream_survives_checkpoint_loss(spark, tmp_path):
-    """Drain a real file stream through the handler; then DELETE the
+    """Drain a real file stream through the handler, let more files
+    arrive and drain again from the kept checkpoint; then DELETE the
     checkpoint and drain the same source again under the same
     writer_id — full redelivery from batch 0 must leave the table
     byte-identical. This is the exactly-once claim BEYOND Spark's
     own checkpoint guarantee."""
+    import glob
     import shutil
 
     from etfconstituentextractor_spark.sources.snapshot_table import (
         snapshot_stream_ingest,
-        snapshot_versions,
     )
 
     src = str(tmp_path / "src")
     t = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")
-    for i in range(3):
+    os.makedirs(src, exist_ok=True)
+
+    def stage(i):
         spark.range(i * 10, i * 10 + 10).selectExpr(
             "id", "CAST(id AS STRING) AS v"
         ).coalesce(1).write.parquet(f"{src}/part{i}")
-    import glob
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    files = []
-    for i in range(3):
         (p,) = glob.glob(f"{src}/part{i}/part-*.parquet")
         dst = f"{src}/chunk_{i}.parquet"
         shutil.move(p, dst)
         os.utime(dst, (1_600_000_000 + 10 * i,) * 2)
-        files.append(dst)
 
     def drain():
         q = (
@@ -1197,15 +986,20 @@ def test_stream_ingest_real_stream_survives_checkpoint_loss(spark, tmp_path):
         )
         q.awaitTermination(120)
 
+    for i in range(2):
+        stage(i)
+    drain()
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(20))
+    stage(2)  # a later arrival: the kept checkpoint resumes past it
     drain()
     got1 = sorted(r.id for r in snapshot_read(spark, t).collect())
     assert got1 == list(range(30))
-    n_versions = len(snapshot_versions(spark, t))
+    n_versions = len(_manifests(t))
 
     shutil.rmtree(ckpt)  # lose the checkpoint: full redelivery
     drain()
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == got1
-    assert len(snapshot_versions(spark, t)) == n_versions, (
+    assert len(_manifests(t)) == n_versions, (
         "redelivered batches must not create new versions"
     )
 
@@ -1216,13 +1010,13 @@ def test_stream_ingest_real_stream_survives_checkpoint_loss(spark, tmp_path):
 
 def test_lifecycle_matches_python_model(spark, tmp_path):
     """Model-based check over the WHOLE lifecycle: a seeded random
-    sequence of append/overwrite/merge/delete/compact/ingest ops runs
+    sequence of append/overwrite/merge/delete/ingest/restore ops runs
     against both the real table and a pure-Python {id: v} model; after
     every op the latest snapshot must equal the model exactly. This is
     the test shape that catches cross-feature interactions no
-    single-feature test enumerates (DV x compact, merge x shards,
+    single-feature test enumerates (DV x merge, merge x shards,
     txn x overwrite, ...). Sharding is forced small so shard code
-    paths run; a mid-sequence vacuum keeps history pressure on."""
+    paths run."""
     import random
 
     from etfconstituentextractor_spark.sources import snapshot_table as st
@@ -1257,8 +1051,8 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
         next_id = 1000
         for step in range(18):
             op = rng.choice(
-                ["append", "merge", "delete", "compact", "ingest", "overwrite",
-                 "bloom_append", "zorder_compact", "restore", "keyed_delete"]
+                ["append", "merge", "delete", "ingest", "overwrite",
+                 "bloom_append", "restore", "keyed_delete"]
             )
             if op == "append":
                 rows = [(next_id + i, f"a{step}_{i}") for i in range(rng.randint(1, 6))]
@@ -1311,13 +1105,6 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
                     next_id += 10
                     st.snapshot_commit(frame(rows), t, mode="append", stats_cols=["id"])
                     model.update(dict(rows))
-            elif op == "compact":
-                st.snapshot_compact(spark, t, small_bytes=1 << 30,
-                                    target_rows_per_file=10)
-            elif op == "zorder_compact":
-                st.snapshot_compact(spark, t, small_bytes=1 << 30,
-                                    target_rows_per_file=10,
-                                    zorder_by=("id", "id"))
             elif op == "bloom_append":
                 rows = [(next_id + i, f"b{step}_{i}") for i in range(3)]
                 next_id += 10
@@ -1333,18 +1120,14 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
                 ingest_seq += 1
                 model.update(dict(rows))
             elif op == "restore":
-                live = [mv["version"] for mv in st.snapshot_versions(spark, t)]
-                targets = [v for v in live if v in history]
+                targets = [mv["version"] for mv in _manifests(t) if mv["version"] in history]
                 tgt = rng.choice(targets)
                 st.snapshot_restore(spark, t, tgt)
                 model.clear()
                 model.update(history[tgt])
-            latest = st.snapshot_versions(spark, t)[-1]["version"]
+            latest = _manifests(t)[-1]["version"]
             history[latest] = dict(model)
             check(f"step {step} ({op})")
-            if step == 9:
-                st.snapshot_vacuum(spark, t, keep_last=2)
-                check("vacuum")
         # pruned reads agree with the model on a random probe
         if model:
             cut = rng.choice(sorted(model))
@@ -1360,72 +1143,13 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
                       for r in st.snapshot_read(spark, t, where=("id", "=", pk)).collect()}
                 assert pg == {(pk, model[pk])}, pk
             assert st.snapshot_read(spark, t, where=("id", "=", 999_999)).count() == 0
-        # the incremental change feed between the last two surviving
-        # versions equals the full-read diff on this random history
+        # the incremental change feed between the last two versions
+        # equals the full-read diff on this random history
         from etfconstituentextractor_spark.operators.snapshot_diff import (
             snapshot_diff,
         )
 
-        # replicating the whole random history into a fresh table must
-        # land exactly on the model (round 11 — replication over every
-        # op class the sequence produced, including the vacuum gap:
-        # bootstrap starts at the earliest retained version)
-        replica = str(tmp_path / "replica")
-        st.snapshot_replicate(spark, t, replica, key="id")
-        got_r = {(r.id, r.v) for r in st.snapshot_read(spark, replica).collect()}
-        assert got_r == set(model.items())
-
-        # FAN-IN over the same random history (round 12): two writers
-        # each own half the key space of the SAME source and mirror
-        # into one fresh destination — the interleaved claim +
-        # merge/delete applies must land exactly on the model, and a
-        # tail pass must converge as a no-op
-        fanin = str(tmp_path / "fanin")
-        mid = sorted(model)[len(model) // 2] if model else 0
-        st.snapshot_replicate(spark, t, fanin, key="id", key_range=(None, mid))
-        st.snapshot_replicate(spark, t, fanin, key="id", key_range=(mid, None))
-        got_f = {(r.id, r.v) for r in st.snapshot_read(spark, fanin).collect()}
-        assert got_f == set(model.items()), "fan-in != model"
-        for kr in ((None, mid), (mid, None)):
-            assert (
-                st.snapshot_tail(spark, t, fanin, key="id", key_range=kr,
-                                 stop_after_idle=2, sleep=lambda s: None)
-                == st.snapshot_versions(spark, t)[-1]["version"]
-            )
-        got_f = {(r.id, r.v) for r in st.snapshot_read(spark, fanin).collect()}
-        assert got_f == set(model.items()), "fan-in tail churned state"
-
-        # round 13: REGISTERED ownership over the same split — claim,
-        # converge via the COMBINED service loop, then move one
-        # writer's interval through release + re-claim and re-converge
-        # (the ownership-move path), still exactly on the model.
-        # The key_range replicates above auto-registered derived
-        # writer ids (which the fixed owner-carry now correctly
-        # PERSISTS — pre-fix they were silently clobbered), so the
-        # re-key starts with releases, exactly the API's use case.
-        fs_f, _, jvm_f = st._fs_path(spark, fanin)
-        head_f = st.snapshot_versions(spark, fanin)[-1]["version"]
-        auto = dict(st._read_manifest(fs_f, jvm_f, fanin, head_f).get("owners") or {})
-        assert auto, "key_range replicates should have registered owners"
-        for wid in auto:
-            st.snapshot_release_range(spark, fanin, wid)
-        st.snapshot_claim_range(spark, fanin, "lo_w", "id", None, mid)
-        st.snapshot_claim_range(spark, fanin, "hi_w", "id", mid, None)
-        svc = st.snapshot_service(
-            spark, t, fanin, key="id", writer_id="lo_w",
-            key_range=(None, mid), stop_after_idle=2,
-            sleep=lambda s: None, min_small_files=10_000,
-        )
-        assert svc["applied"] == st.snapshot_versions(spark, t)[-1]["version"]
-        st.snapshot_release_range(spark, fanin, "hi_w")
-        st.snapshot_claim_range(spark, fanin, "hi_w2", "id", mid, None)
-        st.snapshot_replicate(
-            spark, t, fanin, key="id", writer_id="hi_w2", key_range=(mid, None)
-        )
-        got_f = {(r.id, r.v) for r in st.snapshot_read(spark, fanin).collect()}
-        assert got_f == set(model.items()), "ownership move churned state"
-
-        vs = [mv["version"] for mv in st.snapshot_versions(spark, t)]
+        vs = [mv["version"] for mv in _manifests(t)]
         if len(vs) >= 2:
             a, b = vs[-2], vs[-1]
             fast = {
@@ -1480,24 +1204,19 @@ def test_commit_level_txn_guard_blocks_zombie_writer(spark, tmp_path):
     snapshot_commit — a zombie writer's commit lands under a
     different version, so the atomic claim alone never collides. A
     direct commit with seq <= the recorded watermark must no-op."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_last_txn,
-        snapshot_versions,
-    )
-
     t = str(tmp_path / "tbl")
     b = spark.createDataFrame([(1, "x")], "id bigint, v string")
     snapshot_commit(b, t, mode="append", txn=("w", 5))
-    n0 = len(snapshot_versions(spark, t))
+    n0 = len(_manifests(t))
     # the zombie: same writer, same (or older) seq, no prior check
     got = snapshot_commit(
         spark.createDataFrame([(2, "dup")], "id bigint, v string"), t,
         mode="append", txn=("w", 5),
     )
     assert got == n0 - 1  # the existing version, not a new one
-    assert len(snapshot_versions(spark, t)) == n0
+    assert len(_manifests(t)) == n0
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1]
-    assert snapshot_last_txn(spark, t, "w") == 5
+    assert _watermark(t, "w") == 5
     # a NEWER seq commits normally
     snapshot_commit(
         spark.createDataFrame([(3, "next")], "id bigint, v string"), t,
@@ -1554,46 +1273,6 @@ def test_streaming_appends_keep_shard_count_bounded(spark, tmp_path, monkeypatch
     assert snapshot_read(spark, t, 5).count() == 6
 
 
-def test_compact_zorder_makes_manifest_stats_two_dimensional(spark, tmp_path):
-    """OPTIMIZE ZORDER through the manifest: after
-    snapshot_compact(zorder_by=(a, b)) each rewritten file covers a
-    tight Morton rectangle, so snapshot_read(where=...) skips files
-    for EITHER dimension — measured via inputFiles() against the
-    pre-compact random layout, where a probe on either column plans
-    everything."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_compact
-
-    t = str(tmp_path / "tbl")
-    n = 4096
-    df = spark.range(n).selectExpr(
-        "id",
-        # two independent dimensions, decorrelated from row order
-        "CAST(pmod(hash(id), 1024) AS BIGINT) AS a",
-        "CAST(pmod(hash(id * 7 + 3), 1024) AS BIGINT) AS b",
-    )
-    snapshot_commit(df.repartition(8), t, mode="overwrite", stats_cols=["a", "b"])
-    pre_a = len(snapshot_read(spark, t, where=("a", "<", 64)).inputFiles())
-    pre_b = len(snapshot_read(spark, t, where=("b", "<", 64)).inputFiles())
-    assert pre_a == 8 and pre_b == 8, "hash layout: no stat is selective"
-
-    vc = snapshot_compact(
-        spark, t, small_bytes=1 << 30, target_rows_per_file=n // 8,
-        zorder_by=("a", "b"),
-    )
-    assert vc is not None
-    post_a = len(snapshot_read(spark, t, vc, where=("a", "<", 64)).inputFiles())
-    post_b = len(snapshot_read(spark, t, vc, where=("b", "<", 64)).inputFiles())
-    assert post_a < 8 and post_b < 8, (post_a, post_b)
-    # and values are intact + probes agree with a plain filter
-    assert snapshot_read(spark, t, vc).count() == n
-    assert (
-        snapshot_read(spark, t, vc, where=("a", "<", 64)).count()
-        == snapshot_read(spark, t, vc).filter("a < 64").count()
-    )
-    with pytest.raises(ValueError, match="target_rows_per_file"):
-        snapshot_compact(spark, t, small_bytes=1 << 30, zorder_by=("a", "b"))
-
-
 # ---------------------------------------------------------------------------
 # round 10: manifest bloom filters (point-lookup file skipping)
 
@@ -1643,7 +1322,6 @@ def test_bloom_append_carries_and_rewrites_are_conservative(spark, tmp_path):
         snapshot_commit,
         snapshot_merge,
         snapshot_read,
-        snapshot_vacuum,
     )
 
     t = str(tmp_path / "tbl")
@@ -1656,7 +1334,6 @@ def test_bloom_append_carries_and_rewrites_are_conservative(spark, tmp_path):
         spark.range(100, 200).selectExpr("id", mk).repartition(2), t,
         mode="append", stats_cols=["id"], bloom_cols=["k"],
     )
-    import json
 
     m1 = json.load(open(f"{t}/_manifests/v00000001.json"))
     assert len(m1["bloom"]) == 2, "append must carry parent's sidecar + add its own"
@@ -1673,10 +1350,6 @@ def test_bloom_append_carries_and_rewrites_are_conservative(spark, tmp_path):
     # the OLD key value is gone (its row was replaced), probing it
     # must return nothing — even though its bloom row still says hit
     assert snapshot_read(spark, t, vm, where=("k", "=", k150)).count() == 0
-
-    # vacuum keeps sidecars of surviving versions (probe still works)
-    snapshot_vacuum(spark, t, keep_last=1)
-    assert snapshot_read(spark, t, where=("k", "=", "REPLACED")).count() == 1
 
 
 def test_bloom_type_discipline(spark, tmp_path):
@@ -1696,18 +1369,20 @@ def test_bloom_type_discipline(spark, tmp_path):
     assert pr.count() == 1 and len(pr.inputFiles()) < 4
     # uncoercible probe: _bloom_prune keeps every file (conservative —
     # never falsely prune; the in-plan ANSI filter owns the cast error)
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import _bloom_prune
 
     m0 = json.load(open(f"{t}/_manifests/v00000000.json"))
     kept = _bloom_prune(spark, t, m0, m0["files"], ("k7", "=", "not-a-number"))
     assert kept == m0["files"]
+    # the refusal comes BEFORE the data write: no orphan dir per retry
+    before = set(os.listdir(f"{t}/data"))
     with pytest.raises(ValueError, match="unsupported"):
         snapshot_commit(
             spark.range(5).selectExpr("id", "CAST(id AS DECIMAL(10,2)) AS d"), t,
             mode="append", bloom_cols=["d"],
         )
+    assert set(os.listdir(f"{t}/data")) == before, "orphan data dir leaked"
 
 
 def test_merge_uses_blooms_to_skip_candidate_scans(spark, tmp_path):
@@ -1783,7 +1458,6 @@ def test_bloom_empty_commit_and_oversize_clamp(spark, tmp_path, monkeypatch):
     succeed with no sidecar (not crash on max() of nothing), and a
     file too large for the 64M-bit cap must CLAMP the sizing (fpp
     degrades, the already-written commit never fails)."""
-    import json
 
     from etfconstituentextractor_spark.operators import bloom as bl
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
@@ -1818,7 +1492,6 @@ def test_bloom_entries_consolidate_past_threshold(spark, tmp_path, monkeypatch):
     with one sidecar job per entry per probe. Past the threshold a
     bloom-building commit consolidates live rows into ONE sidecar;
     point probes stay correct across every generation's files."""
-    import json
 
     from etfconstituentextractor_spark.sources import snapshot_table as st
 
@@ -1843,38 +1516,14 @@ def test_bloom_entries_consolidate_past_threshold(spark, tmp_path, monkeypatch):
         assert len(pr.inputFiles()) < 5
 
 
-def test_compact_zorder_arg_validation_precedes_early_return(spark, tmp_path):
-    """Second-review finding: invalid zorder arguments must raise even
-    when there is nothing to compact (the early return previously
-    swallowed them as None)."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_commit,
-        snapshot_compact,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        spark.range(10).selectExpr("id", "CAST(id % 2 AS STRING) AS p"), t,
-        mode="overwrite", partition_by=["p"],
-    )
-    with pytest.raises(ValueError, match="unpartitioned"):
-        snapshot_compact(spark, t, small_bytes=1, zorder_by=("id", "id"),
-                         target_rows_per_file=5)
-    t2 = str(tmp_path / "tbl2")
-    snapshot_commit(spark.range(10).selectExpr("id", "id AS b").coalesce(1), t2)
-    # one file only -> nothing to compact, but the bad combo must raise
-    with pytest.raises(ValueError, match="target_rows_per_file"):
-        snapshot_compact(spark, t2, small_bytes=1 << 30, zorder_by=("id", "b"))
-
-
 # ---------------------------------------------------------------------------
 # round 10: incremental change data feed
 
 
 def test_snapshot_changes_equals_full_read_diff_and_scans_less(spark, tmp_path):
     """snapshot_changes must equal snapshot_diff over FULL reads for
-    every version pair of a history exercising append, DV delete,
-    merge, and compact — while scanning only changed files (pinned by
+    every version pair of a history exercising append, DV delete and
+    merge — while scanning only changed files (pinned by
     comparing a one-delta step's planned files against the table)."""
     from etfconstituentextractor_spark.operators.snapshot_diff import snapshot_diff
     from etfconstituentextractor_spark.sources import snapshot_table as st
@@ -1895,7 +1544,10 @@ def test_snapshot_changes_equals_full_read_diff_and_scans_less(spark, tmp_path):
         t, key="id", stats_cols=["id"],
     )                                                                        # v3
     st.snapshot_delete(spark, t, where=("id", ">=", 230))                    # v4
-    st.snapshot_compact(spark, t, small_bytes=1 << 30, target_rows_per_file=500)  # v5
+    st.snapshot_merge(  # re-upserts an unchanged row: rewrites its file
+        spark.createDataFrame([(50, "UPD")], "id bigint, v string"),
+        t, key="id", stats_cols=["id"],
+    )                                                                        # v5
 
     def norm(cdf):
         return {
@@ -1915,7 +1567,8 @@ def test_snapshot_changes_equals_full_read_diff_and_scans_less(spark, tmp_path):
             )
             assert fast == slow, (a, b, fast ^ slow)
 
-    # compaction-only step: pure file churn, zero logical change
+    # rewrite-only step: pure file churn, zero logical change
+    assert st.snapshot_changes(spark, t, 4, 5, keys=["id"]).inputFiles()
     assert norm(st.snapshot_changes(spark, t, 4, 5, keys=["id"])) == set()
     # scan-boundedness: the v1->v2 feed (one DV delete over the low
     # range) plans fewer files than the table holds
@@ -1925,56 +1578,17 @@ def test_snapshot_changes_equals_full_read_diff_and_scans_less(spark, tmp_path):
     assert norm(feed) == {(i, "deleted") for i in range(10)}
 
 
-def test_multi_predicate_where_and_timestamp_travel(spark, tmp_path):
-    """Round-10 late additions: a conjunction of where-tuples prunes
-    by EVERY predicate (the payoff of Z-ordered stats), and
-    snapshot_version_as_of resolves timestamp time travel."""
-    import time
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_commit,
-        snapshot_compact,
-        snapshot_version_as_of,
-        snapshot_versions,
-    )
-
-    t = str(tmp_path / "tbl")
-    n = 4096
-    df = spark.range(n).selectExpr(
-        "id",
-        "CAST(pmod(hash(id), 1024) AS BIGINT) AS a",
-        "CAST(pmod(hash(id * 7 + 3), 1024) AS BIGINT) AS b",
-    )
-    snapshot_commit(df.repartition(8), t, mode="overwrite", stats_cols=["a", "b"])
-    t_v0 = time.time()
-    snapshot_compact(
-        spark, t, small_bytes=1 << 30, target_rows_per_file=n // 8,
-        zorder_by=("a", "b"),
-    )
-    both = snapshot_read(spark, t, where=[("a", "<", 64), ("b", "<", 64)])
-    one = snapshot_read(spark, t, where=("a", "<", 64))
-    assert len(both.inputFiles()) <= len(one.inputFiles())
-    assert both.count() == snapshot_read(spark, t).filter("a < 64 AND b < 64").count()
-
-    # timestamp travel: as-of a moment between the commits -> v0
-    assert snapshot_version_as_of(spark, t, t_v0) == 0
-    assert snapshot_version_as_of(spark, t, time.time()) == 1
-    with pytest.raises(FileNotFoundError):
-        snapshot_version_as_of(spark, t, 0.0)
-    assert all(m["committed_at"] for m in snapshot_versions(spark, t))
-
-
 def test_committed_at_is_monotonic_under_clock_skew(spark, tmp_path, monkeypatch):
     """Max-review finding: a stepped-back clock must never stamp a
-    child before its parent, or as-of would resolve a timestamp to a
-    snapshot containing LATER data."""
+    child before its parent, or a timestamp lookup over the manifests
+    would resolve to a snapshot containing LATER data."""
     import time as _time
 
     from etfconstituentextractor_spark.sources import snapshot_table as st
 
     t = str(tmp_path / "tbl")
     st.snapshot_commit(spark.createDataFrame([(1, "a")], "id bigint, v string"), t)
-    at0 = st.snapshot_versions(spark, t)[0]["committed_at"]
+    at0 = _manifest(t, 0)["committed_at"]
     real_time = _time.time
     monkeypatch.setattr(_time, "time", lambda: at0 - 3600.0)  # clock steps back
     try:
@@ -1983,10 +1597,8 @@ def test_committed_at_is_monotonic_under_clock_skew(spark, tmp_path, monkeypatch
         )
     finally:
         monkeypatch.setattr(_time, "time", real_time)
-    ats = [m["committed_at"] for m in st.snapshot_versions(spark, t)]
+    ats = [m["committed_at"] for m in _manifests(t)]
     assert ats[1] > ats[0], ats
-    # as-of a moment just after v1's stamp resolves v1, never v0
-    assert st.snapshot_version_as_of(spark, t, ats[1]) == 1
 
 
 def test_fully_pruned_read_on_sharded_table_loads_no_extra_shards(
@@ -2021,10 +1633,8 @@ def test_fully_pruned_read_on_sharded_table_loads_no_extra_shards(
 
 def test_failed_delete_validation_reclaims_dv_dir(spark, tmp_path, monkeypatch):
     """Max-review finding: a delete whose key validation raises left
-    its just-written DV dir as an unreclaimable orphan (vacuum's
-    in-flight guard skips dirs newer than the newest manifest); it
+    its just-written DV dir as an orphan no manifest references; it
     must be deleted on the way out."""
-    import os
 
     from etfconstituentextractor_spark.sources import snapshot_table as st
 
@@ -2041,54 +1651,6 @@ def test_failed_delete_validation_reclaims_dv_dir(spark, tmp_path, monkeypatch):
     assert set(os.listdir(f"{t}/data")) == dirs_before, "orphan DV dir leaked"
     # table still healthy
     assert st.snapshot_read(spark, t).count() == 20
-
-
-def test_vacuum_older_than_and_partition_spec_evolution(spark, tmp_path):
-    """Two completion pins: (1) timestamp retention — vacuum
-    older_than expires versions stamped before the horizon but never
-    the latest; (2) PARTITION SPEC EVOLUTION across overwrites
-    already works by construction (each version's manifest carries
-    its own spec; reads are per-version-dir), with appends still
-    enforcing the CURRENT spec."""
-    import time
-
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    st.snapshot_commit(
-        spark.range(10).selectExpr("id", "CAST(id % 2 AS STRING) AS p"), t,
-        mode="overwrite", partition_by=["p"],
-    )
-    horizon = time.time()
-    # spec change via overwrite: unpartitioned now
-    st.snapshot_commit(
-        spark.range(20, 30).selectExpr("id", "'z' AS p"), t, mode="overwrite"
-    )
-    # time travel across the spec change
-    assert sorted(r.id for r in st.snapshot_read(spark, t, 0).collect()) == list(range(10))
-    assert sorted(r.id for r in st.snapshot_read(spark, t, 1).collect()) == list(range(20, 30))
-    # appends enforce the CURRENT (empty) spec
-    with pytest.raises(ValueError, match="partition_by"):
-        st.snapshot_commit(
-            spark.range(5).selectExpr("id", "'q' AS p"), t, mode="append",
-            partition_by=["p"],
-        )
-    # and a third version under a NEW spec
-    st.snapshot_commit(
-        spark.range(40, 50).selectExpr("id", "CAST(id % 5 AS STRING) AS p"), t,
-        mode="overwrite", partition_by=["p"],
-    )
-    assert st.snapshot_read(spark, t).count() == 10
-
-    res = st.snapshot_vacuum(spark, t, older_than=horizon)
-    assert res["expired_versions"] == 1  # only v0 predates the horizon
-    with pytest.raises(FileNotFoundError):
-        st.snapshot_read(spark, t, 0)
-    assert st.snapshot_read(spark, t, 1).count() == 10
-    # horizon in the future: everything but the latest expires
-    res2 = st.snapshot_vacuum(spark, t, older_than=time.time() + 60)
-    assert res2["surviving_versions"] == [2]
-    assert st.snapshot_read(spark, t).count() == 10
 
 
 def test_bloom_zero_false_pruning_across_dtypes(spark, tmp_path):
@@ -2119,48 +1681,9 @@ def test_bloom_zero_false_pruning_across_dtypes(spark, tmp_path):
             assert snapshot_read(spark, t, where=("k", "=", av)).count() == 0, (dt, av)
 
 
-def test_fourth_wave_guards(spark, tmp_path):
-    """Fourth-review pins: (1) an invalid bloom_cols commit fails
-    BEFORE writing data (no orphan dir per retry); (2) vacuum
-    older_than KEEPS versions with no committed_at stamp; (3) compact
-    arg errors beat FileNotFoundError on an empty table."""
-    import json
-    import os
-
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    st.snapshot_commit(
-        spark.range(10).selectExpr("id", "CAST(id AS DECIMAL(10,2)) AS d"), t
-    )
-    before = set(os.listdir(f"{t}/data"))
-    with pytest.raises(ValueError, match="unsupported"):
-        st.snapshot_commit(
-            spark.range(5).selectExpr("id", "CAST(id AS DECIMAL(10,2)) AS d"), t,
-            mode="append", bloom_cols=["d"],
-        )
-    assert set(os.listdir(f"{t}/data")) == before, "orphan data dir leaked"
-
-    # strip v0's stamp to simulate a legacy manifest; add v1
-    mpath = f"{t}/_manifests/v00000000.json"
-    m0 = json.load(open(mpath))
-    m0.pop("committed_at", None)
-    json.dump(m0, open(mpath, "w"))
-    st.snapshot_commit(
-        spark.range(20, 25).selectExpr("id", "CAST(id AS DECIMAL(10,2)) AS d"), t,
-        mode="append",
-    )
-    res = st.snapshot_vacuum(spark, t, older_than=2_000_000_000.0)
-    assert 0 in res["surviving_versions"], "unstamped versions must be KEPT"
-
-    with pytest.raises(ValueError, match="target_rows_per_file"):
-        st.snapshot_compact(
-            spark, str(tmp_path / "nope"), zorder_by=("a", "b")
-        )
-
 # ---------------------------------------------------------------------------
-# round 11: restore, optimistic commit retry, SQL view surface, and the
-# round-10 advice fixes (vacuum retention floor, empty-source merge)
+# round 11: restore, optimistic commit retry, and the round-10 advice
+# fixes (empty-source merge)
 
 
 def test_restore_rolls_back_as_new_commit(spark, tmp_path):
@@ -2180,7 +1703,7 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     ids = lambda v=None: sorted(r.id for r in st.snapshot_read(spark, t, v).collect())
     assert ids() == [1, 2, 3]  # latest == v1's state
     assert ids(2) == [9]  # the rolled-back commit is still readable
-    meta = st.snapshot_versions(spark, t)
+    meta = _manifests(t)
     assert meta[-1]["op"] == "restore"
     # restore cost zero data movement: v3 plans exactly v1's files
     assert set(st.snapshot_read(spark, t, 3).inputFiles()) == set(
@@ -2191,11 +1714,10 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     assert sorted(r.id for r in pruned.collect()) == [3]
     # restoring the CURRENT version is a no-op (no new commit)
     assert st.snapshot_restore(spark, t, 3) == 3
-    assert len(st.snapshot_versions(spark, t)) == 4
-    # a vacuumed-away target is out of the retention horizon
-    st.snapshot_vacuum(spark, t, keep_last=1)
+    assert len(_manifests(t)) == 4
+    # a never-committed target raises
     with pytest.raises(FileNotFoundError):
-        st.snapshot_restore(spark, t, 2)
+        st.snapshot_restore(spark, t, 7)
 
 
 def test_restore_carries_dv_and_txn_watermark(spark, tmp_path):
@@ -2220,34 +1742,14 @@ def test_restore_carries_dv_and_txn_watermark(spark, tmp_path):
         0, 1, 2, 3, 4, 5
     ]
     # watermark survived two restores
-    assert st.snapshot_last_txn(spark, t, "w1") == 5
-    # vacuum keeps the DV dir of the restored-but-superseded lineage
-    # only while referenced; the current latest (v4) has no DV and
-    # must read fine after expiry of everything else
-    st.snapshot_vacuum(spark, t, keep_last=1)
-    assert st.snapshot_read(spark, t).count() == 6
-
-
-def test_restore_then_vacuum_keeps_referenced_data(spark, tmp_path):
-    """Vacuum liveness is manifest-driven: after restoring to v0 and
-    expiring all other versions, v0's data files survive because the
-    restore commit references them."""
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    st.snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), t)
-    st.snapshot_commit(_df(spark, [(9, "z")]), t, mode="overwrite")
-    st.snapshot_restore(spark, t, 0)
-    st.snapshot_vacuum(spark, t, keep_last=1)
-    assert sorted(r.id for r in st.snapshot_read(spark, t).collect()) == [1, 2]
+    assert _watermark(t, "w1") == 5
 
 
 def test_append_retry_rebases_on_lost_race(spark, tmp_path):
     """retries=N on an append commit: a lost race rebases METADATA only
     — the already-written data files are renamed under the new version
-    (so vacuum's in-flight guard keeps protecting them) and the commit
-    lands on the winner's child version with stats intact and zero
-    orphan dirs."""
+    and the commit lands on the winner's child version with stats
+    intact and zero orphan dirs."""
     import etfconstituentextractor_spark.sources.snapshot_table as st
 
     t = str(tmp_path / "tbl")
@@ -2277,10 +1779,11 @@ def test_append_retry_rebases_on_lost_race(spark, tmp_path):
     pruned = snapshot_read(spark, t, where=("id", "=", 2))
     assert [r.id for r in pruned.collect()] == [2]
     assert len(pruned.inputFiles()) < len(snapshot_read(spark, t).inputFiles())
-    # the rename left no orphan dir for vacuum to sweep
-    res = st.snapshot_vacuum(spark, t)
-    assert res["removed_dirs"] == 0
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1, 2, 7]
+    # the rename left no orphan dir, and the moved dir carries the
+    # number of the version that published it
+    assert _unreferenced_data_dirs(t) == set()
+    assert all(f.startswith("data/v00000002-") for f in _manifest(t, 2)["files"]
+               if f not in _manifest(t, 1)["files"])
 
 
 def test_retry_rejected_for_overwrite_and_bloom(spark, tmp_path):
@@ -2325,25 +1828,7 @@ def test_delete_retry_rederives_serializably(spark, tmp_path):
 
     got = sorted(r.id for r in snapshot_read(spark, t).collect())
     assert got == [3, 4, 5, 50], got  # late-match (id=1) deleted too
-    res = st.snapshot_vacuum(spark, t)
-    assert res["removed_dirs"] == 0, "lost attempt leaked its DV dir"
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [3, 4, 5, 50]
-
-
-def test_vacuum_keep_last_is_a_retention_floor(spark, tmp_path):
-    """older_than must not expire versions inside the keep_last window
-    (Iceberg retain-last): with every commit older than the horizon,
-    keep_last=2 still keeps the last two time-travelable."""
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    for i in range(4):
-        st.snapshot_commit(_df(spark, [(i, f"v{i}")]), t, mode="append")
-    res = st.snapshot_vacuum(
-        spark, t, keep_last=2, older_than=2_000_000_000.0
-    )
-    assert res["surviving_versions"] == [2, 3]
-    assert st.snapshot_read(spark, t, 2).count() == 3  # still readable
+    assert _unreferenced_data_dirs(t) == set(), "lost attempt leaked its DV dir"
 
 
 def test_merge_empty_source_is_noop_and_null_keys_insert(spark, tmp_path):
@@ -2357,7 +1842,7 @@ def test_merge_empty_source_is_noop_and_null_keys_insert(spark, tmp_path):
 
     empty = spark.createDataFrame([], "id bigint, v string")
     assert st.snapshot_merge(empty, t, key="id") == 0  # parent, no commit
-    assert len(st.snapshot_versions(spark, t)) == 1
+    assert len(_manifests(t)) == 1
 
     nulls = spark.createDataFrame([(None, "n1"), (None, "n2")], "id bigint, v string")
     v1 = st.snapshot_merge(nulls, t, key="id", stats_cols=["id"])
@@ -2375,7 +1860,6 @@ def test_merge_null_keys_shares_shards_untouched(spark, tmp_path, small_shards):
     """Sharded twin of the null-key insert: every parent shard rides
     by ref — none loaded, none rewritten (round-10 advice flagged that
     this case loaded ALL shards and scanned the whole key column)."""
-    import json
 
     from etfconstituentextractor_spark.sources import snapshot_table as st
 
@@ -2393,35 +1877,6 @@ def test_merge_null_keys_shares_shards_untouched(spark, tmp_path, small_shards):
     child_shards = {s["path"] for s in m1.get("shards", [])}
     assert parent_shards <= child_shards or "files" in m1
     assert st.snapshot_read(spark, t).count() == 41
-
-
-def test_snapshot_view_reaches_sql(spark, tmp_path):
-    """snapshot_view registers a pruned, versioned read as a temp view:
-    plain spark.sql() reaches time travel, where-pruning, and DV
-    masking without touching the Python reader API."""
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    st.snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(8)]), t,
-                       stats_cols=["id"])
-    st.snapshot_delete(spark, t, where=("id", "=", 7))  # v1, DV-masked
-    st.snapshot_commit(_df(spark, [(100, "new")]), t, mode="append")  # v2
-
-    st.snapshot_view(spark, t, "tbl_latest")
-    st.snapshot_view(spark, t, "tbl_v0", version=0)
-    st.snapshot_view(spark, t, "tbl_big", where=("id", ">=", 4))
-
-    assert spark.sql("SELECT count(*) c FROM tbl_latest").first().c == 8
-    assert spark.sql("SELECT max(id) m FROM tbl_v0").first().m == 7  # pre-delete
-    got = sorted(r.id for r in spark.sql(
-        "SELECT id FROM tbl_big WHERE v <> 'nope'"
-    ).collect())
-    assert got == [4, 5, 6, 100]  # 7 masked by DV, <4 pruned by the view
-    # the view pinned its snapshot: a later commit doesn't leak in
-    st.snapshot_commit(_df(spark, [(200, "later")]), t, mode="append")
-    assert spark.sql("SELECT count(*) c FROM tbl_latest").first().c == 8
-    for nm in ("tbl_latest", "tbl_v0", "tbl_big"):
-        spark.catalog.dropTempView(nm)
 
 
 # ---------------------------------------------------------------------------
@@ -2490,7 +1945,6 @@ def test_schema_carries_through_merge_delete_restore(spark, tmp_path):
 
 
 def test_legacy_manifest_without_schema_still_reads(spark, tmp_path):
-    import json
 
     t = str(tmp_path / "tbl")
     snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
@@ -2511,7 +1965,7 @@ def test_legacy_manifest_without_schema_still_reads(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# keyed deletes + exactly-once CDC replication (round 11)
+# keyed deletes (round 11)
 # ---------------------------------------------------------------------------
 def _rows(spark, t, version=None):
     return sorted(
@@ -2532,7 +1986,6 @@ def test_keyed_delete_removes_exactly_the_key_frame(spark, tmp_path):
     v = snapshot_delete(spark, t, keys=("id", kf))
     assert [i for i, _ in _rows(spark, t, v)] == [0, 1, 2, 4, 5, 6, 8, 9]
     # merge-on-read: the file list is unchanged (DV, not rewrite)
-    import json
 
     with open(os.path.join(t, "_manifests", f"v{v:08d}.json")) as fh:
         m = json.load(fh)
@@ -2564,104 +2017,6 @@ def test_keyed_delete_requires_exactly_one_selector(spark, tmp_path):
         )
 
 
-def _build_src(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-        snapshot_delete,
-        snapshot_merge,
-    )
-
-    src = str(tmp_path / "src")
-    snapshot_commit(
-        _df(spark, [(i, f"r{i}") for i in range(12)]), src, mode="overwrite",
-        stats_cols=["id"],
-    )
-    snapshot_commit(_df(spark, [(20, "x"), (21, "y")]), src, mode="append")
-    snapshot_merge(_df(spark, [(3, "rev3"), (30, "new30")]), src, key="id")
-    snapshot_delete(spark, src, where=("id", "<", 2))
-    snapshot_compact(spark, src, small_bytes=1 << 30)  # pure churn: empty feed
-    return src
-
-
-def test_replicate_reaches_source_head_and_is_idempotent(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_replicate,
-        snapshot_versions,
-    )
-
-    src = _build_src(spark, tmp_path)
-    dst = str(tmp_path / "dst")
-    head = snapshot_replicate(spark, src, dst, key="id")
-    assert head == snapshot_versions(spark, src)[-1]["version"]
-    assert _rows(spark, dst) == _rows(spark, src)
-    # idempotent: a second run applies nothing
-    n_dst = len(snapshot_versions(spark, dst))
-    assert snapshot_replicate(spark, src, dst, key="id") == head
-    assert len(snapshot_versions(spark, dst)) == n_dst
-
-
-def test_replicate_catches_up_incrementally(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_delete,
-        snapshot_merge,
-        snapshot_replicate,
-    )
-
-    src = _build_src(spark, tmp_path)
-    dst = str(tmp_path / "dst")
-    snapshot_replicate(spark, src, dst, key="id")
-    # more source history after the first catch-up
-    snapshot_merge(_df(spark, [(21, "y2"), (40, "new40")]), src, key="id")
-    snapshot_delete(spark, src, where=("id", "=", 20))
-    snapshot_replicate(spark, src, dst, key="id")
-    assert _rows(spark, dst) == _rows(spark, src)
-
-
-def test_replicate_resumes_after_mid_version_crash(spark, tmp_path, monkeypatch):
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src = _build_src(spark, tmp_path)
-    dst = str(tmp_path / "dst")
-    # crash INSIDE applying a version: let the merge land, then fail
-    # the keyed delete of the delete-bearing version (v3)
-    real_delete = st.snapshot_delete
-    calls = {"n": 0}
-
-    def failing_delete(spark_, path, where=None, retries=0, keys=None, txn=None):
-        if keys is not None and calls["n"] == 0:
-            calls["n"] += 1
-            raise RuntimeError("injected crash between merge and delete")
-        return real_delete(spark_, path, where=where, retries=retries,
-                           keys=keys, txn=txn)
-
-    monkeypatch.setattr(st, "snapshot_delete", failing_delete)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        st.snapshot_replicate(spark, src, dst, key="id")
-    # resume: the half-applied version re-applies (merge is
-    # value-idempotent), the delete lands, replication completes
-    head = st.snapshot_replicate(spark, src, dst, key="id")
-    assert _rows(spark, dst) == _rows(spark, src)
-    assert head == st.snapshot_versions(spark, src)[-1]["version"]
-
-
-def test_replicate_raises_when_source_vacuumed_past_watermark(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-        snapshot_replicate,
-        snapshot_vacuum,
-    )
-
-    src = _build_src(spark, tmp_path)
-    dst = str(tmp_path / "dst")
-    snapshot_replicate(spark, src, dst, key="id")
-    snapshot_merge(_df(spark, [(50, "new50")]), src, key="id")
-    snapshot_merge(_df(spark, [(51, "new51")]), src, key="id")
-    # expire everything but the head: the applied-through version is gone
-    snapshot_vacuum(spark, src, keep_last=1)
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        snapshot_replicate(spark, src, dst, key="id")
-
-
 def test_keyed_delete_all_null_key_frame_is_noop(spark, tmp_path):
     """Round-11 review: NULL keys match nothing (SQL equality) — an
     all-NULL key frame must no-op, not send None bounds into the
@@ -2673,26 +2028,6 @@ def test_keyed_delete_all_null_key_frame_is_noop(spark, tmp_path):
     kf = spark.createDataFrame([(None,)], "id bigint")
     v = snapshot_delete(spark, t, keys=("id", kf))
     assert _rows(spark, t, v) == [(1, "a"), (2, "b")]
-
-
-def test_replicate_tolerates_null_key_rows(spark, tmp_path):
-    """Round-11 review: a NULL-key source row surfaces as a phantom
-    inserted+deleted pair in every version's diff (the keyed join
-    can never match it) — replication must filter it, not churn
-    all-NULL junk into dst or crash the keyed delete."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-        snapshot_replicate,
-    )
-
-    src = str(tmp_path / "src")
-    snapshot_commit(
-        _df(spark, [(1, "a"), (2, "b"), (None, "nullkey")]), src, mode="overwrite"
-    )
-    snapshot_merge(_df(spark, [(3, "c")]), src, key="id")
-    dst = str(tmp_path / "dst")
-    snapshot_replicate(spark, src, dst, key="id")
-    assert _rows(spark, dst) == _rows(spark, src)
 
 
 def test_merge_source_null_fills_missing_recorded_columns(spark, tmp_path):
@@ -2712,24 +2047,6 @@ def test_merge_source_null_fills_missing_recorded_columns(spark, tmp_path):
         snapshot_merge(bad, t, key="id")
 
 
-def test_snapshot_changes_view_reaches_sql(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_changes_view,
-        snapshot_merge,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
-    snapshot_merge(_df(spark, [(1, "a2"), (3, "c")]), t, key="id")
-    snapshot_changes_view(spark, t, "chg", 0, 1, keys=["id"])
-    got = {
-        (r["id"], r["change"])
-        for r in spark.sql("SELECT id, change FROM chg").collect()
-    }
-    assert got == {(1, "updated"), (3, "inserted")}
-    spark.catalog.dropTempView("chg")
-
-
 def test_merge_source_missing_key_raises(spark, tmp_path):
     """Round-11 second review: alignment must never null-fill the
     MERGE KEY — a source without it would upsert NULL-key junk."""
@@ -2747,7 +2064,6 @@ def test_keyed_delete_consults_blooms(spark, tmp_path):
     ~only the files that genuinely hold its keys — checked through
     the DV coverage map (only the hit file gains coverage), since
     stats on a wide-range column cannot prune the others."""
-    import json
 
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
 
@@ -2784,221 +2100,6 @@ def test_keyed_delete_consults_blooms(spark, tmp_path):
     assert refined == [covered_rel]
 
 
-def test_stream_ingest_then_replicate_composes(spark, tmp_path):
-    """Round 11 end-to-end composition: a REAL stream drains into a
-    snapshot table via exactly-once ingest, replication mirrors it,
-    more micro-batches arrive, replication catches up — the full
-    ingest -> lakehouse -> CDC-mirror pipeline from already-pinned
-    pieces."""
-    import glob
-    import os
-    import shutil
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_replicate,
-        snapshot_stream_ingest,
-    )
-
-    src_files = str(tmp_path / "srcfiles")
-    t = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    dst = str(tmp_path / "mirror")
-    os.makedirs(src_files, exist_ok=True)
-
-    def stage(i):
-        spark.range(i * 10, i * 10 + 10).selectExpr(
-            "id", "CAST(id AS STRING) AS v"
-        ).coalesce(1).write.parquet(f"{src_files}/part{i}")
-        (p,) = glob.glob(f"{src_files}/part{i}/part-*.parquet")
-        d = f"{src_files}/chunk_{i}.parquet"
-        shutil.move(p, d)
-        os.utime(d, (1_600_000_000 + 10 * i,) * 2)
-
-    def drain():
-        q = (
-            spark.readStream.schema("id bigint, v string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_files)
-            .writeStream.foreachBatch(
-                snapshot_stream_ingest(t, "ing", stats_cols=["id"])
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    for i in range(2):
-        stage(i)
-    drain()
-    snapshot_replicate(spark, t, dst, key="id")
-    assert _rows(spark, dst) == _rows(spark, t)
-    # more arrivals, another drain, replication catches up
-    stage(2)
-    drain()
-    snapshot_replicate(spark, t, dst, key="id")
-    assert _rows(spark, dst) == _rows(spark, t)
-    assert sorted(i for i, _ in _rows(spark, dst)) == list(range(30))
-
-
-def test_replicate_stale_merge_replay_noops(spark, tmp_path):
-    """Round-11 third review: a stalled replicate run waking after a
-    faster run advanced the watermark must NOT replay its stale merge
-    — both halves of a version's apply are sub-sequence-stamped, so
-    the in-commit replay check swallows the zombie."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-        snapshot_replicate,
-    )
-
-    src = _build_src(spark, tmp_path)
-    dst = str(tmp_path / "dst")
-    snapshot_replicate(spark, src, dst, key="id")
-    before = _rows(spark, dst)
-    n_versions = len(
-        __import__(
-            "etfconstituentextractor_spark.sources.snapshot_table",
-            fromlist=["snapshot_versions"],
-        ).snapshot_versions(spark, dst)
-    )
-    # the zombie: an old version's merge half (seq = 2*v for v=3,
-    # long since passed) re-delivered with stale values
-    stale = _df(spark, [(3, "STALE")])
-    wid = "replicate:id"
-    snapshot_merge(stale, dst, key="id", txn=(wid, 2 * 3))
-    assert _rows(spark, dst) == before, "stale merge replay mutated the replica"
-    got_versions = __import__(
-        "etfconstituentextractor_spark.sources.snapshot_table",
-        fromlist=["snapshot_versions"],
-    ).snapshot_versions(spark, dst)
-    assert len(got_versions) == n_versions
-
-
-def test_replicate_partitioned_source_carries_spec_and_empty_feeds(spark, tmp_path):
-    """Round-11 third review: bootstrap inherits the source's
-    partition spec, and an empty feed (compaction churn) stamps via a
-    metadata-only keyed delete that a partitioned destination accepts
-    (a bare zero-row append tripped the partition-spec check and
-    wedged replication forever)."""
-    import json
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_compact,
-        snapshot_merge,
-        snapshot_replicate,
-    )
-
-    src = str(tmp_path / "psrc")
-    rows = [(i, f"r{i}", ["a", "b"][i % 2]) for i in range(12)]
-    snapshot_commit(
-        spark.createDataFrame(rows, "id bigint, v string, part string"),
-        src,
-        mode="overwrite",
-        partition_by=["part"],
-        stats_cols=["id"],
-    )
-    snapshot_merge(
-        spark.createDataFrame([(1, "upd", "b")], "id bigint, v string, part string"),
-        src,
-        key="id",
-    )
-    snapshot_compact(spark, src, small_bytes=1 << 30)  # pure churn
-    dst = str(tmp_path / "pdst")
-    snapshot_replicate(spark, src, dst, key="id")
-
-    def rows_of(t):
-        return sorted(
-            (r["id"], r["v"], r["part"])
-            for r in snapshot_read(spark, t).collect()
-        )
-
-    assert rows_of(dst) == rows_of(src)
-    with open(os.path.join(dst, "_manifests", "v00000000.json")) as fh:
-        assert json.load(fh)["partition_by"] == ["part"]
-    # idempotent second run (the empty-feed stamp advanced the
-    # watermark past the compact version)
-    n = len(
-        __import__(
-            "etfconstituentextractor_spark.sources.snapshot_table",
-            fromlist=["snapshot_versions"],
-        ).snapshot_versions(spark, dst)
-    )
-    snapshot_replicate(spark, src, dst, key="id")
-    assert (
-        len(
-            __import__(
-                "etfconstituentextractor_spark.sources.snapshot_table",
-                fromlist=["snapshot_versions"],
-            ).snapshot_versions(spark, dst)
-        )
-        == n
-    )
-
-
-def test_replicate_carries_schema_evolution(spark, tmp_path):
-    """Round 11: a source whose schema evolved mid-history replicates
-    — the destination evolves via a zero-row append before the
-    version's upserts align, and old rows null-fill the new column on
-    both sides."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-        snapshot_replicate,
-    )
-
-    src = str(tmp_path / "src")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), src, mode="overwrite")
-    dst = str(tmp_path / "dst")
-    snapshot_replicate(spark, src, dst, key="id")
-    # evolve src: append a wider frame, then merge touching the new col
-    wide = spark.createDataFrame(
-        [(3, "c", 7.5)], "id bigint, v string, score double"
-    )
-    snapshot_commit(wide, src, mode="append")
-    snapshot_merge(
-        spark.createDataFrame([(1, "a2", 1.25)], "id bigint, v string, score double"),
-        src,
-        key="id",
-    )
-    snapshot_replicate(spark, src, dst, key="id")
-    got = {
-        r["id"]: (r["v"], r["score"])
-        for r in snapshot_read(spark, dst).collect()
-    }
-    assert got == {1: ("a2", 1.25), 2: ("b", None), 3: ("c", 7.5)}
-    # idempotent: re-running adds no versions (the evolution step is
-    # guarded by the field diff)
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_versions,
-    )
-
-    n = len(snapshot_versions(spark, dst))
-    snapshot_replicate(spark, src, dst, key="id")
-    assert len(snapshot_versions(spark, dst)) == n
-
-
-def test_snapshot_history_describes_the_commit_chain(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_history,
-        snapshot_merge,
-        snapshot_restore,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    snapshot_commit(_df(spark, [(2, "b")]), t, mode="append", txn=("w", 5))
-    snapshot_merge(_df(spark, [(1, "a2")]), t, key="id")
-    rv = snapshot_restore(spark, t, 0)
-    h = {r["version"]: r for r in snapshot_history(spark, t).collect()}
-    assert [h[v]["op"] for v in sorted(h)] == [
-        "overwrite", "append", "merge", "restore",
-    ]
-    assert h[rv]["restored_from"] == 0
-    assert '"w": 5' in h[1]["txn"]
-    # committed_at is monotone (the max-adjust rule)
-    ts = [h[v]["committed_at"] for v in sorted(h)]
-    assert ts == sorted(ts)
-
-
 def test_merge_source_type_drift_raises_before_write(spark, tmp_path):
     """Round-12 advice: name-only alignment let a drifted-type source
     column publish files that poison every recorded-schema read. An
@@ -3010,7 +2111,7 @@ def test_merge_source_type_drift_raises_before_write(spark, tmp_path):
     drifted = spark.createDataFrame([(1, 42)], "id bigint, v int")  # v: string->int
     with pytest.raises(ValueError, match="recorded"):
         snapshot_merge(drifted, t, key="id")
-    assert [v["version"] for v in snapshot_versions(spark, t)] == [0]  # nothing published
+    assert [v["version"] for v in _manifests(t)] == [0]  # nothing published
     # the table still reads clean under its recorded schema
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1, 2]
 
@@ -3096,7 +2197,6 @@ def test_merge_more_nullable_source_widens_recorded_schema(spark, tmp_path):
     the less-nullable direction still passes through with the recorded
     schema untouched."""
     import json as _json
-    import os
 
     from pyspark.sql.types import (
         ArrayType,
@@ -3212,787 +2312,3 @@ def test_merge_table_second_call_is_a_hit(spark, sf_dir, tmp_path, monkeypatch):
     assert lr._merge_table(spark, sf_dir) == table
     assert sorted(os.listdir(os.path.join(table, "_manifests"))) == manifests
 
-
-# ---------------------------------------------------------------- round 12:
-# the CDC tailing service (snapshot_tail) and multi-writer fan-in
-# (snapshot_claim_range + snapshot_replicate(key_range=...))
-
-
-def test_tail_mirrors_batches_as_they_drain(spark, tmp_path):
-    """The service loop: batches drain into src BETWEEN polls (via the
-    injectable sleep), the tailer converges to each new head, then
-    stops after the configured consecutive idle polls."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), src, mode="overwrite")
-    pending = [
-        lambda: snapshot_commit(_df(spark, [(3, "c")]), src, mode="append"),
-        lambda: st.snapshot_merge(_df(spark, [(1, "a2"), (4, "d")]), src, key="id"),
-        lambda: st.snapshot_delete(spark, src, where=("id", "=", 2)),
-    ]
-    delays = []
-
-    def drain(sec):
-        delays.append(sec)
-        if pending:
-            pending.pop(0)()
-
-    head = st.snapshot_tail(
-        spark, src, dst, key="id",
-        poll_sec=1.0, backoff=2.0, max_poll_sec=8.0,
-        stop_after_idle=3, sleep=drain,
-    )
-    assert not pending  # every batch was produced and consumed
-    assert head == st.snapshot_versions(spark, src)[-1]["version"]
-    assert _rows(spark, dst) == _rows(spark, src)
-    # backoff engaged on the idle tail: delays grow once src is quiet
-    assert delays[-1] > delays[0]
-
-
-def test_service_converges_live_source_while_compacting(spark, tmp_path):
-    """Round 13 (verdict ask #4): the COMBINED loop — snapshot_tail's
-    replication half and snapshot_maintain's health half on one shared
-    cadence. A live source drains between polls; the destination both
-    converges AND gets compacted mid-service; once everything is
-    quiet, further polls commit NO versions on either half (a service
-    must not create the history pressure its vacuum half relieves)."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), src, mode="overwrite")
-    pending = [
-        lambda: snapshot_commit(_df(spark, [(3, "c")]), src, mode="append"),
-        lambda: snapshot_commit(_df(spark, [(4, "d")]), src, mode="append"),
-        lambda: st.snapshot_merge(_df(spark, [(1, "a2"), (5, "e")]), src, key="id"),
-    ]
-
-    def drain(sec):
-        if pending:
-            pending.pop(0)()
-
-    res = st.snapshot_service(
-        spark, src, dst, key="id",
-        poll_sec=1.0, stop_after_idle=3, sleep=drain,
-        maintain_every=1,
-        small_bytes=1 << 30,  # everything is "small" at test scale
-        min_small_files=3,
-        keep_last=100,  # exercises the vacuum path as a no-op sweep
-    )
-    assert not pending
-    assert res["applied"] == st.snapshot_versions(spark, src)[-1]["version"]
-    assert _rows(spark, dst) == _rows(spark, src)
-    # the maintenance half fired and actually compacted at least once
-    assert any(m["compacted"] is not None for m in res["maintained"])
-    assert all(m["vacuum"] is not None for m in res["maintained"])
-    # QUIET service pass: source unchanged, table healthy → no version
-    # churn on either table, and the maintenance half reports no-ops
-    src_head = st.snapshot_versions(spark, src)[-1]["version"]
-    dst_head = st.snapshot_versions(spark, dst)[-1]["version"]
-    res2 = st.snapshot_service(
-        spark, src, dst, key="id",
-        poll_sec=1.0, stop_after_idle=2, sleep=lambda s: None,
-        maintain_every=1, small_bytes=1 << 30, min_small_files=3,
-        keep_last=100,
-    )
-    assert st.snapshot_versions(spark, src)[-1]["version"] == src_head
-    assert st.snapshot_versions(spark, dst)[-1]["version"] == dst_head
-    assert all(m["compacted"] is None for m in res2["maintained"])
-    assert _rows(spark, dst) == _rows(spark, src)
-
-
-def test_service_maintain_every_n_is_a_harmonic_of_the_poll(spark, tmp_path):
-    """maintain_every=N runs the health half on every Nth poll only —
-    freshness can tick faster than compaction without two schedulers."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(1, "a")]), src, mode="overwrite")
-    res = st.snapshot_service(
-        spark, src, dst, key="id",
-        poll_sec=1.0, stop_after_idle=4, sleep=lambda s: None,
-        maintain_every=2, min_small_files=10_000,
-    )
-    # polls 2 and 4 maintained; 1, 3 (and the final idle ones) did not
-    assert len(res["maintained"]) == res["polls"] // 2
-    # the duration trail (backpressure signal): one entry per cycle,
-    # maintain_sec only on maintaining cycles
-    assert len(res["cycle_secs"]) == res["polls"]
-    assert [m is not None for _, m in res["cycle_secs"]] == [
-        (i + 1) % 2 == 0 for i in range(res["polls"])
-    ]
-    assert all(a >= 0 for a, _ in res["cycle_secs"])
-    with pytest.raises(ValueError, match="maintain_every"):
-        st.snapshot_service(spark, src, dst, key="id", maintain_every=0)
-
-
-def test_service_first_poll_race_skips_maintenance_until_born(
-    spark, tmp_path, monkeypatch
-):
-    """Round-14 advice: snapshot_service only caught
-    ConcurrentCommitError — when the very FIRST replicate poll lost
-    its race (dst possibly not yet created), the same cycle's
-    snapshot_maintain raised FileNotFoundError and crashed the whole
-    service loop. Maintenance now waits until replication has applied
-    at least one version (before that there is nothing to compact or
-    vacuum anyway); the cycle trail records the skipped half."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), src, mode="overwrite")
-    real = st.snapshot_replicate
-    calls = {"n": 0}
-
-    def racy(spark_, s, d, k, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise st.ConcurrentCommitError("lost the very first race")
-        return real(spark_, s, d, k, **kw)
-
-    monkeypatch.setattr(st, "snapshot_replicate", racy)
-    res = st.snapshot_service(
-        spark, src, dst, key="id",
-        poll_sec=1.0, stop_after_idle=2, sleep=lambda s: None,
-        maintain_every=1, min_small_files=10_000,
-    )
-    assert res["applied"] == st.snapshot_versions(spark, src)[-1]["version"]
-    assert _rows(spark, dst) == _rows(spark, src)
-    # cycle 1: replicate lost its race AND maintenance was skipped
-    # (maintain_sec None despite maintain_every=1); cycle 2 onward
-    # maintains normally
-    assert res["cycle_secs"][0][1] is None
-    assert res["cycle_secs"][1][1] is not None
-
-
-def test_service_converges_under_concurrent_foreign_writer(spark, tmp_path):
-    """Round-14 verdict ask #5: the combined service loop against a
-    CONCURRENT foreign writer committing into dst mid-maintenance —
-    the two-tailer race test predates snapshot_service. A second
-    thread runs four claim -> merge -> release cycles on its own key
-    range of dst while the service replicates src (a disjoint range)
-    and maintains on every poll. Both must converge: every foreign
-    row lands, the replica matches src, lost races surface as
-    ConcurrentCommitError and retry, and once everything is quiet a
-    follow-up service pass commits NO versions on either table."""
-    import threading
-    import time as _t
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    snapshot_commit(
-        _df(spark, [(i, f"v{i}") for i in range(6)]), src, mode="overwrite"
-    )
-    pending = [
-        lambda: snapshot_commit(_df(spark, [(6, "c6")]), src, mode="append"),
-        lambda: st.snapshot_merge(_df(spark, [(1, "rev1"), (7, "c7")]), src, key="id"),
-        lambda: st.snapshot_delete(spark, src, where=("id", "=", 2)),
-    ]
-    errs: list = []
-    foreign_done = threading.Event()
-
-    def foreign():
-        # four full ownership lifecycles on [1000, 2000) — claims,
-        # merges a batch, releases — racing the service's merges,
-        # compactions and its own claim commits on the same table
-        try:
-            for cycle in range(4):
-                deadline = _t.monotonic() + 60
-                for step in ("claim", "merge", "release"):
-                    while True:
-                        try:
-                            if step == "claim":
-                                st.snapshot_claim_range(
-                                    spark, dst, "foreign", "id", 1000, 2000
-                                )
-                            elif step == "merge":
-                                st.snapshot_merge(
-                                    _df(spark, [(1000 + cycle, f"f{cycle}")]),
-                                    dst,
-                                    key="id",
-                                )
-                            else:
-                                st.snapshot_release_range(spark, dst, "foreign")
-                            break
-                        except (ConcurrentCommitError, FileNotFoundError):
-                            # lost a race to the service (or dst not
-                            # born yet) — retry the same step
-                            if _t.monotonic() > deadline:
-                                raise
-                            _t.sleep(0.2)
-        except Exception as e:  # surface thread failures to the test
-            errs.append(e)
-        finally:
-            foreign_done.set()
-
-    def drain(sec):
-        if pending:
-            pending.pop(0)()
-
-    th = threading.Thread(target=foreign)
-    th.start()
-    try:
-        # the service owns (None, 1000) — disjoint from the foreign
-        # writer's claim, so fan-in stays conflict-free by contract
-        res = st.snapshot_service(
-            spark, src, dst, key="id",
-            writer_id="svc", key_range=(None, 1000),
-            poll_sec=1.0, stop_after_idle=3, sleep=drain,
-            maintain_every=1, small_bytes=1 << 30, min_small_files=3,
-            keep_last=100,
-        )
-        # keep servicing until the foreign writer finishes its four
-        # cycles, so convergence is judged on the FINAL state
-        deadline = _t.monotonic() + 240
-        while not foreign_done.is_set() and _t.monotonic() < deadline:
-            res = st.snapshot_service(
-                spark, src, dst, key="id",
-                writer_id="svc", key_range=(None, 1000),
-                poll_sec=1.0, stop_after_idle=2, sleep=lambda s: None,
-                maintain_every=1, small_bytes=1 << 30, min_small_files=3,
-                keep_last=100,
-            )
-    finally:
-        th.join(300)
-    assert not errs, errs
-    assert not pending
-    assert res["applied"] == st.snapshot_versions(spark, src)[-1]["version"]
-    # final state: the service's range mirrors src, the foreign range
-    # holds all four foreign rows — neither writer clobbered the other
-    got = {r["id"]: r["v"] for r in snapshot_read(spark, dst).collect()}
-    want = {r["id"]: r["v"] for r in snapshot_read(spark, src).collect()}
-    want.update({1000 + c: f"f{c}" for c in range(4)})
-    assert got == want
-    # quiet follow-up pass: no version churn on either table
-    src_head = st.snapshot_versions(spark, src)[-1]["version"]
-    dst_head = st.snapshot_versions(spark, dst)[-1]["version"]
-    st.snapshot_service(
-        spark, src, dst, key="id",
-        writer_id="svc", key_range=(None, 1000),
-        poll_sec=1.0, stop_after_idle=2, sleep=lambda s: None,
-        maintain_every=1, small_bytes=1 << 30, min_small_files=3,
-        keep_last=100,
-    )
-    assert st.snapshot_versions(spark, src)[-1]["version"] == src_head
-    assert st.snapshot_versions(spark, dst)[-1]["version"] == dst_head
-
-
-def test_tail_killed_mid_version_restarts_and_converges(spark, tmp_path, monkeypatch):
-    """Kill the tailer INSIDE a version (after the merge half, before
-    the delete half), restart it, and it converges — the
-    sub-sequenced watermark resumes inside the half-applied version."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src = _build_src(spark, tmp_path)  # v3 carries deletes
-    dst = str(tmp_path / "dst")
-    real_delete = st.snapshot_delete
-    calls = {"n": 0}
-
-    def failing_delete(spark_, path, where=None, retries=0, keys=None, txn=None):
-        if keys is not None and calls["n"] == 0:
-            calls["n"] += 1
-            raise RuntimeError("injected kill between merge and delete")
-        return real_delete(spark_, path, where=where, retries=retries,
-                           keys=keys, txn=txn)
-
-    monkeypatch.setattr(st, "snapshot_delete", failing_delete)
-    with pytest.raises(RuntimeError, match="injected kill"):
-        st.snapshot_tail(spark, src, dst, key="id", stop_after_idle=2,
-                         sleep=lambda s: None)
-    # restart the service: it resumes inside the wounded version
-    head = st.snapshot_tail(spark, src, dst, key="id", stop_after_idle=2,
-                            sleep=lambda s: None)
-    assert _rows(spark, dst) == _rows(spark, src)
-    assert head == st.snapshot_versions(spark, src)[-1]["version"]
-
-
-def test_fanin_two_sources_one_destination_converges(spark, tmp_path):
-    """Two sources mirror into ONE destination under disjoint key
-    ranges: each writer's rows land, neither disturbs the other's,
-    and re-running either writer is a no-op."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    a, b, dst = (str(tmp_path / n) for n in ("a", "b", "dst"))
-    snapshot_commit(_df(spark, [(1, "a1"), (2, "a2")]), a, mode="overwrite")
-    st.snapshot_merge(_df(spark, [(1, "a1rev"), (5, "a5")]), a, key="id")
-    snapshot_commit(_df(spark, [(10, "b10"), (11, "b11")]), b, mode="overwrite")
-    st.snapshot_delete(spark, b, where=("id", "=", 11))
-
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    st.snapshot_replicate(spark, b, dst, key="id", key_range=(10, None))
-    got = {r["id"]: r["v"] for r in snapshot_read(spark, dst).collect()}
-    assert got == {1: "a1rev", 2: "a2", 5: "a5", 10: "b10"}
-    # more churn on each side, re-tail: still converged, still disjoint
-    st.snapshot_merge(_df(spark, [(2, "a2rev")]), a, key="id")
-    st.snapshot_merge(_df(spark, [(12, "b12")]), b, key="id")
-    st.snapshot_replicate(spark, b, dst, key="id", key_range=(10, None))
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    got = {r["id"]: r["v"] for r in snapshot_read(spark, dst).collect()}
-    assert got == {1: "a1rev", 2: "a2rev", 5: "a5", 10: "b10", 12: "b12"}
-
-
-def test_fanin_overlapping_claim_raises(spark, tmp_path):
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    a, b, dst = (str(tmp_path / n) for n in ("a", "b", "dst"))
-    snapshot_commit(_df(spark, [(1, "a1")]), a, mode="overwrite")
-    snapshot_commit(_df(spark, [(8, "b8")]), b, mode="overwrite")
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    with pytest.raises(ValueError, match="overlaps"):
-        st.snapshot_replicate(spark, b, dst, key="id", key_range=(5, 20))
-    # the conflicting writer wrote NOTHING
-    got = {r["id"] for r in snapshot_read(spark, dst).collect()}
-    assert got == {1}
-    # a disjoint claim from the same source then succeeds
-    st.snapshot_replicate(spark, b, dst, key="id", key_range=(10, 20))
-
-
-def test_fanin_filters_out_of_range_rows(spark, tmp_path):
-    """A source whose keys stray outside its writer's owned interval
-    must not leak them into dst — neither at bootstrap nor in later
-    change feeds."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    a, dst = str(tmp_path / "a"), str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(1, "in"), (99, "out")]), a, mode="overwrite")
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    assert {r["id"] for r in snapshot_read(spark, dst).collect()} == {1}
-    st.snapshot_merge(_df(spark, [(2, "in2"), (98, "out2")]), a, key="id")
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    assert {r["id"] for r in snapshot_read(spark, dst).collect()} == {1, 2}
-
-
-def test_claim_is_idempotent_and_moves_raise(spark, tmp_path):
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    v1 = st.snapshot_claim_range(spark, t, "w1", "id", 0, 10)
-    # identical re-claim: no new commit
-    assert st.snapshot_claim_range(spark, t, "w1", "id", 0, 10) == v1
-    assert [x["version"] for x in st.snapshot_versions(spark, t)][-1] == v1
-    with pytest.raises(ValueError, match="move ownership"):
-        st.snapshot_claim_range(spark, t, "w1", "id", 0, 20)
-    with pytest.raises(ValueError, match="share one"):
-        st.snapshot_claim_range(spark, t, "w2", "other_col", 50, 60)
-    # claims survive unrelated commits (the owners map rides _set_txn)
-    snapshot_commit(_df(spark, [(2, "b")]), t, mode="append")
-    with pytest.raises(ValueError, match="overlaps"):
-        st.snapshot_claim_range(spark, t, "w3", "id", 5, 7)
-
-
-def test_second_writer_claim_survives_owner_carry(spark, tmp_path):
-    """Round-13 regression: _set_txn's 'pure carry' of the parent's
-    owners map used to OVERWRITE the claim commit's own freshly-added
-    entry — after two claims only w1 was recorded, so w2's interval
-    had no overlap protection and every w2 re-claim churned a fresh
-    version. Both claims must be registered, both must defend their
-    interval, and re-claims must be pure reads."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    st.snapshot_claim_range(spark, t, "w1", "id", 0, 100)
-    v2 = st.snapshot_claim_range(spark, t, "w2", "id", 100, 200)
-    fs, _, jvm = st._fs_path(spark, t)
-    m = st._read_manifest(fs, jvm, t, v2)
-    assert sorted(m["owners"]) == ["w1", "w2"]
-    # w2's re-claim is a no-op read, not a new version
-    assert st.snapshot_claim_range(spark, t, "w2", "id", 100, 200) == v2
-    assert [x["version"] for x in st.snapshot_versions(spark, t)][-1] == v2
-    # BOTH intervals defend: overlap with w2's range raises too
-    with pytest.raises(ValueError, match="overlaps"):
-        st.snapshot_claim_range(spark, t, "w3", "id", 150, 250)
-    # and both ride ordinary commits (the carry path, parent-owners)
-    snapshot_commit(_df(spark, [(2, "b")]), t, mode="append")
-    head = [x["version"] for x in st.snapshot_versions(spark, t)][-1]
-    assert sorted(st._read_manifest(fs, jvm, t, head)["owners"]) == ["w1", "w2"]
-
-
-def test_release_range_enables_ownership_move(spark, tmp_path):
-    """Round-13 advice: claim_range's move error says 'release/re-key
-    explicitly' — snapshot_release_range is that API. Release drops
-    the entry as a metadata-only 'release' commit, is idempotent
-    (re-release = pure read), frees the interval for other writers,
-    lets the released writer claim a NEW interval, and dropping the
-    LAST owner removes the owners map entirely (so unkeyed replicate
-    is legal again)."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    st.snapshot_claim_range(spark, t, "w1", "id", 0, 100)
-    st.snapshot_claim_range(spark, t, "w2", "id", 100, 200)
-    v = st.snapshot_release_range(spark, t, "w1")
-    fs, _, jvm = st._fs_path(spark, t)
-    m = st._read_manifest(fs, jvm, t, v)
-    assert m["op"] == "release" and sorted(m["owners"]) == ["w2"]
-    # idempotent: releasing again is a pure read, no version churn
-    assert st.snapshot_release_range(spark, t, "w1") == v
-    # the freed interval is claimable by someone else…
-    st.snapshot_claim_range(spark, t, "w3", "id", 0, 50)
-    # …and the released writer can move to a new interval
-    v2 = st.snapshot_claim_range(spark, t, "w1", "id", 300, 400)
-    assert sorted(st._read_manifest(fs, jvm, t, v2)["owners"]) == [
-        "w1", "w2", "w3",
-    ]
-    # releasing everyone drops the key — the table is unowned again
-    for wid in ("w1", "w2", "w3"):
-        last = st.snapshot_release_range(spark, t, wid)
-    assert "owners" not in st._read_manifest(fs, jvm, t, last)
-    # releasing on a table that never had claims: pure read
-    t2 = str(tmp_path / "tbl2")
-    snapshot_commit(_df(spark, [(1, "a")]), t2, mode="overwrite")
-    assert st.snapshot_release_range(spark, t2, "ghost") == 0
-
-
-def test_snapshot_insert_into_sql_lands_as_versioned_commit(spark, tmp_path):
-    """Round 12: the SQL WRITE surface — an INSERT-shaped SELECT (or a
-    view name) appends through the commit/txn path with schema
-    validation and the table's own partition spec."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        _df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite"
-    )
-    st.snapshot_view(spark, t, "cur")
-    # SELECT statement form
-    v = st.snapshot_insert_into(
-        spark, t, "SELECT id + 10 AS id, upper(v) AS v FROM cur"
-    )
-    assert v == 1
-    got = {r["id"]: r["v"] for r in snapshot_read(spark, t).collect()}
-    assert got == {1: "a", 2: "b", 11: "A", 12: "B"}
-    # view-name form
-    spark.createDataFrame([(30, "z")], "id bigint, v string").createOrReplaceTempView(
-        "stage_rows"
-    )
-    assert st.snapshot_insert_into(spark, t, "stage_rows") == 2
-    assert 30 in {r["id"] for r in snapshot_read(spark, t).collect()}
-    # schema validation: a same-name type change raises BEFORE write
-    spark.createDataFrame([(1, 5)], "id bigint, v int").createOrReplaceTempView(
-        "bad_rows"
-    )
-    with pytest.raises(ValueError, match="cannot change column"):
-        st.snapshot_insert_into(spark, t, "bad_rows")
-    assert [x["version"] for x in st.snapshot_versions(spark, t)][-1] == 2
-    # idempotent-writer watermark: a replayed batch no-ops
-    assert st.snapshot_insert_into(spark, t, "stage_rows", txn=("sqlw", 7)) == 3
-    assert st.snapshot_insert_into(spark, t, "stage_rows", txn=("sqlw", 7)) == 3
-    spark.catalog.dropTempView("cur")
-    spark.catalog.dropTempView("stage_rows")
-    spark.catalog.dropTempView("bad_rows")
-
-
-def test_snapshot_insert_into_partitioned_inherits_spec(spark, tmp_path):
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "ptbl")
-    snapshot_commit(
-        spark.createDataFrame([(1, "en"), (2, "de")], "id bigint, lang string"),
-        t,
-        mode="overwrite",
-        partition_by=["lang"],
-    )
-    spark.createDataFrame([(3, "fr")], "id bigint, lang string").createOrReplaceTempView(
-        "more_rows"
-    )
-    st.snapshot_insert_into(spark, t, "more_rows")  # no partition_by arg
-    df = snapshot_read(spark, t, where=("lang", "=", "fr"))
-    assert [r["id"] for r in df.collect()] == [3]
-    spark.catalog.dropTempView("more_rows")
-
-
-def test_snapshot_maintain_thresholds_and_composition(spark, tmp_path):
-    """Round 12: the policy pass — no-op below the small-file
-    threshold (no version churn), compacts past it, vacuums AFTER so
-    pre-compaction files age out under normal retention."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    for i in range(2, 6):
-        snapshot_commit(_df(spark, [(i, f"v{i}")]), t, mode="append")
-    head = st.snapshot_versions(spark, t)[-1]["version"]
-    # healthy-table pass: threshold not met -> NO new version
-    r = st.snapshot_maintain(spark, t, min_small_files=50)
-    assert r["compacted"] is None and r["small_files"] >= 5
-    assert st.snapshot_versions(spark, t)[-1]["version"] == head
-    # past the threshold: compacts, then vacuum prunes history
-    r = st.snapshot_maintain(spark, t, min_small_files=2, keep_last=2)
-    assert r["compacted"] == head + 1
-    assert r["vacuum"] is not None
-    live = [v["version"] for v in st.snapshot_versions(spark, t)]
-    assert live == [head, head + 1]
-    got = {(x.id, x.v) for x in snapshot_read(spark, t).collect()}
-    assert got == {(1, "a"), (2, "v2"), (3, "v3"), (4, "v4"), (5, "v5")}
-    # idempotent on a now-healthy table: one consolidated file
-    r2 = st.snapshot_maintain(spark, t, min_small_files=2, keep_last=2)
-    assert r2["compacted"] is None
-
-
-def test_unkeyed_replicate_refuses_owned_destination(spark, tmp_path):
-    """Round-12 self-review: an unkeyed replicate into a fan-in
-    destination would merge/delete across every owner's interval —
-    it must refuse loudly; empty claim intervals raise too."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    a, b, dst = (str(tmp_path / n) for n in ("a", "b", "dst"))
-    snapshot_commit(_df(spark, [(1, "a1")]), a, mode="overwrite")
-    snapshot_commit(_df(spark, [(10, "b10")]), b, mode="overwrite")
-    st.snapshot_replicate(spark, a, dst, key="id", key_range=(0, 10))
-    with pytest.raises(ValueError, match="registered range owners"):
-        st.snapshot_replicate(spark, b, dst, key="id")
-    with pytest.raises(ValueError, match="empty or inverted"):
-        st.snapshot_claim_range(spark, dst, "w9", "id", 20, 20)
-    with pytest.raises(ValueError, match="empty or inverted"):
-        st.snapshot_claim_range(spark, dst, "w9", "id", 30, 20)
-
-
-def test_concurrent_fanin_tailers_converge(spark, tmp_path):
-    """Round 12, the real-race test: two tailer threads fan two
-    sources into ONE destination concurrently, each draining fresh
-    batches into its source between polls. Their commits genuinely
-    race on dst's atomic manifest claim; losses surface as
-    ConcurrentCommitError, which the tail loop re-polls — both must
-    converge to their source heads with disjoint-range isolation."""
-    import threading
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    a, b, dst = (str(tmp_path / n) for n in ("a", "b", "dst"))
-    snapshot_commit(_df(spark, [(1, "a1"), (2, "a2")]), a, mode="overwrite")
-    snapshot_commit(_df(spark, [(101, "b1"), (102, "b2")]), b, mode="overwrite")
-    pend = {
-        a: [
-            lambda: st.snapshot_merge(_df(spark, [(1, "a1rev"), (5, "a5")]), a, key="id"),
-            lambda: st.snapshot_delete(spark, a, where=("id", "=", 2)),
-        ],
-        b: [
-            lambda: st.snapshot_merge(_df(spark, [(103, "b3")]), b, key="id"),
-            lambda: st.snapshot_delete(spark, b, where=("id", "=", 101)),
-        ],
-    }
-    results: dict[str, object] = {}
-
-    def tail(src, kr, name):
-        def drain(sec):
-            if pend[src]:
-                pend[src].pop(0)()
-
-        try:
-            results[name] = st.snapshot_tail(
-                spark, src, dst, key="id", key_range=kr,
-                stop_after_idle=3, sleep=drain,
-            )
-        except Exception as e:  # surface, don't deadlock the join
-            results[name] = e
-
-    t1 = threading.Thread(target=tail, args=(a, (None, 100), "a"))
-    t2 = threading.Thread(target=tail, args=(b, (100, None), "b"))
-    t1.start(); t2.start()
-    t1.join(300); t2.join(300)
-    assert not isinstance(results.get("a"), Exception), results["a"]
-    assert not isinstance(results.get("b"), Exception), results["b"]
-    assert not pend[a] and not pend[b]
-    assert results["a"] == st.snapshot_versions(spark, a)[-1]["version"]
-    assert results["b"] == st.snapshot_versions(spark, b)[-1]["version"]
-    got = {(r.id, r.v) for r in snapshot_read(spark, dst).collect()}
-    want = {(r.id, r.v) for r in snapshot_read(spark, a).collect()} | {
-        (r.id, r.v) for r in snapshot_read(spark, b).collect()
-    }
-    assert got == want
-
-
-def test_manifest_records_file_sizes_and_maintain_reads_them(spark, tmp_path):
-    """Round 12: every commit records each file's size as the
-    reserved '__bytes' stats entry (zero extra I/O — same listing
-    that discovers the files); maintain/compact read the recorded
-    sizes when the inventory is fully covered and fall back to one
-    listing sweep for legacy manifests."""
-    import json
-    import os
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
-    snapshot_commit(_df(spark, [(3, "c")]), t, mode="append")
-    fs, _, jvm = st._fs_path(spark, t)
-    m = st._read_manifest(fs, jvm, t, 1)
-    files, stats = st._resolve(fs, jvm, t, m)
-    for f in files:
-        b = stats[f]["__bytes"]
-        real = os.path.getsize(os.path.join(t, f))
-        assert b == [real, real], f
-    # recorded path: sizes resolve without touching the data tree
-    assert st._recorded_sizes(files, stats) == {
-        f: os.path.getsize(os.path.join(t, f)) for f in files
-    }
-    # maintain compacts from recorded sizes alone
-    r = st.snapshot_maintain(spark, t, min_small_files=2)
-    assert r["compacted"] == 2 and r["small_files"] == len(files)
-    # the compacted file records its size too (carry discipline holds)
-    m2 = st._read_manifest(fs, jvm, t, 2)
-    files2, stats2 = st._resolve(fs, jvm, t, m2)
-    assert st._recorded_sizes(files2, stats2) is not None
-    # LEGACY manifest (hand-stripped '__bytes'): falls back to the
-    # listing sweep and still classifies correctly
-    stripped = {
-        f: {c: b for c, b in stt.items() if c != "__bytes"}
-        for f, stt in stats2.items()
-    }
-    assert st._recorded_sizes(files2, stripped) is None
-    swept = st._swept_sizes(fs, jvm, t)
-    assert all(swept[f] == os.path.getsize(os.path.join(t, f)) for f in files2)
-    # '__bytes' never leaks into stats-column derivations: replicate
-    # bootstrap over this sized table must not try to aggregate it
-    dst = str(tmp_path / "dst")
-    st.snapshot_replicate(spark, t, dst, key="id")
-    got = {(r_.id, r_.v) for r_ in snapshot_read(spark, dst).collect()}
-    assert got == {(1, "a"), (2, "b"), (3, "c")}
-
-
-def test_snapshot_history_reports_total_bytes(spark, tmp_path):
-    """Round 12: history sums recorded sizes from root manifests
-    alone (shard refs carry a summed bytes field); growth across an
-    append is visible and matches the on-disk truth."""
-    import os
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(50)]), t, mode="overwrite")
-    snapshot_commit(_df(spark, [(100, "x")]), t, mode="append")
-    h = {r["version"]: r for r in st.snapshot_history(spark, t).collect()}
-    fs, _, jvm = st._fs_path(spark, t)
-    for v in (0, 1):
-        files, _ = st._resolve(fs, jvm, t, st._read_manifest(fs, jvm, t, v))
-        real = sum(os.path.getsize(os.path.join(t, f)) for f in files)
-        assert h[v]["total_bytes"] == real, v
-    assert h[1]["total_bytes"] > h[0]["total_bytes"]
-    # sharded inventory: force tiny shards, bytes still root-only
-    old = st._SHARD_FILES
-    st._SHARD_FILES = 2
-    try:
-        t2 = str(tmp_path / "sharded")
-        snapshot_commit(
-            _df(spark, [(i, f"v{i}") for i in range(30)]).repartition(5),
-            t2, mode="overwrite",
-        )
-        m = st._read_manifest(fs, jvm, t2, 0)
-        assert "shards" in m and all("bytes" in ref for ref in m["shards"])
-        h2 = st.snapshot_history(spark, t2).collect()[0]
-        files2, _ = st._resolve(fs, jvm, t2, m)
-        real2 = sum(os.path.getsize(os.path.join(t2, f)) for f in files2)
-        assert h2["total_bytes"] == real2
-    finally:
-        st._SHARD_FILES = old
-
-
-def test_maintain_races_tailer_and_both_converge(spark, tmp_path):
-    """Round 12 cross-feature: a maintenance pass compacts the
-    destination WHILE a tailer applies changes — compaction is just
-    another commit, so the interleaving must converge (losses surface
-    as ConcurrentCommitError; the tail loop re-polls, maintain's next
-    scheduled pass re-evaluates)."""
-    import threading
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(8)]), src, mode="overwrite")
-    pend = [
-        lambda: st.snapshot_merge(_df(spark, [(2, "rev2"), (20, "new")]), src, key="id"),
-        lambda: st.snapshot_delete(spark, src, where=("id", "=", 3)),
-        lambda: st.snapshot_merge(_df(spark, [(21, "new21")]), src, key="id"),
-    ]
-    maint: list = []
-
-    def tailer():
-        def drain(sec):
-            if pend:
-                pend.pop(0)()
-
-        st.snapshot_tail(spark, src, dst, key="id", stop_after_idle=3, sleep=drain)
-
-    def maintainer():
-        import time as _t
-
-        deadline = _t.monotonic() + 120
-        while _t.monotonic() < deadline and sum(m is not None for m in maint) < 2:
-            try:
-                maint.append(st.snapshot_maintain(spark, dst, min_small_files=2))
-            except (ConcurrentCommitError, FileNotFoundError):
-                maint.append(None)  # lost race / dst not born yet — next pass
-                _t.sleep(0.3)
-
-    t1 = threading.Thread(target=tailer)
-    t2 = threading.Thread(target=maintainer)
-    t1.start(); t2.start()
-    t1.join(300); t2.join(300)
-    assert not pend
-    assert _rows(spark, dst) == _rows(spark, src)
-    # at least one maintain pass ran to completion (compacted or no-op)
-    assert any(m is not None for m in maint)
-
-
-def test_vacuum_reports_reclaimed_bytes(spark, tmp_path):
-    """Round 12: vacuum sums the bytes of every data dir it deletes
-    (walked by the same recursive listing the delete touches anyway)
-    — an overwrite-heavy history reclaims the orphaned generations'
-    real on-disk size."""
-    import os
-
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(40)]), t, mode="overwrite")
-    doomed = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fn in os.walk(os.path.join(t, "data"))
-        for f in fn
-        if not f.startswith(".")  # Hadoop's listing hides .crc files
-    )
-    snapshot_commit(_df(spark, [(1, "x")]), t, mode="overwrite")  # orphans v0's dir
-    r = st.snapshot_vacuum(spark, t, keep_last=1)
-    assert r["expired_versions"] == 1 and r["removed_dirs"] == 1
-    assert r["reclaimed_bytes"] == doomed > 0
-    # nothing left to reclaim on a second pass
-    assert st.snapshot_vacuum(spark, t, keep_last=1)["reclaimed_bytes"] == 0
-
-
-def test_vacuum_dry_run_predicts_and_touches_nothing(spark, tmp_path):
-    """Round 13 — the VACUUM DRY RUN shape: dry_run=True reports
-    exactly what the real sweep would do (expired/dirs/shards/bytes)
-    while the table stays byte-identical; the immediately-following
-    real vacuum then matches the prediction."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(30)]), t, mode="overwrite")
-    snapshot_commit(_df(spark, [(1, "b")]), t, mode="append")
-    snapshot_commit(_df(spark, [(2, "c")]), t, mode="overwrite")  # orphans v0+v1 data
-    before_versions = [v["version"] for v in snapshot_versions(spark, t)]
-    before_rows = _rows(spark, t)
-
-    dry = st.snapshot_vacuum(spark, t, keep_last=1, dry_run=True)
-    assert dry["dry_run"] is True
-    assert dry["expired_versions"] == 2 and dry["removed_dirs"] == 2
-    assert dry["reclaimed_bytes"] > 0
-    # nothing changed: full history still travelable, data intact
-    assert [v["version"] for v in snapshot_versions(spark, t)] == before_versions
-    assert _rows(spark, t) == before_rows
-    assert {r.id for r in st.snapshot_read(spark, t, 0).collect()} == set(range(30))
-
-    real = st.snapshot_vacuum(spark, t, keep_last=1)
-    assert real["dry_run"] is False
-    for k in ("expired_versions", "removed_dirs", "removed_shards", "reclaimed_bytes"):
-        assert real[k] == dry[k], k
-    # and the real sweep actually removed the history
-    with pytest.raises(FileNotFoundError):
-        st.snapshot_read(spark, t, 0).collect()
