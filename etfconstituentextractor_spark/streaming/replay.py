@@ -19,8 +19,10 @@ batch shortcut:
   makes the run a finite, deterministic function of the input — the
   batch-equivalent SQL over the same parquet is therefore a valid
   DuckDB oracle (hash-matched, not rows-only);
-- checkpoint/sink dirs are wiped per call: every invocation is a
-  fresh stream, never a checkpoint resume (the staged chunks are a
+- checkpoint/sink dirs are process-private (``scratch_dir``: pid +
+  md5 of the dir they are named after) and wiped per call: every
+  invocation is a fresh stream, never a checkpoint resume, and no
+  other process can wipe them mid-stream (the staged chunks are a
   corpus-keyed ``sources/derived.py`` layout, shared across runs).
 
 At production scale the same query text runs unchanged against a real
@@ -33,14 +35,13 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.sources.derived import derived
-from etfconstituentextractor_spark.sources.tables import load
+from etfconstituentextractor_spark.sources.tables import load, scratch_dir
 
 #: schema of the staged chunk files (ts already normalized to
 #: timestamp_ntz by the typed loader).
@@ -55,8 +56,9 @@ def _clean(path: str) -> None:
 
 
 def work_dir(sf_dir: str, tag: str) -> str:
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"etfce_stream_{tag}_{sf}")
+    """This process's scratch dir for stream ``tag`` over dataset
+    ``sf_dir``."""
+    return scratch_dir(f"etfce_stream_{tag}", sf_dir)
 
 
 def _write_chunk(df: DataFrame, base: str, idx: int, mtime: float) -> None:
@@ -221,10 +223,10 @@ def _replay_shuffle(spark: SparkSession, chunk_dir: str):
 
 
 def stream_dir(chunk_dir: str, name: str) -> str:
-    """A stream's own scratch directory (checkpoint, sink), named after
-    the staged chunks it replays — a sibling, never inside the
-    directory the file source lists."""
-    return f"{chunk_dir.rstrip('/')}_{name}"
+    """This process's checkpoint or sink dir ``name`` for a stream over
+    the chunks staged in ``chunk_dir`` — never inside the directory
+    the file source lists."""
+    return scratch_dir(f"etfce_stream_{name}", chunk_dir)
 
 
 def run_to_memory(sdf: DataFrame, name: str, mode: str, chunk_dir: str) -> DataFrame:

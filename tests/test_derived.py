@@ -139,8 +139,7 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
     its own aside can never lose files mid-read (pid recycling merely
     DELAYS a sweep — a disk-only cost). Published generations follow
     the same age rule, but only when they are superseded: same
-    dataset, other key. So do the per-run dirs named after a
-    generation."""
+    dataset, other key."""
     base = str(tmp_path)
     stem = "etfce_derived_u0_lay_"
     final = os.path.join(base, stem + "f" * 16)
@@ -159,13 +158,10 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
     deep_fresh = gen("1", ".build-999999996")
     superseded = gen("2")  # aged, same dataset: swept
     other_sf = gen("3")  # aged, another dataset: not superseded
-    aged_run_dir = gen("4", "_ckpt_q56")  # an old stream's checkpoint
-    fresh_run_dir = final + "_ckpt_q56"  # the live stream's checkpoint
     other_name = os.path.join(base, "etfce_derived_u0_lay2_" + "5" * 16)
     for p in (
         fresh_dead, aged_dead, aged_live, fresh_aside, aged_aside,
-        final_gen, deep_fresh, superseded, other_sf, aged_run_dir,
-        fresh_run_dir, other_name,
+        final_gen, deep_fresh, superseded, other_sf, other_name,
     ):
         os.makedirs(p)
     for p, sf_dir in ((superseded, "/data/sf1"), (other_sf, "/data/sf2")):
@@ -175,7 +171,7 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
     os.makedirs(deep)
     with open(os.path.join(deep, "v0.json"), "w") as fh:
         fh.write("{}")
-    for p in (aged_dead, aged_live, aged_aside, deep_fresh, aged_run_dir, other_name):
+    for p in (aged_dead, aged_live, aged_aside, deep_fresh, other_name):
         os.utime(p, (old, old))
     for p in (superseded, other_sf):
         os.utime(os.path.join(p, dv.MANIFEST), (old, old))
@@ -193,7 +189,5 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
     assert os.path.basename(aged_aside) not in left
     assert os.path.basename(superseded) not in left
     assert os.path.basename(other_sf) in left
-    assert os.path.basename(aged_run_dir) not in left
-    assert os.path.basename(fresh_run_dir) in left
     assert os.path.basename(other_name) in left  # another layout's name
 

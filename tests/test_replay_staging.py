@@ -28,6 +28,7 @@ from etfconstituentextractor_spark.sources.tables import load
 from etfconstituentextractor_spark.streaming.replay import (
     partitions_for,
     stage_chunks,
+    stream_dir,
     work_dir,
 )
 
@@ -197,3 +198,36 @@ def test_committed_bpe_merges_stay_sql_safe():
     for a, b in _BPE_MERGES:
         for sym in (a, b):
             assert "\x1f" not in sym and "'" not in sym and "\\" not in sym
+
+
+def test_stream_dirs_are_process_private(tmp_path):
+    """A stream's checkpoint, sink and extra-chunk dirs belong to the
+    process that runs it, because every run wipes them before it
+    starts: another process resolves different dirs for the same
+    arguments (so it cannot wipe this one's checkpoint mid-stream),
+    and two datasets with the same basename never share a dir."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    sf_a, sf_b = str(tmp_path / "a" / "sf0.01"), str(tmp_path / "b" / "sf0.01")
+    mine = [work_dir(sf_a, "extra"), stream_dir(sf_a, "ckpt_q")]
+    assert mine == [work_dir(sf_a, "extra"), stream_dir(sf_a, "ckpt_q")]  # stable
+    child = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys\n"
+            "from etfconstituentextractor_spark.streaming.replay import stream_dir, work_dir\n"
+            "print(work_dir(sys.argv[1], 'extra'))\n"
+            "print(stream_dir(sys.argv[1], 'ckpt_q'))",
+            sf_a,
+        ],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split("\n")[:2]
+    assert child[0] != mine[0] and child[1] != mine[1], (child, mine)
+    assert work_dir(sf_b, "extra") != mine[0]
+    assert stream_dir(sf_b, "ckpt_q") != mine[1]
