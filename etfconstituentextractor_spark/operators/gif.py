@@ -1,7 +1,7 @@
 """GIF (87a/89a) codec, from scratch on the stdlib + numpy
 (SURVEY.md §2B "LLM-pipeline — multimodal": continuing the codec
-family beside the from-scratch PNG (`operators/png.py`), JPEG
-(`operators/jpeg.py`) and VP8L WebP (`operators/vp8l.py`) decoders;
+family beside the from-scratch PNG (`operators/png.py`) and VP8L
+WebP (`operators/vp8l.py`) decoders;
 reference R12/R22 parity — decode failures become error rows, never
 prints, `ETFQuarterlyHoldingsExtractor.py:120-126`).
 

@@ -10,11 +10,9 @@ Scope: 8-bit-per-sample images, color types 0 (gray), 2 (RGB),
 BOTH the sequential and Adam7-INTERLACED layouts (seven
 independently-filtered sub-images in one DEFLATE stream, scattered by
 the standard (start, step) grid — the finish-session close, like
-progressive JPEG); 16-bit depth raises a clear error. JPEG (baseline
-AND progressive) and WebP-lossless have their own from-scratch codecs
-(operators/jpeg.py, operators/vp8l.py); lossy-VP8/AVIF/mp3 remain
-declared stubs (they need external codec libraries;
-``operators/media.py``).
+progressive JPEG); 16-bit depth raises a clear error. WebP-lossless
+and GIF have their own from-scratch codecs (operators/vp8l.py,
+operators/gif.py).
 
 The decoder is the production path (vectorized where the filter's
 data dependencies allow: Up/None are whole-row numpy ops, Sub/Avg/
@@ -80,10 +78,10 @@ def decode_png(b: bytes) -> tuple[int, int, int, np.ndarray]:
     """(width, height, channels, (h, w, c) uint8 array) of a PNG blob.
 
     Raises ValueError on anything outside the supported profile OR
-    malformed data — callers (``media.resize_blobs``) turn that into
-    an error ROW, the R22 contract. Lower layers raise zlib.error /
-    struct.error / IndexError on corrupt streams; those are converted
-    here so ``except ValueError`` really is the whole contract.
+    malformed data — callers turn that into an error ROW, the R22
+    contract. Lower layers raise zlib.error / struct.error /
+    IndexError on corrupt streams; those are converted here so
+    ``except ValueError`` really is the whole contract.
     """
     import zlib as _zlib
 

@@ -1,9 +1,9 @@
 """WebP-lossless (VP8L) codec, from scratch on the stdlib + numpy
-(SURVEY.md §2B "LLM-pipeline — multimodal": the image-decode stage of
-`media.resize_blobs`, closing the codec family beside the from-scratch
-PNG (`operators/png.py`) and baseline-JPEG (`operators/jpeg.py`)
-codecs; reference R12/R22 parity — decode failures become error rows,
-never prints, `ETFQuarterlyHoldingsExtractor.py:120-126`).
+(SURVEY.md §2B "LLM-pipeline — multimodal": closing the codec family
+beside the from-scratch PNG (`operators/png.py`) and GIF
+(`operators/gif.py`) codecs; reference R12/R22 parity — decode
+failures become error rows, never prints,
+`ETFQuarterlyHoldingsExtractor.py:120-126`).
 
 Decoder implements the full VP8L stream per the public spec (RFC
 9649 / the WebP lossless bitstream document): LSB-first bitstream,

@@ -12,21 +12,10 @@ the DuckDB oracle states the expected decode directly — hash-matched.
 The codec decode here uses a deterministic header-derived fake
 (width/height from payload length) because THESE fixture payloads are
 arbitrary text bytes, not a real codec stream; `_decode_meta` raises
-NotImplementedError if real decoding of them is requested. Real
-compressed-codec decode EXISTS for PNG (`operators/png.py`, zlib
-inflate + scanline unfilter), for baseline JPEG (`operators/jpeg.py`,
-Annex-K Huffman + dequantize + IDCT + chroma upsampling, 4:4:4 and
-4:2:0), and for IMA-ADPCM audio (`operators/adpcm.py`, decoded inside
-`audio_features`) — each a from-scratch codec verified against
-independent scalar implementations — and round 6 added WebP-lossless
-(`operators/vp8l.py`), so the remaining stub is scoped to formats
-whose decompression genuinely needs an external library
-(lossy-VP8/AVIF/mp3).
-Pixel-level math over raw bitmaps — resampling, byte-histogram
-features — is likewise real (`operators/media.py:resize_raw`,
-numpy nearest/bilinear verified against a pure-Python oracle). This
-module imports none of them, so q95's oracle checks no codec; they are
-checked by their own tests only. The
+NotImplementedError if real decoding of them is requested. The
+engine's from-scratch lossless image codecs (`operators/png.py`,
+`operators/vp8l.py`, `operators/gif.py`) are not used here, so q95's
+oracle checks no codec; they are checked by their own tests only. The
 Spark-side shape — BinaryType column, Arrow batch transfer, typed
 struct out, error row on corrupt input — is the real, tested part, and
 is exactly what a production decode would plug into. A `binaryFile`

@@ -2206,8 +2206,6 @@ def snapshot_changes(
     v_from: int,
     v_to: int,
     keys: list[str],
-    compare_cols: list[str] | None = None,
-    include_values: bool = False,
 ) -> DataFrame:
     """Row-level CHANGE DATA FEED between two versions at
     O(changed files) scan cost — the manifests already know which
@@ -2313,23 +2311,4 @@ def snapshot_changes(
             )
         new_side = _empty_like(m1, files1)
         old_side = spark.createDataFrame([], new_side.schema)
-    diff = snapshot_diff(old_side, new_side, keys=keys, compare_cols=compare_cols)
-    if not include_values:
-        return diff
-    # CDC-apply consumers need the NEW row values
-    # for inserted/updated keys, and the new side already holds
-    # exactly the added files' rows — an O(changed files) join, never
-    # a rescan of the table (deleted keys get NULL values). The feed's
-    # metadata column names are RESERVED in this mode (the Delta-CDF
-    # convention of reserved _change columns, stated loudly instead of
-    # emitting ambiguous duplicates — round-11 third review)
-    clash = sorted(
-        {"change", "old_hash", "new_hash"} & set(new_side.columns)
-    )
-    if clash:
-        raise ValueError(
-            f"include_values reserves column names {clash} for feed "
-            "metadata — rename those table columns or consume the "
-            "feed without values"
-        )
-    return diff.join(new_side, keys, "left")
+    return snapshot_diff(old_side, new_side, keys=keys)

@@ -166,6 +166,8 @@ def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
 
 
 _SCRATCH_COUNTER = itertools.count()
+#: dirs already registered for atexit removal in this process
+_SCRATCH_REGISTERED: set[str] = set()
 
 
 def scratch_dir(prefix: str, sf_dir: str, unique: bool = False) -> str:
@@ -179,7 +181,8 @@ def scratch_dir(prefix: str, sf_dir: str, unique: bool = False) -> str:
     use uuid data dirs), so earlier calls' returned DataFrames keep
     planning over their own, still-present files instead of dangling
     on a wiped directory (round-9 review finding). By exit, lazy
-    frames over any generation have been consumed."""
+    frames over any generation have been consumed. Each path registers
+    its removal once per process, however often it is resolved."""
     import atexit
     import hashlib
     import shutil
@@ -189,6 +192,8 @@ def scratch_dir(prefix: str, sf_dir: str, unique: bool = False) -> str:
     d = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}_{os.getpid()}")
     if unique:
         d = f"{d}_{next(_SCRATCH_COUNTER)}"
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    if d not in _SCRATCH_REGISTERED:
+        _SCRATCH_REGISTERED.add(d)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 

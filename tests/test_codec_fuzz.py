@@ -1,21 +1,14 @@
-"""Property-based fuzz over the from-scratch codecs (hypothesis):
-PNG must round-trip EXACTLY on arbitrary images (lossless), JPEG must
-be shape-preserving, deterministic, and decodable at every
-quality/sampling on arbitrary images (lossy — exactness only for flat
-blocks), ADPCM must preserve length/determinism and track slowly
-varying signals. These complement the structured-oracle tests with
-adversarial shapes (1-pixel images, odd dims, extreme values)."""
+"""Property-based fuzz over the from-scratch lossless codecs
+(hypothesis): PNG and VP8L must round-trip EXACTLY on arbitrary
+images, and PNG decoding must fail with ValueError only. These
+complement the structured-oracle tests with adversarial shapes
+(1-pixel images, odd dims, extreme values)."""
 
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from etfconstituentextractor_spark.operators.adpcm import (
-    adpcm_decode,
-    adpcm_encode,
-)
-from etfconstituentextractor_spark.operators.jpeg import decode_jpeg, encode_jpeg
 from etfconstituentextractor_spark.operators.png import decode_png, encode_png
 
 
@@ -60,77 +53,18 @@ def test_vp8l_roundtrip_exact_on_arbitrary_images(img, subtract_green):
         assert (decoded[..., 3] == 255).all()
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    _images(),
-    st.integers(40, 95),
-    st.sampled_from(["444", "420"]),
-)
-def test_jpeg_decodes_whatever_it_encodes(img, quality, sub):
-    b = encode_jpeg(img, quality=quality, subsampling=sub)
-    assert b == encode_jpeg(img, quality=quality, subsampling=sub)  # deterministic
-    out = decode_jpeg(b)
-    assert out.shape == img.shape
-    # DC sanity on arbitrary content: overall brightness survives
-    # (quantizer DC step <= 31 at q>=40; chroma/system error small)
-    assert abs(float(out.mean()) - float(img.mean())) < 24.0
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    _images(max_h=20, max_w=20),
-    st.integers(40, 95),
-    st.sampled_from(["444", "420"]),
-)
-def test_progressive_jpeg_equals_baseline_on_arbitrary_images(img, quality, sub):
-    """Progressive and baseline carry the same quantized coefficients,
-    so their decodes must be EXACTLY equal on any input — the fuzz
-    sweep over ragged dims and both subsamplings hammers the EOBRUN /
-    refinement-bit bookkeeping."""
-    base = decode_jpeg(encode_jpeg(img, quality=quality, subsampling=sub))
-    prog = decode_jpeg(
-        encode_jpeg(img, quality=quality, subsampling=sub, progressive=True)
-    )
-    assert np.array_equal(base, prog)
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=400))
-def test_adpcm_structural_invariants(samples):
-    data = adpcm_encode(samples)
-    assert len(data) == (len(samples) + 1) // 2
-    out = adpcm_decode(data, len(samples))
-    assert len(out) == len(samples)
-    assert out == adpcm_decode(data, len(samples))  # deterministic
-    assert all(-32768 <= v <= 32767 for v in out)
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(-30000, 30000), st.integers(150, 400))
-def test_adpcm_converges_to_constant(level, n):
-    """A constant signal must be tracked to within a few minimum
-    steps once the adaptive step has ramped to the level (~15
-    samples) and decayed back down (index falls 1/sample from at
-    most 88) — hence the n >= 150 floor before judging the tail."""
-    out = adpcm_decode(adpcm_encode([level] * n), n)
-    tail = out[-10:]
-    assert all(abs(v - level) <= 24 for v in tail), (level, tail[-3:])
-
-
 def test_decode_error_contract_is_valueerror_only():
-    """decode_png/decode_jpeg/jpeg_dimensions promise ValueError on
-    malformed input; corruption that internally raises zlib.error /
-    struct.error / IndexError must be converted (so the documented
-    'except ValueError' pattern in mapInPandas layers really does
-    yield error rows, not task failures)."""
+    """decode_png promises ValueError on malformed input; corruption
+    that internally raises zlib.error / struct.error / IndexError must
+    be converted (so the documented 'except ValueError' pattern in
+    mapInPandas layers really does yield error rows, not task
+    failures)."""
     import pytest
 
-    from etfconstituentextractor_spark.operators.jpeg import jpeg_dimensions
     from etfconstituentextractor_spark.operators.png import PNG_SIGNATURE
 
     img = np.zeros((9, 11, 3), dtype=np.uint8)
     png = encode_png(img)
-    jpg = encode_jpeg(img)
     # PNG with its IDAT payload zeroed -> zlib.error internally
     broken = bytearray(png)
     i = bytes(broken).find(b"IDAT")
@@ -140,9 +74,3 @@ def test_decode_error_contract_is_valueerror_only():
     # PNG with a truncated IHDR payload -> struct.error internally
     with pytest.raises(ValueError):
         decode_png(PNG_SIGNATURE + b"\x00\x00\x00\x04IHDR\x00\x00\x00\x00")
-    # JPEG truncated inside the SOF segment -> struct.error internally
-    sof = jpg.find(b"\xff\xc0")
-    with pytest.raises(ValueError):
-        decode_jpeg(jpg[: sof + 5])
-    with pytest.raises(ValueError):
-        jpeg_dimensions(jpg[: sof + 5])

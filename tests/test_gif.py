@@ -196,43 +196,6 @@ def test_fuzz_roundtrip():
         assert (decode_gif(encode_gif(img, interlace=inter)) == _rgba(img)).all()
 
 
-def test_resize_and_phash_decode_gif_for_real(spark):
-    """Integration: resize_blobs / phash_blobs route GIF payloads to
-    the from-scratch decoder; a corrupt GIF is a decode ERROR (the
-    sniff claimed it), not codec_unsupported."""
-    import hashlib
-
-    from etfconstituentextractor_spark.operators.media import _resample, resize_blobs
-    from etfconstituentextractor_spark.operators.phash import (
-        phash_blobs,
-        phash_of_pixels,
-    )
-
-    rng = np.random.default_rng(21)
-    img = (rng.integers(0, 8, (20, 14), np.uint8) * 30).astype(np.uint8)
-    payload = encode_gif(np.stack([img] * 3, axis=-1), interlace=True)
-    wrapped = b"IMG0" + f"{len(payload):08x}".encode() + payload
-    corrupt = payload[:-6] + b"\x99" * 6
-    wrapped_bad = b"IMG0" + f"{len(corrupt):08x}".encode() + corrupt
-    df = spark.createDataFrame(
-        [(1, wrapped), (2, wrapped_bad)], "doc_id bigint, blob binary"
-    )
-    rows = {
-        r["doc_id"]: r for r in resize_blobs(df, 10, 8, real_resample=True).collect()
-    }
-    assert rows[1]["error"] is None
-    want = hashlib.md5(
-        _resample(decode_gif(payload), 10, 8, "bilinear").tobytes()
-    ).hexdigest()
-    assert rows[1]["payload_md5"] == want
-    assert rows[2]["error"].startswith("bad_gif")
-
-    ph = {r["doc_id"]: r for r in phash_blobs(df).collect()}
-    assert ph[1]["error"] is None
-    assert ph[1]["phash"] == phash_of_pixels(decode_gif(payload))
-    assert ph[2]["error"].startswith("bad_image")
-
-
 def test_gce_scoping_last_one_wins():
     """Two GCEs before the image: the LAST governs — a clear
     transparency flag must reset an earlier set index (review r7)."""

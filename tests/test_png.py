@@ -1,12 +1,9 @@
 """From-scratch PNG codec (operators/png.py): every filter type and
 color layout must decode to the original pixels, verified against an
-independent pure-Python unfilter reimplementation, and the real
-resize path over IMG0-wrapped PNG payloads must hash-match the
-pure-Python resampler oracle from test_media.py."""
+independent pure-Python unfilter reimplementation."""
 
 from __future__ import annotations
 
-import hashlib
 import random
 import struct
 import zlib
@@ -177,38 +174,3 @@ def test_adam7_and_palette_roundtrips():
         decode_png(stripped)
     with _pytest.raises(ValueError, match="palette range"):
         encode_png_paletted(np.full((2, 2), 9, np.uint8), pal)
-
-
-def test_real_resize_of_png_payload_matches_python_oracle(spark):
-    """End-to-end: IMG0-wrapped PNG → decode → bilinear resample must
-    equal the pure-Python resampler applied to the same decoded pixels
-    (the resize_raw oracle contract, now reachable for a COMPRESSED
-    input format)."""
-    from etfconstituentextractor_spark.operators.media import resize_blobs
-    from tests.test_media import _blob_df, _img_blob, _py_resample
-
-    rng = random.Random(99)
-    img = _rand_img(rng, 6, 8, 3)
-    payload = encode_png(img, row_filters=[4, 1, 3, 2, 0, 4])
-    # doc 2: an FFD8 prefix now routes to the real JPEG decoder
-    # (operators/jpeg.py) and fails as a malformed JPEG; doc 3: a
-    # payload in no supported codec keeps the declared stub row.
-    df = _blob_df(
-        spark,
-        [
-            (1, _img_blob(payload)),
-            (2, _img_blob(b"\xff\xd8JPEG")),
-            # GIF decodes for real since round 7 (operators/gif.py)
-            # so an AVIF-ish box is the remaining declared-stub case
-            (3, _img_blob(b"\x00\x00\x00\x1cftypavif\x00\x00\x00\x00avifmif1")),
-        ],
-    )
-    out = {
-        r.doc_id: r
-        for r in resize_blobs(df, 4, 3, real_resample=True, method="bilinear").collect()
-    }
-    want = _py_resample(bytes(img.reshape(-1)), 8, 6, 3, 4, 3, "bilinear")
-    assert out[1].error is None
-    assert out[1].payload_md5 == hashlib.md5(want).hexdigest()
-    assert out[2].error.startswith("bad_jpeg")
-    assert out[3].error.startswith("codec_unsupported")

@@ -231,3 +231,23 @@ def test_stream_dirs_are_process_private(tmp_path):
     assert child[0] != mine[0] and child[1] != mine[1], (child, mine)
     assert work_dir(sf_b, "extra") != mine[0]
     assert stream_dir(sf_b, "ckpt_q") != mine[1]
+
+
+def test_scratch_dir_registers_each_path_once(tmp_path, monkeypatch):
+    """Streams resolve their dirs through ``scratch_dir`` on every
+    start, so a long-lived process must not gain one atexit handler
+    per resolution: a path registers its removal once, and each
+    ``unique=True`` dir is a new path that registers once."""
+    import atexit
+
+    from etfconstituentextractor_spark.sources.tables import scratch_dir
+
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda *a, **k: registered.append(a))
+    sf = str(tmp_path / "sf0.01")
+    d = scratch_dir("etfce_once", sf)
+    assert scratch_dir("etfce_once", sf) == d
+    assert len(registered) == 1, registered
+    u1 = scratch_dir("etfce_once", sf, unique=True)
+    assert scratch_dir("etfce_once", sf, unique=True) != u1
+    assert len(registered) == 3, registered

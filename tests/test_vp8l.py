@@ -558,49 +558,6 @@ def test_subtract_green_plus_predictor_inverse_order():
     assert (decode_vp8l(encode_vp8l(img, use_subtract_green=True)) == img).all()
 
 
-def test_resize_and_phash_decode_webp_for_real(spark):
-    """IMG0-wrapped WebP-lossless payloads flow through resize_blobs
-    and phash_blobs like PNG/JPEG ones; a lossy VP8 payload lands in
-    the error row, not an exception."""
-    import hashlib
-    import struct
-
-    from etfconstituentextractor_spark.operators.media import _resample, resize_blobs
-    from etfconstituentextractor_spark.operators.phash import (
-        phash_blobs,
-        phash_of_pixels,
-    )
-
-    rng = np.random.default_rng(9)
-    img = rng.integers(0, 256, size=(20, 28, 3), dtype=np.uint8)
-    payload = encode_vp8l(img)
-    wrapped = b"IMG0" + f"{len(payload):08x}".encode() + payload
-    lossy = (
-        b"RIFF" + struct.pack("<I", 16) + b"WEBP" + b"VP8 "
-        + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-    )
-    wrapped_lossy = b"IMG0" + f"{len(lossy):08x}".encode() + lossy
-    df = spark.createDataFrame(
-        [(1, wrapped), (2, wrapped_lossy)], "doc_id bigint, blob binary"
-    )
-    rows = {
-        r["doc_id"]: r for r in resize_blobs(df, 10, 8, real_resample=True).collect()
-    }
-    assert rows[1]["error"] is None
-    want = hashlib.md5(
-        _resample(decode_vp8l(payload), 10, 8, "bilinear").tobytes()
-    ).hexdigest()
-    assert rows[1]["payload_md5"] == want
-    # lossy VP8 fails the sniff → stays in the DECLARED stub category
-    # (codec_unsupported), not a decode error
-    assert rows[2]["error"].startswith("codec_unsupported")
-
-    ph = {r["doc_id"]: r for r in phash_blobs(df).collect()}
-    assert ph[1]["error"] is None
-    assert ph[1]["phash"] == phash_of_pixels(decode_vp8l(payload))
-    assert ph[2]["error"] == "codec_unsupported"
-
-
 def test_decoder_rejects_malformed():
     bw = _BitWriter()
     _header(bw, 2, 1)
