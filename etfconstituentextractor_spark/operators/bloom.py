@@ -90,19 +90,15 @@ def bloom_params(n_items: int, fpp: float = 1e-4) -> tuple[int, int]:
     return m_bits, k
 
 
-def _positions(key: Column, m_bits, k) -> Column:
+def _positions(key: Column, m_bits: int, k: int) -> Column:
     """array<bigint> of the k bit positions for ``key`` — position i is
     pmod(xxhash64(key, i), m) (the seed column varies per element, so
     the per-element lambda genuinely depends on i; xxhash64 folds a
     NULL key to the hash of the seed alone, which only ever ADDS a
-    spurious pass — nulls never match an equi-join anyway).
-    ``m_bits``/``k`` may be ints or Columns (per-row sizing, e.g. a
-    sidecar whose rows carry their own filter parameters)."""
-    mc = m_bits if isinstance(m_bits, Column) else F.lit(m_bits)
-    kc = k if isinstance(k, Column) else F.lit(k)
+    spurious pass — nulls never match an equi-join anyway)."""
     return F.transform(
-        F.sequence(F.lit(0), (kc - F.lit(1)).cast("int")),
-        lambda i: F.pmod(F.xxhash64(key, i), mc.cast("bigint")),
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.pmod(F.xxhash64(key, i), F.lit(m_bits).cast("bigint")),
     )
 
 
@@ -140,16 +136,14 @@ def bloom_build(build: DataFrame, key: str, *, m_bits: int, k: int) -> bytes:
     return struct.pack(f"<{n_words}q", *words)
 
 
-def bloom_might_contain(blob: Column, key: Column, *, m_bits, k) -> Column:
+def bloom_might_contain(blob: Column, key: Column, *, m_bits: int, k: int) -> Column:
     """Boolean Column: every one of ``key``'s k bit positions is set
-    in ``blob`` (a BinaryType column OR literal holding m_bits/8
-    packed little-endian bytes). The bit test is a forall over the
+    in ``blob`` (a BinaryType literal holding m_bits/8 packed
+    little-endian bytes). The bit test is a forall over the
     position array: substr() the addressed byte, hex()/conv() it to
     an int (one byte — no 64-bit sign games), then shift/mask. O(k)
-    per row regardless of m; pure codegen. Shared by the semi-join
-    prefilter (literal blob) and the snapshot-table manifest bloom
-    pruner (sidecar column blob) — ONE spelling, so the test always
-    addresses bits exactly as bloom_build packed them."""
+    per row regardless of m; pure codegen, addressing bits exactly as
+    bloom_build packed them."""
 
     def bit_set(p: Column) -> Column:
         byte = F.conv(

@@ -11,8 +11,7 @@ BOTH the sequential and Adam7-INTERLACED layouts (seven
 independently-filtered sub-images in one DEFLATE stream, scattered by
 the standard (start, step) grid — the finish-session close, like
 progressive JPEG); 16-bit depth raises a clear error. WebP-lossless
-and GIF have their own from-scratch codecs (operators/vp8l.py,
-operators/gif.py).
+has its own from-scratch codec (operators/vp8l.py).
 
 The decoder is the production path (vectorized where the filter's
 data dependencies allow: Up/None are whole-row numpy ops, Sub/Avg/

@@ -1,7 +1,7 @@
 """WebP-lossless (VP8L) codec, from scratch on the stdlib + numpy
 (SURVEY.md §2B "LLM-pipeline — multimodal": closing the codec family
-beside the from-scratch PNG (`operators/png.py`) and GIF
-(`operators/gif.py`) codecs; reference R12/R22 parity — decode
+beside the from-scratch PNG codec (`operators/png.py`); reference
+R12/R22 parity — decode
 failures become error rows, never prints,
 `ETFQuarterlyHoldingsExtractor.py:120-126`).
 

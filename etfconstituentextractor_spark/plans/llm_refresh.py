@@ -474,7 +474,7 @@ def _merge_table(spark, sf_dir):
         rv = snapshot_restore(spark, table, 0)
         assert rv == 2, f"restore expected to commit v2, got v{rv}"
 
-    return os.path.join(derived("q86_merge", sf_dir, ["documents"], {"v": 2}, build), "table")
+    return os.path.join(derived("q86_merge", sf_dir, ["documents"], {"v": 3}, build), "table")
 
 
 def _timetravel_table(spark, sf_dir, commits, deletes=()):
@@ -497,5 +497,5 @@ def _timetravel_table(spark, sf_dir, commits, deletes=()):
         for w in deletes:
             snapshot_delete(spark, table, where=tuple(w))
 
-    recipe = {"deletes": [list(w) for w in deletes], "v": 6}
+    recipe = {"deletes": [list(w) for w in deletes], "v": 7}
     return os.path.join(derived("q86_timetravel", sf_dir, ["documents"], recipe, build), "table")

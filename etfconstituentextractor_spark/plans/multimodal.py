@@ -11,11 +11,10 @@ the DuckDB oracle states the expected decode directly — hash-matched.
 
 The codec decode here uses a deterministic header-derived fake
 (width/height from payload length) because THESE fixture payloads are
-arbitrary text bytes, not a real codec stream; `_decode_meta` raises
-NotImplementedError if real decoding of them is requested. The
-engine's from-scratch lossless image codecs (`operators/png.py`,
-`operators/vp8l.py`, `operators/gif.py`) are not used here, so q95's
-oracle checks no codec; they are checked by their own tests only. The
+arbitrary text bytes, not a real codec stream. The engine's
+from-scratch lossless image codecs (`operators/png.py`,
+`operators/vp8l.py`) are not used here, so q95's oracle checks no
+codec; they are checked by their own tests only. The
 Spark-side shape — BinaryType column, Arrow batch transfer, typed
 struct out, error row on corrupt input — is the real, tested part, and
 is exactly what a production decode would plug into. A `binaryFile`
@@ -44,16 +43,9 @@ DECODE_SCHEMA = (
 )
 
 
-def _decode_meta(payload: bytes, real_decode: bool = False) -> tuple[int, int]:
+def _decode_meta(payload: bytes) -> tuple[int, int]:
     """STUB image decode: deterministic fake dimensions derived from
-    the payload length. Real pixel decoding needs an image library the
-    environment does not ship — requesting it is an explicit error,
-    not a silent fake."""
-    if real_decode:
-        raise NotImplementedError(
-            "pixel decode requires an image library (PIL/opencv); "
-            "this environment ships none — stub metadata only"
-        )
+    the payload length (the fixture payloads are text, not pixels)."""
     return len(payload) % 640 + 1, len(payload) % 480 + 1
 
 

@@ -345,11 +345,7 @@ def snapshot_commit(
     path: str,
     mode: str = "append",
     stats_cols: list[str] | None = None,
-    partition_by: list[str] | None = None,
     txn: tuple[str, int] | None = None,
-    bloom_cols: list[str] | None = None,
-    bloom_fpp: float = 0.01,
-    retries: int = 0,
 ) -> int:
     """Write ``df`` as the table's next version; returns the version.
 
@@ -357,23 +353,8 @@ def snapshot_commit(
     starts a fresh list (old versions stay readable — nothing is
     deleted). Raises ConcurrentCommitError if another writer published
     the same version first: data files are already written (orphaned,
-    harmless), so the retry is cheap only in metadata — callers that
-    expect contention should re-derive against the new latest before
-    retrying, which is the table-format contract too.
-
-    ``retries=N`` (append mode only) performs that metadata rebase
-    automatically, up to N times: an append's content does not depend
-    on WHICH parent it extends, so on a lost race the already-written
-    data files are kept (renamed under the next attempt's version, so
-    a data dir's number is always the version that published it), the new latest
-    manifest is re-read, the partition-spec and txn-idempotence checks
-    re-run against it, and the manifest is re-assembled and
-    re-published — zero data rewrite. Overwrite commits must surface
-    the race (the caller's intent — replace WHAT? — is ambiguous
-    after a concurrent change), as must appends with ``bloom_cols``
-    (the sidecar consolidation decision depends on the parent's
-    entries). If a retry discovers the race was this writer's own
-    txn replay, the commit no-ops exactly like the pre-write check.
+    harmless), so callers that expect contention re-derive against the
+    new latest before retrying, which is the table-format contract too.
 
     ``stats_cols`` records per-file [min, max] for those columns in
     the manifest (the Iceberg pruning shape): one column-pruned
@@ -381,25 +362,6 @@ def snapshot_commit(
     rows per file to the driver. Appends merge the parent's stats, so
     per-commit choices may differ; readers treat missing stats as
     "keep the file".
-
-    ``partition_by`` writes hive-style value directories inside the
-    version's data dir and records the spec in the manifest; readers
-    reconstruct the columns via basePath and PRUNE files by the
-    partition values already encoded in the manifest's relpaths (no
-    extra metadata). The spec is per-TABLE: appends must repeat the
-    parent's spec (mixed layouts would poison partition discovery),
-    enforced here. Hive path escaping (':' -> '%3A' etc.) is
-    round-tripped: the pruner decodes segments before comparing, so
-    string values with reserved chars prune correctly.
-
-    ``bloom_cols`` builds per-file Bloom filters (sized for
-    ``bloom_fpp``) into a sidecar the reader's equality probes consult
-    AFTER stats/partition pruning — point-lookup file skipping for
-    high-cardinality unclustered columns whose [min, max] stats span
-    everything (the Iceberg-puffin shape). Appends add a sidecar for
-    the fresh files and carry the parent's entries; files rewritten by
-    merge lose coverage (conservatively kept by readers) until
-    a later bloom-building commit.
 
     ``txn=(writer_id, seq)`` records an idempotent-writer watermark
     in the manifest (Delta's setTransaction shape): the latest
@@ -410,407 +372,76 @@ def snapshot_commit(
     watermark survives interleaved merges/deletes/restores."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if retries and (mode != "append" or bloom_cols):
-        raise ValueError(
-            "retries apply to plain append commits only — overwrite races "
-            "and bloom-building appends must surface to the caller"
-        )
     spark = df.sparkSession
     fs, _, jvm = _fs_path(spark, path)
-    pby = list(partition_by or [])
-    ptypes = {
-        f.name: f.dataType.simpleString() for f in df.schema.fields if f.name in pby
-    }
-    if bloom_cols:
-        # BEFORE the data write: a bloom validation error afterwards
-        # would orphan a freshly-written dir on every retry (round-10
-        # fourth review)
-        _validate_bloom_cols(
-            {f.name: f.dataType.simpleString() for f in df.schema.fields},
-            bloom_cols,
-            pby,
-        )
-    files: list[str] | None = None  # written ONCE; renamed on a rebase
-    stats: dict = {}
-    for attempt in range(max(0, int(retries)) + 1):
-        versions = _list_versions(fs, jvm, path)
-        version = (versions[-1] + 1) if versions else 0
-        parent = versions[-1] if versions else None
-        eff_mode = mode
-        if mode == "append" and parent is None:
-            eff_mode = "overwrite"  # first commit of a table is a plain write
-        # the parent manifest is read for append merging AND, on any
-        # mode, for the txn-watermark carry (an overwrite that dropped
-        # the map would break exactly-once ingest across it)
-        prev = _read_manifest(fs, jvm, path, parent) if parent is not None else None
-        if txn is not None and prev is not None:
-            wid, seq = txn
-            last = (prev.get("txn") or {}).get(wid)
-            if last is not None and int(seq) <= int(last):
-                # the idempotence check must live INSIDE the commit path,
-                # not only in callers: a zombie writer publishing between
-                # a caller's watermark read and this commit's version
-                # listing lands under a DIFFERENT version number, so the
-                # atomic claim alone never collides and the batch would
-                # append twice (round-10 review). Here the zombie's
-                # manifest IS prev (or its watermark was carried into
-                # prev), so the replay is visible and skipped before any
-                # data is written. A rebase retry re-arrives here with
-                # data already written — the files are left orphaned,
-                # the replay still must not publish.
-                return parent
-        pm = prev if eff_mode == "append" else None
-        if pm is not None:
-            parent_pby = pm.get("partition_by", [])
-            if pby != parent_pby:
-                raise ValueError(
-                    f"append partition_by {pby} != table spec {parent_pby}"
-                )
-            parent_types = pm.get("partition_types")
-            if parent_types and parent_types != ptypes:
-                # a dtype drift would silently change the cast applied to
-                # the parent's carried files (round-9 review finding)
-                raise ValueError(
-                    f"append partition types {ptypes} != table spec {parent_types}"
-                )
-        # schema tracking (round 11): overwrite records the frame's
-        # schema; append merges ADDITIVELY into the parent's recorded
-        # schema (new columns land at the end, type changes raise).
-        # A legacy parent without a recorded schema stays untracked —
-        # its old files' real columns are known only to their footers,
-        # so stamping the append frame's schema could silently drop
-        # or null columns; footer inference remains authoritative
-        # until the next overwrite. Computed BEFORE the data write so
-        # a type-conflict raise cannot orphan a fresh data dir (the
-        # validate-before-write rule, round-10 fourth review).
-        if eff_mode == "overwrite":
-            schema_entry = df.schema.jsonValue()
-        elif pm is not None and pm.get("schema") is not None:
-            schema_entry = _merge_schema_json(pm["schema"], df.schema.jsonValue())
+    versions = _list_versions(fs, jvm, path)
+    version = (versions[-1] + 1) if versions else 0
+    parent = versions[-1] if versions else None
+    eff_mode = mode
+    if mode == "append" and parent is None:
+        eff_mode = "overwrite"  # first commit of a table is a plain write
+    # the parent manifest is read for append merging AND, on any
+    # mode, for the txn-watermark carry (an overwrite that dropped
+    # the map would break exactly-once ingest across it)
+    prev = _read_manifest(fs, jvm, path, parent) if parent is not None else None
+    if txn is not None and prev is not None:
+        wid, seq = txn
+        last = (prev.get("txn") or {}).get(wid)
+        if last is not None and int(seq) <= int(last):
+            # the idempotence check must live INSIDE the commit path,
+            # not only in callers: a zombie writer publishing between
+            # a caller's watermark read and this commit's version
+            # listing lands under a DIFFERENT version number, so the
+            # atomic claim alone never collides and the batch would
+            # append twice (round-10 review). Here the zombie's
+            # manifest IS prev (or its watermark was carried into
+            # prev), so the replay is visible and skipped before any
+            # data is written.
+            return parent
+    pm = prev if eff_mode == "append" else None
+    # schema tracking (round 11): overwrite records the frame's
+    # schema; append merges ADDITIVELY into the parent's recorded
+    # schema (new columns land at the end, type changes raise).
+    # A legacy parent without a recorded schema stays untracked —
+    # its old files' real columns are known only to their footers,
+    # so stamping the append frame's schema could silently drop
+    # or null columns; footer inference remains authoritative
+    # until the next overwrite. Computed BEFORE the data write so
+    # a type-conflict raise cannot orphan a fresh data dir (the
+    # validate-before-write rule, round-10 fourth review).
+    if eff_mode == "overwrite":
+        schema_entry = df.schema.jsonValue()
+    elif pm is not None and pm.get("schema") is not None:
+        schema_entry = _merge_schema_json(pm["schema"], df.schema.jsonValue())
+    else:
+        schema_entry = None
+    files, stats = _write_data(df, path, version, stats_cols)
+    parts = []
+    if pm is not None:
+        if "shards" in pm:
+            # append metadata cost is O(new files): the parent's
+            # shards ride along BY REF, never loaded or rewritten
+            parts += [(ref, None, None) for ref in pm["shards"]]
         else:
-            schema_entry = None
-        if files is None:
-            files, stats = _write_data(df, path, version, stats_cols, partition_by=pby)
-        elif files:
-            # REBASE (attempt > 1): the data files are immutable and
-            # content-valid under any parent — only their dir carries
-            # the lost version's number. Rename the dir under the new
-            # attempt's version and remap the relpaths/stats keys —
-            # O(1) metadata, zero data movement.
-            old_rel = "/".join(files[0].split("/")[:2])
-            new_rel = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
-            ok = fs.rename(
-                jvm.org.apache.hadoop.fs.Path(posixpath.join(path, old_rel)),
-                jvm.org.apache.hadoop.fs.Path(posixpath.join(path, new_rel)),
-            )
-            if not ok:
-                raise ConcurrentCommitError(
-                    f"rebase of {path} lost its data dir {old_rel} (removed "
-                    "during the race window?) — re-derive and retry"
-                )
-            files = [new_rel + f[len(old_rel):] for f in files]
-            stats = {new_rel + k[len(old_rel):]: v for k, v in stats.items()}
-        parts = []
-        if pm is not None:
-            if "shards" in pm:
-                # append metadata cost is O(new files): the parent's
-                # shards ride along BY REF, never loaded or rewritten
-                parts += [(ref, None, None) for ref in pm["shards"]]
-            else:
-                parts.append((None, pm["files"], pm.get("stats", {})))
-        parts.append((None, files, stats))
-        manifest = {
-            "version": version,
-            "op": eff_mode,
-            "parent": parent,
-            **_files_section(fs, jvm, path, version, parts),
-            "partition_by": pby,
-            "partition_types": ptypes,
-        }
-        if schema_entry is not None:
-            manifest["schema"] = schema_entry
-        if pm is not None and "dv" in pm:
-            # an append extends the parent's file list, so the
-            # parent's deletion vector must ride along — dropping it
-            # here would resurrect every masked row (fresh files can't
-            # collide: DV keys name data/vN-uuid dirs, never reused)
-            manifest["dv"] = pm["dv"]
-        blooms = list((pm or {}).get("bloom") or [])
-        if bloom_cols:
-            # lazily: resolving a sharded inventory costs O(total files)
-            # driver metadata and only the rare consolidation branch needs
-            # it — an eager resolve broke the O(new files) append cost on
-            # exactly the micro-batch workload (round-10 max review)
-            def _live() -> set[str]:
-                if "files" in manifest:
-                    return set(manifest["files"])
-                lf, _ = _resolve(fs, jvm, path, manifest)
-                return set(lf)
-
-            blooms = _write_bloom(
-                spark, path, version, files, bloom_cols, bloom_fpp, pby, ptypes,
-                carried=blooms, live_files=_live,
-            )
-        if blooms:
-            manifest["bloom"] = blooms
-        _set_txn(manifest, prev, txn)
-        try:
-            _publish(fs, jvm, path, version, manifest)
-        except ConcurrentCommitError:
-            if attempt >= retries:
-                raise
-            continue
-        return version
-
-
-#: column types a manifest bloom may cover — the same primitive
-#: domains as stats (the pruner must coerce the probe into the
-#: column's own type before hashing: xxhash64 is type-sensitive, the
-#: bloom_reduced_join lesson)
-_BLOOM_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double", "boolean", "string"}
-#: past this many bloom entries, a bloom-building commit consolidates
-#: them into ONE sidecar (live rows only) — the _SHARD_MERGE_MIN
-#: lesson applied to blooms, so per-probe sidecar jobs stay bounded
-#: instead of growing O(#bloom-building commits)
-_BLOOM_MERGE_MIN = 8
-
-
-def _validate_bloom_cols(dtypes: dict, bloom_cols: list[str], pby: list[str]) -> dict:
-    """{col: dtype} for coverable columns; raises on partition
-    columns and uncoverable types. Called by snapshot_commit BEFORE
-    _write_data — a validation error after the data write leaks an
-    orphan dir per retry, the same class the delete
-    path fixed (round-10 fourth review) — and again inside
-    _write_bloom as defense."""
-    cols: dict[str, str] = {}
-    for c in bloom_cols:
-        if c in pby:
-            raise ValueError(f"bloom_cols may not include partition column {c!r}")
-        t = dtypes.get(c)
-        if t not in _BLOOM_TYPES:
-            raise ValueError(
-                f"bloom over {c!r} ({t}) unsupported — coverable types: "
-                f"{sorted(_BLOOM_TYPES)}"
-            )
-        cols[c] = t
-    return cols
-
-
-def _write_bloom(
-    spark: SparkSession,
-    path: str,
-    version: int,
-    files: list[str],
-    bloom_cols: list[str],
-    fpp: float,
-    pby: list[str],
-    ptypes: dict | None,
-    carried: list,
-    live_files,
-) -> list:
-    """Per-file Bloom filters over ``bloom_cols`` for the fresh
-    ``files``, written as a sidecar parquet dir under data/ — the
-    Iceberg-puffin shape: point-lookup file skipping for
-    high-cardinality UNCLUSTERED columns whose per-file [min, max]
-    stats span everything. Sidecar rows carry their OWN parameters
-    (f, col, dtype, m, k, bloom) — sized PER FILE from its own row
-    count (a commit-wide max sizing inflated every small file's
-    filter to the largest file's, multi-GB of driver transients at
-    clamp scale — round-10 max review), each file CLAMPED at the
-    64M-bit cap (fpp degrades, correctness doesn't — a Bloom filter
-    has no false negatives at any sizing; failing the commit after
-    the data was already written would be strictly worse). An empty
-    commit writes no sidecar. One counts job + one map-combinable
-    bit-or job per column (≤ Σ m_f/64 rows to the driver — the
-    bloom_build control-plane discipline).
-
-    Returns the manifest's new entry list: ``carried`` + this
-    commit's entry — or, past _BLOOM_MERGE_MIN entries, ONE
-    consolidated entry (all rows still naming ``live_files()`` —
-    a CALLABLE, resolved only here — re-written to a single dir) so
-    per-probe sidecar jobs stay bounded instead of growing
-    O(#bloom-building commits), the _SHARD_MERGE_MIN lesson applied
-    to blooms."""
-    import math as _math
-    import struct as _struct
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    from etfconstituentextractor_spark.operators.bloom import (
-        _MAX_M_BITS,
-        _positions,
-        _shl,
-        bloom_params,
-    )
-
-    df = _read_files(spark, path, files, pby, ptypes, with_meta=True)
-    cols = _validate_bloom_cols(dict(df.dtypes), bloom_cols, pby)
-    counts = df.groupBy("__dvf").count().collect()
-    if not counts:
-        return list(carried)  # empty commit: nothing to cover
-    sizes: dict[str, tuple[int, int]] = {}
-    for r in counts:
-        n = max(1, r["count"])
-        try:
-            mk = bloom_params(n, fpp)
-        except ValueError:
-            # oversized file: clamp instead of failing a commit whose
-            # data is already on disk — fpp degrades, never correctness
-            mb = _MAX_M_BITS
-            mk = (mb, max(1, round(mb / n * _math.log(2.0))))
-        sizes[r["__dvf"]] = mk
-    sizing = spark.createDataFrame(
-        [(f, mk[0], mk[1]) for f, mk in sizes.items()],
-        "__dvf string, __m int, __k int",  # dunder: never collide with data columns
-    )
-
-    blooms: dict[tuple[str, str], list[int]] = {}
-    for c in cols:
-        rows = (
-            df.join(F.broadcast(sizing), "__dvf")
-            .select(
-                "__dvf",
-                F.explode(_positions(F.col(c), F.col("__m"), F.col("__k"))).alias("pos"),
-            )
-            .select(
-                "__dvf",
-                F.shiftright("pos", 6).cast("int").alias("w"),
-                _shl(F.lit(1).cast("bigint"), F.pmod("pos", F.lit(64)).cast("int")).alias(
-                    "mask"
-                ),
-            )
-            .groupBy("__dvf", "w")
-            .agg(F.bit_or("mask").alias("word"))
-            .collect()
-        )
-        for r in rows:
-            words = blooms.setdefault(
-                (r["__dvf"], c), [0] * (sizes[r["__dvf"]][0] // 64)
-            )
-            words[r["w"]] |= r["word"] & ((1 << 64) - 1)
-    out_rows = [
-        (
-            unquote(fe),
-            c,
-            cols[c],
-            sizes[fe][0],
-            sizes[fe][1],
-            bytearray(_struct.pack(f"<{len(words)}Q", *words)),
-        )
-        for (fe, c), words in sorted(blooms.items())
-    ]
-    schema = "f string, col string, dtype string, m int, k int, bloom binary"
-    fresh = spark.createDataFrame(out_rows, schema)
-
-    reldir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
-    if len(carried) + 1 > _BLOOM_MERGE_MIN:
-        # consolidate: every carried sidecar's LIVE rows + this
-        # commit's rows into one dir; dead rows (rewritten/removed
-        # files) drop here, which is also the entry-GC
-        union = fresh
-        for be in carried:
-            union = union.unionByName(
-                spark.read.parquet(posixpath.join(path, be["dir"]))
-            )
-        live = spark.createDataFrame(
-            [(f,) for f in sorted(live_files())], "f string"
-        )
-        union = union.join(F.broadcast(live), "f", "left_semi")
-        union.coalesce(1).write.parquet(posixpath.join(path, reldir))
-        merged_cols: dict[str, str] = {}
-        for be in carried:
-            merged_cols.update(be.get("cols", {}))
-        merged_cols.update(cols)
-        return [{"dir": reldir, "cols": merged_cols}]
-    fresh.coalesce(1).write.parquet(posixpath.join(path, reldir))
-    return list(carried) + [{"dir": reldir, "cols": cols}]
-
-
-def _bloom_entries_for(m: dict, col: str) -> list:
-    return [be for be in m.get("bloom", ()) if col in be.get("cols", {})]
-
-
-def _bloom_eval(spark, path: str, entries: list, col: str, evaluate, file_set: set):
-    """Shared covered/passing accumulator for every bloom consumer:
-    ``evaluate(bdf)`` maps a sidecar frame (f, dtype, m, k, bloom —
-    already filtered to ``col``) to a (f, hit) frame; files outside
-    ``file_set``, rows the evaluator drops, and files with no row at
-    all are conservatively NOT covered. Returns the kept subset rule
-    as (covered, passing) sets — callers keep f when
-    ``f not in covered or f in passing``."""
-    covered: set[str] = set()
-    passing: set[str] = set()
-    from pyspark.sql import functions as F
-
-    for be in entries:
-        bdf = (
-            spark.read.parquet(posixpath.join(path, be["dir"]))
-            .filter(F.col("col") == col)
-            .select("f", "dtype", "m", "k", "bloom")
-        )
-        res = evaluate(bdf, be)
-        if res is None:
-            continue
-        for r in res.collect():
-            if r["f"] in file_set:
-                covered.add(r["f"])
-                if r["hit"]:
-                    passing.add(r["f"])
-    return covered, passing
-
-
-def _bloom_prune(
-    spark: SparkSession, path: str, m: dict, files: list[str], where: tuple
-) -> list[str]:
-    """Point-lookup file skipping from the manifest's bloom sidecars:
-    for an equality probe on a covered column, a file whose bloom
-    proves the value absent drops from the plan. The test runs as ONE
-    tiny Spark job per sidecar over its rows (bounded by file count)
-    using the SAME xxhash64/bit expressions that built the filters —
-    no second hash implementation to diverge. Conservative
-    everywhere: uncovered files, stale rows, dtype-drifted rows, and
-    uncoercible probes all keep. STRING columns prune only for
-    string probes: str() never fails, but a numeric probe on a string
-    column compares under Spark's numeric implicit cast in-plan
-    ('0700' = 700 is TRUE) while the bloom hashed the exact text —
-    coercion there would falsely prune (round-10 second review)."""
-    col, op, val = where
-    if op != "=" or val is None:
-        return files
-    entries = _bloom_entries_for(m, col)
-    if not entries:
-        return files
-    from pyspark.sql import functions as F
-
-    from etfconstituentextractor_spark.operators.bloom import bloom_might_contain
-
-    def evaluate(bdf, be):
-        dtype = be["cols"][col]
-        if dtype == "string" and not isinstance(val, str):
-            return None  # exact-domain probes only on string columns
-        co = _PTYPE_COERCE.get(dtype.split("(")[0])
-        try:
-            typed = co(val) if co else None
-        except (TypeError, ValueError):
-            typed = None
-        if typed is None:
-            return None  # uncoercible probe: this entry cannot prune
-        # dtype must match row-for-row (a consolidated sidecar can
-        # hold the same column under an older dtype — those rows are
-        # ignored, their files conservatively kept)
-        return bdf.filter(F.col("dtype") == dtype).select(
-            "f",
-            bloom_might_contain(
-                F.col("bloom"),
-                F.lit(typed).cast(dtype),
-                m_bits=F.col("m"),
-                k=F.col("k"),
-            ).alias("hit"),
-        )
-
-    covered, passing = _bloom_eval(spark, path, entries, col, evaluate, set(files))
-    return [f for f in files if f not in covered or f in passing]
+            parts.append((None, pm["files"], pm.get("stats", {})))
+    parts.append((None, files, stats))
+    manifest = {
+        "version": version,
+        "op": eff_mode,
+        "parent": parent,
+        **_files_section(fs, jvm, path, version, parts),
+    }
+    if schema_entry is not None:
+        manifest["schema"] = schema_entry
+    if pm is not None and "dv" in pm:
+        # an append extends the parent's file list, so the
+        # parent's deletion vector must ride along — dropping it
+        # here would resurrect every masked row (fresh files can't
+        # collide: DV keys name data/vN-uuid dirs, never reused)
+        manifest["dv"] = pm["dv"]
+    _set_txn(manifest, prev, txn)
+    _publish(fs, jvm, path, version, manifest)
+    return version
 
 
 def _set_txn(manifest: dict, pm: dict | None, txn: tuple[str, int] | None) -> None:
@@ -837,68 +468,41 @@ def _set_txn(manifest: dict, pm: dict | None, txn: tuple[str, int] | None) -> No
 
 
 def _write_data(
-    df: DataFrame,
-    path: str,
-    version: int,
-    stats_cols: list[str] | None,
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, version: int, stats_cols: list[str] | None
 ) -> tuple[list[str], dict]:
     """Write ``df`` into a fresh immutable data dir for ``version``;
-    returns (relative file list, per-file stats for ``stats_cols``).
-    With ``partition_by``, files land under hive-style value
-    directories (``lang=en/part-*.parquet``) INSIDE the version's data
-    dir — the partition values ride the relpaths the manifest already
-    stores, which is exactly what the reader's partition pruning
-    parses (no extra metadata)."""
+    returns (relative file list, per-file stats for ``stats_cols``)."""
     spark = df.sparkSession
     fs, _, jvm = _fs_path(spark, path)
     reldir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
     datadir = posixpath.join(path, reldir)
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(datadir)
+    df.write.parquet(datadir)
     droot = jvm.org.apache.hadoop.fs.Path(datadir)
-    it = fs.listFiles(droot, True)  # recursive: partition subdirs too
-    files = []
-    prefix = fs.getFileStatus(droot).getPath().toUri().getPath()
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if p.getName().endswith(".parquet"):
-            rel_in_dir = p.toUri().getPath()[len(prefix) :].lstrip("/")
-            rel = posixpath.join(reldir, rel_in_dir)
-            files.append(rel)
+    files = [
+        posixpath.join(reldir, st.getPath().getName())
+        for st in fs.listStatus(droot)
+        if st.getPath().getName().endswith(".parquet")
+    ]
     stats: dict[str, dict] = {}
     if stats_cols:
         from pyspark.sql import functions as F
 
-        # partition columns are directory-encoded, not in the data
-        # files — their pruning comes from the relpath, so stats only
-        # cover the remaining columns
-        data_stat_cols = [c for c in stats_cols if c not in (partition_by or [])]
+        prefix = fs.getFileStatus(droot).getPath().toUri().getPath()
         aggs = []
-        for c in data_stat_cols:
+        for c in stats_cols:
             aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-        if aggs:
-            per_file = (
-                spark.read.parquet(datadir)
-                .groupBy(F.input_file_name().alias("__f"))
-                .agg(*aggs)
-                .collect()
-            )
-            # match by full relpath, NEVER basename: the dynamic-
-            # partition writer emits identically-named part files in
-            # every partition dir one task writes, so basenames
-            # collide within a commit and stats would land on the
-            # wrong file — a silent wrong-results pruner (round-9
-            # review finding)
-            for r in per_file:
-                rel = posixpath.join(reldir, _rel_suffix(r["__f"], prefix))
-                stats[rel] = {
-                    c: [_stat_val(r[f"__lo_{c}"]), _stat_val(r[f"__hi_{c}"])]
-                    for c in data_stat_cols
-                }
+        per_file = (
+            spark.read.parquet(datadir)
+            .groupBy(F.input_file_name().alias("__f"))
+            .agg(*aggs)
+            .collect()
+        )
+        for r in per_file:
+            rel = posixpath.join(reldir, _rel_suffix(r["__f"], prefix))
+            stats[rel] = {
+                c: [_stat_val(r[f"__lo_{c}"]), _stat_val(r[f"__hi_{c}"])]
+                for c in stats_cols
+            }
     return files, stats
 
 
@@ -946,8 +550,8 @@ def _publish(fs, jvm, path: str, version: int, manifest: dict) -> None:
     # hardlink-claim there (link(2) fails EEXIST atomically); HDFS
     # rename-without-overwrite is atomic as-is; an object store needs
     # a catalog conditional-put, which is exactly the extra piece real
-    # table formats add. A loser's temp is removed and its data dir is
-    # orphaned garbage for a retention sweep.
+    # table formats add. A loser's temp is removed; its data dir stays
+    # behind as unreferenced garbage.
     if fs.getUri().getScheme() == "file":
         import os
 
@@ -967,54 +571,11 @@ def _publish(fs, jvm, path: str, version: int, manifest: dict) -> None:
             )
 
 
-def _bloom_refine_keyset(spark, path, m, cand, key, kframe, key_dtype):
-    """Drop candidate files whose manifest bloom rejects EVERY key of
-    a bounded key frame — shared by merge's candidate probe and the
-    keyed delete (round 11). Conservative: only when the key column
-    is bloom-covered with a matching recorded dtype and the key set
-    is bounded; the keys ride as ONE collected array joined from a
-    one-row frame so each sidecar row evaluates its own local blob
-    against the array (never the per-(file, key) blob duplication of
-    the documented broadcast-array trap)."""
-    from pyspark.sql import functions as F
-
-    if not (cand and m.get("bloom")):
-        return cand
-    entries = [
-        be for be in m["bloom"] if be.get("cols", {}).get(key) == key_dtype
-    ]
-    if not entries or kframe.count() > 10_000:
-        return cand
-    from etfconstituentextractor_spark.operators.bloom import bloom_might_contain
-
-    kcol_name = kframe.columns[0]
-    karr = kframe.agg(F.collect_list(kcol_name).alias("__ks"))
-
-    def evaluate(bdf, be):
-        return (
-            bdf.filter(F.col("dtype") == key_dtype)
-            .join(F.broadcast(karr))
-            .select(
-                "f",
-                F.exists(
-                    "__ks",
-                    lambda kv: bloom_might_contain(
-                        F.col("bloom"), kv, m_bits=F.col("m"), k=F.col("k")
-                    ),
-                ).alias("hit"),
-            )
-        )
-
-    covered, passing = _bloom_eval(spark, path, entries, key, evaluate, set(cand))
-    return [f for f in cand if f not in covered or f in passing]
-
-
 def snapshot_merge(
     source: DataFrame,
     path: str,
     key: str,
     stats_cols: list[str] | None = None,
-    txn: tuple[str, int] | None = None,
 ) -> int:
     """Row-level MERGE (upsert-by-key, copy-on-write): target rows
     whose ``key`` appears in ``source`` are replaced, all ``source``
@@ -1042,12 +603,14 @@ def snapshot_merge(
     not intended); there is no delete clause (express deletes as an
     overwrite commit of the filtered table). Source columns align to the
     RECORDED table schema: later-added columns the source lacks
-    null-fill, unknown columns raise, and the merge key / partition
-    columns must always be present (never null-filled). Concurrency: same atomic manifest claim as
-    snapshot_commit — a lost race raises ConcurrentCommitError and
-    the caller re-derives against the new latest (the rewrite is
-    against a fixed parent version, so retrying without re-deriving
-    could resurrect rows a concurrent commit replaced).
+    null-fill, unknown columns raise, and the merge key must always be
+    present (never null-filled). ``stats_cols`` records stats for the
+    fresh files exactly as in snapshot_commit. Concurrency: the same
+    atomic manifest claim as snapshot_commit — a lost race raises
+    ConcurrentCommitError and the caller re-derives against the new
+    latest (the rewrite is against a fixed parent version, so retrying
+    without re-deriving could resurrect rows a concurrent commit
+    replaced).
 
     Scale: step 2 reads ONE column of only the stat-surviving files;
     step 3 rewrites only files that genuinely contain matched keys.
@@ -1064,16 +627,6 @@ def snapshot_merge(
     parent = versions[-1]
     version = parent + 1
     m = _read_manifest(fs, jvm, path, parent)
-    if txn is not None:
-        # idempotent-writer replay check, INSIDE the commit path (the
-        # snapshot_commit zombie-writer rule): an already-applied
-        # (writer, seq) no-ops before any scan or write
-        wid, seq = txn
-        last = (m.get("txn") or {}).get(wid)
-        if last is not None and int(seq) <= int(last):
-            return parent
-    pby = m.get("partition_by") or []
-    ptypes = m.get("partition_types")
     tschema = _manifest_schema(m)
     if tschema is not None:
         # align the source to the RECORDED table schema (round 11):
@@ -1089,15 +642,12 @@ def snapshot_merge(
                 f"merge source columns {extra} are not in the table "
                 "schema — evolve the table with an append first"
             )
-        # the KEY and partition columns may never be null-filled: a
-        # source missing its key would silently upsert NULL-key junk
-        # (round-11 second review — reproduced), and a missing
-        # partition column would write __HIVE_DEFAULT_PARTITION__
-        required = sorted(({key} | set(pby)) - have)
-        if required:
+        # the KEY may never be null-filled: a source missing its key
+        # would silently upsert NULL-key junk (round-11 second review
+        # — reproduced)
+        if key not in have:
             raise ValueError(
-                f"merge source is missing required column(s) {required} "
-                "(the merge key and partition columns must be present)"
+                f"merge source is missing required column {key!r} (the merge key)"
             )
         # TYPE alignment (round 12, advice): name-only alignment let a
         # drifted-type source column (int where the table recorded
@@ -1216,21 +766,6 @@ def snapshot_merge(
             # can be touched (the pure-insert branch above also left
             # sharded inventories unloaded for exactly this reason)
             return False
-        if key in pby:
-            # the key value is directory-encoded: range-check the
-            # relpath's own value (stats never cover partition cols,
-            # so without this a partition-keyed merge scanned every
-            # file — round-9 review finding); the exact probe below
-            # still refines survivors
-            pv = _partition_value(f, key)
-            if pv is None or pv == "__HIVE_DEFAULT_PARTITION__":
-                return pv is None  # null partition never matches a key
-            try:
-                typed, tlo = _coerce_pair(pv, lo, (ptypes or {}).get(key))
-                _, thi = _coerce_pair(pv, hi, (ptypes or {}).get(key))
-                return tlo <= typed <= thi
-            except (TypeError, ValueError):
-                return True
         st = stats.get(f, {}).get(key)
         if not st or st[0] is None or st[1] is None:
             return True  # no usable stats: conservatively a candidate
@@ -1240,17 +775,6 @@ def snapshot_merge(
             return True
 
     cand = [f for f in loaded_files if _cand(f)]
-    # bloom refinement before the exact data probe: a candidate file
-    # whose bloom rejects EVERY source key cannot be touched — one
-    # planning job over (sidecar rows x broadcast source keys), so a
-    # point-upsert on a bloomed table scans ~the files that genuinely
-    # hold its keys instead of every stats-survivor. Conservative:
-    # only when the key column is covered, the recorded dtype matches
-    # the source's, and the key set is bounded.
-    if cand and lo is not None:
-        cand = _bloom_refine_keyset(
-            spark, path, m, cand, key, skeys, dict(source.dtypes).get(key)
-        )
     touched: list[str] = []
     if cand:
         # DV-AWARE probe: a row the deletion vector masks must not
@@ -1278,9 +802,7 @@ def snapshot_merge(
         fresh_df = kept_rows.unionByName(source.select(*kept_rows.columns))
     else:
         fresh_df = source
-    new_files, new_stats = _write_data(
-        fresh_df, path, version, stats_cols, partition_by=pby
-    )
+    new_files, new_stats = _write_data(fresh_df, path, version, stats_cols)
 
     touched_set = set(touched)
     # new inventory: range-skipped shards share by ref; loaded shards
@@ -1301,8 +823,6 @@ def snapshot_merge(
         "op": "merge",
         "parent": parent,
         **_files_section(fs, jvm, path, version, parts),
-        "partition_by": pby,
-        "partition_types": ptypes or {},
     }
     if m.get("schema") is not None:
         if widened:
@@ -1326,24 +846,12 @@ def snapshot_merge(
     remaining = {f: n for f, n in dvmap.items() if f not in touched_set}
     if remaining:
         manifest["dv"] = {"dir": dvdir, "files": remaining}
-    if m.get("bloom"):
-        # bloom sidecars carry verbatim: rewritten files simply have
-        # no row (readers keep them conservatively), removed files'
-        # rows never match a planned file
-        manifest["bloom"] = m["bloom"]
-    _set_txn(manifest, m, txn)
+    _set_txn(manifest, m, None)
     _publish(fs, jvm, path, version, manifest)
     return version
 
 
-def snapshot_delete(
-    spark: SparkSession,
-    path: str,
-    where: tuple | None = None,
-    retries: int = 0,
-    keys: tuple | None = None,
-    txn: tuple[str, int] | None = None,
-) -> int:
+def snapshot_delete(spark: SparkSession, path: str, where: tuple) -> int:
     """Row-level DELETE as a merge-on-read commit: rows matching
     ``where=(col, op, value)`` disappear from the new version WITHOUT
     rewriting any data file — their (file, row position) coordinates
@@ -1354,44 +862,27 @@ def snapshot_delete(
     rewrites the whole table; the DV commit costs one pruned scan of
     candidate files plus a write proportional to the DELETED rows.
 
-    Mechanics: manifest stats + partition relpaths prune candidate
-    files (the snapshot_read pruner); a DV-AWARE read of the
-    candidates (already-deleted rows must not re-match) evaluates the
-    predicate and emits (file key, row position); the new version's
-    DV = parent DV ∪ new positions, written to a fresh immutable dir
-    under data/ and published in the manifest as
-    ``dv: {dir, files: {relpath: n_deleted}}``. Data files, stats,
-    and partition spec carry over untouched. Re-deleting the same
-    rows is a no-op by the union-distinct; a delete matching nothing
-    still commits a version (an audit-visible no-op, the table-format
-    convention). Deletes MATERIALIZE at the next rewrite of a file
-    (merge applies the DV and drops that file's coverage).
+    Mechanics: manifest stats prune candidate files (the
+    snapshot_read pruner); a DV-AWARE read of the candidates
+    (already-deleted rows must not re-match) evaluates the predicate
+    and emits (file key, row position); the new version's DV = parent
+    DV ∪ new positions, written to a fresh immutable dir under data/
+    and published in the manifest as
+    ``dv: {dir, files: {relpath: n_deleted}}``. Data files and stats
+    carry over untouched. Re-deleting the same rows is a no-op by the
+    union-distinct; a delete matching nothing still commits a version
+    (an audit-visible no-op, the table-format convention). Deletes
+    MATERIALIZE at the next rewrite of a file (merge applies the DV
+    and drops that file's coverage).
 
     Time travel composes: older manifests carry the older (or no) DV,
     so ``snapshot_read(version=...)`` before the delete still sees
     the rows. Concurrency: the same atomic manifest claim as every
-    commit; ``retries=N`` re-runs the WHOLE derivation against the new
-    latest up to N times on a lost race — a re-derive, not a metadata
-    rebase, because a predicate delete's target set is defined by the
-    predicate, so re-evaluating it against the winner's state (new
-    files included, rewritten positions re-derived) is the correct
-    serializable outcome, and the delete's cost is already just a
-    pruned scan plus a tiny DV write. The lost attempt's DV dir is
-    reclaimed before retrying (it was written under a version that
-    will never publish)."""
-    if (where is None) == (keys is None):
-        raise ValueError("snapshot_delete takes exactly one of where= / keys=")
-    for attempt in range(max(0, int(retries)) + 1):
-        try:
-            return _snapshot_delete_once(spark, path, where, keys, txn)
-        except ConcurrentCommitError:
-            if attempt >= retries:
-                raise
-
-
-def _snapshot_delete_once(
-    spark: SparkSession, path: str, where, keys=None, txn=None
-) -> int:
+    commit — a lost race raises ConcurrentCommitError, and the caller
+    re-derives against the new latest (a predicate delete's target set
+    is defined by the predicate, so re-evaluating it against the
+    winner's state is the serializable outcome). A DV dir written for
+    a version that never publishes is reclaimed on the way out."""
     from pyspark.sql import functions as F
 
     fs, _, jvm = _fs_path(spark, path)
@@ -1401,75 +892,19 @@ def _snapshot_delete_once(
     parent = versions[-1]
     version = parent + 1
     m = _read_manifest(fs, jvm, path, parent)
-    if txn is not None:
-        # idempotent-writer replay check, INSIDE the commit path (the
-        # snapshot_commit zombie-writer rule)
-        wid, seq = txn
-        last = (m.get("txn") or {}).get(wid)
-        if last is not None and int(seq) <= int(last):
-            return parent
-
-    if keys is not None:
-        # keyed delete (round 11 — the CDC-apply shape): rows whose
-        # key column matches any row of a KEY FRAME disappear. The
-        # key set is bounded by the caller's delta (a change feed's
-        # deleted keys), so it localCheckpoints tiny and BROADCASTS;
-        # candidate files prune by the key set's [min, max] bounds
-        # through the same stats machinery as a predicate delete,
-        # then the in-plan membership test is a broadcast semi-join
-        # — never a collected literal list.
-        kcol, kframe = keys
-        # NULL keys match NOTHING (SQL equality semantics — the same
-        # contract as a predicate delete's non-null value); dropping
-        # them here also keeps an all-NULL key frame on the empty
-        # path instead of sending None bounds into the pruner
-        # (round-11 review: snapshot_diff emits a NULL-key phantom
-        # row for null-keyed sources, which reached here as a keyed
-        # delete and crashed)
-        kf = (
-            kframe.select(F.col(kcol).alias("__dk"))
-            .filter(F.col("__dk").isNotNull())
-            .distinct()
-            .localCheckpoint()
-        )
-        klo, khi = kf.agg(F.min("__dk"), F.max("__dk")).first()
-        if klo is None:
-            # empty key set: audit-visible no-op commit, the same
-            # convention as a predicate matching nothing — and no
-            # inventory resolve: nothing below consults the files
-            # when there are no candidates (a sharded table would
-            # otherwise pay O(total files) driver metadata per
-            # empty delta, round-11 review)
-            cand, cand_files, cand_stats = [], [], {}
-        else:
-            bounds = [(kcol, ">=", klo), (kcol, "<=", khi)]
-            cand_files, cand_stats = _resolve(fs, jvm, path, m, where=bounds)
-            cand = cand_files
-            for w in bounds:
-                cand = _prune_files(m, cand, w, stats=cand_stats)
-            # bloom refinement (round 11, shared with merge): on a
-            # bloomed table a keyed delete scans ~the files that
-            # genuinely hold its keys, not every stats-survivor
-            cand = _bloom_refine_keyset(
-                spark, path, m, cand, kcol, kf, dict(kf.dtypes)["__dk"]
-            )
-    else:
-        # shard-level pruning feeds the candidate search: only shards the
-        # probe's bounds cannot prove empty are even loaded
-        cand_files, cand_stats = _resolve(fs, jvm, path, m, where=where)
-        cand = _prune_files(m, cand_files, where, stats=cand_stats)
+    # shard-level pruning feeds the candidate search: only shards the
+    # probe's bounds cannot prove empty are even loaded
+    cand_files, cand_stats = _resolve(fs, jvm, path, m, where=where)
+    cand = _prune_files(cand_files, where, cand_stats)
     dvdir, dvmap = _dv_info(m)
     new_dv = {"dir": dvdir, "files": dvmap} if dvdir else None
-    dv_frame = None
+    reldir = None  # this commit's DV dir, once written
     if cand:
-        scan = _read_data(spark, path, m, cand, keep_meta=True)
-        if keys is not None:
-            scan = scan.join(
-                F.broadcast(kf), F.col(kcol) == F.col("__dk"), "left_semi"
-            )
-        else:
-            scan = scan.filter(_where_cond(where))
-        new_pos = scan.select("__dvf", "__pos")
+        new_pos = (
+            _read_data(spark, path, m, cand, keep_meta=True)
+            .filter(_where_cond(where))
+            .select("__dvf", "__pos")
+        )
         if dvdir is not None:
             old_dv = spark.read.schema(_DV_SCHEMA).parquet(posixpath.join(path, dvdir)).select(
                 "__dvf", "__pos"
@@ -1493,19 +928,20 @@ def _snapshot_delete_once(
             dv_frame = old_dv.unionByName(new_pos).distinct()
         else:
             dv_frame = new_pos.distinct()
-    # no candidates: carry the parent's DV entry verbatim, zero I/O
-
-    if dv_frame is not None:
         reldir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
         # the DV is tiny relative to the data it masks; don't let it
         # inherit the candidate scan's partitioning as many shards
         dv_frame.coalesce(8).write.parquet(posixpath.join(path, reldir))
-        # per-file coverage map: bounded by the file count, driver-safe
-        # — and the keys DECODE to manifest relpaths (file_path is a
-        # percent-encoded URI; the manifest stores decoded paths)
-        from urllib.parse import unquote
+    # no candidates: carry the parent's DV entry verbatim, zero I/O
 
-        try:
+    keep_dir = False
+    try:
+        if reldir is not None:
+            # per-file coverage map: bounded by the file count, safe to collect
+            # — and the keys DECODE to manifest relpaths (file_path is a
+            # percent-encoded URI; the manifest stores decoded paths)
+            from urllib.parse import unquote
+
             counts = (
                 spark.read.parquet(posixpath.join(path, reldir))
                 .groupBy("__dvf")
@@ -1527,61 +963,34 @@ def _snapshot_delete_once(
                         "diverged; refusing to publish a DV that could not be applied"
                     )
                 files_map[rel] = r["count"]
-        except BaseException:
-            # the DV dir was written for a version that will never
-            # publish — on a table where deletes keep failing, every
-            # retry would leak a dir forever (round-10 max review);
-            # reclaim it on the way out
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(posixpath.join(path, reldir)), True
-            )
-            raise
-        if files_map:
-            new_dv = {"dir": reldir, "files": files_map}
-        else:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(posixpath.join(path, reldir)), True)
-
-    # the file inventory is untouched by a DV delete: inline fields
-    # copy over; shard refs share verbatim (zero metadata rewrite)
-    if "shards" in m:
-        sec = {"n_files": m["n_files"], "shards": m["shards"]}
-    else:
-        sec = {
-            "n_files": len(m["files"]),
-            "files": m["files"],
-            "stats": m.get("stats", {}),
-        }
-    manifest = {
-        "version": version,
-        "op": "delete",
-        "parent": parent,
-        **sec,
-        "partition_by": m.get("partition_by") or [],
-        "partition_types": m.get("partition_types") or {},
-    }
-    if m.get("schema") is not None:
-        manifest["schema"] = m["schema"]
-    if new_dv:
-        manifest["dv"] = new_dv
-    if m.get("bloom"):
-        # bloom sidecars carry verbatim: rewritten files simply have
-        # no row (readers keep them conservatively), removed files'
-        # rows never match a planned file
-        manifest["bloom"] = m["bloom"]
-    _set_txn(manifest, m, txn)
-    try:
+            if files_map:
+                new_dv = {"dir": reldir, "files": files_map}
+        # the file inventory is untouched by a DV delete: inline fields
+        # copy over; shard refs share verbatim (zero metadata rewrite)
+        manifest = {"version": version, "op": "delete", "parent": parent, **_inventory(m)}
+        if m.get("schema") is not None:
+            manifest["schema"] = m["schema"]
+        if new_dv:
+            manifest["dv"] = new_dv
+        _set_txn(manifest, m, None)
         _publish(fs, jvm, path, version, manifest)
-    except ConcurrentCommitError:
-        # a lost race orphans this attempt's fresh DV dir (the winner
-        # took this version number) and a retry loop writes one dir
-        # per attempt, so reclaim it rather than letting contention
-        # pile up garbage
-        if new_dv and dv_frame is not None and new_dv["dir"] == reldir:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(posixpath.join(path, reldir)), True
-            )
-        raise
+        keep_dir = bool(new_dv) and new_dv["dir"] == reldir
+    finally:
+        # a failed validation, a lost claim or an empty DV leaves this
+        # dir unreferenced by any published version (round-10 max
+        # review); reclaim it rather than leak one per attempt
+        if reldir is not None and not keep_dir:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(posixpath.join(path, reldir)), True)
     return version
+
+
+def _inventory(m: dict) -> dict:
+    """The manifest's file-inventory fields, for commits that carry a
+    version's inventory unchanged (delete, restore): shard refs share
+    verbatim, inline files and stats copy over."""
+    if "shards" in m:
+        return {"n_files": m["n_files"], "shards": m["shards"]}
+    return {"n_files": len(m["files"]), "files": m["files"], "stats": m.get("stats", {})}
 
 
 def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
@@ -1590,8 +999,8 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     version number (or the current latest unchanged if it already IS
     ``version``). Nothing is rewritten and history is preserved: the
     new manifest references the target version's file inventory
-    (shard refs by name, inline files by relpath — all immutable),
-    deletion vector, and bloom sidecars VERBATIM, so the bad commits
+    (shard refs by name, inline files by relpath — all immutable)
+    and deletion vector VERBATIM, so the bad commits
     being undone remain time-travelable, and the restore itself costs
     O(1) metadata regardless of table size. Raises FileNotFoundError
     if ``version`` was never committed.
@@ -1613,29 +1022,17 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
         return parent  # restoring to the latest is a no-op
     target = _read_manifest(fs, jvm, path, version)  # raises if expired
     latest = _read_manifest(fs, jvm, path, parent)
-    if "shards" in target:
-        sec = {"n_files": target["n_files"], "shards": target["shards"]}
-    else:
-        sec = {
-            "n_files": len(target["files"]),
-            "files": target["files"],
-            "stats": target.get("stats", {}),
-        }
     manifest = {
         "version": parent + 1,
         "op": "restore",
         "parent": parent,
         "restored_from": version,
-        **sec,
-        "partition_by": target.get("partition_by") or [],
-        "partition_types": target.get("partition_types") or {},
+        **_inventory(target),
     }
     if target.get("schema") is not None:
         manifest["schema"] = target["schema"]
     if "dv" in target:
         manifest["dv"] = target["dv"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
     _set_txn(manifest, latest, None)
     _publish(fs, jvm, path, parent + 1, manifest)
     return parent + 1
@@ -1645,41 +1042,19 @@ def _read_files(
     spark: SparkSession,
     path: str,
     files: list[str],
-    pby: list[str],
-    ptypes: dict | None = None,
     merge_schema: bool = False,
     with_meta: bool = False,
     schema=None,
 ) -> DataFrame:
-    """Plan exactly ``files``. Unpartitioned tables are one reader
-    call. Partitioned tables need one reader PER VERSION DATA DIR —
-    partition discovery walks up from each leaf collecting k=v
-    segments and stops at the first non-k=v segment, so a single
-    basePath cannot span two ``data/vN-uuid`` dirs (measured:
-    CONFLICTING_DIRECTORY_STRUCTURES) — unioned by name. Partition
-    VALUE type inference is disabled for the read and the manifest's
-    recorded ``partition_types`` are cast back instead: inference is
-    per-read (a dir holding only '1','2' infers int while a sibling
-    holding 'en' infers string), which would make the union's schema
-    depend on which files survived pruning.
+    """Plan exactly ``files`` in one reader call.
 
     ``with_meta`` appends ``__dvf`` (the file's manifest-relpath key
     derived from _metadata.file_path) and ``__pos``
     (_metadata.row_index) — the deletion-vector coordinates. The
-    projection happens per READER frame, before any union: _metadata
-    is a scan-relation pseudo-column and does not survive unions."""
-    from collections import defaultdict
-
+    projection happens on the READER frame, before any union:
+    _metadata is a scan-relation pseudo-column and does not survive
+    unions."""
     from pyspark.sql import functions as F
-
-    def meta_cols(df: DataFrame) -> DataFrame:
-        if not with_meta:
-            return df
-        return df.select(
-            "*",
-            F.regexp_extract(F.col("_metadata.file_path"), _DV_KEY_RE, 1).alias("__dvf"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
 
     reader = spark.read
     if merge_schema:
@@ -1690,32 +1065,14 @@ def _read_files(
         # null-fill them (schema-on-read). merge_schema callers opt
         # out: their point is discovering what the footers hold.
         reader = reader.schema(schema)
-    if not pby:
-        return meta_cols(reader.parquet(*[posixpath.join(path, f) for f in files]))
-    by_dir: dict[str, list[str]] = defaultdict(list)
-    for f in files:
-        by_dir["/".join(f.split("/")[:2])].append(f)
-    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        parts = [
-            meta_cols(
-                reader.option("basePath", posixpath.join(path, d)).parquet(
-                    *[posixpath.join(path, f) for f in fl]
-                )
-            )
-            for d, fl in sorted(by_dir.items())
-        ]
-    finally:
-        spark.conf.set(conf_key, old)
-    df = parts[0]
-    for q in parts[1:]:
-        df = df.unionByName(q, allowMissingColumns=merge_schema)
-    for c, t in (ptypes or {}).items():
-        if c in df.columns:
-            df = df.withColumn(c, F.col(c).cast(t))
-    return df
+    df = reader.parquet(*[posixpath.join(path, f) for f in files])
+    if not with_meta:
+        return df
+    return df.select(
+        "*",
+        F.regexp_extract(F.col("_metadata.file_path"), _DV_KEY_RE, 1).alias("__dvf"),
+        F.col("_metadata.row_index").alias("__pos"),
+    )
 
 
 def _dv_info(m: dict) -> tuple[str | None, dict]:
@@ -1869,109 +1226,26 @@ def _read_data(
     deletion vector on (file key, row position); uncovered files read
     plain and pay nothing. ``keep_meta`` keeps the ``__dvf``/``__pos``
     coordinate columns on the result (both branches)."""
-    from pyspark.sql import functions as F
-
-    pby = m.get("partition_by") or []
-    ptypes = m.get("partition_types")
     schema = _manifest_schema(m)
     dvdir, dvmap = _dv_info(m)
     covered = [f for f in files if f in dvmap]
     if not covered:
         return _read_files(
-            spark, path, files, pby, ptypes, merge_schema,
-            with_meta=keep_meta, schema=schema,
+            spark, path, files, merge_schema, with_meta=keep_meta, schema=schema
         )
     uncovered = [f for f in files if f not in dvmap]
     dv = spark.read.schema(_DV_SCHEMA).parquet(posixpath.join(path, dvdir))
     cdf = _read_files(
-        spark, path, covered, pby, ptypes, merge_schema,
-        with_meta=True, schema=schema,
+        spark, path, covered, merge_schema, with_meta=True, schema=schema
     ).join(dv, ["__dvf", "__pos"], "left_anti")
     if not keep_meta:
         cdf = cdf.drop("__dvf", "__pos")
     if not uncovered:
         return cdf
     udf = _read_files(
-        spark, path, uncovered, pby, ptypes, merge_schema,
-        with_meta=keep_meta, schema=schema,
+        spark, path, uncovered, merge_schema, with_meta=keep_meta, schema=schema
     )
     return cdf.unionByName(udf, allowMissingColumns=merge_schema)
-
-
-#: python coercers per Spark simpleString partition type — comparison
-#: happens in the COLUMN's recorded domain, never the probe's: a
-#: string probe on a bigint partition column must compare numerically
-#: (like the in-plan filter's implicit cast), not lexically (round-9
-#: review finding: lexical '100' < '85' pruned files whose rows the
-#: filter would have returned).
-def _parse_bool(v) -> bool:
-    if isinstance(v, bool):
-        return v
-    low = str(v).lower()
-    if low in ("true", "false"):
-        return low == "true"
-    raise ValueError(v)
-
-
-_PTYPE_COERCE = {
-    "tinyint": int,
-    "smallint": int,
-    "int": int,
-    "bigint": int,
-    "float": float,
-    "double": float,
-    "boolean": _parse_bool,
-    "string": str,
-}
-
-
-def _coerce_pair(pv: str, val, ptype: str | None):
-    """(partition value, probe value) coerced into the partition
-    column's recorded type domain; raises on unknown types or
-    uncoercible values (callers keep the file)."""
-    co = _PTYPE_COERCE.get(ptype or "")
-    if co is None:
-        raise ValueError(f"no coercion for partition type {ptype!r}")
-    return co(pv), co(val)
-
-
-def _unescape_hive(s: str) -> str:
-    """Decode hive path-segment escaping (mirror of Spark's
-    ``ExternalCatalogUtils.unescapePathName``): the partition writer
-    percent-encodes chars that are unsafe in paths (':' -> '%3A',
-    '%' -> '%25', '=' -> '%3D', ...), so the segment stores the
-    ENCODING, not the value. Pruning must compare the value — a
-    ':'-bearing string partition (e.g. a timestamp-shaped string)
-    otherwise compares unequal to every probe and its file is
-    silently skipped, which the post-read filter cannot rescue.
-    Invalid %XX sequences pass through literally, exactly as Spark's
-    decoder does."""
-    if "%" not in s:
-        return s
-    out = []
-    i, n = 0, len(s)
-    while i < n:
-        if s[i] == "%" and i + 2 < n:
-            try:
-                out.append(chr(int(s[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(s[i])
-        i += 1
-    return "".join(out)
-
-
-def _partition_value(relpath: str, col: str) -> str | None:
-    """The (unescaped) value of ``col`` in a manifest relpath
-    (``data/v..-x/lang=en/part-...`` -> 'en'), or None if absent.
-    ``__HIVE_DEFAULT_PARTITION__`` (the null sentinel) carries no
-    escapes and passes through for the callers' explicit check."""
-    for seg in relpath.split("/")[:-1]:
-        if seg.startswith(col + "="):
-            return _unescape_hive(seg[len(col) + 1 :])
-    return None
 
 
 #: file-skip rules per predicate op: skip when the file's [lo, hi]
@@ -2013,8 +1287,6 @@ def snapshot_read(
             raise FileNotFoundError(f"{path} has no committed versions")
         version = versions[-1]
     m = _read_manifest(fs, jvm, path, version)
-    pby = m.get("partition_by") or []
-    ptypes = m.get("partition_types")
     if m["n_files"] == 0:
         # a zero-output-partition commit can list no files; surface it
         # rather than letting spark.read.parquet() fail obscurely (or
@@ -2026,9 +1298,7 @@ def snapshot_read(
     # file-level skipping, the manifest-list half of the design
     files, stats = _resolve(fs, jvm, path, m, where=wlist)
     for w in wlist:
-        files = _prune_files(m, files, w, stats=stats)
-        if files and m.get("bloom"):
-            files = _bloom_prune(spark, path, m, files, w)
+        files = _prune_files(files, w, stats)
     if not files:
         # everything pruned: an empty frame with the table's schema.
         # merge_schema needs EVERY file's footer (round-9 finding:
@@ -2044,8 +1314,7 @@ def snapshot_read(
         else:
             all_files = m["files"][:1]
         df = _read_files(
-            spark, path, all_files, pby, ptypes, merge_schema,
-            schema=_manifest_schema(m),
+            spark, path, all_files, merge_schema, schema=_manifest_schema(m)
         ).limit(0)
     else:
         df = _read_data(spark, path, m, files, merge_schema)
@@ -2069,46 +1338,19 @@ def _normalize_where(where) -> list[tuple]:
     return [tuple(w) for w in where]
 
 
-def _prune_files(
-    m: dict, files: list[str], where: tuple, stats: dict | None = None
-) -> list[str]:
-    """The subset of ``files`` whose manifest metadata (partition
-    relpath values, column stats) cannot PROVE empty under
-    ``where=(col, op, value)`` — shared by snapshot_read and
-    snapshot_delete. Conservative in every uncertain case; callers
-    must still apply the predicate in-plan. ``stats`` overrides the
-    manifest's inline stats (sharded manifests resolve them
-    separately)."""
+def _prune_files(files: list[str], where: tuple, stats: dict) -> list[str]:
+    """The subset of ``files`` whose column ``stats`` cannot PROVE
+    empty under ``where=(col, op, value)`` — shared by snapshot_read
+    and snapshot_delete. Conservative in every uncertain case; callers
+    must still apply the predicate in-plan."""
     col, op, val = where
     if val is None:
         raise ValueError("where value must not be None (use a filter for null semantics)")
     if op not in _PRUNE_SKIP:
         raise ValueError(f"op must be one of {sorted(_PRUNE_SKIP)}, got {op!r}")
     skip = _PRUNE_SKIP[op]
-    if stats is None:
-        stats = m.get("stats", {})
-    pby = m.get("partition_by") or []
-    ptypes = m.get("partition_types")
 
     def keep(f: str) -> bool:
-        if col in pby:
-            # partition pruning: the value is directory-encoded in
-            # the relpath the manifest already stores — parse and
-            # compare BOTH sides in the column's recorded type
-            # domain (the in-plan filter casts the probe to the
-            # column type; pruning must mirror that, or a string
-            # probe on a numeric partition compares lexically)
-            pv = _partition_value(f, col)
-            if pv is None:
-                return True  # segment missing: conservatively keep
-            if pv == "__HIVE_DEFAULT_PARTITION__":
-                # null partition: no comparison predicate matches
-                return False
-            try:
-                typed, tval = _coerce_pair(pv, val, (ptypes or {}).get(col))
-                return not skip(typed, typed, tval)
-            except (TypeError, ValueError):
-                return True
         st = stats.get(f, {}).get(col)
         if not st or st[0] is None or st[1] is None:
             return True  # no usable stats: conservatively keep
@@ -2143,12 +1385,15 @@ def _last_txn(spark: SparkSession, path: str, writer_id: str) -> int | None:
     return int(v) if v is not None else None
 
 
+#: attempts snapshot_stream_ingest's handler makes per batch when a
+#: concurrent committer keeps winning the version claim
+_INGEST_RETRIES = 5
+
+
 def snapshot_stream_ingest(
     path: str,
     writer_id: str,
     stats_cols: list[str] | None = None,
-    partition_by: list[str] | None = None,
-    max_retries: int = 5,
 ):
     """EXACTLY-ONCE streaming ingest into a snapshot table: a
     ``writeStream.foreachBatch`` handler that appends each micro-batch
@@ -2166,7 +1411,8 @@ def snapshot_stream_ingest(
     batch_id) no matter how often it is delivered. Different
     writer_ids compose (two streams into one table keep separate
     watermarks); a concurrent committer racing a batch surfaces as
-    ConcurrentCommitError and the batch RE-CHECKS then retries — the
+    ConcurrentCommitError and the batch RE-CHECKS then retries (up to
+    _INGEST_RETRIES attempts) — the
     recheck is what makes the retry safe, since the loser's winner
     may have been this writer's own earlier attempt completing.
 
@@ -2178,7 +1424,7 @@ def snapshot_stream_ingest(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        for attempt in range(max_retries):
+        for attempt in range(_INGEST_RETRIES):
             last = _last_txn(spark, path, writer_id)
             if last is not None and batch_id <= last:
                 return  # redelivered batch: already committed
@@ -2188,12 +1434,11 @@ def snapshot_stream_ingest(
                     path,
                     mode="append",
                     stats_cols=stats_cols,
-                    partition_by=partition_by,
                     txn=(writer_id, int(batch_id)),
                 )
                 return
             except ConcurrentCommitError:
-                if attempt == max_retries - 1:
+                if attempt == _INGEST_RETRIES - 1:
                     raise
                 continue  # re-check the watermark against the new latest
 
@@ -2252,12 +1497,6 @@ def snapshot_changes(
     added = sorted(set1 - set0)
     common = set0 & set1
 
-    def _empty_like(m, files):
-        # zero-row frame with the version's schema (footer reads only)
-        return _read_files(
-            spark, path, files, m.get("partition_by") or [], m.get("partition_types")
-        ).limit(0)
-
     old_side = _read_data(spark, path, m0, removed) if removed else None
     new_side = _read_data(spark, path, m1, added) if added else None
 
@@ -2278,15 +1517,7 @@ def snapshot_changes(
             )
             new_mask = new_mask.join(old_mask, ["__dvf", "__pos"], "left_anti")
         newly_masked = (
-            _read_files(
-                spark,
-                path,
-                grown,
-                m1.get("partition_by") or [],
-                m1.get("partition_types"),
-                with_meta=True,
-                schema=_manifest_schema(m1),
-            )
+            _read_files(spark, path, grown, with_meta=True, schema=_manifest_schema(m1))
             .join(new_mask, ["__dvf", "__pos"])
             .drop("__dvf", "__pos")
         )
@@ -2298,8 +1529,8 @@ def snapshot_changes(
     # footer-planning every file of its version: when nothing was
     # added, the to-version's files are a subset of the from-version's
     # (and vice versa), so the present side's schema covers the shared
-    # compare columns exactly — the all-footer _empty_like plan is
-    # needed only when BOTH sides are empty (a no-change range)
+    # compare columns exactly — the all-footer plan of the to-version
+    # is needed only when BOTH sides are empty (a no-change range)
     if old_side is None and new_side is not None:
         old_side = spark.createDataFrame([], new_side.schema)
     elif new_side is None and old_side is not None:
@@ -2309,6 +1540,6 @@ def snapshot_changes(
             raise FileNotFoundError(
                 f"versions {v_from}/{v_to} of {path} have no data files to diff"
             )
-        new_side = _empty_like(m1, files1)
+        new_side = _read_files(spark, path, files1).limit(0)
         old_side = spark.createDataFrame([], new_side.schema)
     return snapshot_diff(old_side, new_side, keys=keys)

@@ -8,8 +8,8 @@ reached by nothing but its own tests, so it must either become a leg of
 a registered query or be deleted.
 
 One cluster is named as outside the catalog on purpose: the lossless
-image codecs ``gif``, ``png`` and ``vp8l``, which no query decodes
-through and which are checked by their own tests only. The test pins
+image codecs ``png`` and ``vp8l``, which no query decodes through and
+which are checked by their own tests only. The test pins
 that set exactly, so a new unreached module fails it, and so does a
 named module that is deleted or wired in without the name leaving the
 list.
@@ -17,9 +17,11 @@ list.
 The graph is static: it parses every ``.py`` file under the package and
 follows ``import`` / ``from ... import`` statements anywhere in the
 file, including those inside function bodies, without importing
-anything. ``sources/snapshot_table.py`` is also checked per function:
-each of its public functions must be imported by name inside that
-closure.
+anything. ``sources/snapshot_table.py`` is also checked per function
+and per parameter: each of its public functions must be imported by
+name inside that closure, and each of their optional parameters must be
+passed by some call there, apart from the ``TEST_TIER_PARAMS`` its
+tests alone set.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ PKG_DIR = Path(__file__).resolve().parents[1] / PKG
 
 OUTSIDE_CATALOG = frozenset(
     f"{PKG}.operators.{m}"
-    for m in ("gif", "png", "vp8l")
+    for m in ("png", "vp8l")
 )
 
 
@@ -133,6 +135,75 @@ def test_every_snapshot_table_function_is_reached_by_the_catalog():
         f"no registered query reaches {unreached}; wire each into a "
         "hash-checked query or delete it"
     )
+
+
+#: optional snapshot_table parameters only tests set; shrink-only, like
+#: OUTSIDE_CATALOG — an entry the catalog starts passing, or that is
+#: deleted, must leave the set
+TEST_TIER_PARAMS = {
+    "snapshot_merge.stats_cols": "merge-then-prune tests; q86 never prunes a merged table",
+    "snapshot_read.merge_schema": "footer-merged reads of untracked schemas; catalog tables record one",
+    "snapshot_stream_ingest.stats_cols": "prune-after-ingest tests; q15 reads its ingest table whole",
+}
+
+
+def _optional_params(fn: ast.FunctionDef) -> tuple[list[str], set[str]]:
+    """(positional parameter names in order, names with a default)."""
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    optional = set(pos[len(pos) - len(fn.args.defaults) :])
+    optional |= {
+        a.arg for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None
+    }
+    return pos, optional
+
+
+def _passed_params(path: Path, funcs: dict[str, list[str]]) -> set[str]:
+    """``func.param`` for every parameter a call in ``path`` gives to
+    one of ``funcs`` ({name: positional parameter names}), by keyword
+    or by position."""
+    passed: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name not in funcs:
+            continue
+        for i, a in enumerate(node.args):
+            if isinstance(a, ast.Starred):
+                break
+            if i < len(funcs[name]):
+                passed.add(f"{name}.{funcs[name][i]}")
+        passed.update(f"{name}.{kw.arg}" for kw in node.keywords if kw.arg)
+    return passed
+
+
+def test_every_snapshot_table_option_is_passed_by_the_catalog():
+    """Parameter-level reach for ``sources/snapshot_table.py``: every
+    optional parameter of a public function is passed, by keyword or
+    by position, by a call in a module the catalog reaches (calls
+    inside the module itself do not count), or is named in
+    ``TEST_TIER_PARAMS``."""
+    mods = _module_files()
+    name = f"{PKG}.sources.snapshot_table"
+    tree = ast.parse(mods[name].read_text())
+    funcs = {
+        n.name: _optional_params(n)
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+    }
+    optional = {f"{fn}.{p}" for fn, (_, opts) in funcs.items() for p in opts}
+    positional = {fn: pos for fn, (pos, _) in funcs.items()}
+    passed = set().union(
+        *(_passed_params(mods[m], positional) for m in _catalog_closure(mods) if m != name)
+    )
+    unpassed = sorted(optional - passed - set(TEST_TIER_PARAMS))
+    assert not unpassed, (
+        f"no registered query passes {unpassed}; delete each option or "
+        "pass it from a hash-checked query"
+    )
+    stale = sorted(set(TEST_TIER_PARAMS) - (optional - passed))
+    assert not stale, f"drop these from TEST_TIER_PARAMS: {stale}"
 
 
 #: the modules that may resolve the process temp dir: the derived-state

@@ -127,18 +127,10 @@ def test_binaryfile_source_decode(spark, tmp_path):
     rows = {r.doc_id: r for r in decode_blobs(blobs).collect()}
     assert rows[0].error is None and rows[0].payload_len == 11
     assert rows[0].payload_md5 == hashlib.md5(payloads[0]).hexdigest()
+    # stub dimensions derive from the payload length
+    assert (rows[0].width, rows[0].height) == (11 % 640 + 1, 11 % 480 + 1)
     assert rows[1].payload_len == len(payloads[1])
     assert rows[2].error == "bad_magic" and rows[2].payload_md5 is None
-
-
-def test_decode_stub_refuses_real_decode():
-    import pytest
-
-    from etfconstituentextractor_spark.plans.multimodal import _decode_meta
-
-    assert _decode_meta(b"abc") == (3 % 640 + 1, 3 % 480 + 1)
-    with pytest.raises(NotImplementedError):
-        _decode_meta(b"abc", real_decode=True)
 
 
 def test_connected_components_micro(spark):

@@ -1,7 +1,6 @@
 """Versioned snapshot tables (sources/snapshot_table.py): commit
 protocol, snapshot isolation, time travel, merge, deletion vectors,
-manifest sharding, blooms, exactly-once ingest, restore and the change
-feed. Tests inspect a table's history through ``snapshot_read`` or its
+manifest sharding, exactly-once ingest, restore and the change feed. Tests inspect a table's history through ``snapshot_read`` or its
 ``_manifests/vNNNNNNNN.json`` files."""
 
 from __future__ import annotations
@@ -45,14 +44,12 @@ def _watermark(t, writer_id):
 
 def _unreferenced_data_dirs(t):
     """Top-level ``data/`` dirs no manifest references through its
-    inline files, deletion vector or bloom sidecars (tables here are
-    never sharded)."""
+    inline files or deletion vector (tables here are never sharded)."""
     live = set()
     for m in _manifests(t):
         live.update("/".join(f.split("/")[:2]) for f in m["files"])
         if m.get("dv"):
             live.add(m["dv"]["dir"])
-        live.update(b["dir"] for b in m.get("bloom") or [])
     return {f"data/{d}" for d in os.listdir(os.path.join(t, "data"))} - live
 
 
@@ -75,6 +72,10 @@ def test_versions_are_immutable_and_time_travelable(spark, tmp_path):
     assert [m["version"] for m in meta] == [0, 1, 2]
     assert [m["op"] for m in meta] == ["overwrite", "append", "overwrite"]
     assert meta[1]["parent"] == 0
+
+    # an empty append still commits a version, and reads are unchanged
+    assert snapshot_commit(_df(spark, []), t, mode="append") == 3
+    assert ids() == [9]
 
 
 def test_first_append_is_a_plain_write_and_missing_version_raises(spark, tmp_path):
@@ -102,17 +103,20 @@ def test_concurrent_commit_loser_raises_and_table_stays_consistent(spark, tmp_pa
     real_read = st._read_manifest
     raced = {"done": False}
 
-    def racing_read(fs, jvm, table, version):
-        m = real_read(fs, jvm, table, version)
-        # the loser reads its parent manifest AFTER picking its
-        # version number and BEFORE publishing — exactly the race
-        # window; sneak in the competing commit ONCE here
-        if not raced["done"]:
-            raced["done"] = True
-            snapshot_commit(_df(spark, [(7, "w")]), t, mode="append")
-        return m
+    def racing_read_into(table_path):
+        def racing_read(fs, jvm, table, version):
+            m = real_read(fs, jvm, table, version)
+            # the loser reads its parent manifest AFTER picking its
+            # version number and BEFORE publishing — exactly the race
+            # window; sneak in the competing commit ONCE here
+            if not raced["done"]:
+                raced["done"] = True
+                snapshot_commit(_df(spark, [(7, "w")]), table_path, mode="append")
+            return m
 
-    st._read_manifest = racing_read
+        return racing_read
+
+    st._read_manifest = racing_read_into(t)
     try:
         with pytest.raises(ConcurrentCommitError):
             snapshot_commit(_df(spark, [(2, "l")]), t, mode="append")
@@ -122,6 +126,21 @@ def test_concurrent_commit_loser_raises_and_table_stays_consistent(spark, tmp_pa
     # the winner's commit is version 1; the loser left no manifest
     assert [m["version"] for m in _manifests(t)] == [0, 1]
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1, 7]
+
+    # a DV delete that loses the claim raises too, and reclaims the DV
+    # dir it wrote for the version it never published
+    d = str(tmp_path / "dtbl")
+    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(6)]), d, stats_cols=["id"])
+    raced["done"] = False
+    st._read_manifest = racing_read_into(d)
+    try:
+        with pytest.raises(ConcurrentCommitError):
+            st.snapshot_delete(spark, d, where=("id", "<", 3))
+    finally:
+        st._read_manifest = real_read
+    assert [m["version"] for m in _manifests(d)] == [0, 1]
+    assert sorted(r.id for r in snapshot_read(spark, d).collect()) == [0, 1, 2, 3, 4, 5, 7]
+    assert _unreferenced_data_dirs(d) == set(), "the lost delete leaked its DV dir"
 
 
 def test_reader_ignores_uncommitted_writer_garbage(spark, tmp_path):
@@ -339,70 +358,6 @@ def test_merge_matches_full_recompute_property(spark, tmp_path):
     assert got == want
 
 
-def test_partitioned_commits_prune_and_merge(spark, tmp_path):
-    """partition_by tables: files land under k=v dirs inside each
-    version dir, readers reconstruct the column via basePath,
-    equality `where` on the partition column prunes by the relpath
-    alone (no stats needed), appends must repeat the spec, and MERGE
-    preserves the layout (rewritten files land partitioned too)."""
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-    )
-
-    t = str(tmp_path / "tbl")
-    base = spark.range(0, 300).select(
-        "id", (F.col("id") % 3).cast("string").alias("lang")
-    )
-    snapshot_commit(base, t, mode="overwrite", stats_cols=["id"], partition_by=["lang"])
-    m0 = json.load(open(f"{t}/_manifests/v00000000.json"))
-    assert m0["partition_by"] == ["lang"]
-    assert all("/lang=" in f for f in m0["files"])
-    # stats exclude the directory-encoded column, cover the data one
-    assert all("lang" not in st for st in m0["stats"].values())
-    assert all("id" in st for st in m0["stats"].values())
-
-    full = snapshot_read(spark, t)
-    assert set(full.columns) == {"id", "lang"}
-    pr = snapshot_read(spark, t, where=("lang", "=", "1"))
-    assert len(pr.inputFiles()) < len(full.inputFiles())
-    assert all("lang=1" in f for f in pr.inputFiles())
-    assert sorted(r.id for r in pr.collect()) == [i for i in range(300) if i % 3 == 1]
-
-    with pytest.raises(ValueError):
-        snapshot_commit(base, t, mode="append")  # spec must repeat
-
-    src = spark.range(0, 30).select(
-        "id", F.lit("9").alias("lang")  # moves ids 0..29 to a new partition
-    )
-    v = snapshot_merge(src, t, key="id", stats_cols=["id"])
-    m1 = json.load(open(f"{t}/_manifests/v{v:08d}.json"))
-    assert m1["partition_by"] == ["lang"]
-    assert all("/lang=" in f for f in m1["files"])
-    got = {(r.id, r.lang) for r in snapshot_read(spark, t, v).collect()}
-    want = {(i, str(i % 3)) for i in range(30, 300)} | {(i, "9") for i in range(30)}
-    assert got == want
-
-    # PARTITION SPEC EVOLUTION across overwrites: each version's
-    # manifest carries its own spec, reads are per version dir, and
-    # appends enforce the CURRENT spec
-    vu = snapshot_commit(
-        spark.range(500, 510).selectExpr("id", "'z' AS lang"), t, mode="overwrite"
-    )
-    assert sorted(r.id for r in snapshot_read(spark, t, vu).collect()) == list(range(500, 510))
-    assert snapshot_read(spark, t, v).count() == 300  # time travel across the change
-    with pytest.raises(ValueError, match="partition_by"):
-        snapshot_commit(
-            spark.range(5).selectExpr("id", "'q' AS lang"), t, mode="append",
-            partition_by=["lang"],
-        )
-    snapshot_commit(
-        spark.range(40, 50).selectExpr("id", "CAST(id % 5 AS STRING) AS lang"), t,
-        mode="overwrite", partition_by=["lang"],
-    )
-    assert snapshot_read(spark, t).count() == 10
-
-
 def test_prune_equals_full_filter_property(spark, tmp_path):
     """Hypothesis-style sweep (deterministic grid — the operators are
     deterministic, so a grid beats sampling): for every op and a
@@ -436,92 +391,6 @@ def test_prune_equals_full_filter_property(spark, tmp_path):
                 assert got == want, (col, op, val, len(got), len(want))
 
 
-def test_bool_partition_pruning(spark, tmp_path):
-    """Round-9 review regression: bool('false') is True — the False
-    partition must NOT be pruned away when probed with where=(...,
-    '=', False)."""
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 40).select("id", (F.col("id") % 2 == 0).alias("flag"))
-    snapshot_commit(df, t, mode="overwrite", partition_by=["flag"])
-    got = sorted(
-        r.id for r in snapshot_read(spark, t, where=("flag", "=", False)).collect()
-    )
-    assert got == [i for i in range(40) if i % 2 == 1]
-    # and the True probe prunes to the flag=true files only
-    pr = snapshot_read(spark, t, where=("flag", "=", True))
-    assert all("flag=true" in f for f in pr.inputFiles())
-
-
-def test_stats_survive_basename_collisions(spark, tmp_path):
-    """Round-9 review regression: one task writing several partition
-    dirs emits identically-named part files — stats must key on the
-    full relpath, or one file's range lands on its sibling and the
-    pruner silently drops real rows."""
-
-    t = str(tmp_path / "tbl")
-    # coalesce(1): ONE task writes both partition dirs -> same part
-    # basename in each
-    df = (
-        spark.range(0, 100)
-        .select("id", F.when(F.col("id") < 50, "a").otherwise("b").alias("p"))
-        .coalesce(1)
-    )
-    snapshot_commit(df, t, mode="overwrite", stats_cols=["id"], partition_by=["p"])
-    m = json.load(open(f"{t}/_manifests/v00000000.json"))
-    import posixpath
-
-    names = [posixpath.basename(f) for f in m["files"]]
-    assert len(set(names)) < len(names), "fixture must collide basenames"
-    by_part = {f.split("/")[2]: m["stats"][f]["id"] for f in m["files"]}
-    assert by_part["p=a"] == [0, 49]
-    assert by_part["p=b"] == [50, 99]
-    # the pruner that would have broken: id >= 60 must return 60..99
-    got = sorted(r.id for r in snapshot_read(spark, t, where=("id", ">=", 60)).collect())
-    assert got == list(range(60, 100))
-
-
-def test_merge_on_partition_key_prunes_candidates(spark, tmp_path):
-    """Round-9 review: merging ON the partition column must prune
-    candidates by the relpath value (stats never cover partition
-    cols), and only the matched partition's files rewrite."""
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 90).select(
-        (F.col("id") % 3).alias("lang"), F.col("id").alias("payload")
-    )
-    snapshot_commit(df, t, mode="overwrite", partition_by=["lang"])
-    m0 = json.load(open(f"{t}/_manifests/v00000000.json"))
-    src = spark.createDataFrame([(1, -1)], "lang bigint, payload bigint")
-    v = snapshot_merge(src, t, key="lang")
-    m1 = json.load(open(f"{t}/_manifests/v{v:08d}.json"))
-    carried = set(m0["files"]) & set(m1["files"])
-    # every lang=0 and lang=2 file carried; every lang=1 file rewritten
-    assert all("lang=1" not in f for f in carried)
-    assert {f for f in m0["files"] if "lang=1" not in f} <= carried
-    got = {(r.lang, r.payload) for r in snapshot_read(spark, t, v).collect()}
-    want = {(i % 3, i) for i in range(90) if i % 3 != 1} | {(1, -1)}
-    assert got == want
-
-
-def test_partition_pruning_compares_in_column_domain(spark, tmp_path):
-    """Round-9 review regression: a STRING probe on a NUMERIC
-    partition column must compare numerically (mirroring the in-plan
-    filter's cast), not lexically — lexical '100' < '85' pruned files
-    whose rows the filter returns."""
-    t = str(tmp_path / "tbl")
-    df = spark.range(80, 130).select("id", (F.col("id")).alias("bucket"))
-    snapshot_commit(df, t, mode="overwrite", partition_by=["bucket"])
-    got = sorted(
-        int(r.id)
-        for r in snapshot_read(spark, t, where=("bucket", ">=", "85")).collect()
-    )
-    assert got == list(range(85, 130))
-
-
 def test_non_primitive_stats_record_none_not_strings(spark, tmp_path):
     """Round-9 review regression: stats over a DECIMAL column must
     record as unusable (None) rather than stringified bounds — a
@@ -541,46 +410,6 @@ def test_non_primitive_stats_record_none_not_strings(spark, tmp_path):
         int(r.id) for r in snapshot_read(spark, t, where=("amt", ">=", "50.00")).collect()
     )
     assert got == list(range(50, 100))
-
-
-def test_partition_values_with_reserved_chars_roundtrip(spark, tmp_path):
-    """Round-10 advice regression: Spark hive-escapes reserved chars
-    in partition dir names ('k=a:b' -> 'k=a%3Ab'); the pruner must
-    compare the UNESCAPED value, or an equality probe on e.g. a
-    timestamp-shaped string partition silently skips every file —
-    and the post-read filter cannot rescue a file that was never
-    planned. Merge keyed on such a column must likewise still find
-    the files that genuinely contain matched keys."""
-
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_merge,
-    )
-
-    t = str(tmp_path / "tbl")
-    vals = ["2024-01-01 10:00:00", "a:b", "50%", "x=y", "plain"]
-    rows = [(i, vals[i % len(vals)]) for i in range(20)]
-    df = spark.createDataFrame(rows, "id int, k string")
-    snapshot_commit(df, t, mode="overwrite", stats_cols=["id"], partition_by=["k"])
-    m0 = json.load(open(f"{t}/_manifests/v00000000.json"))
-    # escaping actually happened on disk (the premise of the bug)
-    assert any("%3A" in f for f in m0["files"])
-    assert any("%25" in f for f in m0["files"])
-
-    full_files = len(snapshot_read(spark, t).inputFiles())
-    for v in vals:
-        pr = snapshot_read(spark, t, where=("k", "=", v))
-        want = sorted(i for i, kv in rows if kv == v)
-        assert sorted(r.id for r in pr.collect()) == want, v
-        # pruning still prunes (reads fewer files), and planned >0
-        assert 0 < len(pr.inputFiles()) < full_files, v
-
-    # merge keyed ON the escaped partition column: all 'a:b' rows
-    # must be replaced by the single source row, not left to coexist
-    src = spark.createDataFrame([(999, "a:b")], "id int, k string")
-    v1 = snapshot_merge(src, t, key="k", stats_cols=["id"])
-    got = {(r.id, r.k) for r in snapshot_read(spark, t, v1).collect()}
-    want = {(i, kv) for i, kv in rows if kv != "a:b"} | {(999, "a:b")}
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -620,15 +449,6 @@ def test_delete_is_merge_on_read_and_time_travels(spark, tmp_path):
         r.id for r in snapshot_read(spark, t, where=("id", "<", 20)).collect()
     )
     assert pr == list(range(10, 20))
-
-    # on a hive-partitioned table, partition pruning feeds the
-    # candidate set
-    p = str(tmp_path / "ptbl")
-    df = spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS lang")
-    snapshot_commit(df, p, mode="overwrite", stats_cols=["id"], partition_by=["lang"])
-    snapshot_delete(spark, p, where=("lang", "=", "2"))
-    got = sorted(r.id for r in snapshot_read(spark, p).collect())
-    assert got == [i for i in range(40) if i % 4 != 2]
 
 
 def test_delete_accumulates_and_is_idempotent(spark, tmp_path):
@@ -1051,15 +871,13 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
         next_id = 1000
         for step in range(18):
             op = rng.choice(
-                ["append", "merge", "delete", "ingest", "overwrite",
-                 "bloom_append", "restore", "keyed_delete"]
+                ["append", "merge", "delete", "ingest", "overwrite", "restore"]
             )
             if op == "append":
                 rows = [(next_id + i, f"a{step}_{i}") for i in range(rng.randint(1, 6))]
                 next_id += 10
-                # retries=1 exercises the rebase plumbing's no-race path
                 st.snapshot_commit(frame(rows).repartition(2), t, mode="append",
-                                   stats_cols=["id"], retries=1)
+                                   stats_cols=["id"])
                 model.update(dict(rows))
             elif op == "overwrite" and step % 7 == 3:  # rare, resets history
                 rows = [(next_id + i, f"o{step}_{i}") for i in range(5)]
@@ -1093,24 +911,6 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
                     next_id += 10
                     st.snapshot_commit(frame(rows), t, mode="append", stats_cols=["id"])
                     model.update(dict(rows))
-            elif op == "keyed_delete" and model:
-                ks = rng.sample(sorted(model), min(3, len(model)))
-                st.snapshot_delete(
-                    spark, t, keys=("id", frame([(k, "") for k in ks]).select("id"))
-                )
-                for k in ks:
-                    del model[k]
-                if not model:
-                    rows = [(next_id + i, f"k{step}_{i}") for i in range(4)]
-                    next_id += 10
-                    st.snapshot_commit(frame(rows), t, mode="append", stats_cols=["id"])
-                    model.update(dict(rows))
-            elif op == "bloom_append":
-                rows = [(next_id + i, f"b{step}_{i}") for i in range(3)]
-                next_id += 10
-                st.snapshot_commit(frame(rows), t, mode="append",
-                                   stats_cols=["id"], bloom_cols=["id"])
-                model.update(dict(rows))
             elif op == "ingest":
                 rows = [(next_id + i, f"s{step}_{i}") for i in range(3)]
                 next_id += 10
@@ -1136,8 +936,7 @@ def test_lifecycle_matches_python_model(spark, tmp_path):
                 for r in st.snapshot_read(spark, t, where=("id", ">=", cut)).collect()
             }
             assert got == {(k, v) for k, v in model.items() if k >= cut}
-            # point probes (the bloom path when covered) agree too —
-            # present keys AND an absent one
+            # point probes agree too — present keys AND an absent one
             for pk in rng.sample(sorted(model), min(3, len(model))):
                 pg = {(r.id, r.v)
                       for r in st.snapshot_read(spark, t, where=("id", "=", pk)).collect()}
@@ -1271,249 +1070,6 @@ def test_streaming_appends_keep_shard_count_bounded(spark, tmp_path, monkeypatch
     assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(n_batches))
     # earlier versions still resolve (their shards were never deleted)
     assert snapshot_read(spark, t, 5).count() == 6
-
-
-# ---------------------------------------------------------------------------
-# round 10: manifest bloom filters (point-lookup file skipping)
-
-
-def test_bloom_prunes_point_lookups_stats_cannot(spark, tmp_path):
-    """A high-cardinality UNCLUSTERED column: every file's [min, max]
-    spans the whole domain, so stats prune nothing — the per-file
-    blooms must cut an equality probe down to ~1 file, with zero
-    false pruning across every present key and absent keys planning
-    (almost) nothing."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
-
-    t = str(tmp_path / "tbl")
-    n = 2000
-    df = spark.range(n).selectExpr(
-        "id", "CAST(xxhash64(id) AS STRING) AS k", "CAST(id % 5 AS STRING) AS v"
-    )
-    snapshot_commit(
-        df.repartition(8), t, mode="overwrite", stats_cols=["id"],
-        bloom_cols=["k"], bloom_fpp=0.001,
-    )
-    keys = [r.k for r in spark.range(n).selectExpr("CAST(xxhash64(id) AS STRING) AS k").collect()]
-    full = len(snapshot_read(spark, t).inputFiles())
-    assert full == 8
-    # every present key: correct row back, most files skipped
-    import random
-
-    rng = random.Random(7)
-    planned = []
-    for kv in rng.sample(keys, 25):
-        pr = snapshot_read(spark, t, where=("k", "=", kv))
-        planned.append(len(pr.inputFiles()))
-        assert pr.count() == 1, kv
-    assert sum(planned) / len(planned) < 2.5, planned
-    # absent keys prune everything (up to fpp)
-    misses = [len(snapshot_read(spark, t, where=("k", "=", f"absent{i}")).inputFiles()) for i in range(10)]
-    assert sum(misses) <= 2, misses
-    # non-equality probes ignore blooms (stats path untouched)
-    assert snapshot_read(spark, t, where=("id", "<", 100)).count() == 100
-
-
-def test_bloom_append_carries_and_rewrites_are_conservative(spark, tmp_path):
-    """Appends add a sidecar and carry the parent's; a merge-rewritten
-    file loses coverage and must be conservatively KEPT (not falsely
-    pruned) while results stay exact."""
-    from etfconstituentextractor_spark.sources.snapshot_table import (
-        snapshot_commit,
-        snapshot_merge,
-        snapshot_read,
-    )
-
-    t = str(tmp_path / "tbl")
-    mk = "CAST(xxhash64(id) AS STRING) AS k"
-    snapshot_commit(
-        spark.range(100).selectExpr("id", mk).repartition(2), t,
-        mode="overwrite", stats_cols=["id"], bloom_cols=["k"],
-    )
-    snapshot_commit(
-        spark.range(100, 200).selectExpr("id", mk).repartition(2), t,
-        mode="append", stats_cols=["id"], bloom_cols=["k"],
-    )
-
-    m1 = json.load(open(f"{t}/_manifests/v00000001.json"))
-    assert len(m1["bloom"]) == 2, "append must carry parent's sidecar + add its own"
-    k150 = spark.sql("SELECT CAST(xxhash64(150L) AS STRING) AS k").first().k
-    pr = snapshot_read(spark, t, where=("k", "=", k150))
-    assert pr.count() == 1 and len(pr.inputFiles()) < 4
-
-    # merge rewrites the file holding id=150: its fresh file has no
-    # bloom row -> conservative keep, value correct
-    src = spark.createDataFrame([(150, "REPLACED")], "id bigint, k string")
-    vm = snapshot_merge(src, t, key="id", stats_cols=["id"])
-    got = snapshot_read(spark, t, vm, where=("k", "=", "REPLACED"))
-    assert [r.id for r in got.collect()] == [150]
-    # the OLD key value is gone (its row was replaced), probing it
-    # must return nothing — even though its bloom row still says hit
-    assert snapshot_read(spark, t, vm, where=("k", "=", k150)).count() == 0
-
-
-def test_bloom_type_discipline(spark, tmp_path):
-    """The probe must hash in the COLUMN's type domain (xxhash64 is
-    type-sensitive): a string probe on a bigint bloom column coerces
-    before hashing; an uncoercible probe skips bloom pruning rather
-    than falsely pruning; unsupported column types refuse at commit."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        spark.range(200).selectExpr("id", "id * 7 AS k7").repartition(4), t,
-        mode="overwrite", bloom_cols=["k7"],
-    )
-    # string probe on bigint column: coerced, prunes, correct
-    pr = snapshot_read(spark, t, where=("k7", "=", "700"))
-    assert pr.count() == 1 and len(pr.inputFiles()) < 4
-    # uncoercible probe: _bloom_prune keeps every file (conservative —
-    # never falsely prune; the in-plan ANSI filter owns the cast error)
-
-    from etfconstituentextractor_spark.sources.snapshot_table import _bloom_prune
-
-    m0 = json.load(open(f"{t}/_manifests/v00000000.json"))
-    kept = _bloom_prune(spark, t, m0, m0["files"], ("k7", "=", "not-a-number"))
-    assert kept == m0["files"]
-    # the refusal comes BEFORE the data write: no orphan dir per retry
-    before = set(os.listdir(f"{t}/data"))
-    with pytest.raises(ValueError, match="unsupported"):
-        snapshot_commit(
-            spark.range(5).selectExpr("id", "CAST(id AS DECIMAL(10,2)) AS d"), t,
-            mode="append", bloom_cols=["d"],
-        )
-    assert set(os.listdir(f"{t}/data")) == before, "orphan data dir leaked"
-
-
-def test_merge_uses_blooms_to_skip_candidate_scans(spark, tmp_path):
-    """A point-upsert on a bloomed high-cardinality key must scan only
-    the files whose blooms admit a source key — observed by recording
-    the file lists _read_data receives — while staying value-exact."""
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    n = 1600
-    df = spark.range(n).selectExpr("CAST(xxhash64(id) AS BIGINT) AS k", "id AS payload")
-    st.snapshot_commit(
-        df.repartition(8), t, mode="overwrite", bloom_cols=["k"], bloom_fpp=0.001
-    )
-    k5 = spark.sql("SELECT CAST(xxhash64(5L) AS BIGINT) AS k").first().k
-    src = spark.createDataFrame([(k5, 99999)], "k bigint, payload bigint")
-
-    seen: list[int] = []
-    real = st._read_data
-
-    def recording(spark_, path_, m_, files_, **kw):
-        seen.append(len(files_))
-        return real(spark_, path_, m_, files_, **kw)
-
-    st._read_data = recording
-    try:
-        vm = st.snapshot_merge(src, t, key="k")
-    finally:
-        st._read_data = real
-    # the probe's candidate list (first _read_data call) must be far
-    # below the 8 stats-survivors (hash key: stats prune nothing)
-    assert seen and seen[0] <= 2, seen
-    got = {(r.k, r.payload) for r in st.snapshot_read(spark, t, vm).collect()}
-    want = {
-        (r.k, r.payload)
-        for r in df.collect()
-        if r.k != k5
-    } | {(k5, 99999)}
-    assert got == want
-    # a merge whose keys are ALL absent touches nothing (insert-only)
-    src2 = spark.createDataFrame([(123456789, 1)], "k bigint, payload bigint")
-    v2 = st.snapshot_merge(src2, t, key="k")
-    assert st.snapshot_read(spark, t, v2).count() == n + 1
-
-
-def test_bloom_string_column_numeric_probe_never_false_prunes(spark, tmp_path):
-    """Second-review repro: a numeric probe on a STRING bloom column
-    hashes str(700)='700' while the in-plan filter compares under
-    Spark's numeric cast ('0700' = 700 is TRUE) — coercion there
-    falsely pruned the '0700' file. String entries must prune only
-    for string probes; numeric probes keep every file and the in-plan
-    filter decides."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
-
-    t = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(i, f"{i:04d}") for i in range(400)], "id bigint, k string"
-    )
-    snapshot_commit(df.repartition(4), t, mode="overwrite", bloom_cols=["k"])
-    # numeric probe: '0700'-style padded strings match under numeric
-    # cast; blooms must stand aside
-    pr = snapshot_read(spark, t, where=("k", "=", 7))
-    assert [r.id for r in pr.collect()] == [7]
-    assert len(pr.inputFiles()) == 4, "numeric probe on string column: no bloom prune"
-    # exact string probe still prunes
-    pr2 = snapshot_read(spark, t, where=("k", "=", "0007"))
-    assert [r.id for r in pr2.collect()] == [7]
-    assert len(pr2.inputFiles()) < 4
-
-
-def test_bloom_empty_commit_and_oversize_clamp(spark, tmp_path, monkeypatch):
-    """Second-review findings: an EMPTY bloom-building commit must
-    succeed with no sidecar (not crash on max() of nothing), and a
-    file too large for the 64M-bit cap must CLAMP the sizing (fpp
-    degrades, the already-written commit never fails)."""
-
-    from etfconstituentextractor_spark.operators import bloom as bl
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        spark.range(50).selectExpr("id", "id * 3 AS k"), t, mode="overwrite",
-        bloom_cols=["k"],
-    )
-    empty = spark.range(0).selectExpr("id", "id * 3 AS k")
-    v1 = snapshot_commit(empty, t, mode="append", bloom_cols=["k"])
-    m1 = json.load(open(f"{t}/_manifests/v{v1:08d}.json"))
-    assert len(m1["bloom"]) == 1, "empty commit adds no sidecar, carries parent's"
-    assert snapshot_read(spark, t).count() == 50
-
-    # clamp: shrink the cap so sizing overflows; the commit must
-    # still succeed and pruning stays correct (no false negatives at
-    # ANY sizing)
-    monkeypatch.setattr(bl, "_MAX_M_BITS", 128)
-    v2 = snapshot_commit(
-        spark.range(100, 200).selectExpr("id", "id * 3 AS k").repartition(2), t,
-        mode="append", bloom_cols=["k"],
-    )
-    m2 = json.load(open(f"{t}/_manifests/v{v2:08d}.json"))
-    assert len(m2["bloom"]) == 2
-    pr = snapshot_read(spark, t, v2, where=("k", "=", 450))
-    assert [r.id for r in pr.collect()] == [150]
-
-
-def test_bloom_entries_consolidate_past_threshold(spark, tmp_path, monkeypatch):
-    """Second-review finding: bloom entries grew O(#bloom commits)
-    with one sidecar job per entry per probe. Past the threshold a
-    bloom-building commit consolidates live rows into ONE sidecar;
-    point probes stay correct across every generation's files."""
-
-    from etfconstituentextractor_spark.sources import snapshot_table as st
-
-    monkeypatch.setattr(st, "_BLOOM_MERGE_MIN", 3)
-    t = str(tmp_path / "tbl")
-    for g in range(5):
-        st.snapshot_commit(
-            spark.range(g * 100, g * 100 + 100).selectExpr(
-                "id", "CAST(xxhash64(id) AS BIGINT) AS k"
-            ),
-            t,
-            mode="append" if g else "overwrite",
-            bloom_cols=["k"],
-        )
-    m = json.load(open(f"{t}/_manifests/v00000004.json"))
-    assert len(m["bloom"]) <= st._BLOOM_MERGE_MIN, [b["dir"] for b in m["bloom"]]
-    # keys from the oldest and newest generations both probe correctly
-    for probe_id in (5, 450):
-        kv = spark.sql(f"SELECT CAST(xxhash64({probe_id}L) AS BIGINT) AS k").first().k
-        pr = st.snapshot_read(spark, t, where=("k", "=", kv))
-        assert [r.id for r in pr.collect()] == [probe_id]
-        assert len(pr.inputFiles()) < 5
 
 
 # ---------------------------------------------------------------------------
@@ -1653,37 +1209,8 @@ def test_failed_delete_validation_reclaims_dv_dir(spark, tmp_path, monkeypatch):
     assert st.snapshot_read(spark, t).count() == 20
 
 
-def test_bloom_zero_false_pruning_across_dtypes(spark, tmp_path):
-    """Property sweep: for bigint, double, boolean, and string bloom
-    columns, EVERY present value's pruned point read returns exactly
-    the plain filter's rows (a Bloom filter has no false negatives,
-    so pruning may only ever skip true misses) — and absent probes of
-    the same dtype return nothing."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_commit
-
-    cases = [
-        ("bigint", "CAST(xxhash64(id) AS BIGINT)", lambda r: r, [123456789, -5]),
-        ("double", "CAST(xxhash64(id) % 1000 AS DOUBLE) / 8", lambda r: r, [9999.5]),
-        ("boolean", "id % 2 = 0", lambda r: r, []),
-        ("string", "concat('v-', CAST(xxhash64(id) AS STRING))", lambda r: r, ["absent"]),
-    ]
-    for i, (dt, expr, _, absents) in enumerate(cases):
-        t = str(tmp_path / f"tbl{i}")
-        df = spark.range(300).selectExpr("id", f"{expr} AS k")
-        snapshot_commit(df.repartition(4), t, mode="overwrite", bloom_cols=["k"])
-        sample = [r.k for r in df.select("k").distinct().limit(8).collect()]
-        for kv in sample:
-            pr = snapshot_read(spark, t, where=("k", "=", kv))
-            want = sorted(r.id for r in df.filter(df.k == kv).collect())
-            got = sorted(r.id for r in pr.collect())
-            assert got == want, (dt, kv, got, want)
-        for av in absents:
-            assert snapshot_read(spark, t, where=("k", "=", av)).count() == 0, (dt, av)
-
-
 # ---------------------------------------------------------------------------
-# round 11: restore, optimistic commit retry, and the round-10 advice
-# fixes (empty-source merge)
+# round 11: restore, and the round-10 advice fixes (empty-source merge)
 
 
 def test_restore_rolls_back_as_new_commit(spark, tmp_path):
@@ -1743,92 +1270,6 @@ def test_restore_carries_dv_and_txn_watermark(spark, tmp_path):
     ]
     # watermark survived two restores
     assert _watermark(t, "w1") == 5
-
-
-def test_append_retry_rebases_on_lost_race(spark, tmp_path):
-    """retries=N on an append commit: a lost race rebases METADATA only
-    — the already-written data files are renamed under the new version
-    and the commit lands on the winner's child version with stats
-    intact and zero orphan dirs."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, stats_cols=["id"])
-
-    real_read = st._read_manifest
-    raced = {"done": False}
-
-    def racing_read(fs, jvm, table, version):
-        m = real_read(fs, jvm, table, version)
-        if not raced["done"]:
-            raced["done"] = True
-            snapshot_commit(_df(spark, [(7, "w")]), t, mode="append",
-                            stats_cols=["id"])
-        return m
-
-    st._read_manifest = racing_read
-    try:
-        v = snapshot_commit(_df(spark, [(2, "l")]), t, mode="append",
-                            stats_cols=["id"], retries=2)
-    finally:
-        st._read_manifest = real_read
-
-    assert v == 2  # rebased onto the winner's v1
-    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == [1, 2, 7]
-    # stats were remapped with the renamed dir: pruning still exact
-    pruned = snapshot_read(spark, t, where=("id", "=", 2))
-    assert [r.id for r in pruned.collect()] == [2]
-    assert len(pruned.inputFiles()) < len(snapshot_read(spark, t).inputFiles())
-    # the rename left no orphan dir, and the moved dir carries the
-    # number of the version that published it
-    assert _unreferenced_data_dirs(t) == set()
-    assert all(f.startswith("data/v00000002-") for f in _manifest(t, 2)["files"]
-               if f not in _manifest(t, 1)["files"])
-
-
-def test_retry_rejected_for_overwrite_and_bloom(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t)
-    with pytest.raises(ValueError, match="append commits only"):
-        snapshot_commit(_df(spark, [(2, "b")]), t, mode="overwrite", retries=1)
-    with pytest.raises(ValueError, match="append commits only"):
-        snapshot_commit(_df(spark, [(2, "b")]), t, mode="append",
-                        bloom_cols=["id"], retries=1)
-
-
-def test_delete_retry_rederives_serializably(spark, tmp_path):
-    """retries=N on a DV delete re-runs the WHOLE derivation against
-    the winner's state: rows a concurrent append added that match the
-    predicate are deleted too (predicate semantics, not stale-snapshot
-    semantics), and the lost attempt's DV dir is reclaimed eagerly."""
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(i, f"v{i}") for i in range(6)]), t,
-                    stats_cols=["id"])
-
-    real_read = st._read_manifest
-    raced = {"done": False}
-
-    def racing_read(fs, jvm, table, version):
-        m = real_read(fs, jvm, table, version)
-        if not raced["done"]:
-            raced["done"] = True
-            # the concurrent append lands one MATCHING row (id=0 dup
-            # key is fine — the delete targets by predicate)
-            snapshot_commit(_df(spark, [(1, "late-match"), (50, "keep")]), t,
-                            mode="append", stats_cols=["id"])
-        return m
-
-    st._read_manifest = racing_read
-    try:
-        st.snapshot_delete(spark, t, where=("id", "<", 3), retries=2)
-    finally:
-        st._read_manifest = real_read
-
-    got = sorted(r.id for r in snapshot_read(spark, t).collect())
-    assert got == [3, 4, 5, 50], got  # late-match (id=1) deleted too
-    assert _unreferenced_data_dirs(t) == set(), "lost attempt leaked its DV dir"
 
 
 def test_merge_empty_source_is_noop_and_null_keys_insert(spark, tmp_path):
@@ -1965,71 +1406,8 @@ def test_legacy_manifest_without_schema_still_reads(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# keyed deletes (round 11)
+# merge source alignment to the recorded schema (rounds 11-14)
 # ---------------------------------------------------------------------------
-def _rows(spark, t, version=None):
-    return sorted(
-        ((r["id"], r["v"]) for r in snapshot_read(spark, t, version).collect()),
-        key=lambda t_: ((t_[0] is None, t_[0]), (t_[1] is None, t_[1])),
-    )
-
-
-def test_keyed_delete_removes_exactly_the_key_frame(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(
-        _df(spark, [(i, f"r{i}") for i in range(10)]), t, mode="overwrite",
-        stats_cols=["id"],
-    )
-    kf = spark.createDataFrame([(3,), (7,), (99,)], "id bigint")  # 99 absent
-    v = snapshot_delete(spark, t, keys=("id", kf))
-    assert [i for i, _ in _rows(spark, t, v)] == [0, 1, 2, 4, 5, 6, 8, 9]
-    # merge-on-read: the file list is unchanged (DV, not rewrite)
-
-    with open(os.path.join(t, "_manifests", f"v{v:08d}.json")) as fh:
-        m = json.load(fh)
-    with open(os.path.join(t, "_manifests", "v00000000.json")) as fh:
-        m0 = json.load(fh)
-    assert m["files"] == m0["files"] and m.get("dv")
-
-
-def test_keyed_delete_empty_frame_is_noop_commit(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    v = snapshot_delete(spark, t, keys=("id", spark.createDataFrame([], "id bigint")))
-    assert v == 1 and _rows(spark, t, v) == [(1, "a")]
-
-
-def test_keyed_delete_requires_exactly_one_selector(spark, tmp_path):
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a")]), t, mode="overwrite")
-    with pytest.raises(ValueError, match="exactly one"):
-        snapshot_delete(spark, t)
-    with pytest.raises(ValueError, match="exactly one"):
-        snapshot_delete(
-            spark, t, where=("id", "<", 1),
-            keys=("id", spark.createDataFrame([], "id bigint")),
-        )
-
-
-def test_keyed_delete_all_null_key_frame_is_noop(spark, tmp_path):
-    """Round-11 review: NULL keys match nothing (SQL equality) — an
-    all-NULL key frame must no-op, not send None bounds into the
-    pruner."""
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-    t = str(tmp_path / "tbl")
-    snapshot_commit(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
-    kf = spark.createDataFrame([(None,)], "id bigint")
-    v = snapshot_delete(spark, t, keys=("id", kf))
-    assert _rows(spark, t, v) == [(1, "a"), (2, "b")]
-
-
 def test_merge_source_null_fills_missing_recorded_columns(spark, tmp_path):
     """Round 11: a merge source missing later-added columns aligns to
     the recorded table schema with NULLs; unknown columns raise."""
@@ -2057,47 +1435,6 @@ def test_merge_source_missing_key_raises(spark, tmp_path):
     keyless = spark.createDataFrame([("zzz",)], "v string")
     with pytest.raises(ValueError, match="missing required column"):
         snapshot_merge(keyless, t, key="id")
-
-
-def test_keyed_delete_consults_blooms(spark, tmp_path):
-    """Round 11: on a bloomed table a keyed delete's DV scan plans
-    ~only the files that genuinely hold its keys — checked through
-    the DV coverage map (only the hit file gains coverage), since
-    stats on a wide-range column cannot prune the others."""
-
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_delete
-
-    t = str(tmp_path / "tbl")
-    # three files with overlapping id ranges so [min,max] stats can't
-    # separate them; blooms can
-    f1 = _df(spark, [(1, "a"), (400, "b")]).coalesce(1)
-    f2 = _df(spark, [(2, "c"), (500, "d")]).coalesce(1)
-    f3 = _df(spark, [(3, "e"), (600, "f")]).coalesce(1)
-    snapshot_commit(f1, t, mode="overwrite", stats_cols=["id"], bloom_cols=["id"])
-    snapshot_commit(f2, t, mode="append", stats_cols=["id"], bloom_cols=["id"])
-    snapshot_commit(f3, t, mode="append", stats_cols=["id"], bloom_cols=["id"])
-    kf = spark.createDataFrame([(500,)], "id bigint")
-    v = snapshot_delete(spark, t, keys=("id", kf))
-    assert [i for i, _ in _rows(spark, t, v)] == [1, 2, 3, 400, 600]
-    with open(os.path.join(t, "_manifests", f"v{v:08d}.json")) as fh:
-        dv = json.load(fh)["dv"]
-    # exactly ONE file gained DV coverage — the one holding key 500
-    assert len(dv["files"]) == 1 and list(dv["files"].values()) == [1]
-    # and the refinement itself PRUNES the candidate list to that file
-    # (DV coverage alone cannot show the scan was bounded): drive the
-    # shared helper directly against the pre-delete manifest
-    import etfconstituentextractor_spark.sources.snapshot_table as st
-
-    fs, _, jvm = st._fs_path(spark, t)
-    m = st._read_manifest(fs, jvm, t, 2)
-    all_files, _ = st._resolve(fs, jvm, t, m)
-    kframe = kf.select(F.col("id").alias("__dk"))
-    refined = st._bloom_refine_keyset(
-        spark, t, m, all_files, "id", kframe, "bigint"
-    )
-    assert len(refined) == 1, refined
-    covered_rel = list(dv["files"])[0]
-    assert refined == [covered_rel]
 
 
 def test_merge_source_type_drift_raises_before_write(spark, tmp_path):
