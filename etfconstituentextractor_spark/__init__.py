@@ -12,8 +12,8 @@ Layout
 ------
 - ``session``    — SparkSession factory (UTC, Arrow, AQE).
 - ``schemas``    — explicit StructTypes for the test corpus tables.
-- ``sources``    — typed readers (parquet/CSV/JSON) + partitioned sinks.
-- ``functions``  — boundary parsing (money/date/pct) + oracle-parity helpers.
+- ``sources``    — typed corpus readers, WARC, snapshot tables, derived caches.
+- ``functions``  — boundary money parsing + oracle-parity helpers.
 - ``operators``  — composed operators Spark lacks natively (as-of join,
                    dedup families, similarity search, text analysis).
 - ``plans``      — the named query catalog (the driver-facing surface).
@@ -23,9 +23,3 @@ Layout
 The engine starts from corpus tables; fetching documents over HTTP is
 outside it.
 """
-
-from etfconstituentextractor_spark.session import get_session
-
-__version__ = "0.1.0"
-
-__all__ = ["get_session", "__version__"]

@@ -30,16 +30,3 @@ def parse_money(c: Column | str) -> Column:
     return F.regexp_replace(F.trim(_col(c)), ",", "").try_cast("decimal(38,6)")
 
 
-def parse_pct(c: Column | str) -> Column:
-    """``"12.34"`` or ``"12.34%"`` → double (reference :127 keeps str)."""
-    return F.regexp_replace(F.trim(_col(c)), "[%,]", "").try_cast("double")
-
-
-def parse_date(c: Column | str, fmt: str = "yyyy-MM-dd") -> Column:
-    """ISO date string → DateType (reference :48/:76 keeps str)."""
-    return F.try_to_timestamp(F.trim(_col(c)), F.lit(fmt)).cast("date")
-
-
-def strip_dashes(c: Column | str) -> Column:
-    """Accession-number normalization (reference :58 ``.replace('-','')``)."""
-    return F.regexp_replace(_col(c), "-", "")

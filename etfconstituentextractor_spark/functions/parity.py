@@ -46,37 +46,13 @@ def dec_rate(c: Column | str) -> Column:
     return _col(c).cast(RATE_DECIMAL)
 
 
-def dsum(c: Column | str, alias: str, scale: int = 2) -> Column:
-    """Exact decimal sum, rounded to `scale`, emitted as double."""
-    return F.round(F.sum(_col(c)), scale).cast("double").alias(alias)
+def dsum(c: Column | str, alias: str) -> Column:
+    """Exact decimal sum, rounded to 2 places, emitted as double."""
+    return F.round(F.sum(_col(c)), 2).cast("double").alias(alias)
 
 
-def davg(c: Column | str, alias: str, scale: int = 4) -> Column:
-    """Exact-sum-based average: round(double(sum_dec)/count, scale)."""
+def davg(c: Column | str, alias: str) -> Column:
+    """Exact-sum-based average: round(double(sum_dec)/count, 4)."""
     return F.round(
-        F.sum(_col(c)).cast("double") / F.count(F.lit(1)), scale
+        F.sum(_col(c)).cast("double") / F.count(F.lit(1)), 4
     ).cast("double").alias(alias)
-
-
-def round_dbl(c: Column | str, scale: int = 4) -> Column:
-    return F.round(_col(c), scale).cast("double")
-
-
-# --- SQL-side mirrors -------------------------------------------------------
-# The DuckDB oracle uses the same discipline spelled in ANSI SQL. These
-# helpers build those SQL fragments so Spark and oracle stay in lockstep.
-
-def sql_dec(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(14,4))"
-
-
-def sql_dec_rate(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(8,6))"
-
-
-def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
-    return f"CAST(ROUND(SUM({expr}), {scale}) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(expr: str, alias: str, scale: int = 4) -> str:
-    return f"CAST(ROUND(CAST(SUM({expr}) AS DOUBLE) / COUNT(*), {scale}) AS DOUBLE) AS {alias}"

@@ -118,26 +118,10 @@ def ivf_topk(
 # half of q71's 12-table index at the same scan fraction gets within
 # ten recall points of it (0.66 vs 0.76); on embeddings with real
 # cluster structure the flip probe targets better and the gap closes
-# further. All codegen: the plane dots compute once per vector,
-# buckets and the flip derive from that array.
+# further. The plane dots compute once per vector
+# (`operators/veckernel.py:append_plane_dots`); buckets and the flip
+# derive from that array in codegen.
 # ---------------------------------------------------------------------------
-def srp_plane_dots(vectors: DataFrame, planes: list[list[float]], v_col: str = "v") -> DataFrame:
-    """vectors + ``dots``: round-9 projections onto each ±1 plane (the
-    llm_similarity sign convention, so buckets here match q71's for
-    the same planes)."""
-    lits = ", ".join(
-        "array(" + ", ".join(f"{s}D" for s in row) + ")" for row in planes
-    )
-    return vectors.withColumn(
-        "dots",
-        F.expr(
-            f"transform(array({lits}), p -> "
-            f"round(aggregate(zip_with({v_col}, p, (x, y) -> x * y), 0D, "
-            f"(acc, x) -> acc + x), 9))"
-        ),
-    )
-
-
 def _srp_bucket_structs(n_tables: int, r: int) -> str:
     """THE bucket derivation, in one place: table t's bucket is the
     sign string of dots[t*r : t*r+r]. The index side, the query side,

@@ -13,24 +13,14 @@ LLM-pipeline surface (SURVEY.md §2B) modeled on the published CCNet
 (Wenzek et al., 2020) and RefinedWeb (Penedo et al., 2023) pipelines.
 
 Scale shape (100 TB): the frequency pass shuffles ONLY per-doc-distinct
-64-bit line hashes — never text. The frequent set then flows back two
-ways:
-
-* ``strip_boilerplate`` — collapse the frequent set to ONE array row
-  and broadcast it into a per-document array filter: document text
-  never shuffles at all (zero Exchange on the documents side). Right
-  whenever the number of DISTINCT frequent lines fits a broadcast —
-  boilerplate is by definition few distinct strings repeated many
-  times (CCNet's frequent set is thousands of lines even at web
-  scale), so this is the default path.
-* ``strip_boilerplate_antijoin`` — the no-broadcast-assumption
-  fallback: posexplode lines, hash-only anti join against the frequent
-  set, regroup by document. Costs a text shuffle on the regroup, but
-  never materializes the frequent set on one executor; use when
-  ``min_docs`` is small enough that the frequent set could be huge.
-
-Both paths return identical rows (pinned by tests); 64-bit hash
-collisions carry the usual 2^-64 caveat.
+64-bit line hashes — never text. ``strip_boilerplate`` then collapses
+the frequent set to ONE array row and broadcasts it into a
+per-document array filter: document text never shuffles at all (zero
+Exchange on the documents side). That holds whenever the number of
+DISTINCT frequent lines fits a broadcast — boilerplate is by
+definition few distinct strings repeated many times (CCNet's frequent
+set is thousands of lines even at web scale). 64-bit hash collisions
+carry the usual 2^-64 caveat.
 """
 
 from __future__ import annotations
@@ -123,48 +113,3 @@ def strip_boilerplate(
     )
 
 
-def strip_boilerplate_antijoin(
-    docs: DataFrame,
-    *,
-    min_docs: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-    out_col: str = "clean_text",
-) -> DataFrame:
-    """Shuffle path: same output as strip_boilerplate, no broadcast.
-
-    Lines are exploded with positions, anti-joined on the 64-bit hash
-    only, and reassembled in order by an array_sort over (pos, line)
-    structs — surviving text shuffles exactly once (the regroup).
-    """
-    freq = frequent_lines(
-        docs, min_docs=min_docs, text_col=text_col, id_col=id_col, delim=delim
-    )
-    pos = docs.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(_lines(text_col, delim)).alias("__pos", "__line"),
-    ).withColumn("line_hash", F.xxhash64("__line"))
-    clean = (
-        pos.join(freq, "line_hash", "left_anti")
-        .groupBy("__id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                    lambda s: s["__line"],
-                ),
-                delim,
-            ).alias(out_col),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    return (
-        docs.join(clean, docs[id_col] == clean["__id"], "left")
-        .select(
-            *docs.columns,
-            F.coalesce(F.col(out_col), F.lit("")).alias(out_col),
-            F.size(_lines(text_col, delim)).cast("bigint").alias("n_lines"),
-            F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
-        )
-    )

@@ -1,35 +1,23 @@
-"""Distributed BPE tokenizer training (merge-pair counting).
+"""BPE encoding under a fixed merge list (q81's ``bpe`` leg).
 
-Byte-pair encoding (Sennrich et al. 2016): start from characters,
-repeatedly merge the most frequent adjacent symbol pair. The insight
-that makes this tractable at corpus scale is that BPE only ever needs
-the WORD-FREQUENCY table — one explode+count collapses a 100 TB corpus
-to a vocabulary-sized frame, and every subsequent round runs on that
-frame alone:
+Byte-pair encoding (Sennrich et al. 2016): a word starts as its
+characters plus an end-of-word mark, and each merge (a, b) in order
+replaces adjacent (a, b) symbols with ``ab``, greedily left to right.
 
-1. ``word_frequencies``: explode tokens → groupBy word → count. The
-   corpus's single shuffle, with partial map-side counts.
-2. symbolize: word → array of single characters + ``</w>`` end marker
-   (pure codegen split).
-3. per round: explode adjacent symbol pairs weighted by word count →
-   groupBy pair → global argmax. Only (pair, weight) rows shuffle —
-   bounded by the alive-pair vocabulary, never the corpus. The driver
-   reads ONE row per round (the winning pair): control plane, like
-   connected_components' convergence count, not a data collect.
-4. ``_apply_merge``: greedy left-to-right fold (aggregate HOF) over
-   each word's symbol array replacing adjacent (a, b) with ``ab`` —
-   words are short, so the O(len²) array rebuild is trivial and stays
-   inside whole-stage codegen.
-5. ``localCheckpoint`` per round truncates the iterative lineage
-   (operators/components.py precedent).
+- ``symbolize``: word → array of single characters + ``</w>`` (pure
+  codegen split).
+- ``_apply_merge``: one greedy left-to-right fold (aggregate HOF) over
+  each word's symbol array — words are short, so the O(len²) array
+  rebuild is trivial and stays inside whole-stage codegen.
+- ``encode_corpus``: runs the folds over the corpus's DISTINCT words
+  and maps word → pieces back onto the documents.
 
-Ties break by (count desc, pair lexicographic) so training is fully
-deterministic — the pure-Python oracle in tests/test_bpe.py replays
-the identical sequence.
+The merge list itself is committed with the query; the pure-Python
+trainer in tests/test_bpe.py derives merge lists with a deterministic
+(count desc, pair lexicographic) tiebreak.
 
 Reference provenance: no counterpart in the reference engine; this is
-LLM-pipeline surface (SURVEY.md §2B) — the training half of the
-BPE-ish subtoken counting q80 already ships.
+LLM-pipeline surface (SURVEY.md §2B).
 """
 
 from __future__ import annotations
@@ -45,18 +33,6 @@ def _q(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def word_frequencies(
-    docs: DataFrame, *, text_col: str = "text", delim: str = " "
-) -> DataFrame:
-    """(word, n): corpus word-frequency table — BPE's only corpus scan."""
-    return (
-        docs.select(F.explode(F.split(F.col(text_col), delim)).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def symbolize(words: DataFrame) -> DataFrame:
     """Add the initial symbol array: characters + the end-of-word mark."""
     # split(w, '(?!^)') yields one element per char plus a trailing ""
@@ -67,20 +43,6 @@ def symbolize(words: DataFrame) -> DataFrame:
             "concat(filter(split(word, '(?!^)'), x -> x != ''), "
             f"array({_q(END)}))"
         ),
-    )
-
-
-def pair_counts(vocab: DataFrame) -> DataFrame:
-    """(a, b, cnt): adjacent-pair frequencies weighted by word count."""
-    pairs = F.expr(
-        "CASE WHEN size(syms) < 2 THEN CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) "
-        "ELSE zip_with(slice(syms, 1, size(syms) - 1), slice(syms, 2, size(syms) - 1), "
-        "(x, y) -> struct(x AS a, y AS b)) END"
-    )
-    return (
-        vocab.select(F.explode(pairs).alias("p"), "n")
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("n").alias("cnt"))
     )
 
 
@@ -95,54 +57,6 @@ def _apply_merge(vocab: DataFrame, a: str, b: str) -> DataFrame:
     return vocab.withColumn("syms", F.expr(fold))
 
 
-def train_bpe(
-    words: DataFrame, n_merges: int
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn ``n_merges`` merges from a (word, n) frequency table.
-
-    Returns (merge list in order, final symbolized vocab). Stops early
-    when no adjacent pair remains (every word fully merged).
-    """
-    vocab = symbolize(words).localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        top = (
-            pair_counts(vocab)
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b = top[0].a, top[0].b
-        merges.append((a, b))
-        vocab = _apply_merge(vocab, a, b).localCheckpoint()
-    return merges, vocab
-
-
-def encode(tokens_expr: str, merges: list[tuple[str, str]]):
-    """Column: apply a learned merge list to each word of a token
-    array — BPE inference as a chain of codegen folds. Practical for
-    short merge lists (each merge adds one fold pass); longer
-    vocabularies should precompute a word→pieces dictionary with
-    ``train_bpe`` and broadcast-join it instead.
-    """
-    sym = (
-        f"transform({tokens_expr}, w -> "
-        f"concat(filter(split(w, '(?!^)'), x -> x != ''), array({_q(END)})))"
-    )
-    expr = sym
-    for a, b in merges:
-        merged = _q(a + b)
-        expr = (
-            f"transform({expr}, s -> aggregate(s, CAST(array() AS ARRAY<STRING>), (acc, x) -> "
-            f"IF(size(acc) > 0 AND element_at(acc, -1) = {_q(a)} AND x = {_q(b)}, "
-            f"concat(slice(acc, 1, size(acc) - 1), array({merged})), "
-            f"concat(acc, array(x)))))"
-        )
-    return F.expr(expr)
-
-
 def encode_corpus(
     docs: DataFrame,
     merges: list[tuple[str, str]],
@@ -152,8 +66,7 @@ def encode_corpus(
     delim: str = " ",
     broadcast_dict: bool = True,
 ) -> DataFrame:
-    """(id, pieces, n_pieces): BPE-encode every document — the
-    dictionary path ``encode``'s docstring points long merge lists at.
+    """(id, pieces, n_pieces): BPE-encode every document.
 
     The word-frequency insight applied to inference: the merge folds
     run over the corpus's DISTINCT words, so each merge is one codegen
@@ -167,8 +80,8 @@ def encode_corpus(
     corpus size; documents shuffle once, as (id, pos, pieces) rows.
 
     Documents with no words after the split (empty text) produce no
-    output row. Greedy left-to-right fold per merge matches
-    ``train_bpe`` / ``encode`` semantics exactly (pinned in tests).
+    output row. Each merge is a greedy left-to-right fold, as in
+    the pure-Python encoder it is pinned against in tests.
 
     ``broadcast_dict=False`` switches the word→pieces join to a plain
     shuffle join for vocabularies too large to broadcast (a web-scale

@@ -43,20 +43,6 @@ def _sql_bucket(token_expr: str, r: int, w: int) -> str:
     return f"({sql_hex_to_long(hex_prefix)} % {w})"
 
 
-def cms_token_estimates(
-    tok_df: DataFrame, token_col: str = "token", d: int = 4, w: int = 64
-) -> DataFrame:
-    """(token, n_exact, cms_est) — count–min estimate beside the exact
-    count for every distinct token of ``tok_df`` (one token instance
-    per row). ``cms_est >= n_exact`` by construction."""
-    counts = (
-        tok_df.filter(F.col(token_col).isNotNull())
-        .groupBy(token_col)
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    return cms_from_counts(counts, token_col, d=d, w=w)
-
-
 def cms_from_counts(
     counts: DataFrame, token_col: str = "token", d: int = 4, w: int = 64
 ) -> DataFrame:
@@ -113,13 +99,3 @@ def sql_cms_from_counts(
     """
 
 
-def sql_cms_token_estimates(
-    tok_sql: str, token_col: str = "token", d: int = 4, w: int = 64
-) -> str:
-    """As :func:`sql_cms_from_counts`, but counting ``tok_sql`` (one
-    token instance per row) itself."""
-    counts = (
-        f"SELECT {token_col}, COUNT(*) AS n_exact FROM ({tok_sql}) "
-        f"WHERE {token_col} IS NOT NULL GROUP BY {token_col}"
-    )
-    return sql_cms_from_counts(counts, token_col, d=d, w=w)

@@ -39,7 +39,6 @@ run, `ETFQuarterlyHoldingsExtractor.py:145-159`).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

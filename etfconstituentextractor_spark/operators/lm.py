@@ -41,26 +41,11 @@ from pyspark.sql import functions as F
 
 def _toks(text_col: str, delim: str, tokens_col: str | None) -> str:
     """THE tokenizer expression (or the caller's pre-tokenized
-    column) — one definition; four functions previously copy-pasted
-    the f-string, so a delimiter/escaping fix could silently make the
-    two smoothings tokenize differently (round-11 review)."""
+    column) — one definition, so training and scoring cannot tokenize
+    differently."""
     if tokens_col:
         return tokens_col
     return f"filter(split({text_col}, '{delim}'), x -> x != '')"
-
-
-def _pairs(text_col: str, delim: str):
-    """array<struct<w1,w2>> of adjacent token pairs — one codegen pass."""
-    return _pairs_of(_toks(text_col, delim, None))
-
-
-def _bigram_counts(docs: DataFrame, toks: str) -> DataFrame:
-    """(w1, w2, n) adjacent-pair counts — shared by both smoothings."""
-    return (
-        docs.select(F.explode(_pairs_of(toks)).alias("p"))
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def _pairs_of(toks: str):
@@ -97,7 +82,11 @@ def train_bigram_lm(
     across all LM phases.
     """
     toks = _toks(text_col, delim, tokens_col)
-    bigrams = _bigram_counts(docs, toks)
+    bigrams = (
+        docs.select(F.explode(_pairs_of(toks)).alias("p"))
+        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     contexts = bigrams.groupBy("w1").agg(F.sum("n").alias("n_ctx"))
     vocab_size = (
         docs.select(F.explode(F.expr(toks)).alias("w"))
@@ -150,109 +139,3 @@ def perplexity(
     )
 
 
-def train_kn_bigram_lm(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    delim: str = " ",
-    tokens_col: str | None = None,
-) -> dict:
-    """Interpolated Kneser-Ney bigram model (Chen & Goodman 1998) as a
-    dict of count FRAMES — the industry-standard smoothing beside the
-    add-k baseline above. What KN fixes: add-k backs off to how OFTEN
-    a word occurs, KN to how many DISTINCT CONTEXTS it follows — the
-    classic example being a corpus full of "San Francisco", where
-    'Francisco' is frequent but continues only 'San'; its continuation
-    probability is tiny, so 'eat Francisco' scores low where add-k
-    scores it high (pinned as a property test).
-
-    Frames (nothing collected; scalars are 1-row broadcast frames):
-    - ``bigrams``  (w1, w2, n)
-    - ``contexts`` (w1, n_ctx, n_types) — total and DISTINCT-type
-      counts of w1's continuations (both from bigrams, no extra scan)
-    - ``cont``     (w2, n_cont) — distinct left contexts of w2
-    - ``totals``   (t, v, d) — bigram type count, vocabulary size, and
-      the Chen–Goodman discount D = n1/(n1 + 2·n2) estimated from the
-      count-of-counts (a 2-row aggregate over the bigram frame).
-
-    P(w2|w1) = (max(n − D, 0) + D · n_types(w1) · Pc(w2)) / n_ctx(w1),
-    backing off entirely to Pc for unseen contexts, with
-    Pc(w2) = (n_cont(w2) + 1) / (t + v) — the +1/+v is the module's
-    explicit unknown-word mass (pure KN gives unseen words zero mass,
-    which a quality FILTER cannot tolerate: one OOV token would send
-    a document's perplexity to infinity).
-    """
-    toks = _toks(text_col, delim, tokens_col)
-    bigrams = _bigram_counts(docs, toks)
-    contexts = bigrams.groupBy("w1").agg(
-        F.sum("n").alias("n_ctx"), F.count(F.lit(1)).alias("n_types")
-    )
-    cont = bigrams.groupBy("w2").agg(F.count(F.lit(1)).alias("n_cont"))
-    vocab = docs.select(F.explode(F.expr(toks)).alias("w")).agg(
-        F.countDistinct("w").alias("v")
-    )
-    # D from count-of-counts; degenerate corpora (no n=1 bigrams)
-    # fall back to the conventional 0.75
-    coc = bigrams.groupBy("n").agg(F.count(F.lit(1)).alias("c"))
-    totals = (
-        bigrams.agg(F.count(F.lit(1)).alias("t"))
-        .crossJoin(
-            coc.agg(
-                F.sum(F.when(F.col("n") == 1, F.col("c"))).alias("__n1"),
-                F.sum(F.when(F.col("n") == 2, F.col("c"))).alias("__n2"),
-            )
-        )
-        .crossJoin(vocab)
-        .select(
-            "t",
-            "v",
-            F.when(
-                F.coalesce(F.col("__n1"), F.lit(0)) > 0,
-                F.col("__n1")
-                / (F.col("__n1") + 2 * F.coalesce(F.col("__n2"), F.lit(0))),
-            )
-            .otherwise(F.lit(0.75))
-            .cast("double")
-            .alias("d"),
-        )
-    )
-    return {"bigrams": bigrams, "contexts": contexts, "cont": cont, "totals": totals}
-
-
-def kn_perplexity(
-    docs: DataFrame,
-    model: dict,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delim: str = " ",
-    tokens_col: str | None = None,
-) -> DataFrame:
-    """(id, n_pairs, cross_entropy, ppl) under the KN model — the same
-    output contract as ``perplexity`` so the two smoothings swap
-    freely in a curation pipeline. Scale: one pair-key shuffle joins
-    the bigram counts; contexts/cont are vocabulary-sized broadcasts;
-    totals is a 1-row broadcast. Text never shuffles."""
-    toks = _toks(text_col, delim, tokens_col)
-    pairs = docs.select(
-        F.col(id_col), F.explode(_pairs_of(toks)).alias("p")
-    ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    pc = (F.coalesce(F.col("n_cont"), F.lit(0)) + 1) / (F.col("t") + F.col("v"))
-    n_ctx = F.coalesce(F.col("n_ctx"), F.lit(0))
-    seen = (
-        F.greatest(F.coalesce(F.col("n"), F.lit(0)) - F.col("d"), F.lit(0.0))
-        + F.col("d") * F.coalesce(F.col("n_types"), F.lit(0)) * pc
-    ) / n_ctx
-    p = F.when(n_ctx > 0, seen).otherwise(pc)
-    scored = (
-        pairs.join(model["bigrams"], ["w1", "w2"], "left")
-        .join(F.broadcast(model["contexts"]), "w1", "left")
-        .join(F.broadcast(model["cont"]), "w2", "left")
-        .crossJoin(F.broadcast(model["totals"]))
-        .select(id_col, F.log(p).alias("logp"))
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.round(-F.avg("logp"), 6).alias("cross_entropy"),
-        F.round(F.exp(-F.avg("logp")), 4).alias("ppl"),
-    )

@@ -72,13 +72,3 @@ def pack_sequences(
     )
 
 
-def bin_summary(packed: DataFrame, strat_col: Optional[str] = None) -> DataFrame:
-    """Per-bin totals: docs, tokens, and the boundary overflow beyond
-    the budget (0 for interior bins) — the frame a pipeline logs to
-    audit packing efficiency."""
-    keys = ([strat_col] if strat_col else []) + ["bin_id"]
-    return packed.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.min("start_offset").alias("bin_start"),
-    )

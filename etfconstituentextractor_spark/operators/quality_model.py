@@ -19,7 +19,7 @@ with |w| <= 1/4: every partial sum of < 2^45 features is exactly
 representable, so the mean is bit-identical in any engine and in any
 summation order — the *linear margin* can be hash-compared directly
 (the sigmoid is monotone, so banding on the margin is banding on the
-probability; `sigmoid` is provided for callers who want the score).
+probability).
 
 Reference provenance: no counterpart in the reference engine (its only
 quality gate is tag-presence, ETFQuarterlyHoldingsExtractor.py:69-75);
@@ -90,7 +90,3 @@ def sql_hashed_linear_margin(
     )
 
 
-def sigmoid(margin: Column, bias: float = 0.0) -> Column:
-    """Probability view of the margin; NOT hash-compared (libm exp can
-    differ in the last ulp across engines) — band on the margin."""
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-(margin + F.lit(bias))))

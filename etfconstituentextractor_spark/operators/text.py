@@ -15,7 +15,7 @@ Portability notes (probed against DuckDB 1.x):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: tiny per-language stopword lists for the n-gram/stopword language
@@ -340,113 +340,3 @@ def simhash_pairs(
     )
 
 
-def clean_text(col: str = "text") -> Column:
-    """C4-style text normalization as ONE codegen expression chain:
-    strip control characters (except newline/tab), collapse runs of
-    spaces/tabs, collapse 3+ newlines to 2 (paragraph preserve), trim.
-    Pure regexp_replace — no Python, rides the scan like the PII
-    stage; Unicode-category NFC/NFKC normalization would need an ICU
-    UDF and is deliberately out of the codegen path.
-    """
-    c = F.col(col)
-    c = F.regexp_replace(c, r"[\x00-\x08\x0B-\x1F\x7F]", "")
-    c = F.regexp_replace(c, r"[ \t]{2,}", " ")
-    c = F.regexp_replace(c, r"\n{3,}", "\n\n")
-    return F.trim(c)
-
-
-def repetition_features(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Gopher-style repetition quality features per document: the
-    share of the document taken by its single most frequent token
-    (``top_token_share``) and the fraction of 2-gram occurrences that
-    are repeats of an already-seen 2-gram (``dup_2gram_frac``) — the
-    repetition gates a pretraining quality filter applies beside
-    length/stopword ratios.
-
-    Plan shape: tokenize → explode → two-level aggregation — the
-    shuffles carry (doc_id, token-hash-sized strings) counts, never
-    the document; at corpus scale this is the same explode→partial-agg
-    pattern as the token-count analytics (q81).
-    """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(text_col, " ")).alias("tok"),
-    )
-    uni = (
-        toks.groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            F.max("c").alias("top_c"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("top_c") / F.col("n_tokens")).alias("top_token_share"),
-        )
-    )
-    grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.expr(
-                f"zip_with(slice(split({text_col}, ' '), 1, size(split({text_col}, ' ')) - 1), "
-                f"slice(split({text_col}, ' '), 2, size(split({text_col}, ' ')) - 1), "
-                f"(a, b) -> concat(a, ' ', b))"
-            )
-        ).alias("g"),
-    )
-    dup2 = (
-        grams.groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            ((F.sum("c") - F.count(F.lit(1))) / F.sum("c")).alias("dup_2gram_frac")
-        )
-    )
-    return uni.join(dup2, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.round("top_token_share", 6).alias("top_token_share"),
-        F.round(F.coalesce("dup_2gram_frac", F.lit(0.0)), 6).alias("dup_2gram_frac"),
-    )
-
-
-def normalize_url(col: str = "url") -> Column:
-    """Canonical URL for URL-level dedup (the cheap gate a crawl
-    pipeline runs BEFORE content dedup): lowercase scheme+host, strip
-    scheme, strip a leading www., drop fragment and query string,
-    collapse duplicate slashes in the path, strip a trailing slash.
-    One regexp codegen chain — rides the scan like the PII stage.
-    """
-    c = F.trim(F.col(col))
-    c = F.regexp_replace(c, r"^[A-Za-z][A-Za-z0-9+.-]*://", "")   # scheme
-    c = F.regexp_replace(c, r"[#?].*$", "")                        # query/fragment
-    # lowercase the host part only (path case is significant)
-    host = F.lower(F.regexp_extract(c, r"^([^/]*)", 1))
-    path = F.regexp_replace(c, r"^[^/]*", "")
-    path = F.regexp_replace(path, r"/{2,}", "/")
-    path = F.regexp_replace(path, r"/$", "")
-    host = F.regexp_replace(host, r"^www\.", "")
-    return F.concat(host, path)
-
-
-def url_keep_first(
-    docs: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep-first dedup on the normalized URL: appends ``url_norm``
-    and ``is_url_keeper`` (smallest id per normalized URL wins — the
-    deterministic version of crawl-order keep-first). One shuffle on
-    the normalized-URL key; the window carries (id, url) only."""
-    from pyspark.sql import Window as W
-
-    normed = docs.withColumn("url_norm", normalize_url(url_col))
-    w = W.partitionBy("url_norm")
-    return normed.withColumn(
-        "is_url_keeper", F.col(id_col) == F.min(id_col).over(w)
-    )

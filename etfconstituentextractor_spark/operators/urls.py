@@ -2,14 +2,13 @@
 "LLM-pipeline — text analysis" adjunct: the crawl-side hygiene stage
 every web-scale corpus runs BEFORE content dedup — URL-keyed exact
 dedup only works after `http://Example.com:80/a/?utm_source=x#f` and
-`http://example.com/a/` collapse to one key, and domain blocklists
-only work on the registrable domain, not the raw host).
+`http://example.com/a/` collapse to one key, and domain curation keys
+on the registrable domain, not the raw host).
 
 All column algebra — lowercasing, default-port strip, fragment drop,
 tracking-parameter removal (HOF filter over the split query string),
-and trailing-slash normalization are pure codegen; the blocklist
-filter is a broadcast anti-join on the registrable domain. Nothing
-here leaves the JVM and nothing shuffles except the (tiny) blocklist
+and trailing-slash normalization are pure codegen. Nothing here
+leaves the JVM and nothing shuffles except the (tiny) suffix-rule
 broadcast; at 100 TB this stage rides the scan.
 
 The authority grammar ([userinfo@]host[:port], bracketed IPv6, one
@@ -21,10 +20,7 @@ authority does not fit the grammar (junk ports, '://'-less scheme
 forms) PASS THROUGH VERBATIM: wrong-shaped rows are a filter
 decision, not a rewrite.
 
-Registrable-domain extraction comes in two forms: an embedded
-multi-part-suffix subset (the structural rule of the public-suffix
-list: take 2 host labels, or 3 when the last 2 are a listed compound
-like `co.uk`) for dependency-free use, and the data-driven
+Registrable-domain extraction is the data-driven
 `registrable_domain_from_table`, whose production rule table is the
 REAL Mozilla public-suffix list — a committed snapshot ships in
 ``etfconstituentextractor_spark/data/public_suffix_list.dat``
@@ -34,7 +30,7 @@ Full PSL rule semantics are implemented: literal rules, ``*.``
 wildcard rules, and ``!`` exception rules (exception beats wildcard:
 under ``*.kawasaki.jp`` + ``!city.kawasaki.jp`` the host
 ``www.city.kawasaki.jp`` keys as ``city.kawasaki.jp``). IPv4 and
-IPv6 literals key as the WHOLE address in both forms.
+IPv6 literals key as the WHOLE address.
 
 No reference counterpart (the reference fetches two hard-coded SEC
 URLs, `ETFQuarterlyHoldingsExtractor.py:57-66`); this is engine
@@ -160,29 +156,6 @@ TRACKING_PARAMS = (
     "igshid",
 )
 
-#: multi-part public suffixes the registrable-domain rule recognizes
-#: (subset of the public-suffix list; swap in the full list as a
-#: broadcast table for production)
-COMPOUND_SUFFIXES = (
-    "co.uk",
-    "org.uk",
-    "ac.uk",
-    "gov.uk",
-    "com.au",
-    "net.au",
-    "org.au",
-    "co.jp",
-    "co.kr",
-    "com.br",
-    "com.cn",
-    "com.mx",
-    "co.in",
-    "co.nz",
-    "com.sg",
-    "com.tr",
-)
-
-
 def _tracking_pred(var: str) -> str:
     alts = "|".join(TRACKING_PARAMS)
     return f"{var} rlike '^({alts})='"
@@ -286,48 +259,6 @@ def host_of(url_col: str = "url") -> Column:
     )
 
 
-def _is_ip_literal(h: Column) -> Column:
-    """Bracketed IPv6 or dotted-quad IPv4 — ONE definition for both
-    registrable-domain implementations."""
-    return h.startswith("[") | h.rlike(r"^[0-9]+(\.[0-9]+){3}$")
-
-
-def registrable_domain(host_expr: Column) -> Column:
-    """eTLD+1 under the embedded compound-suffix subset: the last 3
-    host labels when the trailing 2 form a listed compound suffix,
-    else the last 2. IP literals (IPv4 dotted quads, bracketed IPv6)
-    key as the WHOLE address — '216.34' is not a domain and a
-    blocklisted IP must match itself."""
-    h = host_expr
-    parts = F.split(h, r"\.")
-    n = F.size(parts)
-    last2 = F.concat_ws(".", F.element_at(parts, -2), F.element_at(parts, -1))
-    last3 = F.concat_ws(
-        ".", F.element_at(parts, -3), F.element_at(parts, -2), F.element_at(parts, -1)
-    )
-    return (
-        F.when(h.isNull() | (n < 2) | _is_ip_literal(h), h)
-        .when((n >= 3) & last2.isin(*COMPOUND_SUFFIXES), last3)
-        .otherwise(last2)
-    )
-
-
-def filter_blocked_domains(
-    df: DataFrame, blocklist: DataFrame, *, url_col: str = "url"
-) -> DataFrame:
-    """Drop rows whose REGISTRABLE domain appears in ``blocklist``
-    (one `domain` column) — so `ads.example.com` and `example.com`
-    both fall to a listed `example.com`, the way domain blocklists
-    are meant to apply (IP entries match their literal). Broadcast
-    LEFT ANTI join; rows with no well-formed http(s) host (NULL key)
-    are kept — scheme/shape filtering is a separate decision."""
-    keyed = df.withColumn("__dom", registrable_domain(host_of(url_col)))
-    # no distinct: LEFT ANTI is duplicate-insensitive on the right,
-    # and dedup would cost the blocklist side an exchange
-    blocked = blocklist.select(F.lower("domain").alias("__dom"))
-    return keyed.join(F.broadcast(blocked), "__dom", "left_anti").drop("__dom")
-
-
 def registrable_domain_from_table(
     df: DataFrame,
     suffixes: DataFrame,
@@ -335,8 +266,7 @@ def registrable_domain_from_table(
     host_col: str,
     out_col: str = "domain",
 ) -> DataFrame:
-    """Data-driven eTLD+1 — the production form of
-    `registrable_domain`: suffix rules live in a TABLE (one `suffix`
+    """Data-driven eTLD+1: suffix rules live in a TABLE (one `suffix`
     column, e.g. the Mozilla public-suffix list, including wildcard
     rules spelled as '*.suffix'), and each host keys by its LONGEST
     matching suffix plus one label; hosts matching no rule fall back
@@ -347,8 +277,7 @@ def registrable_domain_from_table(
     label-suffix candidates AS AN ARRAY (a host has < ~10 labels —
     bounded), the suffix table collapses to ONE broadcast array row,
     and the longest match is an array intersection inside codegen —
-    df rows never explode and never shuffle; the suffix list rides
-    the same broadcast pattern as the blocklist filter.
+    df rows never explode and never shuffle.
 
     Wildcard semantics (public-suffix list rules): a literal rule
     makes `label.rule` the registrable domain; a `*.rule` wildcard
@@ -411,9 +340,11 @@ def registrable_domain_from_table(
     fallback = F.concat_ws(
         ".", F.element_at(parts, -2), F.element_at(parts, -1)
     )
+    # bracketed IPv6 or dotted-quad IPv4 literals key as themselves
+    ip_literal = h.startswith("[") | h.rlike(r"^[0-9]+(\.[0-9]+){3}$")
     return with_c.withColumn(
         out_col,
-        F.when(h.isNull() | (n < 2) | _is_ip_literal(h), h)
+        F.when(h.isNull() | (n < 2) | ip_literal, h)
         .when(win.isNotNull() & (win_labels < n), dom_from_rule)
         .when(win.isNotNull(), h)  # host IS a suffix: keys as itself
         .otherwise(fallback),

@@ -167,30 +167,3 @@ def curate(
     return audited
 
 
-def write_survivors(
-    audited: DataFrame,
-    docs: DataFrame,
-    path: str,
-    partition_by: str = "lang",
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """The pipeline's save stage (reference R22 writes one CSV per
-    reporting date, `ETFQuarterlyHoldingsExtractor.py:140-143` — here:
-    one parquet directory per stratum): join the kept verdicts back to
-    the source rows and write partitioned parquet.
-
-    Layout is the 100 TB story: `partitionBy` gives partition-pruned
-    reads downstream (a per-language consumer touches one directory),
-    `maxRecordsPerFile` bounds file sizes so a skewed stratum splits
-    into many files instead of one huge one. The join is keys-only
-    (doc_id) against the audit frame — document text rides the docs
-    side, never shuffling through the audit computation.
-    """
-    kept = audited.filter(F.col("verdict") == "kept").select("doc_id")
-    out = docs.join(kept, "doc_id", "left_semi")
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(partition_by)
-        .parquet(path)
-    )

@@ -320,11 +320,10 @@ def q80_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   a broadcast scalar frame (never a driver-side collect), rounded
 #   before hashing because ln's last ulp is engine-specific.
 # - leg='bpe' (§2B row 51): the same statistics over BPE PIECES from
-#   `operators/bpe.py:encode_corpus` under a fixed committed merge
-#   list (trained once by `train_bpe` on this corpus; training itself
-#   stays pytest-only — it is iterative with one control-plane row per
-#   round). The dictionary path runs each greedy merge fold over the
-#   corpus's DISTINCT words only, then broadcast-joins word → pieces
+#   `operators/bpe.py:encode_corpus` under a merge list trained once
+#   on this corpus and committed. The dictionary path runs each greedy
+#   merge fold over the corpus's DISTINCT words only, then
+#   broadcast-joins word → pieces
 #   back — per-merge cost is vocabulary-bounded, documents shuffle
 #   once. The oracle replays the identical greedy left-to-right fold
 #   in DuckDB: one `list_reduce` pass per merge over a separator-

@@ -11,15 +11,12 @@ the DuckDB oracle states the expected decode directly — hash-matched.
 
 The codec decode here uses a deterministic header-derived fake
 (width/height from payload length) because THESE fixture payloads are
-arbitrary text bytes, not a real codec stream. The engine's
-from-scratch lossless image codecs (`operators/png.py`,
-`operators/vp8l.py`) are not used here, so q95's oracle checks no
-codec; they are checked by their own tests only. The
-Spark-side shape — BinaryType column, Arrow batch transfer, typed
-struct out, error row on corrupt input — is the real, tested part, and
-is exactly what a production decode would plug into. A `binaryFile`
-source read is exercised in the unit tests (repo fixture files; no
-oracle view exists for out-of-corpus files).
+arbitrary text bytes, not a real codec stream, so q95's oracle checks
+no codec. The Spark-side shape — BinaryType column, Arrow batch
+transfer, typed struct out, error row on corrupt input — is the real,
+tested part, and is exactly what a production decode would plug
+into. A `binaryFile` source read is exercised in the unit tests (repo
+fixture files; no oracle view exists for out-of-corpus files).
 """
 
 from __future__ import annotations

@@ -51,7 +51,6 @@ def get_session(
     app_name: str = "etfce-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build the engine's SparkSession.
 
@@ -93,8 +92,6 @@ def get_session(
         .config("spark.python.worker.reuse", "true")
     )
     for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

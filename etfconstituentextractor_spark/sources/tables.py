@@ -154,17 +154,6 @@ def fanout(df: DataFrame, key: str = "doc_id", n: int | None = None) -> DataFram
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every corpus table (lazy; no I/O until an action runs)."""
-    return {name: load(spark, sf_dir, name) for name in schemas.TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
-    """Register all corpus tables as temp views (for the SQL API)."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name + suffix)
-
-
 _SCRATCH_COUNTER = itertools.count()
 #: dirs already registered for atexit removal in this process
 _SCRATCH_REGISTERED: set[str] = set()

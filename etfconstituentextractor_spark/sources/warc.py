@@ -26,10 +26,7 @@ are data). The record walk is incremental and the reader emits
 fixed-size chunks of parsed rows, so PAYLOAD memory is bounded by the
 chunk; the compressed file bytes themselves stay resident for the
 task — that is binaryFile's unit of work, and the reason WARC corpora
-cap file sizes (~1 GB). Files beyond executor memory use the member
-OFFSET INDEX below (`index_warc_members` + `read_warc_ranges`):
-indexing streams the file in 1 MiB reads, and the ranged reader
-splits one file's members across many tasks by byte span.
+cap file sizes (~1 GB).
 
 The sink mirrors the source: ``write_warc`` partitions the frame and
 each task writes one ``part-NNNNN.warc.gz`` with per-record members
@@ -397,137 +394,3 @@ def write_warc(
         .mapInPandas(_write, "n long")
         .count()
     )
-
-
-# ---------------------------------------------------------------------------
-# member-offset index: the >-executor-memory scale path
-# ---------------------------------------------------------------------------
-
-INDEX_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("member_ix", LongType()),
-        StructField("offset", LongType()),
-        StructField("comp_len", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-_INDEX_READ_CHUNK = 1 << 20  # 1 MiB streaming reads
-
-
-def index_warc_members(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """(path, member_ix, offset, comp_len) for every gzip member of
-    each ``.warc.gz`` file — built by STREAMING through the file in
-    1 MiB reads (decompressed bytes are discarded immediately), so
-    indexing a file costs O(read-chunk) memory regardless of file
-    size (decompression output is bounded per call via max_length).
-    This is the external index the module docstring names as the
-    scale path: with it, ONE oversized file splits across many tasks
-    (`read_warc_ranges`). Indexing errors become rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                try:
-                    with open(path, "rb") as fh:
-                        abs_off = 0       # file offset of current member start
-                        ix = 0
-                        d = None
-                        started = False   # current member received bytes
-                        pending = b""     # compressed bytes not yet consumed
-                        pending_off = 0   # file offset of pending[0]
-                        while True:
-                            if d is None:
-                                d = zlib.decompressobj(16 + 15)
-                                started = False
-                            if not pending:
-                                pending_off = fh.tell()
-                                pending = fh.read(_INDEX_READ_CHUNK)
-                                if not pending:
-                                    break
-                            try:
-                                # bounded output: without max_length a
-                                # 1 MiB compressed chunk can inflate
-                                # ~1000x in ONE call (review r7 —
-                                # exactly the OOM this API avoids);
-                                # unconsumed_tail re-feeds until the
-                                # chunk is drained or the member ends
-                                d.decompress(pending, _INDEX_READ_CHUNK)
-                                while not d.eof and d.unconsumed_tail:
-                                    d.decompress(
-                                        d.unconsumed_tail, _INDEX_READ_CHUNK
-                                    )
-                            except zlib.error as exc:
-                                rows.append(
-                                    (path, ix, abs_off, -1, f"bad_gzip_member: {exc}")
-                                )
-                                pending = b""
-                                started = False
-                                d = None
-                                break
-                            started = True
-                            if d.eof:
-                                consumed = len(pending) - len(d.unused_data)
-                                end = pending_off + consumed
-                                rows.append((path, ix, abs_off, end - abs_off, None))
-                                ix += 1
-                                pending = d.unused_data
-                                pending_off = end
-                                abs_off = end
-                                d = None
-                            else:
-                                pending = b""
-                        if started:
-                            rows.append((path, ix, abs_off, -1, "truncated_gzip_member"))
-                except OSError as exc:
-                    rows = [(path, -1, -1, -1, f"unreadable: {exc}")]
-                yield pd.DataFrame(
-                    rows, columns=["path", "member_ix", "offset", "comp_len", "error"]
-                )
-
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    return pdf.repartition(max(1, len(paths))).mapInPandas(gen, INDEX_SCHEMA)
-
-
-def read_warc_ranges(
-    spark: SparkSession, index: DataFrame, *, members_per_task: int = 1024
-) -> DataFrame:
-    """Read WARC records through a member-offset index: contiguous
-    member runs group into chunks of ``members_per_task``, chunks
-    hash-repartition across the cluster, and each task seeks to its
-    byte span and parses only those members — ONE file larger than
-    any executor's memory becomes many bounded tasks. Returns the
-    same WARC_SCHEMA stream as `read_warc` (record_ix is per-chunk)."""
-    if members_per_task < 1:
-        raise ValueError(f"members_per_task must be >= 1, got {members_per_task}")
-    chunks = (
-        index.filter(F.col("error").isNull())
-        .withColumn("chunk", (F.col("member_ix") / members_per_task).cast("bigint"))
-        .groupBy("path", "chunk")
-        .agg(
-            F.min("offset").alias("offset"),
-            F.sum("comp_len").alias("span_len"),
-        )
-        .repartition("path", "chunk")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        CHUNK = 512  # same chunked-emission rule as read_warc: payload
-        # memory bounded by the chunk, not the member span
-        for pdf in batches:
-            for path, off, span in zip(pdf["path"], pdf["offset"], pdf["span_len"]):
-                with open(path, "rb") as fh:
-                    fh.seek(int(off))
-                    blob = fh.read(int(span))
-                rows: list[dict] = []
-                for row in parse_warc_bytes(path, blob):
-                    rows.append(row)
-                    if len(rows) >= CHUNK:
-                        yield pd.DataFrame(rows)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return chunks.mapInPandas(gen, WARC_SCHEMA)

@@ -3,12 +3,13 @@
 hatch when built-in stateful ops — windows, dropDuplicates — can't
 express the semantics).
 
-The demonstration operator is gap-based sessionization, chosen
-deliberately because Spark's built-in ``session_window`` computes the
-same thing: the unit test replays the same events through BOTH paths
-and requires identical results, which pins the custom state machine's
-correctness (timeout handling, cross-batch state carry, final flush)
-against an independent engine-native implementation.
+The one operator here, ``sessionize`` (q59), is gap-based
+sessionization, chosen deliberately because Spark's built-in
+``session_window`` computes the same thing: the unit test replays the
+same events through BOTH paths and requires identical results, which
+pins the custom state machine's correctness (timeout handling,
+cross-batch state carry, final flush) against an independent
+engine-native implementation.
 
 State machine per user key:
 - state = (session_start, last_ts, n, sum_value) of the OPEN session;
@@ -35,14 +36,7 @@ from datetime import timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 
 #: output schema of the sessionize operator.
 SESSION_SCHEMA = (
@@ -59,7 +53,6 @@ def _utc_epoch_ms(ts) -> int:
     on a non-UTC host the armed timeout shifts by the offset and
     can fall below the watermark, killing the query)."""
     return calendar.timegm(ts.timetuple()) * 1000 + ts.microsecond // 1000
-
 
 
 def sessionize(events: DataFrame, gap_minutes: int) -> DataFrame:
@@ -117,184 +110,3 @@ def sessionize(events: DataFrame, gap_minutes: int) -> DataFrame:
     )
 
 
-class _TwsSessionizer(StatefulProcessor):
-    """`transformWithState` implementation of the SAME gap-session
-    state machine as :func:`sessionize` — Spark 4's successor API to
-    ``applyInPandasWithState`` (SPARK-46815, "arbitrary stateful
-    processing v2"). Differences the port has to absorb:
-
-    - state is a named handle (`getValueState`) instead of one
-      implicit per-key blob — composable (a processor can hold many
-      value/list/map states), and each state is schema'd;
-    - timers are EXPLICIT and multiple per key: re-arming means
-      delete-then-register (`listTimers`/`deleteTimer`), where the
-      v1 API's `setTimeoutTimestamp` replaced implicitly;
-    - expiry is delivered to `handleExpiredTimer` with the fired
-      timestamp, not as a boolean flag on the next input batch.
-
-    Requires the RocksDB state-store provider
-    (`spark.sql.streaming.stateStore.providerClass` =
-    ...state.RocksDBStateStoreProvider); the bundled HDFS-backed
-    provider does not implement the v2 state API.
-    """
-
-    _COLS = ["user_id", "session_start", "session_end", "n", "sum_value"]
-
-    def __init__(self, gap: timedelta) -> None:
-        self._gap = gap
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._session = handle.getValueState("session", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        pdf = pd.concat(list(rows)).sort_values(["ts"])
-        cur = self._session.get()
-        if cur is not None:
-            start, last, n, sv = cur
-        else:
-            start = last = None
-            n, sv = 0, 0.0
-        out = []
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            ts = ts.to_pydatetime()
-            if last is not None and (ts - last) >= self._gap:
-                out.append((user_id, start, last + self._gap, n, sv))
-                start, n, sv = ts, 0, 0.0
-            if start is None:
-                start = ts
-            last = ts
-            n += 1
-            sv += float(value)
-        self._session.update((start, last, n, sv))
-        # exactly one live timer per key: clear any earlier arm, then
-        # arm at the open session's close (v1's setTimeoutTimestamp)
-        for expiry in list(self._handle.listTimers()):
-            self._handle.deleteTimer(expiry)
-        self._handle.registerTimer(_utc_epoch_ms(last + self._gap))
-        if out:
-            yield pd.DataFrame(out, columns=self._COLS)
-
-    def handleExpiredTimer(
-        self, key: tuple, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cur = self._session.get()
-        if cur is None:
-            return
-        start, last, n, sv = cur
-        # a stale timer (session extended after arming) must not flush
-        # the still-open session early
-        if _utc_epoch_ms(last + self._gap) > expiredTimerInfo.getExpiryTimeInMs():
-            return
-        self._session.clear()
-        yield pd.DataFrame(
-            [(user_id, start, last + self._gap, n, sv)], columns=self._COLS
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_tws(events: DataFrame, gap_minutes: int) -> DataFrame:
-    """:func:`sessionize` on the transformWithState v2 API — identical
-    output contract (append-mode, data-closed sessions emit when
-    observed, the open session flushes on event-time timer, sessions
-    whose timeout lies beyond the final watermark stay in state).
-    The unit test replays the same events through BOTH state APIs and
-    the batch islands oracle and requires exact agreement."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_TwsSessionizer(timedelta(minutes=gap_minutes)),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def funnel_stream(
-    events: DataFrame,
-    steps: tuple[str, ...],
-    *,
-    flush_gap_minutes: int = 60,
-) -> DataFrame:
-    """STREAMING ordered-sequence funnel — the event-time twin of
-    `operators/funnel.py` (q42's 'funnel' leg), on the same
-    applyInPandasWithState pattern as `sessionize`.
-
-    Exactness under out-of-order arrival: chained minima are NOT
-    incrementally maintainable from the running (t1..tK) alone — a
-    late step-1 event earlier than the current t1 can retroactively
-    enable earlier later-step matches — so the state buffers each
-    user's per-step event times and the funnel is computed AT FLUSH
-    (event-time timeout: watermark past last activity + flush_gap).
-    State is bounded by the user's step-event count; a production
-    deployment bounds it further with a retention horizon, exactly
-    like the session operator's gap.
-
-    Same sentinel contract as `sessionize`/q59: under AvailableNow
-    replay, stage a far-future sentinel event so the final watermark
-    passes every user's timeout and all funnels flush. Input should
-    carry (user_id, ts, event_type); non-step types are filtered
-    here, so noise never enters state.
-    """
-    if len(steps) < 2 or len(set(steps)) != len(steps):
-        raise ValueError(f"need >= 2 distinct steps, got {list(steps)}")
-    gap = timedelta(minutes=flush_gap_minutes)
-    step_list = list(steps)
-    out_schema = "user_id bigint, stage int, funnel_sec bigint"
-    state_schema = ", ".join(f"s{k} array<timestamp>" for k in range(len(steps)))
-
-    def _finish(user_id, buf):
-        cur = None
-        hit = []
-        for times in buf:
-            cands = [t for t in times if cur is None or t >= cur]
-            if not cands:
-                break
-            cur = min(cands)
-            hit.append(cur)
-        stage = len(hit)
-        # floor each epoch BEFORE subtracting — unix_timestamp()
-        # semantics, so the batch operator's funnel_sec matches exactly
-        # on sub-second timestamps
-        sec = (
-            calendar.timegm(hit[-1].timetuple()) - calendar.timegm(hit[0].timetuple())
-            if stage >= 2
-            else None
-        )
-        return (user_id, stage, sec)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cols = ["user_id", "stage", "funnel_sec"]
-        if state.hasTimedOut:
-            buf = [list(x) for x in state.get]
-            state.remove()
-            yield pd.DataFrame([_finish(user_id, buf)], columns=cols)
-            return
-        buf = [list(x) for x in state.get] if state.exists else [[] for _ in steps]
-        for pdf in pdfs:
-            for ts, et in zip(pdf["ts"], pdf["event_type"]):
-                buf[step_list.index(et)].append(ts.to_pydatetime())
-        state.update(tuple(buf))
-        # arm from the BUFFERED maximum: a late batch must not shrink
-        # the timeout below the watermark
-        last = max((t for times in buf for t in times), default=None)
-        if last is not None:
-            state.setTimeoutTimestamp(_utc_epoch_ms(last + gap))
-        return
-        yield  # pragma: no cover — make fn a generator
-
-    relevant = events.filter(F.col("event_type").isin(step_list))
-    return relevant.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

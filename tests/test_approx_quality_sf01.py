@@ -89,15 +89,18 @@ def test_multiprobe_beats_single_probe_sf01(spark, vecs):
     import etfconstituentextractor_spark.plans.llm_similarity as ls
     from etfconstituentextractor_spark.operators.ann import (
         srp_index_buckets,
-        srp_plane_dots,
         srp_query_probes,
     )
+    from etfconstituentextractor_spark.operators.veckernel import append_plane_dots
 
     n_tables, r = 6, 5
     nq = ls._N_QUERIES
     exact = _exact_topk(vecs, nq, 5)
     planes = ls._plane_matrix()[: n_tables * r]
-    ev = srp_plane_dots(ls._vec(load(spark, SF01, "embeddings")), planes)
+    # q71's projection: kernel dots, rounded to 9 places in the JVM
+    ev = append_plane_dots(
+        ls._vec(load(spark, SF01, "embeddings")), "v", planes, "raw"
+    ).withColumn("dots", F.expr("transform(raw, d -> round(d, 9))"))
     idx = srp_index_buckets(ev.filter(F.col("vec_id") >= nq), n_tables, r)
 
     def cands(qb):

@@ -1,6 +1,6 @@
 """Boilerplate removal (operators/boilerplate.py): planted-fixture
-semantics, broadcast-path == antijoin-path equivalence, and the
-text-never-shuffles plan shape of the registered q87."""
+semantics and the text-never-shuffles plan shape of the registered
+q87."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from etfconstituentextractor_spark.operators.boilerplate import (
     frequent_lines,
     line_doc_frequencies,
     strip_boilerplate,
-    strip_boilerplate_antijoin,
 )
 
 BANNER = "subscribe now"
@@ -46,7 +45,7 @@ def test_line_doc_frequencies_counts_docs_not_occurrences(spark, corpus):
     assert by_hash[footer_hash] == 9  # 8 docs + the doubled doc, once each
 
 
-@pytest.mark.parametrize("strip", [strip_boilerplate, strip_boilerplate_antijoin])
+@pytest.mark.parametrize("strip", [strip_boilerplate])
 def test_strip_removes_banners_preserves_order(spark, corpus, strip):
     out = {r.doc_id: r for r in strip(corpus, min_docs=4).collect()}
     assert len(out) == 8
@@ -60,7 +59,7 @@ def test_strip_removes_banners_preserves_order(spark, corpus, strip):
         assert r.n_lines == len(r.text.split("\n"))
 
 
-@pytest.mark.parametrize("strip", [strip_boilerplate, strip_boilerplate_antijoin])
+@pytest.mark.parametrize("strip", [strip_boilerplate])
 def test_threshold_boundary_inclusive(spark, corpus, strip):
     # BANNER appears in exactly 4 docs: min_docs=4 strips it,
     # min_docs=5 keeps it
@@ -68,12 +67,6 @@ def test_threshold_boundary_inclusive(spark, corpus, strip):
     assert BANNER in kept5.clean_text
     kept4 = strip(corpus, min_docs=4).filter(F.col("doc_id") == 0).first()
     assert BANNER not in kept4.clean_text
-
-
-def test_broadcast_and_antijoin_paths_agree(spark, corpus):
-    a = strip_boilerplate(corpus, min_docs=4).orderBy("doc_id").collect()
-    b = strip_boilerplate_antijoin(corpus, min_docs=4).orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
 
 
 def test_no_boilerplate_is_identity(spark):

@@ -1,22 +1,14 @@
-"""Distributed BPE training (operators/bpe.py) vs a from-scratch
-pure-Python oracle replaying the same (count desc, pair lex) tiebreak."""
+"""BPE encoding (operators/bpe.py) vs a from-scratch pure-Python
+oracle; merge lists come from the oracle's trainer, which replays the
+(count desc, pair lex) tiebreak."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.operators.bpe import (
-    END,
-    encode,
-    encode_corpus,
-    pair_counts,
-    symbolize,
-    train_bpe,
-    word_frequencies,
-)
+from etfconstituentextractor_spark.operators.bpe import END, encode_corpus, symbolize
 
 CORPUS = [
     "low low low low low",
@@ -53,71 +45,15 @@ def py_bpe(word_freqs: dict[str, int], n_merges: int):
     return merges, vocab
 
 
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame([(t,) for t in CORPUS], "text string")
-
-
-def test_word_frequencies(spark, docs):
-    got = {r.word: r.n for r in word_frequencies(docs).collect()}
-    want = Counter(" ".join(CORPUS).split())
-    assert got == dict(want)
-
-
-def test_symbolize_chars_plus_end_marker(spark, docs):
-    syms = {
-        r.word: r.syms for r in symbolize(word_frequencies(docs)).collect()
-    }
-    assert syms["low"] == ["l", "o", "w", END]
-
-
-def test_pair_counts_weighted_by_word_freq(spark, docs):
-    vocab = symbolize(word_frequencies(docs))
-    got = {(r.a, r.b): r.cnt for r in pair_counts(vocab).collect()}
-    freqs = Counter(" ".join(CORPUS).split())
-    want: Counter = Counter()
-    for w, n in freqs.items():
-        syms = list(w) + [END]
-        for i in range(len(syms) - 1):
-            want[(syms[i], syms[i + 1])] += n
-    assert got == dict(want)
-
-
-def test_train_bpe_matches_python_oracle(spark, docs):
-    freqs = dict(Counter(" ".join(CORPUS).split()))
-    want_merges, want_vocab = py_bpe(freqs, 8)
-    got_merges, got_vocab = train_bpe(word_frequencies(docs), 8)
-    assert got_merges == want_merges
-    got = {r.word: r.syms for r in got_vocab.collect()}
-    assert got == want_vocab
-
-
-def test_train_bpe_on_real_documents(spark, sf_dir):
-    from etfconstituentextractor_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents").select("text")
-    wf = word_frequencies(docs)
-    freqs = {r.word: r.n for r in wf.collect()}  # tiny vocab at test SF
-    want_merges, _ = py_bpe(freqs, 6)
-    got_merges, _ = train_bpe(wf, 6)
-    assert got_merges == want_merges
+def test_symbolize_chars_plus_end_marker(spark):
+    words = spark.createDataFrame([("low",)], "word string")
+    assert symbolize(words).first().syms == ["l", "o", "w", END]
 
 
 def test_overlapping_pairs_merge_greedy_left_to_right(spark):
     # 'aaaa' with pair (a,a): greedy non-overlapping -> [aa, aa, </w>]
-    words = spark.createDataFrame([("aaaa", 5)], "word string, n long")
-    merges, vocab = train_bpe(words, 1)
-    assert merges == [("a", "a")]
-    assert vocab.first().syms == ["aa", "aa", END]
-
-
-def test_encode_applies_merges(spark, docs):
-    merges, _ = train_bpe(word_frequencies(docs), 8)
-    enc = docs.select(encode("split(text, ' ')", merges).alias("pieces")).first()
-    # re-derive via the python oracle's vocab
-    freqs = dict(Counter(" ".join(CORPUS).split()))
-    _, vocab = py_bpe(freqs, 8)
-    assert enc.pieces == [vocab[w] for w in CORPUS[0].split()]
+    df = spark.createDataFrame([(0, "aaaa")], "doc_id long, text string")
+    assert encode_corpus(df, [("a", "a")]).first().pieces == ["aa", "aa", END]
 
 
 # ---------------------------------------------------------------------------
@@ -152,21 +88,6 @@ def test_encode_corpus_matches_python_oracle(spark, iddocs):
         assert got[i] == (want, len(want)), i
 
 
-def test_encode_corpus_matches_expression_encode(spark, iddocs):
-    """The dictionary path and the fold-chain expression path are the
-    same function — inference parity between the two encode shapes."""
-    merges, _ = train_bpe(word_frequencies(iddocs), 6)
-    via_dict = {r.doc_id: r.pieces for r in encode_corpus(iddocs, merges).collect()}
-    via_expr = {
-        r.doc_id: r.pieces
-        for r in iddocs.select(
-            "doc_id",
-            F.flatten(encode("split(text, ' ')", merges)).alias("pieces"),
-        ).collect()
-    }
-    assert via_dict == via_expr
-
-
 def test_encode_corpus_drops_wordless_docs_and_guards_names(spark):
     df = spark.createDataFrame([(0, "a b"), (1, "")], "doc_id long, text string")
     out = encode_corpus(df, [("a", END)]).collect()
@@ -178,7 +99,7 @@ def test_encode_corpus_drops_wordless_docs_and_guards_names(spark):
 def test_encode_corpus_plan_broadcast_join_single_doc_shuffle(spark, iddocs):
     """Scale contract: the corpus-side plan is posexplode → broadcast
     dictionary join → ONE doc-key shuffle; zero Python evaluation."""
-    merges, _ = train_bpe(word_frequencies(iddocs), 4)
+    merges, _ = py_bpe(dict(Counter(" ".join(CORPUS).split())), 4)
     plan = (
         encode_corpus(iddocs, merges)
         ._jdf.queryExecution()

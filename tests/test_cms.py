@@ -6,15 +6,26 @@ hold on a skewed synthetic vocabulary."""
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 import duckdb
 import pandas as pd
 import pytest
 
 from etfconstituentextractor_spark.operators.cms import (
-    cms_token_estimates,
-    sql_cms_token_estimates,
+    cms_from_counts,
+    sql_cms_from_counts,
 )
+
+#: the DuckDB (token, n_exact) pre-count over a registered view ``t``
+_SQL_COUNTS = "SELECT token, COUNT(*) AS n_exact FROM t GROUP BY token"
+
+
+def _counts(spark, toks):
+    """(token, n_exact): one row per distinct token, as q81 pre-counts."""
+    return spark.createDataFrame(
+        list(Counter(toks).items()), "token string, n_exact bigint"
+    )
 
 
 def _py_cms(tokens, d, w):
@@ -49,29 +60,28 @@ def _zipf_tokens():
 def test_cms_three_way_agreement(spark, d, w):
     toks = _zipf_tokens()
     expected = _py_cms(toks, d, w)
-    df = spark.createDataFrame([(t,) for t in toks], "token string")
     got = {
         r.token: (r.n_exact, r.cms_est)
-        for r in cms_token_estimates(df, "token", d=d, w=w).collect()
+        for r in cms_from_counts(_counts(spark, toks), "token", d=d, w=w).collect()
     }
     assert got == expected
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"token": toks}))
-    sql = sql_cms_token_estimates("SELECT token FROM t", "token", d=d, w=w)
+    sql = sql_cms_from_counts(_SQL_COUNTS, "token", d=d, w=w)
     ducked = {r[0]: (r[1], r[2]) for r in con.sql(sql).fetchall()}
     assert ducked == expected
 
 
 def test_cms_invariants(spark):
     toks = _zipf_tokens()
-    df = spark.createDataFrame([(t,) for t in toks], "token string")
-    tight = cms_token_estimates(df, "token", d=4, w=16).collect()
+    counts = _counts(spark, toks)
+    tight = cms_from_counts(counts, "token", d=4, w=16).collect()
     # one-sided: never underestimates
     assert all(r.cms_est >= r.n_exact for r in tight)
     # w=16 over ~69 distinct tokens MUST collide somewhere
     assert any(r.cms_est > r.n_exact for r in tight)
     # a width far beyond the vocabulary makes every estimate exact
-    wide = cms_token_estimates(df, "token", d=4, w=1 << 20).collect()
+    wide = cms_from_counts(counts, "token", d=4, w=1 << 20).collect()
     assert all(r.cms_est == r.n_exact for r in wide)
 
 
@@ -114,10 +124,9 @@ def test_cms_grids_merge_by_addition(spark):
         assert m_est == est, t
 
     # and the Spark build agrees with the replay it was merged against
-    df = spark.createDataFrame([(t,) for t in toks], "token string")
     got = {
         r.token: (r.n_exact, r.cms_est)
-        for r in cms_token_estimates(df, "token", d=d, w=w).collect()
+        for r in cms_from_counts(_counts(spark, toks), "token", d=d, w=w).collect()
     }
     assert got == full
 
@@ -132,10 +141,9 @@ def test_cms_three_way_on_adversarial_tokens(spark):
         "emoji🚀", " lead", "trail ", "tab\tsep", "back\\slash",
     ] * 3
     expected = _py_cms(toks, 2, 8)
-    df = spark.createDataFrame([(t,) for t in toks], "token string")
     got = {
         r.token: (r.n_exact, r.cms_est)
-        for r in cms_token_estimates(df, "token", d=2, w=8).collect()
+        for r in cms_from_counts(_counts(spark, toks), "token", d=2, w=8).collect()
     }
     assert got == expected
     con = duckdb.connect()
@@ -143,15 +151,16 @@ def test_cms_three_way_on_adversarial_tokens(spark):
     ducked = {
         r[0]: (r[1], r[2])
         for r in con.sql(
-            sql_cms_token_estimates("SELECT token FROM t", "token", d=2, w=8)
+            sql_cms_from_counts(_SQL_COUNTS, "token", d=2, w=8)
         ).fetchall()
     }
     assert ducked == expected
 
 
 def test_cms_null_and_bad_params(spark):
-    df = spark.createDataFrame([("a",), (None,), ("a",)], "token string")
-    rows = cms_token_estimates(df, "token", d=2, w=8).collect()
+    counts = spark.createDataFrame([("a", 2), (None, 1)], "token string, n_exact bigint")
+    # a NULL token hashes to no bucket, so it gets no estimate row
+    rows = cms_from_counts(counts, "token", d=2, w=8).collect()
     assert {r.token: r.n_exact for r in rows} == {"a": 2}
     with pytest.raises(ValueError):
-        cms_token_estimates(df, "token", d=0, w=8)
+        cms_from_counts(counts, "token", d=0, w=8)

@@ -117,35 +117,6 @@ def test_curate_contamination_and_mixture_gates(spark):
     }
 
 
-def test_write_survivors_partitioned_layout(spark, sf_dir, tmp_path):
-    """The save stage writes one directory per stratum containing
-    exactly the kept documents, readable back with partition pruning
-    (the R22 one-file-per-date semantic, distributed)."""
-    import os
-
-    from etfconstituentextractor_spark.pipeline.curation import write_survivors
-    from etfconstituentextractor_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    audited = curate(docs)
-    out = str(tmp_path / "survivors")
-    write_survivors(audited, docs, out, partition_by="lang")
-
-    dirs = {d for d in os.listdir(out) if d.startswith("lang=")}
-    langs = {r.lang for r in docs.select("lang").distinct().collect()}
-    assert dirs == {f"lang={lg}" for lg in langs}
-
-    back = spark.read.parquet(out)
-    kept_ids = {
-        r.doc_id for r in audited.filter(F.col("verdict") == "kept").collect()
-    }
-    assert {r.doc_id for r in back.collect()} == kept_ids
-    # partition pruning: a one-language read must scan one directory
-    one = back.filter(F.col("lang") == sorted(langs)[0])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
-
-
 # ---------------------------------------------------------------------------
 # Full-pipeline fuzz: curate() vs a pure-Python reimplementation of
 # every stage (hashlib md5 end to end — banded LSH included), a second
@@ -309,22 +280,19 @@ def test_curate_matches_python_reference(spark, data, n_docs, rate):
     assert got == want
 
 
-def test_corpus_to_training_shards_chain(spark, sf_dir, tmp_path):
+def test_corpus_to_training_shards_chain(spark, sf_dir):
     """The full corpus-to-training-data story in one chain: curate ->
-    write_survivors (partitioned parquet) -> pack_sequences over the
-    saved survivors. Every kept document lands in exactly one bin of
-    its language shard; bins respect the token budget up to one
-    boundary document; nothing dropped or duplicated."""
-    from etfconstituentextractor_spark.operators.packing import bin_summary, pack_sequences
-    from etfconstituentextractor_spark.pipeline.curation import write_survivors
+    pack_sequences over the kept documents. Every kept document lands
+    in exactly one bin of its language shard; bins respect the token
+    budget up to one boundary document; nothing dropped or
+    duplicated."""
+    from etfconstituentextractor_spark.operators.packing import pack_sequences
     from etfconstituentextractor_spark.sources.tables import load
 
     docs = load(spark, sf_dir, "documents")
     audited = curate(docs)
-    out = str(tmp_path / "survivors")
-    write_survivors(audited, docs, out, partition_by="lang")
-
-    surv = spark.read.parquet(out).select(
+    kept = audited.filter(F.col("verdict") == "kept").select("doc_id")
+    surv = docs.join(kept, "doc_id", "left_semi").select(
         "doc_id", "lang", F.expr("size(split(text, ' '))").alias("n_tokens")
     )
     budget = 512
@@ -334,7 +302,8 @@ def test_corpus_to_training_shards_chain(spark, sf_dir, tmp_path):
     assert packed.select("doc_id").distinct().count() == surv.count()
 
     max_doc = surv.agg(F.max("n_tokens")).first()[0]
-    for r in bin_summary(packed, strat_col="lang").collect():
+    bins = packed.groupBy("lang", "bin_id").agg(F.sum("n_tokens").alias("n_tokens"))
+    for r in bins.collect():
         # a bin holds at most budget + one boundary document's tokens
         assert r.n_tokens <= budget + max_doc
         assert r.bin_id >= 0

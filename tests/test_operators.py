@@ -382,14 +382,17 @@ def test_multiprobe_srp_lsh_beats_single_probe_at_equal_index(spark, sf_dir):
     import etfconstituentextractor_spark.plans.llm_similarity as ls
     from etfconstituentextractor_spark.operators.ann import (
         srp_index_buckets,
-        srp_plane_dots,
         srp_query_probes,
     )
+    from etfconstituentextractor_spark.operators.veckernel import append_plane_dots
     from etfconstituentextractor_spark.sources.tables import load
 
     n_tables, r = 6, 5
     planes = ls._plane_matrix()[: n_tables * r]
-    ev = srp_plane_dots(ls._vec(load(spark, sf_dir, "embeddings")), planes)
+    # q71's projection: kernel dots, rounded to 9 places in the JVM
+    ev = append_plane_dots(
+        ls._vec(load(spark, sf_dir, "embeddings")), "v", planes, "raw"
+    ).withColumn("dots", F.expr("transform(raw, d -> round(d, 9))"))
     nq = ls._N_QUERIES
     idx = srp_index_buckets(ev.filter(F.col("vec_id") >= nq), n_tables, r)
     q1 = srp_index_buckets(ev.filter(F.col("vec_id") < nq), n_tables, r)
@@ -759,10 +762,7 @@ def test_pack_sequences_matches_python(spark, sf_dir):
     offset / budget), oversized docs own their bins, totals preserved."""
     import hashlib
 
-    from etfconstituentextractor_spark.operators.packing import (
-        bin_summary,
-        pack_sequences,
-    )
+    from etfconstituentextractor_spark.operators.packing import pack_sequences
     from etfconstituentextractor_spark.sources.tables import load
 
     d = load(spark, sf_dir, "documents").select(
@@ -790,7 +790,8 @@ def test_pack_sequences_matches_python(spark, sf_dir):
     # summary: token totals preserved; interior bins start on budget
     # multiples is NOT required (bins cut by document boundaries), but
     # every bin's start_offset must be inside [bin_id*budget, +budget)
-    for r in bin_summary(packed, strat_col="lang").collect():
+    bins = packed.groupBy("lang", "bin_id").agg(F.min("start_offset").alias("bin_start"))
+    for r in bins.collect():
         assert r.bin_id * budget <= r.bin_start < (r.bin_id + 1) * budget
     assert packed.agg(F.sum("n_tokens")).first()[0] == d.agg(F.sum("n_tokens")).first()[0]
 
@@ -1042,28 +1043,6 @@ def test_temperature_rates_drive_the_mixture(spark, sf_dir):
         assert abs(got.get(s, 0) - want) <= max(8.0, 0.35 * want), (s, got.get(s), want)
 
 
-def test_clean_text_normalization(spark):
-    from etfconstituentextractor_spark.operators.text import clean_text
-
-    rows = [
-        (1, "a  b\t\tc"),                      # space/tab runs collapse
-        (2, "x\x00y\x07z"),                     # control chars strip
-        (3, "p1\n\n\n\n\np2"),                  # newline runs cap at 2
-        (4, "  padded  "),                      # trim
-        (5, "keep\nsingle\n\ndouble"),          # 1-2 newlines untouched
-    ]
-    df = spark.createDataFrame(rows, "id bigint, text string")
-    out = {r.id: r.c for r in df.select("id", clean_text().alias("c")).collect()}
-    assert out[1] == "a b c"
-    assert out[2] == "xyz"
-    assert out[3] == "p1\n\np2"
-    assert out[4] == "padded"
-    assert out[5] == "keep\nsingle\n\ndouble"
-    plan = df.select(clean_text().alias("c"))._jdf.queryExecution().executedPlan().toString()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
-
-
 def test_simhash_64bit_cross_engine_and_banded(spark, sf_dir):
     """64-bit fingerprints (second salted md5 for digits 33-64): both
     engines build identical bitstrings, and banded pair generation
@@ -1106,49 +1085,6 @@ def test_simhash_64bit_cross_engine_and_banded(spark, sf_dir):
     pairs = simhash_pairs(d, max_hamming=3, n_bits=64, n_bands=4)
     got_pairs = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     assert got_pairs == brute
-
-
-def test_repetition_features(spark):
-    """Repetition quality gates against hand-computed values: a
-    repeated-token doc scores high on both features, a all-distinct
-    doc scores near-uniform, and a single-token doc has no 2-grams."""
-    from etfconstituentextractor_spark.operators.text import repetition_features
-
-    rows = [
-        (1, "spam spam spam spam eggs"),   # top share 4/5; 2-grams: 4 total, {spam spam: 3, spam eggs: 1} -> dup (4-2)/4
-        (2, "a b c d e"),                   # all distinct: top 1/5, dup 0
-        (3, "solo"),                        # one token: no 2-grams
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {r.doc_id: r for r in repetition_features(df).collect()}
-    assert out[1].n_tokens == 5
-    assert abs(out[1].top_token_share - 0.8) < 1e-9
-    assert abs(out[1].dup_2gram_frac - 0.5) < 1e-9
-    assert abs(out[2].top_token_share - 0.2) < 1e-9
-    assert out[2].dup_2gram_frac == 0.0
-    assert out[3].n_tokens == 1 and out[3].dup_2gram_frac == 0.0
-
-
-def test_url_normalization_and_keep_first(spark):
-    from etfconstituentextractor_spark.operators.text import url_keep_first
-
-    rows = [
-        (1, "https://WWW.Example.com/a/b?q=1#frag"),
-        (2, "http://example.com/a//b/"),          # same after normalization
-        (3, "example.com/a/b"),                    # scheme-less, same
-        (4, "https://example.com/A/B"),            # path case differs -> distinct
-        (5, "https://other.org//x//y//"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, url string")
-    out = {r.doc_id: r for r in url_keep_first(df).collect()}
-    assert out[1].url_norm == out[2].url_norm == out[3].url_norm == "example.com/a/b"
-    assert out[4].url_norm == "example.com/A/B"
-    assert out[5].url_norm == "other.org/x/y"
-    assert out[1].is_url_keeper and not out[2].is_url_keeper and not out[3].is_url_keeper
-    assert out[4].is_url_keeper and out[5].is_url_keeper
-    plan = url_keep_first(df)._jdf.queryExecution().executedPlan().toString()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
 
 
 def test_kmv_sketch_accuracy_and_exact_branch(spark):
@@ -1231,69 +1167,6 @@ def test_weighted_reservoir_matches_python_oracle(spark):
     sel_mean = sum((i % 50) + 1 for i in got) / k
     pop_mean = sum((i % 50) + 1 for i, _g, w in rows if w) / 300
     assert sel_mean > pop_mean * 1.15, (sel_mean, pop_mean)
-
-
-def test_register_views_sql_api(spark, sf_dir):
-    """The SQL entry point (sources/tables.py:register_views): every
-    corpus table queryable via spark.sql, typed by the same loaders
-    (events gets the unit-aware ts path), and a SQL aggregation over
-    the views matches the DataFrame API result exactly."""
-    from etfconstituentextractor_spark.sources.tables import load, register_views
-    from etfconstituentextractor_spark import schemas
-
-    register_views(spark, sf_dir, suffix="_v")
-    for t in schemas.TABLES:
-        assert spark.table(f"{t}_v").schema == load(spark, sf_dir, t).schema
-
-    got = spark.sql(
-        "SELECT l_returnflag, COUNT(*) AS n, "
-        "CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(14,4))), 2) AS DOUBLE) AS q "
-        "FROM lineitem_v GROUP BY l_returnflag ORDER BY l_returnflag"
-    ).collect()
-    from pyspark.sql import functions as F
-
-    want = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("l_quantity").cast("decimal(14,4)")), 2)
-            .cast("double")
-            .alias("q"),
-        )
-        .orderBy("l_returnflag")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    # events view must carry the unit-normalized NTZ timestamp
-    assert dict(spark.table("events_v").dtypes)["ts"] == "timestamp_ntz"
-
-
-def test_normalize_url_canonical_cases(spark):
-    """URL canonicalization (operators/text.py) — the URL-level dedup
-    gate a crawl pipeline runs before content dedup: scheme/fragment/
-    query stripped, host lowercased and de-www'd, duplicate and
-    trailing slashes collapsed, path case preserved."""
-    from etfconstituentextractor_spark.operators.text import normalize_url
-
-    cases = [
-        ("HTTPS://WWW.Example.COM//a//B/?q=1#frag", "example.com/a/B"),
-        ("http://example.com/", "example.com"),
-        ("example.com/x/", "example.com/x"),
-        ("  https://sub.Example.org/Path/  ", "sub.example.org/Path"),
-        ("ftp://Host.net//d", "host.net/d"),
-    ]
-    df = spark.createDataFrame(cases, "url string, want string")
-    out = df.select("want", normalize_url("url").alias("got")).collect()
-    for r in out:
-        assert r.got == r.want, (r.got, r.want)
-    # idempotent: normalizing a normalized URL is a no-op
-    again = (
-        df.select(normalize_url("url").alias("url"))
-        .select(F.col("url").alias("want"), normalize_url("url").alias("got"))
-        .collect()
-    )
-    assert all(r.got == r.want for r in again)
 
 
 def test_kmv_sketch_ignores_nulls(spark):
@@ -1601,4 +1474,3 @@ def test_intra_doc_repetition(spark):
 
     with _pytest.raises(ValueError, match="n >= 2"):
         intra_doc_repetition(df, n=1)
-

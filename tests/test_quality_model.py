@@ -4,13 +4,10 @@ cross-engine bit-identity, empty-input guard, weight properties."""
 from __future__ import annotations
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.operators.quality_model import (
     hashed_linear_margin,
     make_weights,
-    sigmoid,
     sql_hashed_linear_margin,
 )
 from etfconstituentextractor_spark.operators.text import (
@@ -63,11 +60,8 @@ def test_unigram_only_margin_is_mean_weight(spark):
 
 def test_empty_feature_array_scores_zero(spark):
     df = spark.createDataFrame([(1,)], "doc_id long")
-    m = df.select(
-        hashed_linear_margin("array()", W).alias("m"),
-        sigmoid(hashed_linear_margin("array()", W)).alias("p"),
-    ).first()
-    assert m.m == 0.0 and m.p == 0.5
+    m = df.select(hashed_linear_margin("array()", W).alias("m")).first()
+    assert m.m == 0.0
 
 
 def test_q80_margin_stays_in_codegen(spark, sf_dir):

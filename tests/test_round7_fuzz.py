@@ -149,23 +149,20 @@ def test_warc_parser_never_raises_on_fuzz():
 
 def test_crawl_ingest_composition(spark, tmp_path):
     """The round-7 pieces as one pipeline: WARC shards -> distributed
-    read -> URL canonicalization -> blocklist -> URL-keyed exact
-    dedup. Tracking-param variants of the same page collapse to one
-    survivor; blocked domains never reach the dedup."""
+    read -> URL canonicalization -> URL-keyed exact dedup.
+    Tracking-param variants of the same page collapse to one
+    survivor."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from etfconstituentextractor_spark.operators.urls import (
-        filter_blocked_domains,
-        normalize_url,
-    )
+    from etfconstituentextractor_spark.operators.urls import normalize_url
     from etfconstituentextractor_spark.sources.warc import read_warc, write_warc
 
     pages = [
         ("http://a.test/page?utm_source=x", "<p>A</p>"),
         ("http://A.TEST/page/", "<p>A older</p>"),       # same canonical URL
         ("http://a.test/other", "<p>B</p>"),
-        ("http://ads.bad.test/x?id=1", "<p>ad</p>"),     # blocked domain
+        ("http://ads.bad.test/x?id=1", "<p>ad</p>"),     # id is not tracking
         ("https://c.test/p?b=2&utm_medium=m&a=1", "<p>C</p>"),
     ]
     df = spark.createDataFrame(pages, "url string, html string")
@@ -177,8 +174,7 @@ def test_crawl_ingest_composition(spark, tmp_path):
         .filter("warc_type = 'response' AND error IS NULL")
         .select(F.col("target_uri").alias("url"), F.col("payload").cast("string").alias("html"))
     )
-    bl = spark.createDataFrame([("bad.test",)], "domain string")
-    clean = filter_blocked_domains(recs, bl).withColumn("curl", normalize_url())
+    clean = recs.withColumn("curl", normalize_url())
     w = W.partitionBy("curl").orderBy("url")  # deterministic survivor
     dedup = (
         clean.withColumn("rn", F.row_number().over(w))
@@ -189,6 +185,7 @@ def test_crawl_ingest_composition(spark, tmp_path):
     assert set(got) == {
         "http://a.test/page",
         "http://a.test/other",
+        "http://ads.bad.test/x?id=1",
         "https://c.test/p?b=2&a=1",
     }
     # the two a.test/page variants collapsed; the lexicographically

@@ -140,277 +140,6 @@ def test_custom_sessionize_multi_partition_state(spark, sf_dir):
     _assert_matches_batch(got, sf_dir)
 
 
-def test_tws_sessionize_matches_v1_and_batch(spark, sf_dir):
-    """The transformWithStateInPandas (v2 state API) sessionizer must
-    reproduce the applyInPandasWithState operator's exact output
-    contract: same data-closed sessions, same timer-flushed sessions,
-    same values — pinned against the batch islands oracle AND against
-    the v1 run, on the same replay. Needs the RocksDB provider (the
-    HDFS-backed store doesn't implement the v2 state API) and the
-    protobuf python package (the v2 state client's wire format — not
-    shipped in this container, so this test self-skips here; the
-    processor's state machine is still fully exercised by the fake
-    -harness replay test below)."""
-    import pytest
-
-    # Runtime-detect, not permanent: the day this environment gains
-    # the protobuf package, this test starts executing sessionize_tws
-    # against the REAL transformWithStateInPandas runtime and the
-    # suite tightens itself. The reason string keeps the skip loud in
-    # CI output (VERDICT r7 #5) — it is the ONE verification gap on
-    # the v2 sessionizer; the fake-harness replay below still pins the
-    # state machine.
-    pytest.importorskip(
-        "google.protobuf",
-        reason=(
-            "transformWithStateInPandas v2 state API needs the "
-            "protobuf python package (its state-server wire format); "
-            "not shipped in this container — sessionize_tws has NOT "
-            "been executed against the real TWS runtime here, only "
-            "against the in-memory harness (test_tws_state_machine_"
-            "fake_harness)"
-        ),
-    )
-    from pyspark.sql import functions as F
-
-    from etfconstituentextractor_spark.streaming.stateful import sessionize_tws
-
-    chunks = stage_chunks(spark, sf_dir, tag="tws_test")
-    src = (
-        read_stream(spark, chunks)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "value")
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = run_to_parquet(sessionize_tws(src, _GAP_MIN), "tws_test", chunks).toPandas()
-    finally:
-        if before is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, before)
-
-    want = _batch_sessions(sf_dir)
-    got_k = {
-        (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6))
-        for r in got.itertuples()
-    }
-    want_k = {
-        (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6), r.is_last)
-        for r in want.itertuples()
-    }
-    assert len(got_k) == len(got), "duplicate session emissions"
-    for k, (end, n, sv) in got_k.items():
-        assert k in want_k, f"emitted session {k} not in batch result"
-        w_end, w_n, w_sv, _ = want_k[k]
-        assert (end, n, sv) == (w_end, w_n, w_sv), (k, (end, n, sv), (w_end, w_n, w_sv))
-    missing = [
-        k for k, (_, _, _, is_last) in want_k.items() if not is_last and k not in got_k
-    ]
-    assert not missing, f"data-closed sessions not emitted: {missing[:5]}"
-    assert len(got_k) >= 0.5 * len(want_k), (len(got_k), len(want_k))
-
-    # v1/v2 emission-set equality: both APIs process the identical
-    # chunk replay, so the emitted session sets must agree exactly
-    chunks_v1 = stage_chunks(spark, sf_dir, tag="tws_v1_twin")
-    src_v1 = (
-        read_stream(spark, chunks_v1)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "value")
-    )
-    v1 = run_to_parquet(sessionize(src_v1, _GAP_MIN), "tws_v1_twin", chunks_v1).toPandas()
-    v1_k = {
-        (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6))
-        for r in v1.itertuples()
-    }
-    assert got_k == v1_k, (
-        len(got_k),
-        len(v1_k),
-        set(got_k) ^ set(v1_k),
-    )
-
-
-class _FakeValueState:
-    """In-memory stand-in for the v2 ValueState handle, keyed by the
-    harness's current grouping key."""
-
-    def __init__(self, harness):
-        self._h = harness
-        self._vals = {}
-
-    def get(self):
-        return self._vals.get(self._h.current_key)
-
-    def update(self, v):
-        self._vals[self._h.current_key] = v
-
-    def clear(self):
-        self._vals.pop(self._h.current_key, None)
-
-
-class _FakeHandle:
-    """Stand-in for StatefulProcessorHandle: named value states plus
-    per-key timer registry with list/delete/register — the exact
-    surface _TwsSessionizer touches."""
-
-    def __init__(self):
-        self.current_key = None
-        self.timers = {}  # key -> set of expiry ms
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        st = _FakeValueState(self)
-        self.states[name] = st
-        return st
-
-    def listTimers(self):
-        return iter(sorted(self.timers.get(self.current_key, set())))
-
-    def deleteTimer(self, expiry):
-        self.timers.get(self.current_key, set()).discard(expiry)
-
-    def registerTimer(self, expiry):
-        self.timers.setdefault(self.current_key, set()).add(expiry)
-
-
-def _replay_tws(events: pd.DataFrame, gap_min: int, n_batches: int, delay_ms: int):
-    """Drive _TwsSessionizer exactly as Spark's TWS runtime would:
-    micro-batches in arrival (event_id) order, late rows dropped
-    against the batch-start watermark, timers fired at batch end when
-    the advanced watermark passes their expiry."""
-    from pyspark.sql.streaming.stateful_processor import TimerValues, ExpiredTimerInfo
-
-    from etfconstituentextractor_spark.streaming.stateful import (
-        _TwsSessionizer,
-        _utc_epoch_ms,
-    )
-    from datetime import timedelta
-
-    proc = _TwsSessionizer(timedelta(minutes=gap_min))
-    handle = _FakeHandle()
-    proc.init(handle)
-    out = []
-    wm_ms = None
-    events = events.sort_values("event_id").reset_index(drop=True)
-    bounds = [round(i * len(events) / n_batches) for i in range(n_batches + 1)]
-    for i in range(n_batches):
-        batch = events.iloc[bounds[i] : bounds[i + 1]]
-        if wm_ms is not None:
-            keep = batch["ts"].map(lambda t: _utc_epoch_ms(t) >= wm_ms)
-            batch = batch[keep]
-        for uid, pdf in batch.groupby("user_id"):
-            handle.current_key = (uid,)
-            out.extend(
-                proc.handleInputRows(
-                    (uid,), iter([pdf]), TimerValues(-1, wm_ms or -1)
-                )
-            )
-        # watermark advances on everything SEEN this batch (pre-drop)
-        full = events.iloc[bounds[i] : bounds[i + 1]]
-        if len(full):
-            batch_max = max(_utc_epoch_ms(t) for t in full["ts"])
-            wm_ms = max(wm_ms or -1, batch_max - delay_ms)
-        # fire expired timers (watermark strictly past expiry)
-        for key in list(handle.timers):
-            for expiry in sorted(handle.timers.get(key, set())):
-                if wm_ms is not None and expiry < wm_ms:
-                    handle.timers[key].discard(expiry)
-                    handle.current_key = key
-                    out.extend(
-                        proc.handleExpiredTimer(
-                            key, TimerValues(-1, wm_ms), ExpiredTimerInfo(expiry)
-                        )
-                    )
-    return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
-
-
-def test_tws_state_machine_fake_harness(sf_dir):
-    """The v2 processor's state machine, driven by an in-memory
-    harness that emulates Spark's TWS runtime (micro-batch arrival
-    order, late-row drop, watermark-driven timer firing) — so the
-    sessionizer logic is fully exercised even though the container
-    lacks the protobuf wire client the real runtime needs. Contract
-    pinned against the DuckDB islands oracle: exact values for every
-    emission, every data-closed session present, no duplicates, and
-    at least one timer-flushed (open-at-end) session emitted."""
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet")[
-        ["event_id", "user_id", "ts", "value"]
-    ]
-    # events.parquet may carry ns-unit timestamps; truncate to micros
-    # exactly like the typed loader / DuckDB
-    ev["ts"] = ev["ts"].dt.floor("us")
-    got = _replay_tws(ev, _GAP_MIN, n_batches=4, delay_ms=3_600_000)
-
-    want = _batch_sessions(sf_dir)
-    got_k = {
-        (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6))
-        for r in got.itertuples()
-    }
-    want_k = {
-        (r.user_id, r.session_start): (r.session_end, r.n, round(r.sum_value, 6), r.is_last)
-        for r in want.itertuples()
-    }
-    assert len(got_k) == len(got), "duplicate session emissions"
-    for k, (end, n, sv) in got_k.items():
-        assert k in want_k, f"emitted session {k} not in batch result"
-        w_end, w_n, w_sv, _ = want_k[k]
-        assert (end, n, sv) == (w_end, w_n, w_sv), (k, (end, n, sv), (w_end, w_n, w_sv))
-    missing = [
-        k for k, (_, _, _, is_last) in want_k.items() if not is_last and k not in got_k
-    ]
-    assert not missing, f"data-closed sessions not emitted: {missing[:5]}"
-    # timer path coverage: some session that is the user's LAST (so
-    # never data-closed) must have been flushed by an expired timer
-    timer_flushed = [
-        k for k, (_, _, _, is_last) in want_k.items() if is_last and k in got_k
-    ]
-    assert timer_flushed, "no timer-flushed session emitted"
-
-
-def test_tws_stale_timer_guard():
-    """A session extended AFTER its timer was armed must not flush at
-    the stale expiry: the processor re-arms (delete+register) on every
-    input, and the expiry guard in handleExpiredTimer is the backstop
-    if a stale timer still fires."""
-    from datetime import datetime
-
-    base = datetime(2024, 1, 1, 0, 0, 0)
-    mk = lambda i, minutes: {
-        "event_id": i,
-        "user_id": 7,
-        "ts": pd.Timestamp(base) + pd.Timedelta(minutes=minutes),
-        "value": 1.0,
-    }
-    # batch 1: one event at t0. batch 2: extension at t0+30min (same
-    # session, gap 360) plus a far-future row from another user to push
-    # the watermark past the FIRST arm (t0+360) but not the re-arm
-    # (t0+390) — the session must NOT flush. batch 3: push past the
-    # re-arm — exactly one flush with the extended values.
-    ev = pd.DataFrame(
-        [
-            mk(1, 0),
-            mk(2, 30),
-            {"event_id": 3, "user_id": 99, "ts": pd.Timestamp(base) + pd.Timedelta(minutes=370 + 60), "value": 0.0},
-            {"event_id": 4, "user_id": 99, "ts": pd.Timestamp(base) + pd.Timedelta(minutes=500 + 60), "value": 0.0},
-        ]
-    )
-    # 4 batches of 1 row each (arrival = event_id order)
-    got = _replay_tws(ev, gap_min=360, n_batches=4, delay_ms=3_600_000)
-    u7 = got[got["user_id"] == 7]
-    assert len(u7) == 1, u7
-    row = u7.iloc[0]
-    assert row["n"] == 2 and row["sum_value"] == 2.0
-    assert row["session_start"] == pd.Timestamp(base)
-    assert row["session_end"] == pd.Timestamp(base) + pd.Timedelta(minutes=30 + 360)
-
-
 def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
     """The foreachBatch escape hatch — the sink pattern for targets
     with no native streaming writer (JDBC, key-value stores, MERGE
@@ -875,54 +604,3 @@ def test_stream_static_dimension_join(spark, sf_dir):
         for r in ev.join(dim, "user_id").groupBy("tier").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert got == want and set(got) == {"gold", "std"}
-
-
-def test_funnel_stream_matches_batch(spark, sf_dir):
-    """Streaming funnel == batch funnel after a sentinel-flushed
-    replay: per-user stage and duration identical to the one-shot
-    chained-minimum computation over the same (step-filtered)
-    events."""
-    from datetime import timedelta
-
-    from pyspark.sql import functions as F
-
-    from etfconstituentextractor_spark.operators.funnel import funnel
-    from etfconstituentextractor_spark.sources.tables import load
-    from etfconstituentextractor_spark.streaming.stateful import funnel_stream
-
-    steps = ("view", "click", "purchase")
-    ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    sentinel_uid = -424242
-    sentinel = spark.createDataFrame(
-        [(-999_001, max_ts + timedelta(hours=10), sentinel_uid, "view", 0.0, "{}")],
-        "event_id bigint, ts timestamp_ntz, user_id bigint, "
-        "event_type string, value double, props string",
-    )
-    chunks = stage_chunks(
-        spark, sf_dir, tag="funnel_stream", n_chunks=2, extra_last_chunk=sentinel
-    )
-    src = (
-        read_stream(spark, chunks)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "event_type")
-    )
-    got_df = run_to_parquet(
-        funnel_stream(src, steps, flush_gap_minutes=60), "funnel_stream", chunks
-    )
-    got = {
-        r.user_id: (r.stage, r.funnel_sec)
-        for r in got_df.collect()
-        if r.user_id != sentinel_uid
-    }
-
-    # batch twin over the SAME step-filtered events (noise-only users
-    # appear in neither side)
-    want = {
-        r.user_id: (r.stage, r.funnel_sec)
-        for r in funnel(
-            ev.filter(F.col("event_type").isin(*steps)), steps
-        ).collect()
-    }
-    assert got == want and len(got) > 0

@@ -1,19 +1,16 @@
 """URL canonicalization + domain curation (operators/urls.py): the
 normalizer against a hand-written expectation table (idempotence
-included), registrable-domain rules, blocklist semantics, and the
+included), host extraction, registrable-domain rules, and the
 zero-shuffle plan contract."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.operators.urls import (
-    filter_blocked_domains,
     host_of,
     normalize_url,
-    registrable_domain,
+    registrable_domain_from_table,
 )
 
 CASES = [
@@ -81,53 +78,21 @@ def test_host_and_registrable_domain(spark):
         ("http:example.com/x", None, None),
         ("http://example.com:99x/x", None, None),
     ]
-    df = spark.createDataFrame([(u,) for u, _, _ in rows], "url string")
-    got = df.select(
-        host_of().alias("h"), registrable_domain(host_of()).alias("d")
-    ).collect()
+    df = spark.createDataFrame(list(enumerate(u for u, _, _ in rows)), "i int, url string")
+    sfx = spark.createDataFrame([("com",), ("co.uk",)], "suffix string")
+    got = registrable_domain_from_table(
+        df.withColumn("h", host_of()), sfx, host_col="h", out_col="d"
+    ).orderBy("i").collect()
     assert [(r.h, r.d) for r in got] == [(h, d) for _, h, d in rows]
 
 
-def test_filter_blocked_domains(spark):
-    urls = [
-        (1, "http://example.com/keep-me-not"),
-        (2, "http://ads.example.com/sub-falls-with-domain"),
-        (3, "https://fine.org/kept"),
-        (4, "http://spam.co.uk/gone"),
-        (5, "http://notspam.co.uk/kept"),
-        (6, "mailto:no-host@kept"),  # NULL host rows survive
-    ]
-    df = spark.createDataFrame(urls, "id bigint, url string")
-    bl = spark.createDataFrame([("Example.COM",), ("spam.co.uk",)], "domain string")
-    kept = sorted(r.id for r in filter_blocked_domains(df, bl).collect())
-    assert kept == [3, 5, 6]
-
-    # credentials cannot smuggle a blocked domain past the filter
-    sneaky = spark.createDataFrame(
-        [(7, "https://x:y@example.com/via-userinfo"), (8, "http://fine.org@example.com/")],
-        "id bigint, url string",
-    )
-    assert [r.id for r in filter_blocked_domains(sneaky, bl).collect()] == []
-
-    # IP and trailing-dot spellings cannot dodge the list either
-    dotty = spark.createDataFrame(
-        [(9, "http://example.com./dot"), (10, "http://93.184.216.34/ip")],
-        "id bigint, url string",
-    )
-    bl2 = spark.createDataFrame(
-        [("example.com",), ("93.184.216.34",)], "domain string"
-    )
-    assert [r.id for r in filter_blocked_domains(dotty, bl2).collect()] == []
-
-
 def test_urls_zero_shuffle_plan(spark):
-    """Normalization + domain keying is codegen on the scan; the only
-    exchange in the blocklist filter is the broadcast itself."""
+    """Normalization and host extraction are codegen on the scan."""
     df = spark.range(100).select(
         F.concat(F.lit("http://h"), F.col("id"), F.lit(".example.com/p?utm_source=x")).alias("url")
     )
     plan = (
-        df.select(normalize_url().alias("n"), registrable_domain(host_of()).alias("d"))
+        df.select(normalize_url().alias("n"), host_of().alias("h"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -136,26 +101,12 @@ def test_urls_zero_shuffle_plan(spark):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
 
-    bl = spark.createDataFrame([("example.com",)], "domain string")
-    plan2 = (
-        filter_blocked_domains(df, bl)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastExchange" in plan2
-    assert "Exchange hashpartitioning" not in plan2
-
 
 def test_registrable_domain_from_table(spark):
     """Data-driven eTLD+1 with PSL semantics: longest rule wins across
     literal AND wildcard kinds, hosts that ARE a suffix key as
     themselves, unlisted hosts fall back to last-two, IPs untouched;
     the frame never shuffles (broadcast suffix array only)."""
-    from etfconstituentextractor_spark.operators.urls import (
-        registrable_domain_from_table,
-    )
-
     sfx = spark.createDataFrame(
         [("com",), ("co.uk",), ("ck",), ("*.ck",), ("z",), ("*.z",),
          ("jp",), ("*.kawasaki.jp",), ("CO.UK",)],

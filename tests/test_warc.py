@@ -6,9 +6,6 @@ from __future__ import annotations
 
 import gzip
 import hashlib
-import zlib
-
-import pytest
 
 from etfconstituentextractor_spark.sources.warc import (
     build_http_response_record,
@@ -185,74 +182,3 @@ def test_utf8_target_uri_roundtrip(spark, tmp_path):
     raw = raw.replace(b"<urn:uuid:r>", b"<urn:uuid:r\xff>")
     got = list(parse_warc_bytes("f", raw))
     assert got[0]["error"] is None and "\xff" in got[0]["record_id"]
-
-
-def test_index_and_ranged_read(spark, tmp_path):
-    """The >-memory scale path: the member-offset index is built by
-    streaming (1 MiB reads), and the ranged reader splits ONE file
-    into multiple tasks whose union equals the whole-file read."""
-    from etfconstituentextractor_spark.sources.warc import (
-        index_warc_members,
-        read_warc_ranges,
-    )
-
-    docs = [(f"https://x.test/{i}", f"<p>{'y' * (i % 40)}{i}</p>") for i in range(120)]
-    df = spark.createDataFrame(docs, "url string, html string")
-    out = tmp_path / "big"
-    write_warc(df, str(out), n_files=2)  # ~61 members per file
-
-    paths = sorted(str(p) for p in out.glob("*.warc.gz"))
-    idx = index_warc_members(spark, paths)
-    rows = idx.collect()
-    assert all(r.error is None for r in rows)
-    # offsets are contiguous and cover each file exactly
-    import os as _os
-
-    for p in paths:
-        mine = sorted((r.offset, r.comp_len) for r in rows if r.path == p)
-        pos = 0
-        for off, ln in mine:
-            assert off == pos
-            pos += ln
-        assert pos == _os.path.getsize(p)
-
-    # ranged read at 7 members/task: one file -> many chunks
-    got = read_warc_ranges(spark, idx, members_per_task=7)
-    whole = read_warc(spark, str(out / "*.warc.gz"))
-    a = {r.target_uri: bytes(r.payload) for r in got.collect() if r.warc_type == "response"}
-    b = {r.target_uri: bytes(r.payload) for r in whole.collect() if r.warc_type == "response"}
-    assert a == b and len(a) == 120
-    n_chunks = (
-        idx.filter("error IS NULL")
-        .selectExpr("path", "cast(member_ix / 7 as bigint) as c")
-        .distinct()
-        .count()
-    )
-    assert n_chunks > len(paths)  # single files genuinely split
-
-    # corrupt tail -> an index error row, ALL prior members still usable
-    p0 = paths[0]
-    n_before = sum(1 for r in rows if r.path == p0)
-    data = open(p0, "rb").read()
-    open(p0, "wb").write(data + b"\x1f\x8bJUNK")
-    rows2 = index_warc_members(spark, [p0]).collect()
-    assert any(r.error is not None for r in rows2)
-    assert sum(1 for r in rows2 if r.error is None) == n_before
-
-
-def test_index_high_ratio_member(spark, tmp_path):
-    """A ~1000x-compressible member (the zlib inflation bomb shape)
-    must index correctly under the bounded-output walk."""
-    from etfconstituentextractor_spark.sources.warc import index_warc_members
-
-    big = build_record("metadata", b"\x00" * (8 << 20), record_id="big")
-    small = build_record("metadata", b"tiny", record_id="s")
-    p = tmp_path / "bomb.warc.gz"
-    p.write_bytes(gzip_member(big) + gzip_member(small))
-    rows = sorted(
-        index_warc_members(spark, [str(p)]).collect(), key=lambda r: r.member_ix
-    )
-    assert [r.error for r in rows] == [None, None]
-    assert rows[0].offset == 0
-    assert rows[1].offset == rows[0].comp_len
-    assert rows[0].comp_len + rows[1].comp_len == p.stat().st_size
