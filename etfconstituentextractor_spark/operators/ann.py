@@ -135,23 +135,23 @@ def _srp_bucket_structs(n_tables: int, r: int) -> str:
     )
 
 
-def srp_index_buckets(dots_df: DataFrame, n_tables: int, r: int, id_col: str = "vec_id") -> DataFrame:
-    """(id, t, b): ONE bucket per table per vector — the stored index."""
+def srp_index_buckets(dots_df: DataFrame, n_tables: int, r: int) -> DataFrame:
+    """(vec_id, t, b): ONE bucket per table per vector — the stored index."""
     return dots_df.select(
-        id_col, F.explode(F.expr(_srp_bucket_structs(n_tables, r))).alias("tb")
-    ).select(id_col, "tb.t", "tb.b")
+        "vec_id", F.explode(F.expr(_srp_bucket_structs(n_tables, r))).alias("tb")
+    ).select("vec_id", "tb.t", "tb.b")
 
 
-def srp_query_probes(dots_df: DataFrame, n_tables: int, r: int, id_col: str = "vec_id") -> DataFrame:
-    """(id, t, b): TWO probes per table per query — the base bucket
+def srp_query_probes(dots_df: DataFrame, n_tables: int, r: int) -> DataFrame:
+    """(vec_id, t, b): TWO probes per table per query — the base bucket
     and the least-confident-sign flip. Ties on |dot| break to the
     first plane (array_position semantics), deterministic."""
     probes = dots_df.select(
-        id_col,
+        "vec_id",
         F.explode(F.expr(_srp_bucket_structs(n_tables, r))).alias("tb"),
         F.col("dots"),
     ).select(
-        id_col,
+        "vec_id",
         "tb.t",
         "tb.b",
         F.expr(
@@ -160,7 +160,7 @@ def srp_query_probes(dots_df: DataFrame, n_tables: int, r: int, id_col: str = "v
     )
     probes = probes.withColumn("w", F.expr("array_position(ab, array_min(ab))").cast("int"))
     flipped = probes.select(
-        id_col,
+        "vec_id",
         "t",
         F.expr(
             f"concat(substring(b, 1, w - 1), "
@@ -168,4 +168,4 @@ def srp_query_probes(dots_df: DataFrame, n_tables: int, r: int, id_col: str = "v
             f"substring(b, w + 1, {r} - w))"
         ).alias("b"),
     )
-    return probes.select(id_col, "t", "b").unionByName(flipped)
+    return probes.select("vec_id", "t", "b").unionByName(flipped)

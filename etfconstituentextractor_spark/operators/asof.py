@@ -34,24 +34,20 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: dict[str, str],
-    right_tiebreak: str | None = None,
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
     ``right_ts <= left_ts`` within the same ``on`` key (backward
     as-of, ties include the simultaneous right row). Unmatched left
     rows keep null payloads (LEFT semantics).
 
-    right_payload maps output column name -> right column name.
-    right_tiebreak: right column that breaks ties among right rows
-    sharing (key, right_ts) — the row with the LARGEST value wins.
-    Defaults to the first right_payload source column, so the carried
-    payload is deterministic even on duplicate-timestamp inputs.
+    right_payload maps output column name -> right column name. Ties
+    among right rows sharing (key, right_ts) go to the row with the
+    LARGEST first right_payload source column, so the carried payload
+    is deterministic even on duplicate-timestamp inputs.
     """
     on_cols = [on] if isinstance(on, str) else list(on)
     left_rest = [c for c in left.columns if c not in on_cols]
-
-    if right_tiebreak is None:
-        right_tiebreak = next(iter(right_payload.values()))
+    right_tiebreak = next(iter(right_payload.values()))
 
     # Reserved / output names must not collide with left columns:
     # withColumn on a duplicate name would silently overwrite the left

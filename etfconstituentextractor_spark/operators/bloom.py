@@ -178,23 +178,13 @@ def bloom_reduced_join(
     *,
     n_items_hint: int,
     fpp: float = 1e-4,
-    how: str = "inner",
 ) -> DataFrame:
     """The composed move: size the filter from ``n_items_hint``
     (expected distinct build keys — an overestimate only wastes
     filter bytes, never correctness), build it on the first join key
     (one eager control-plane job, like the codebook collects),
-    pre-filter the probe, then run the ordinary equi-join. Join types
-    are restricted to probe-reducible ones: under 'right'/'full'/
-    probe-side-anti semantics, dropping provably-unmatched PROBE rows
-    changes null-extension, so those must not pre-filter."""
-    allowed = {"inner", "left_semi", "leftsemi", "semi"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"bloom_reduced_join supports {sorted(allowed)}; got {how!r} "
-            "(outer/anti types would null-extend or keep the rows the "
-            "pre-filter exists to drop)"
-        )
+    pre-filter the probe, then run the ordinary inner equi-join, which
+    drops the provably-unmatched probe rows anyway."""
     # xxhash64 is TYPE-sensitive where the equi-join is not: the join
     # would implicitly cast int-vs-bigint keys, but their hashes
     # differ, and every true match would silently fail the pre-filter
@@ -212,6 +202,4 @@ def bloom_reduced_join(
         )
     m_bits, k = bloom_params(n_items_hint, fpp)
     blob = bloom_build(build, on[0], m_bits=m_bits, k=k)
-    return bloom_prefilter(probe, blob, on[0], m_bits=m_bits, k=k).join(
-        build, on, how
-    )
+    return bloom_prefilter(probe, blob, on[0], m_bits=m_bits, k=k).join(build, on)

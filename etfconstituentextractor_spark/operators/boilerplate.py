@@ -28,31 +28,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# NOTE: `delim` is used with F.split, which treats it as a Java regex.
-# The default "\n" is regex-safe; callers passing metacharacters must
-# escape them.
+
+def _lines() -> Column:
+    return F.split(F.col("text"), "\n")
 
 
-def _lines(text_col: str, delim: str) -> Column:
-    return F.split(F.col(text_col), delim)
-
-
-def line_doc_frequencies(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-) -> DataFrame:
-    """Document frequency of each distinct line: (line_hash, n_docs).
+def line_doc_frequencies(docs: DataFrame) -> DataFrame:
+    """Document frequency of each distinct line of ``text``:
+    (line_hash, n_docs).
 
     array_distinct runs per-document BEFORE the explode, so the shuffle
     carries at most one (doc, hash) pair per distinct line per doc and
     the aggregate is a plain count — no count-distinct Expand.
     """
-    hashes = F.array_distinct(
-        F.transform(_lines(text_col, delim), lambda s: F.xxhash64(s))
-    )
+    hashes = F.array_distinct(F.transform(_lines(), lambda s: F.xxhash64(s)))
     return (
         docs.select(F.explode(hashes).alias("line_hash"))
         .groupBy("line_hash")
@@ -60,45 +49,31 @@ def line_doc_frequencies(
     )
 
 
-def frequent_lines(
-    docs: DataFrame,
-    *,
-    min_docs: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-) -> DataFrame:
+def frequent_lines(docs: DataFrame, *, min_docs: int) -> DataFrame:
     """Hashes of lines appearing in >= min_docs documents."""
     if min_docs < 2:
         raise ValueError("min_docs < 2 would strip every line")
     return (
-        line_doc_frequencies(docs, text_col=text_col, id_col=id_col, delim=delim)
+        line_doc_frequencies(docs)
         .filter(F.col("n_docs") >= min_docs)
         .select("line_hash")
     )
 
 
-def strip_boilerplate(
-    docs: DataFrame,
-    *,
-    min_docs: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-    out_col: str = "clean_text",
-) -> DataFrame:
-    """Broadcast-set path: all docs columns + out_col/n_lines/n_kept.
+def strip_boilerplate(docs: DataFrame, *, min_docs: int) -> DataFrame:
+    """Broadcast-set path: all docs columns + clean_text/n_lines/n_kept,
+    splitting ``text`` on newlines.
 
     The frequent set is aggregated to a single array row (always
     exactly one row, empty array when nothing is frequent) and
     broadcast-cross-joined in, so the per-document work is a pure
     array filter inside codegen — document text never shuffles.
     """
-    bp = frequent_lines(
-        docs, min_docs=min_docs, text_col=text_col, id_col=id_col, delim=delim
-    ).agg(F.collect_set("line_hash").alias("__bp"))
+    bp = frequent_lines(docs, min_docs=min_docs).agg(
+        F.collect_set("line_hash").alias("__bp")
+    )
     kept = F.filter(
-        _lines(text_col, delim),
+        _lines(),
         lambda s: ~F.array_contains(F.col("__bp"), F.xxhash64(s)),
     )
     return (
@@ -106,10 +81,8 @@ def strip_boilerplate(
         .withColumn("__kept", kept)
         .select(
             *docs.columns,
-            F.array_join(F.col("__kept"), delim).alias(out_col),
-            F.size(_lines(text_col, delim)).cast("bigint").alias("n_lines"),
+            F.array_join(F.col("__kept"), "\n").alias("clean_text"),
+            F.size(_lines()).cast("bigint").alias("n_lines"),
             F.size("__kept").cast("bigint").alias("n_kept"),
         )
     )
-
-

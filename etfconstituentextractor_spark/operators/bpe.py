@@ -57,16 +57,9 @@ def _apply_merge(vocab: DataFrame, a: str, b: str) -> DataFrame:
     return vocab.withColumn("syms", F.expr(fold))
 
 
-def encode_corpus(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = " ",
-    broadcast_dict: bool = True,
-) -> DataFrame:
-    """(id, pieces, n_pieces): BPE-encode every document.
+def encode_corpus(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """(doc_id, pieces, n_pieces): BPE-encode every document's
+    space-separated ``text``.
 
     The word-frequency insight applied to inference: the merge folds
     run over the corpus's DISTINCT words, so each merge is one codegen
@@ -77,22 +70,13 @@ def encode_corpus(
     pieces back through a broadcast join and reassemble per-document
     piece arrays in position order (one shuffle on the doc key). At
     100 TB the per-merge cost is bounded by vocabulary size, never
-    corpus size; documents shuffle once, as (id, pos, pieces) rows.
+    corpus size; documents shuffle once, as (doc_id, pos, pieces) rows.
 
     Documents with no words after the split (empty text) produce no
     output row. Each merge is a greedy left-to-right fold, as in
     the pure-Python encoder it is pinned against in tests.
-
-    ``broadcast_dict=False`` switches the word→pieces join to a plain
-    shuffle join for vocabularies too large to broadcast (a web-scale
-    corpus's long-tail vocabulary can exceed executor broadcast
-    budgets); the token side then shuffles on the word key — the same
-    unbroadcastable-side fallback the boilerplate operator documents.
     """
-    reserved = {"word", "pos", "syms"}
-    if id_col in reserved or text_col in reserved:
-        raise ValueError(f"id_col/text_col must not be one of {sorted(reserved)}")
-    toks = F.split(F.col(text_col), delim)
+    toks = F.split(F.col("text"), " ")
     words = (
         docs.select(F.explode(toks).alias("word"))
         .filter(F.col("word") != "")
@@ -102,11 +86,11 @@ def encode_corpus(
     for a, b in merges:
         vocab = _apply_merge(vocab, a, b).localCheckpoint()
     tokens = docs.select(
-        F.col(id_col), F.posexplode(toks).alias("pos", "word")
+        F.col("doc_id"), F.posexplode(toks).alias("pos", "word")
     ).filter(F.col("word") != "")
-    joined = tokens.join(F.broadcast(vocab) if broadcast_dict else vocab, "word")
     return (
-        joined.groupBy(id_col)
+        tokens.join(F.broadcast(vocab), "word")
+        .groupBy("doc_id")
         .agg(
             F.flatten(
                 F.transform(
@@ -115,5 +99,5 @@ def encode_corpus(
                 )
             ).alias("pieces")
         )
-        .select(id_col, "pieces", F.size("pieces").cast("bigint").alias("n_pieces"))
+        .select("doc_id", "pieces", F.size("pieces").cast("bigint").alias("n_pieces"))
     )

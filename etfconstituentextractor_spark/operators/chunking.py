@@ -26,11 +26,10 @@ def chunk_documents(
     *,
     chunk_tokens: int,
     stride: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_tail_tokens: int = 1,
 ) -> DataFrame:
-    """(id, chunk_idx, chunk_text, n_chunk_tokens) per token window.
+    """(doc_id, chunk_idx, chunk_text, n_chunk_tokens) per token window
+    of the space-separated ``text``.
 
     Window i covers tokens [i*stride, i*stride + chunk_tokens); windows
     start while i*stride < n_tokens, so every token lands in >= 1 chunk.
@@ -49,26 +48,23 @@ def chunk_documents(
     # i*stride < n_tokens
     last_idx = (F.size(F.col("__toks")) - 1).cast("bigint") / F.lit(stride)
     out = (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            F.split(F.col(text_col), " ").alias("__toks"),
-        )
+        docs.select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
         .select(
-            "__id",
+            "doc_id",
             "__toks",
             F.explode(
                 F.sequence(F.lit(0), F.floor(last_idx).cast("int"))
             ).alias("chunk_idx"),
         )
         .select(
-            F.col("__id").alias(id_col),
+            "doc_id",
             "chunk_idx",
             F.expr(f"slice(__toks, chunk_idx * {stride} + 1, {chunk_tokens})").alias(
                 "__chunk"
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             F.array_join("__chunk", " ").alias("chunk_text"),
             F.size("__chunk").cast("bigint").alias("n_chunk_tokens"),

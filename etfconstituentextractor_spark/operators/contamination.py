@@ -39,13 +39,12 @@ def ngram_contamination(
     eval_docs: DataFrame,
     *,
     n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     contaminated_at: int = 8,
 ) -> DataFrame:
     """Per-train-document overlap stats against ``eval_docs`` n-grams.
 
-    Returns one row per ``train`` document: ``(id_col, n_ngrams,
+    Both frames carry space-separated ``text``. Returns one row per
+    ``train`` document: ``(doc_id, n_ngrams,
     n_matched, hit_ratio, verdict)`` where ``n_ngrams`` counts the
     document's DISTINCT word n-grams, ``n_matched`` those that also
     occur anywhere in ``eval_docs``, and ``verdict`` bands the count:
@@ -60,7 +59,7 @@ def ngram_contamination(
     grams: Column = shingles("__toks", n)
 
     eval_grams = (
-        eval_docs.withColumn("__toks", F.expr(f"split({text_col}, ' ')"))
+        eval_docs.withColumn("__toks", F.expr("split(text, ' ')"))
         .select(F.explode(grams).alias("g"))
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -69,16 +68,16 @@ def ngram_contamination(
     # size() and explode_outer() both reference the computed column —
     # inlining would run the whole zip_with shingle chain twice per row
     # (CollapseProject keeps multi-referenced non-cheap expressions).
-    prepared = train.withColumn("__toks", F.expr(f"split({text_col}, ' ')")).select(
-        id_col, F.array_distinct(grams).alias("grams")
+    prepared = train.withColumn("__toks", F.expr("split(text, ' ')")).select(
+        "doc_id", F.array_distinct(grams).alias("grams")
     )
     exploded = prepared.select(
-        id_col,
+        "doc_id",
         F.size("grams").alias("n_ngrams"),
         F.explode_outer("grams").alias("g"),
     )
     matched = exploded.join(F.broadcast(eval_grams), "g", "left")
-    stats = matched.groupBy(id_col).agg(
+    stats = matched.groupBy("doc_id").agg(
         F.first("n_ngrams").alias("n_ngrams"),
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_matched"),
     )
@@ -87,7 +86,7 @@ def ngram_contamination(
         F.round(F.col("n_matched") / F.col("n_ngrams").cast("double"), 4),
     ).otherwise(F.lit(0.0))
     return stats.select(
-        id_col,
+        "doc_id",
         "n_ngrams",
         "n_matched",
         ratio.cast("double").alias("hit_ratio"),

@@ -245,11 +245,11 @@ _OUT_COLS = [
 ]
 
 
-def parse_filings(filings: DataFrame, html_col: str = "html") -> DataFrame:
+def parse_filings(filings: DataFrame) -> DataFrame:
     """Document → rows UDTF over a filing index.
 
     Input: one row per filing with ``filing_id`` (bigint),
-    ``filing_seq`` (int) and the document text in ``html_col``.
+    ``filing_seq`` (int) and the document text in ``html``.
     Output: PARSE_SCHEMA — one row per extracted holding, or exactly
     one error row per failed filing (error non-null, fields null).
 
@@ -269,7 +269,7 @@ def parse_filings(filings: DataFrame, html_col: str = "html") -> DataFrame:
         for pdf in batches:
             out: list[tuple] = []
             for fid, seq, html in zip(
-                pdf["filing_id"], pdf["filing_seq"], pdf[html_col]
+                pdf["filing_id"], pdf["filing_seq"], pdf["html"]
             ):
                 date, rows, err = parse_filing_document(html)
                 if err is not None:
@@ -292,7 +292,7 @@ def parse_filings(filings: DataFrame, html_col: str = "html") -> DataFrame:
             yield pd.DataFrame(out, columns=_OUT_COLS)
 
     return (
-        filings.select("filing_id", "filing_seq", html_col)
+        filings.select("filing_id", "filing_seq", "html")
         .repartition(n_tasks, "filing_id")
         .mapInPandas(gen, schema=PARSE_SCHEMA)
     )

@@ -4,13 +4,13 @@ data selection (SURVEY.md §2B "LLM-pipeline — sampling": pick raw-web
 documents that look like a curated target domain).
 
 Method, exactly the paper's estimator restricted to unigrams:
-- every token hashes into one of ``n_buckets`` feature buckets
+- every token hashes into one of ``N_BUCKETS`` feature buckets
   (hashed n-grams — the paper's trick for a FIXED-size feature space,
   which is also what makes this 100 TB-safe: the two count frames are
-  ``n_buckets`` rows no matter how big the corpus is);
+  ``N_BUCKETS`` rows no matter how big the corpus is);
 - a bag-of-buckets unigram model is fit to the TARGET slice and to
   the RAW slice with add-1 smoothing:
-  ``p(b) = (count_b + 1) / (total + n_buckets)``;
+  ``p(b) = (count_b + 1) / (total + N_BUCKETS)``;
 - a document's importance weight is the mean per-token log ratio
   ``avg ln(p_target(bucket(tok)) / p_raw(bucket(tok)))`` — the mean
   (not the paper's sum) normalizes length so selection doesn't simply
@@ -32,11 +32,11 @@ principle flip a rank between engines — accepted and documented, the
 same posture as every ln-scored leg).
 
 Scale posture: text is tokenized ONCE — the token stream reduces
-immediately to a per-(doc, bucket) count frame (≤ docs × n_buckets
+immediately to a per-(doc, bucket) count frame (≤ docs × N_BUCKETS
 rows, ~2-3 orders smaller than token grain), which is
 localCheckpoint-materialized and feeds BOTH the global bucket counts
 and the per-doc scoring; text never shuffles; the log-ratio table is
-``n_buckets`` rows and broadcasts; zero Python, all codegen. The
+``N_BUCKETS`` rows and broadcasts; zero Python, all codegen. The
 materialized frame is the operator's only state — the classic
 token-count index, linear in corpus size, freed by the
 ContextCleaner on GC.
@@ -47,37 +47,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etfconstituentextractor_spark.operators.text import nonempty_tokens
+
 __all__ = ["dsir_scores", "sql_dsir_ctes"]
 
 _SALT = "dsir"
 
+#: hashed-unigram feature buckets, shared by the Spark and DuckDB sides
+N_BUCKETS = 256
 
-def _bucket(tok: Column, n_buckets: int) -> Column:
+
+def _bucket(tok: Column) -> Column:
     h = F.md5(F.concat(tok, F.lit(":" + _SALT)))
-    return F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), F.lit(n_buckets))
+    return F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), F.lit(N_BUCKETS))
 
 
-def dsir_scores(
-    docs: DataFrame,
-    target: Column,
-    *,
-    n_buckets: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_scores(docs: DataFrame, target: Column) -> DataFrame:
     """(doc_id, dsir_score) for every RAW (non-target) document with at
-    least one token; ``target`` is a boolean Column splitting the
-    corpus into the curated target slice and the raw pool to be
-    scored. Higher score = more target-like."""
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
+    least one space-separated token of ``text``; ``target`` is a
+    boolean Column splitting the corpus into the curated target slice
+    and the raw pool to be scored. Higher score = more target-like."""
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target.alias("__t"),
-        F.explode(
-            F.expr(f"filter(split({text_col}, ' '), x -> x != '')")
-        ).alias("__tok"),
-    ).select(id_col, "__t", _bucket(F.col("__tok"), n_buckets).alias("__b"))
+        F.explode(F.expr(nonempty_tokens())).alias("__tok"),
+    ).select("doc_id", "__t", _bucket(F.col("__tok")).alias("__b"))
 
     # ONE tokenize pass: the token stream reduces to per-(doc, bucket)
     # counts and materializes; both consumers below (global bucket
@@ -86,7 +80,7 @@ def dsir_scores(
     # (plan DAGs re-derive shared subtrees) — the round-7 double-scan
     # this replaces.
     per_doc = (
-        toks.groupBy(id_col, "__t", "__b")
+        toks.groupBy("doc_id", "__t", "__b")
         .agg(F.count(F.lit(1)).alias("__n"))
         .localCheckpoint()
     )
@@ -103,8 +97,8 @@ def dsir_scores(
         .select(
             "__b",
             (
-                F.log((F.col("__ct") + 1) / (F.col("__tt") + F.lit(n_buckets)))
-                - F.log((F.col("__cr") + 1) / (F.col("__tr") + F.lit(n_buckets)))
+                F.log((F.col("__ct") + 1) / (F.col("__tt") + F.lit(N_BUCKETS)))
+                - F.log((F.col("__cr") + 1) / (F.col("__tr") + F.lit(N_BUCKETS)))
             ).alias("__lr"),
         )
     )
@@ -114,7 +108,7 @@ def dsir_scores(
     return (
         per_doc.filter(~F.col("__t"))
         .join(F.broadcast(ratios), "__b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.round(
                 F.sum(F.col("__n") * F.col("__lr")) / F.sum("__n"), 6
@@ -123,44 +117,39 @@ def dsir_scores(
     )
 
 
-def sql_dsir_ctes(
-    target_pred: str,
-    *,
-    n_buckets: int = 256,
-    prefix: str = "dsir",
-) -> str:
+def sql_dsir_ctes(target_pred: str) -> str:
     """DuckDB replay over the ``documents`` view: CTE chain ending at
-    ``{prefix}_scores(doc_id, dsir_score)`` — identical bucketing,
+    ``dsir_scores(doc_id, dsir_score)`` — identical bucketing,
     smoothing, and 6 dp rounding. ``target_pred`` is a SQL boolean
     over documents columns."""
-    return f"""{prefix}_toks AS (
+    return f"""dsir_toks AS (
       SELECT doc_id, t,
              CAST('0x' || substr(md5(concat(tok, ':{_SALT}')), 1, 8) AS BIGINT)
-               % {n_buckets} AS b
+               % {N_BUCKETS} AS b
       FROM (SELECT doc_id, ({target_pred}) AS t,
                    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS tok
             FROM documents)
     ),
-    {prefix}_perdoc AS (
+    dsir_perdoc AS (
       SELECT doc_id, t, b, COUNT(*) AS n
-      FROM {prefix}_toks GROUP BY doc_id, t, b
+      FROM dsir_toks GROUP BY doc_id, t, b
     ),
-    {prefix}_counts AS (
+    dsir_counts AS (
       SELECT b,
              SUM(CASE WHEN t THEN n ELSE 0 END) AS ct,
              SUM(CASE WHEN t THEN 0 ELSE n END) AS cr
-      FROM {prefix}_perdoc GROUP BY b
+      FROM dsir_perdoc GROUP BY b
     ),
-    {prefix}_tot AS (SELECT SUM(ct) AS tt, SUM(cr) AS tr FROM {prefix}_counts),
-    {prefix}_ratio AS (
-      SELECT b, ln((ct + 1) / (tt + {n_buckets})) - ln((cr + 1) / (tr + {n_buckets})) AS lr
-      FROM {prefix}_counts, {prefix}_tot
+    dsir_tot AS (SELECT SUM(ct) AS tt, SUM(cr) AS tr FROM dsir_counts),
+    dsir_ratio AS (
+      SELECT b, ln((ct + 1) / (tt + {N_BUCKETS})) - ln((cr + 1) / (tr + {N_BUCKETS})) AS lr
+      FROM dsir_counts, dsir_tot
     ),
-    {prefix}_scores AS (
+    dsir_scores AS (
       SELECT doc_id,
              ROUND(SUM(CAST(n AS DOUBLE) * lr) / SUM(CAST(n AS DOUBLE)), 6)
                AS dsir_score
-      FROM {prefix}_perdoc JOIN {prefix}_ratio USING (b)
+      FROM dsir_perdoc JOIN dsir_ratio USING (b)
       WHERE NOT t
       GROUP BY doc_id
     )"""

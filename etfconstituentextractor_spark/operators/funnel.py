@@ -38,26 +38,23 @@ from pyspark.sql import functions as F
 def funnel(
     events: DataFrame,
     steps: Sequence[str],
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
-    """(user, stage, step timestamps t1..tK, funnel_sec) per user that
-    has at least one event (stage 0 = never reached step 1)."""
+    """(user_id, stage, step timestamps t1..tK, funnel_sec) per user
+    that has at least one event (stage 0 = never reached step 1), over
+    ``events``' (user_id, ts, event_type)."""
     if len(steps) < 2:
         raise ValueError(f"a funnel needs >= 2 steps, got {list(steps)}")
     if len(set(steps)) != len(steps):
         raise ValueError(f"duplicate steps: {list(steps)}")
-    w = W.partitionBy(user_col)
-    df = events.select(user_col, ts_col, type_col)
+    w = W.partitionBy("user_id")
+    df = events.select("user_id", "ts", "event_type")
     tcols = []
     for k, step in enumerate(steps, start=1):
-        cond = F.col(type_col) == step
+        cond = F.col("event_type") == step
         if tcols:
-            cond = cond & (F.col(ts_col) >= F.col(tcols[-1]))
+            cond = cond & (F.col("ts") >= F.col(tcols[-1]))
         name = f"t{k}"
-        df = df.withColumn(name, F.min(F.when(cond, F.col(ts_col))).over(w))
+        df = df.withColumn(name, F.min(F.when(cond, F.col("ts"))).over(w))
         tcols.append(name)
     # build ascending so the OUTERMOST when tests the deepest stage
     stage = F.lit(0)
@@ -65,10 +62,10 @@ def funnel(
         stage = F.when(F.col(f"t{k}").isNotNull(), k).otherwise(stage)
     last_ts = F.coalesce(*[F.col(f"t{k}") for k in range(len(steps), 0, -1)])
     return (
-        df.groupBy(user_col)
+        df.groupBy("user_id")
         .agg(*[F.first(c).alias(c) for c in tcols])
         .select(
-            user_col,
+            "user_id",
             stage.cast("int").alias("stage"),
             *tcols,
             F.when(
@@ -84,11 +81,12 @@ def funnel(
     )
 
 
-def sql_funnel(steps: Sequence[str], from_sql: str = "events") -> str:
-    """DuckDB spelling of the identical chained minima — a CTE body
-    yielding (user_id, stage, t1..tK, funnel_sec)."""
+def sql_funnel(steps: Sequence[str]) -> str:
+    """DuckDB spelling of the identical chained minima over the
+    ``events`` view — a CTE body yielding (user_id, stage, t1..tK,
+    funnel_sec)."""
     k = len(steps)
-    selects = [f"SELECT user_id, MIN(CASE WHEN event_type = '{steps[0]}' THEN ts END) AS t1 FROM {from_sql} GROUP BY user_id"]
+    selects = [f"SELECT user_id, MIN(CASE WHEN event_type = '{steps[0]}' THEN ts END) AS t1 FROM events GROUP BY user_id"]
     prev = "f1"
     body = [f"f1 AS ({selects[0]})"]
     for i in range(2, k + 1):
@@ -96,7 +94,7 @@ def sql_funnel(steps: Sequence[str], from_sql: str = "events") -> str:
             f"f{i} AS (SELECT {prev}.user_id, t{i-1}, "
             + (", ".join(f"t{j}" for j in range(1, i - 1)) + ", " if i > 2 else "")
             + f"MIN(CASE WHEN e.event_type = '{steps[i-1]}' AND e.ts >= t{i-1} THEN e.ts END) AS t{i} "
-            f"FROM {prev} LEFT JOIN {from_sql} e ON e.user_id = {prev}.user_id "
+            f"FROM {prev} LEFT JOIN events e ON e.user_id = {prev}.user_id "
             f"GROUP BY ALL)"
         )
         prev = f"f{i}"

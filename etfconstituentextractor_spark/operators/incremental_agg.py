@@ -135,11 +135,9 @@ def apply_group_delta(
     delta: DataFrame,
     *,
     group_col: str,
-    count_col: str = "n",
-    measure_col: str = "m",
 ) -> DataFrame:
-    """Maintained aggregate = base ⊕ delta. Groups whose count falls
-    to zero drop (recompute semantics); negative counts raise inside
+    """Maintained aggregate (group, n, m) = base ⊕ delta. Groups whose
+    count falls to zero drop (recompute semantics); negative counts raise inside
     the plan (assert_true) — the base disagreed with the snapshot the
     delta was computed from. The join is NULL-SAFE on the group: a
     NULL group is a real group in aggregate semantics, and a plain
@@ -148,8 +146,8 @@ def apply_group_delta(
     joined = b.join(
         delta, F.col("__bg").eqNullSafe(F.col(group_col)), "full_outer"
     ).withColumn(group_col, F.coalesce(F.col(group_col), F.col("__bg")))
-    n = F.coalesce(F.col(count_col), F.lit(0)) + F.coalesce(F.col("d_count"), F.lit(0))
-    m = F.coalesce(F.col(measure_col), F.lit(0)) + F.coalesce(F.col("d_measure"), F.lit(0))
+    n = F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("d_count"), F.lit(0))
+    m = F.coalesce(F.col("m"), F.lit(0)) + F.coalesce(F.col("d_measure"), F.lit(0))
     guard = F.assert_true(
         n >= 0,
         F.lit(
@@ -160,8 +158,8 @@ def apply_group_delta(
     return (
         joined.select(
             group_col,
-            F.when(guard.isNull(), n).cast("bigint").alias(count_col),
-            m.cast("bigint").alias(measure_col),
+            F.when(guard.isNull(), n).cast("bigint").alias("n"),
+            m.cast("bigint").alias("m"),
         )
-        .filter(F.col(count_col) > 0)
+        .filter(F.col("n") > 0)
     )

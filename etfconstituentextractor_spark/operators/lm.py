@@ -38,14 +38,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etfconstituentextractor_spark.operators.text import nonempty_tokens
 
-def _toks(text_col: str, delim: str, tokens_col: str | None) -> str:
-    """THE tokenizer expression (or the caller's pre-tokenized
-    column) — one definition, so training and scoring cannot tokenize
-    differently."""
-    if tokens_col:
-        return tokens_col
-    return f"filter(split({text_col}, '{delim}'), x -> x != '')"
+
+def _toks(tokens_col: str | None) -> str:
+    """The caller's pre-tokenized column, or THE corpus tokenizer
+    expression over ``text`` — one definition, so training and scoring
+    cannot tokenize differently."""
+    return tokens_col or nonempty_tokens()
 
 
 def _pairs_of(toks: str):
@@ -64,8 +64,6 @@ def _pairs_of(toks: str):
 def train_bigram_lm(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    delim: str = " ",
     tokens_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(bigrams, contexts, vocab_size) count frames for a bigram LM.
@@ -77,11 +75,11 @@ def train_bigram_lm(
 
     ``tokens_col`` names an already-tokenized (empty-filtered)
     array<string> column; when given, training reads it instead of
-    re-splitting ``text_col`` — callers that also feature-extract
+    re-splitting ``text`` — callers that also feature-extract
     share ONE tokenization (and typically one checkpointed scan)
     across all LM phases.
     """
-    toks = _toks(text_col, delim, tokens_col)
+    toks = _toks(tokens_col)
     bigrams = (
         docs.select(F.explode(_pairs_of(toks)).alias("p"))
         .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
@@ -102,12 +100,9 @@ def perplexity(
     vocab_size: DataFrame,
     *,
     k: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delim: str = " ",
     tokens_col: str | None = None,
 ) -> DataFrame:
-    """(id, n_pairs, cross_entropy, ppl) per document with >= 2 tokens.
+    """(doc_id, n_pairs, cross_entropy, ppl) per document with >= 2 tokens.
 
     Documents with fewer than two tokens have no bigrams and produce
     no output row (callers treat them as unscoreable, same contract as
@@ -116,23 +111,23 @@ def perplexity(
     """
     if k <= 0:
         raise ValueError("k must be > 0 (zero-count pairs need mass)")
-    toks = _toks(text_col, delim, tokens_col)
+    toks = _toks(tokens_col)
     pairs = docs.select(
-        F.col(id_col), F.explode(_pairs_of(toks)).alias("p")
-    ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        F.col("doc_id"), F.explode(_pairs_of(toks)).alias("p")
+    ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     scored = (
         pairs.join(bigrams, ["w1", "w2"], "left")
         .join(F.broadcast(contexts), "w1", "left")
         .crossJoin(F.broadcast(vocab_size))
         .select(
-            id_col,
+            "doc_id",
             F.log(
                 (F.coalesce(F.col("n"), F.lit(0)) + F.lit(k))
                 / (F.coalesce(F.col("n_ctx"), F.lit(0)) + F.lit(k) * F.col("v"))
             ).alias("logp"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.round(-F.avg("logp"), 6).alias("cross_entropy"),
         F.round(F.exp(-F.avg("logp")), 4).alias("ppl"),

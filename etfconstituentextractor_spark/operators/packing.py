@@ -37,17 +37,16 @@ def pack_sequences(
     df: DataFrame,
     budget: int,
     *,
-    tokens_col: str = "n_tokens",
-    key_col: str = "doc_id",
     strat_col: Optional[str] = None,
     salt: str = "pack",
 ) -> DataFrame:
-    """Append packing columns: ``pack_order`` (position in the
-    deterministic layout), ``start_offset`` (tokens before this doc),
-    ``bin_id`` (floor(start_offset / budget), per stratum when
-    ``strat_col`` is given).
+    """Append packing columns to (doc_id, n_tokens, ...) rows:
+    ``pack_order`` (position in the deterministic layout),
+    ``start_offset`` (tokens before this doc), ``bin_id``
+    (floor(start_offset / budget), per stratum when ``strat_col`` is
+    given).
 
-    Deterministic: the layout orders by (md5 bucket, key), so the
+    Deterministic: the layout orders by (md5 bucket, doc_id), so the
     same corpus always packs into the same bins regardless of
     partitioning or cluster size.
 
@@ -62,12 +61,12 @@ def pack_sequences(
         raise ValueError(f"budget must be positive, got {budget}")
     parts: list[Column] = [F.col(strat_col)] if strat_col else []
     w = W.partitionBy(*parts).orderBy(
-        hash_bucket(key_col, salt).asc_nulls_last(), F.col(key_col).asc_nulls_last()
+        hash_bucket("doc_id", salt).asc_nulls_last(), F.col("doc_id").asc_nulls_last()
     )
-    cum_incl = F.sum(tokens_col).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+    cum_incl = F.sum("n_tokens").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
     return (
         df.withColumn("pack_order", F.row_number().over(w))
-        .withColumn("start_offset", cum_incl - F.col(tokens_col))
+        .withColumn("start_offset", cum_incl - F.col("n_tokens"))
         .withColumn("bin_id", F.floor(F.col("start_offset") / budget))
     )
 

@@ -21,13 +21,13 @@ dedup pipeline feeds in, where every node has degree >= 1).
 Bit-reproducibility (the pq_fixedpoint.py discipline — what puts a
 TRAINED/iterated result under the cross-engine hash oracle instead of
 rows-only): every arithmetic step is nonnegative-integer.
-- ranks are fixed-point bigints at ``scale`` (default 10^12);
+- ranks are fixed-point bigints at ``SCALE`` (10^12);
 - every division is integer floor division (Spark ``DIV``, DuckDB
   ``//`` — identical on nonnegative operands);
 - the iteration count is FIXED, so both engines run the identical
   recurrence and the oracle replays it as ``iters`` unrolled CTEs.
-Overflow headroom: 85 * inflow <= 85 * N * scale — bigint-safe up to
-N ~ 10^5 at the default scale; raise/lower ``scale`` per graph size.
+Overflow headroom: 85 * inflow <= 85 * N * SCALE — bigint-safe up to
+N ~ 10^5.
 
 Scale posture (the 100 TB story):
 - one shuffle per iteration (the inflow groupBy(dst)); the edge frame
@@ -46,6 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: fixed-point unit of a rank
+SCALE = 10**12
+
 __all__ = ["pagerank_fixed_point", "sql_pagerank_ctes"]
 
 
@@ -54,9 +57,7 @@ def pagerank_fixed_point(
     src: str = "src",
     dst: str = "dst",
     iters: int = 4,
-    scale: int = 10**12,
     truncate_lineage: bool = True,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(node, rank: bigint) — fixed-point PageRank after ``iters``
     damped power-iteration rounds over the directed edge list.
@@ -64,30 +65,12 @@ def pagerank_fixed_point(
     ``edges`` is consumed as given: parallel edges weight the flow
     multiply (dedup first if that is not intended). The node set is
     the union of both endpoint columns; initial rank is
-    ``scale // N`` for every node; teleport is
-    ``15 * scale // (100 * N)`` and the damping factor 85/100, all in
+    ``SCALE // N`` for every node; teleport is
+    ``15 * SCALE // (100 * N)`` and the damping factor 85/100, all in
     integer arithmetic so any engine replays the exact bigints.
-
-    ``shuffle_partitions`` pins the session's shuffle partitioning for
-    the iteration loop (the components.py convention): per-round cost
-    on small graphs is dominated by fixed per-partition overhead
-    (each round materializes an eager localCheckpoint), so a pair
-    graph tiny relative to its corpus wants FEW partitions — size it
-    to pair volume, not corpus volume.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    spark = edges.sparkSession
-    if shuffle_partitions is not None:
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
-            return pagerank_fixed_point(
-                edges, src, dst, iters, scale, truncate_lineage, None
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
     e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
     nodes = (
         e.select(F.col("__src").alias("node"))
@@ -115,12 +98,12 @@ def pagerank_fixed_point(
     # the lazy plan grows linearly in iters — truncate_lineage=False is
     # a single linear-depth job, no per-round materialization needed
     r = nodes_n.select(
-        "node", F.expr(f"CAST({scale} AS BIGINT) DIV __n").alias("rank")
+        "node", F.expr(f"CAST({SCALE} AS BIGINT) DIV __n").alias("rank")
     )
     if truncate_lineage:
         r = r.localCheckpoint(eager=True)
 
-    teleport = F.expr(f"CAST({15 * scale} AS BIGINT) DIV (100 * __n)")
+    teleport = F.expr(f"CAST({15 * SCALE} AS BIGINT) DIV (100 * __n)")
     for _ in range(iters):
         contrib = (
             r.join(deg, "node")
@@ -150,43 +133,38 @@ def pagerank_fixed_point(
     return r.select("node", "rank")
 
 
-def sql_pagerank_ctes(
-    sym_cte: str,
-    iters: int = 4,
-    scale: int = 10**12,
-    prefix: str = "pr",
-) -> str:
+def sql_pagerank_ctes(sym_cte: str, iters: int = 4) -> str:
     """The DuckDB replay of :func:`pagerank_fixed_point` as unrolled
     CTEs over an already-SYMMETRIC edge CTE ``sym_cte(a, b)`` (the q65
     pair graph; symmetric means the src set equals the node set, so
     the node CTE can read one column). Ends at
-    ``{prefix}_r{iters}(node, rank)``."""
+    ``pr_r{iters}(node, rank)``."""
     parts = [
-        f"{prefix}_nodes AS (SELECT DISTINCT a AS node FROM {sym_cte})",
-        f"{prefix}_n AS (SELECT COUNT(*) AS n FROM {prefix}_nodes)",
-        f"{prefix}_deg AS (SELECT a AS node, COUNT(*) AS deg FROM {sym_cte} GROUP BY a)",
+        f"pr_nodes AS (SELECT DISTINCT a AS node FROM {sym_cte})",
+        "pr_n AS (SELECT COUNT(*) AS n FROM pr_nodes)",
+        f"pr_deg AS (SELECT a AS node, COUNT(*) AS deg FROM {sym_cte} GROUP BY a)",
         (
-            f"{prefix}_r0 AS (SELECT node, CAST({scale} AS BIGINT) // n AS rank "
-            f"FROM {prefix}_nodes, {prefix}_n)"
+            f"pr_r0 AS (SELECT node, CAST({SCALE} AS BIGINT) // n AS rank "
+            "FROM pr_nodes, pr_n)"
         ),
     ]
     for i in range(1, iters + 1):
         parts.append(
-            f"""{prefix}_f{i} AS (
+            f"""pr_f{i} AS (
       SELECT s.b AS node, SUM(r.rank // d.deg) AS inflow
-      FROM {prefix}_r{i - 1} r
-      JOIN {prefix}_deg d USING (node)
+      FROM pr_r{i - 1} r
+      JOIN pr_deg d USING (node)
       JOIN {sym_cte} s ON s.a = r.node
       GROUP BY s.b
     )"""
         )
         parts.append(
-            f"""{prefix}_r{i} AS (
+            f"""pr_r{i} AS (
       SELECT n0.node,
-             (CAST({15 * scale} AS BIGINT) // (100 * n.n))
+             (CAST({15 * SCALE} AS BIGINT) // (100 * n.n))
              + (CAST(85 AS BIGINT) * COALESCE(f.inflow, 0) // 100) AS rank
-      FROM {prefix}_nodes n0 CROSS JOIN {prefix}_n n
-      LEFT JOIN {prefix}_f{i} f ON n0.node = f.node
+      FROM pr_nodes n0 CROSS JOIN pr_n n
+      LEFT JOIN pr_f{i} f ON n0.node = f.node
     )"""
         )
     return ",\n    ".join(parts)

@@ -44,35 +44,35 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_counts(text_col: str = "text") -> Column:
-    """Struct of per-category match counts on the original text."""
+def pii_counts() -> Column:
+    """Struct of per-category match counts on the original ``text``."""
     return F.struct(
         *[
-            F.regexp_count(F.col(text_col), F.lit(pat)).alias(name)
+            F.regexp_count(F.col("text"), F.lit(pat)).alias(name)
             for name, pat, _ in PII_PATTERNS
         ]
     ).alias("pii_counts")
 
 
-def redact_pii(text_col: str = "text") -> Column:
-    """Text with every PII match replaced by its category token.
+def redact_pii() -> Column:
+    """``text`` with every PII match replaced by its category token.
 
     Idempotent: replacement tokens contain no digits or '@', so a
     second pass matches nothing.
     """
-    col = F.col(text_col)
+    col = F.col("text")
     for _, pat, token in PII_PATTERNS:
         col = F.regexp_replace(col, pat, token)
     return col
 
 
-def scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub(df: DataFrame) -> DataFrame:
     """Append `pii_counts` (struct), `pii_total`, and `text_redacted`.
 
     One projection — Catalyst keeps all patterns in a single codegen
     stage over one scan of the column.
     """
-    counts = pii_counts(text_col)
+    counts = pii_counts()
     total = None
     for name, _, _ in PII_PATTERNS:
         c = F.col("pii_counts")[name]
@@ -80,5 +80,5 @@ def scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     return (
         df.withColumn("pii_counts", counts)
         .withColumn("pii_total", total)
-        .withColumn("text_redacted", redact_pii(text_col))
+        .withColumn("text_redacted", redact_pii())
     )

@@ -43,19 +43,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _hash_order_sample(
-    df: DataFrame, id_col: str, vec_col: str, n: int
-) -> list[tuple[int, list[float]]]:
-    """Deterministic sample: first n rows by (md5(id), id). One
-    ordered collect of n rows — control-plane staging, like q59's
-    sentinel max() read."""
+def _hash_order_sample(df: DataFrame, n: int) -> list[tuple[int, list[float]]]:
+    """Deterministic sample of (vec_id, embedding): first n rows by
+    (md5(vec_id), vec_id). One ordered collect of n rows —
+    control-plane staging, like q59's sentinel max() read."""
     rows = (
         df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
+            F.col("vec_id"),
+            F.col("embedding"),
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
         )
-        .orderBy("__h", id_col)
+        .orderBy("__h", "vec_id")
         .limit(n)
         .collect()
     )
@@ -67,18 +65,16 @@ def train_pq_codebooks(
     *,
     m: int,
     ksub: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 512,
     iters: int = 5,
 ) -> np.ndarray:
     """(m, ksub, d/m) float64 codebooks via per-subspace Lloyd k-means
-    on a deterministic sample. Fixed iteration count, first-ksub init,
-    argmin ties to the lowest centroid index — every choice replayable
-    by the pure-Python oracle."""
+    on a deterministic sample of (vec_id, embedding). Fixed iteration
+    count, first-ksub init, argmin ties to the lowest centroid index —
+    every choice replayable by the pure-Python oracle."""
     if m < 1 or ksub < 2:
         raise ValueError(f"need m >= 1 and ksub >= 2, got m={m} ksub={ksub}")
-    sample = _hash_order_sample(df, id_col, vec_col, sample_n)
+    sample = _hash_order_sample(df, sample_n)
     if len(sample) < ksub:
         raise ValueError(f"sample of {len(sample)} rows < ksub={ksub}")
     x = np.array([v for _, v in sample], dtype=np.float64)
@@ -165,12 +161,11 @@ def pq_encode(
     df: DataFrame,
     codebooks: np.ndarray,
     *,
-    vec_col: str = "embedding",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Append ``pq_codes`` (array<int>, length m): nearest-centroid
-    index per subspace. Pure codegen map stage — codebooks are
-    literals, no shuffle, no Python."""
+    index per subspace of ``embedding``. Pure codegen map stage —
+    codebooks are literals, no shuffle, no Python."""
     m, _, dsub = codebooks.shape
     base = df.columns
     # Three chained selects, not 4m withColumns: every withColumn
@@ -188,7 +183,7 @@ def pq_encode(
     out = df.select(
         "*",
         *[
-            F.expr(f"slice({vec_col}, {j * dsub + 1}, {dsub})").alias(f"__sub_{j}")
+            F.expr(f"slice(embedding, {j * dsub + 1}, {dsub})").alias(f"__sub_{j}")
             for j in range(m)
         ],
         *[_codebook_lit(codebooks[j]).alias(f"__cb_{j}") for j in range(m)],
@@ -252,11 +247,8 @@ def pq_adc_join_topk(
     codebooks: np.ndarray,
     k: int,
     *,
-    id_col: str = "vec_id",
     qid_col: str = "qid",
     qvec_col: str = "qv",
-    lut_dp: int = 9,
-    score_dp: int = 6,
 ) -> DataFrame:
     """Multi-query ADC top-k, fully in-plan: the LUT stage of
     ``pq_adc_topk`` expressed as a broadcast join instead of a driver
@@ -264,15 +256,15 @@ def pq_adc_join_topk(
 
     Each QUERY row computes its own m×ksub lookup table ONCE against
     the codebook literals (a map over the tiny query frame, distances
-    rounded at ``lut_dp`` so a cross-engine oracle lands on the same
+    rounded at 9 dp so a cross-engine oracle lands on the same
     values), then broadcasts; every (query, candidate) pair costs m
     array lookups + a sum — the asymmetric-distance scan PQ exists
     for, with the big encoded side never shuffling. Scores are
     NEGATED (so rank order is uniformly descending across q70's legs)
-    and rounded at ``score_dp`` before the rank window; ties break on
+    and rounded at 6 dp before the rank window; ties break on
     the lowest candidate id.
 
-    encoded: output of pq_encode (id_col, pq_codes, ...)
+    encoded: output of pq_encode (vec_id, pq_codes, ...)
     queries: (qid_col, qvec_col array<double>)
     returns: (qid, candidate_id, score, rn) with rn <= k.
     """
@@ -293,7 +285,7 @@ def pq_adc_join_topk(
         .select(
             "qid",
             *[
-                F.expr(_sub_dist(f"__qsub_{j}", f"__qcb_{j}", lut_dp)).alias(
+                F.expr(_sub_dist(f"__qsub_{j}", f"__qcb_{j}", 9)).alias(
                     f"__lut_{j}"
                 )
                 for j in range(m)
@@ -308,9 +300,9 @@ def pq_adc_join_topk(
 
     w = W.partitionBy("qid").orderBy(F.col("score").desc(), F.col("candidate_id"))
     return (
-        encoded.select(F.col(id_col).alias("candidate_id"), "pq_codes")
+        encoded.select(F.col("vec_id").alias("candidate_id"), "pq_codes")
         .crossJoin(F.broadcast(q))
-        .select("qid", "candidate_id", F.round(-adc, score_dp).alias("score"))
+        .select("qid", "candidate_id", F.round(-adc, 6).alias("score"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
     )

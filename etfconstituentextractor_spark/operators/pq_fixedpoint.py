@@ -7,13 +7,12 @@ This module exists for the property pq.py deliberately trades away:
 a TRAINED index under the cross-engine hash oracle. Training is
 DISTRIBUTED — every pass over the points is a broadcast assignment
 plus one map-combinable aggregation; only the M*K-row codebook ever
-reaches the driver (``mode="sync"``, the MLlib-KMeans discipline; a
-zero-action ``mode="lazy"`` keeps the whole loop in one lazy plan)
-— and every arithmetic step is integer, so DuckDB re-derives
-codebook, codes, and ADC ranks bit-for-bit (q74). At 100 TB the
-split is: pq.py's sample-trained codebook when a driver-side sample
-is acceptable; this module when training itself must be distributed
-(codebook from the FULL corpus) or auditable across engines.
+reaches the driver (the MLlib-KMeans discipline) — and every
+arithmetic step is integer, so DuckDB re-derives codebook, codes,
+and ADC ranks bit-for-bit (q74). At 100 TB the split is: pq.py's
+sample-trained codebook when a driver-side sample is acceptable; this
+module when training itself must be distributed (codebook from the
+FULL corpus) or auditable across engines.
 
 A 64-dim float vector (256 bytes) becomes M=8 one-byte codes: split
 each vector into M contiguous subvectors, train a K=16-centroid
@@ -47,12 +46,10 @@ Scale posture (the 100 TB story):
   no fanout join, no per-candidate shuffle).
 - Training reduces carry (sub_id, code, pos, value) ints only —
   never vectors; the map-side partial-agg combines them.
-- The seed selection is a top-k: ORDER BY md5 LIMIT k plans as
-  TakeOrderedAndProject in sync mode (each partition keeps at most
-  K rows map-side); the lazy mode's rank-filter form gets the same
-  pruning via WindowGroupLimit. At 100 TB you'd train on a
-  TABLESAMPLE; the seed rule is sample-stable (hash order, not
-  position order).
+- The seed selection is a top-k: its rank <= k filter is pruned
+  map-side by WindowGroupLimit (each partition keeps at most K
+  rows). At 100 TB you'd train on a TABLESAMPLE; the seed rule is
+  sample-stable (hash order, not position order).
 - ADC search shuffles (query, candidate, partial-sum) ints; the
   final top-k is a rank window WindowGroupLimit prunes map-side.
 """
@@ -94,13 +91,12 @@ def _sqdist(a: str, b: str, dsub: int | None = None) -> str:
 
 def fixed_point_subvectors(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 8,
     dsub: int = 8,
     scale: int = 1000,
 ) -> DataFrame:
-    """(id, sub_id, sv: array<bigint>) — fixed-point subvector rows.
+    """(vec_id, sub_id, sv: array<bigint>) — fixed-point subvector rows
+    of each ``embedding``.
 
     ``floor(x * scale + 0.5)`` is round-half-up in one double op —
     the engine-portable quantizer (Spark ROUND and DuckDB ROUND are
@@ -108,7 +104,7 @@ def fixed_point_subvectors(
     alignment footnote and handles negatives identically in IEEE).
     """
     iv = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(scale) + F.lit(0.5)),
     )
     subs = F.array(
@@ -121,7 +117,7 @@ def fixed_point_subvectors(
         ]
     )
     return (
-        df.select(F.col(id_col).alias("vec_id"), iv.alias("__iv"))
+        df.select("vec_id", iv.alias("__iv"))
         .select("vec_id", F.inline(subs))
     )
 
@@ -159,26 +155,18 @@ def pqfp_assign(
     )
 
 
-def pqfp_train(
-    points: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    dsub: int = 8,
-    mode: str = "sync",
-) -> DataFrame:
+def pqfp_train(points: DataFrame, *, k: int, iters: int, dsub: int) -> DataFrame:
     """(sub_id, code, cv: array<bigint>) — K-centroid codebook per
     subvector position after ``iters`` Lloyd rounds.
 
     Seeding: codes 0..k-1 are the subvectors of the k vec_ids with
-    the smallest ``md5(vec_id)`` — deterministic, position-free
-    (stable under reordering the input), and, as an ORDER BY+LIMIT,
-    planned as TakeOrderedAndProject (map-side top-k per partition,
-    never a global sort). Updates floor the per-dimension mean to
-    keep centroids integral; a code that captures no points keeps
-    its previous centroid. Both modes produce the identical codebook.
+    the smallest ``md5(vec_id)`` — deterministic and position-free
+    (stable under reordering the input). Updates floor the
+    per-dimension mean to keep centroids integral; a code that
+    captures no points keeps its previous centroid.
 
-    ``mode="sync"`` (default) is the MLlib-KMeans discipline: each
-    Lloyd round is ONE distributed job (broadcast assignment +
+    This is the MLlib-KMeans discipline: each Lloyd round is ONE
+    distributed job (broadcast assignment +
     map-combinable aggregation) whose result — M*K count/sum rows,
     index state, never corpus data — syncs to the driver, and the
     next round's codebook re-enters the plan as a literal
@@ -189,21 +177,7 @@ def pqfp_train(
     a 128-row sync. The floor(sum/count) division happens in Python
     doubles — identical IEEE semantics to the JVM, exact because
     |sum| < 2^53 by construction.
-
-    ``mode="lazy"`` keeps training entirely inside one lazy plan —
-    zero driver actions — for plan-inspection tests and for
-    composing the WHOLE trained index as a single cross-engine
-    artifact. Each round's lineage references the previous codebook
-    twice (assignment + empty-cluster carry), so the plan grows
-    2^iters: use only for small ``iters``.
     """
-    if mode == "lazy":
-        return _pqfp_train_lazy(points, k, iters, dsub)
-    if mode != "sync":
-        raise ValueError(f"pqfp_train mode must be 'sync' or 'lazy', got {mode!r}")
-
-    import math
-
     spark = points.sparkSession
     if iters <= 0:
         # seed codebook only — no Lloyd pass to merge the seed job into
@@ -355,52 +329,6 @@ def _by_sub(
     for (s, c), cv in sorted(cbook.items()):
         by_sub.setdefault(s, []).append((c, cv))
     return by_sub
-
-
-def _pqfp_train_lazy(points: DataFrame, k: int, iters: int, dsub: int) -> DataFrame:
-    """The zero-action, single-lazy-plan training loop (see
-    ``pqfp_train`` mode="lazy")."""
-    seeds = (
-        points.select("vec_id")
-        .distinct()
-        .withColumn(
-            "code",
-            F.row_number().over(
-                W.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            )
-            - 1,
-        )
-        .filter(F.col("code") < k)
-    )
-    cb = points.join(F.broadcast(seeds), "vec_id").select(
-        "sub_id", "code", F.col("sv").alias("cv")
-    )
-    for _ in range(iters):
-        assigned = pqfp_assign(points, cb, dsub)
-        agg = assigned.groupBy("sub_id", "code").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[F.sum(F.col("sv").getItem(i)).alias(f"__s{i}") for i in range(dsub)],
-        )
-        newcb = agg.select(
-            "sub_id",
-            "code",
-            F.array(
-                *[
-                    F.floor(F.col(f"__s{i}").cast("double") / F.col("__n"))
-                    for i in range(dsub)
-                ]
-            ).alias("cv"),
-        )
-        cb = (
-            cb.alias("g")
-            .join(newcb.alias("n"), ["sub_id", "code"], "left")
-            .select(
-                "sub_id",
-                "code",
-                F.coalesce(F.col("n.cv"), F.col("g.cv")).alias("cv"),
-            )
-        )
-    return cb
 
 
 def pqfp_adc_topk(

@@ -35,11 +35,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def make_weights(n_buckets: int = 64, salt: str = "quality-v1") -> list[float]:
+def make_weights(n_buckets: int = 64) -> list[float]:
     """Deterministic stand-in for offline-trained weights: dyadic
-    rationals in [-1/4, 1/4] derived from md5(salt:i)."""
+    rationals in [-1/4, 1/4] derived from md5(quality-v1:i)."""
     return [
-        ((int(hashlib.md5(f"{salt}:{i}".encode()).hexdigest()[:8], 16) % 129) - 64) / 256.0
+        ((int(hashlib.md5(f"quality-v1:{i}".encode()).hexdigest()[:8], 16) % 129) - 64) / 256.0
         for i in range(n_buckets)
     ]
 

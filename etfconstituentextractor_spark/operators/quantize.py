@@ -56,15 +56,7 @@ def dequantize(df: DataFrame, q_col: str = "q", scale_col: str = "scale") -> Dat
     )
 
 
-def int8_cosine_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    id_col: str = "id",
-    q_col: str = "q",
-    query_id_col: str = "qid",
-) -> DataFrame:
+def int8_cosine_topk(candidates: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Brute-force cosine top-k over QUANTIZED vectors: the scales
     cancel, so scoring is integer dot products over the int8 codes.
 
@@ -84,15 +76,15 @@ def int8_cosine_topk(
     nrm = "sqrt(aggregate(transform({c}, x -> CAST(x AS BIGINT) * x), 0L, (acc, x) -> acc + x))"
     qq = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("__qid"),
-            F.col(q_col).alias("__qv"),
-            F.expr(nrm.format(c=q_col)).alias("__qn"),
+            F.col("qid").alias("__qid"),
+            F.col("q").alias("__qv"),
+            F.expr(nrm.format(c="q")).alias("__qn"),
         )
     )
     cand = candidates.select(
-        F.col(id_col).alias("candidate_id"),
-        F.col(q_col).alias("__cv"),
-        F.expr(nrm.format(c=q_col)).alias("__cn"),
+        F.col("id").alias("candidate_id"),
+        F.col("q").alias("__cv"),
+        F.expr(nrm.format(c="q")).alias("__cn"),
     )
     # integer dot via the Arrow kernel (round 15): int64 addition is
     # exact, so the vectorized sum is bit-identical to the JVM fold
@@ -100,12 +92,12 @@ def int8_cosine_topk(
 
     paired = append_pair_dot_i64(cand.crossJoin(qq), "__cv", "__qv", "__dot")
     cos = F.round(F.col("__dot") / (F.col("__cn") * F.col("__qn")), 9)
-    w = W.partitionBy(query_id_col).orderBy(
+    w = W.partitionBy("qid").orderBy(
         F.col("cos_q").desc(), F.col("candidate_id")
     )
     return (
         paired.select(
-            F.col("__qid").alias(query_id_col),
+            F.col("__qid").alias("qid"),
             "candidate_id",
             cos.alias("cos_q"),
         )

@@ -32,10 +32,9 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k documents per named query by BM25 over whitespace tokens.
+    """Top-k documents per named query by BM25 over the space-separated
+    tokens of ``text``.
 
     Returns (query_id, doc_id, score, rn); scores round to 6 dp BEFORE
     ranking (engine-parity convention — rank decisions are identical
@@ -43,9 +42,9 @@ def bm25_topk(
     doc_id.
     """
     spark = docs.sparkSession
-    d = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(text_col, " ").alias("toks")
-    ).withColumn("dl", F.size("toks").cast("bigint"))
+    d = docs.select("doc_id", F.split("text", " ").alias("toks")).withColumn(
+        "dl", F.size("toks").cast("bigint")
+    )
 
     all_terms = sorted({t for ts in queries.values() for t in ts})
     stats = d.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))

@@ -40,10 +40,9 @@ BUCKETS = 10_000
 
 def _reject_reserved(df: DataFrame, *names: str) -> None:
     """Refuse input columns that a sampler is about to materialize —
-    ``withColumn`` would silently overwrite them (the same reserved-name
-    contract as bpe.encode_corpus). Applies to appended OUTPUT columns
-    (bucket, rn, ...) and dropped internals (es_key) alike: either way
-    the caller's data would be destroyed."""
+    ``withColumn`` would silently overwrite them. Applies to appended
+    OUTPUT columns (bucket, rn, ...) and dropped internals (es_key)
+    alike: either way the caller's data would be destroyed."""
     clash = [n for n in names if n in df.columns]
     if clash:
         raise ValueError(
@@ -71,17 +70,15 @@ def hash_bucket(key_col: str, salt: str = "mix") -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % BUCKETS
 
 
-def rate_threshold(
-    rates: Mapping[str, float], strat_col: str, default_rate: float = 0.0
-) -> Column:
-    """Per-row bucket threshold: rate(stratum)·BUCKETS as a CASE chain."""
+def rate_threshold(rates: Mapping[str, float], strat_col: str) -> Column:
+    """Per-row bucket threshold: rate(stratum)·BUCKETS as a CASE chain;
+    unknown strata get rate 0."""
     expr = None
     for stratum, rate in sorted(rates.items()):
         cond = F.col(strat_col) == stratum
         val = F.lit(int(round(rate * BUCKETS)))
         expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    default = F.lit(int(round(default_rate * BUCKETS)))
-    return expr.otherwise(default) if expr is not None else default
+    return expr.otherwise(F.lit(0)) if expr is not None else F.lit(0)
 
 
 def hash_rate_sample(
@@ -90,8 +87,6 @@ def hash_rate_sample(
     *,
     strat_col: str,
     key_col: str,
-    salt: str = "mix",
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Keep each row iff its hash bucket < rate(stratum)·BUCKETS.
 
@@ -99,8 +94,8 @@ def hash_rate_sample(
     column so callers (and oracles) can audit the decision.
     """
     _reject_reserved(df, "bucket")
-    return df.withColumn("bucket", hash_bucket(key_col, salt)).filter(
-        F.col("bucket") < rate_threshold(rates, strat_col, default_rate)
+    return df.withColumn("bucket", hash_bucket(key_col)).filter(
+        F.col("bucket") < rate_threshold(rates, strat_col)
     )
 
 
@@ -110,7 +105,6 @@ def stratified_quota_sample(
     strat_col: str,
     key_col: str,
     k: int,
-    salt: str = "mix",
 ) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, chosen as the k
     smallest hash buckets (ties broken by key) — a deterministic
@@ -122,7 +116,7 @@ def stratified_quota_sample(
         F.col("bucket").asc_nulls_last(), F.col(key_col).asc_nulls_last()
     )
     return (
-        df.withColumn("bucket", hash_bucket(key_col, salt))
+        df.withColumn("bucket", hash_bucket(key_col))
         .withColumn("rn", F.row_number().over(w).cast("int"))
         .filter(F.col("rn") <= k)
     )
@@ -141,13 +135,12 @@ def weighted_reservoir_sample(
     key_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wes",
 ) -> DataFrame:
     """Efraimidis-Spirakis weighted sampling WITHOUT replacement:
     top-k rows per stratum by the priority key ln(u)/w (equivalent to
     ranking on u^(1/w)) — a heavier row wins proportionally more
     often, and a re-run selects the same rows (u derives from
-    md5(key:salt), not a RNG).
+    md5(key:wes), not a RNG).
 
     Cross-engine determinism: u's numerator is a 52-bit integer
     (double-exact), then ln(u) is ROUNDED AT 6 dp BEFORE the division
@@ -167,7 +160,7 @@ def weighted_reservoir_sample(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     _reject_reserved(df, "es_key", "rn")
-    h = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":wes")))
     u = (F.conv(F.substring(h, 1, 13), 16, 10).cast("double") + F.lit(1.0)) / F.lit(
         float(_WES_DENOM)
     )
@@ -190,7 +183,6 @@ def hash_oversample(
     *,
     strat_col: str,
     key_col: str,
-    salt: str = "mix",
 ) -> DataFrame:
     """Deterministic WITH-replacement mixture for rates that may
     exceed 1: a stratum at rate 2.3 emits every row twice, and the
@@ -221,7 +213,7 @@ def hash_oversample(
 
     n_copies = floor_col + (F.col("bucket") < frac_col).cast("int")
     return (
-        df.withColumn("bucket", hash_bucket(key_col, salt))
+        df.withColumn("bucket", hash_bucket(key_col))
         .withColumn("n_copies", n_copies)
         .filter(F.col("n_copies") >= 1)
         .withColumn("copy_id", F.explode(F.sequence(F.lit(1), F.col("n_copies"))))
@@ -236,7 +228,6 @@ def token_budget_sample(
     strat_col: str,
     tokens_col: str,
     key_col: str,
-    salt: str = "mix",
 ) -> DataFrame:
     """Keep rows per stratum, in deterministic hash order, until the
     stratum's TOKEN budget fills — how a mixture is actually capped
@@ -264,7 +255,7 @@ def token_budget_sample(
         budget = F.when(cond, n) if budget is None else budget.when(cond, n)
     budget = budget.otherwise(F.lit(0)) if budget is not None else F.lit(0)
     return (
-        df.withColumn("bucket", hash_bucket(key_col, salt))
+        df.withColumn("bucket", hash_bucket(key_col))
         .withColumn("cum_before", cum_incl - F.col(tokens_col))
         .filter(F.col("cum_before") < budget)
     )

@@ -38,26 +38,26 @@ from pyspark.sql import functions as F
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
-def semantic_seeds(vectors: DataFrame, n_seeds: int, id_col: str = "vec_id") -> DataFrame:
+def semantic_seeds(vectors: DataFrame, n_seeds: int) -> DataFrame:
     """First ``n_seeds`` rows by (md5(id), id) as cluster centers.
 
-    vectors: (id_col bigint, v array<double>, nrm double)
+    vectors: (vec_id bigint, v array<double>, nrm double)
     returns: (cell, cv, cn) — a TakeOrderedAndProject subplan small
     enough to broadcast by construction.
     """
     return (
-        vectors.withColumn("__h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("__h", id_col)
+        vectors.withColumn("__h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("__h", "vec_id")
         .limit(n_seeds)
         .select(
-            F.col(id_col).alias("cell"),
+            F.col("vec_id").alias("cell"),
             F.col("v").alias("cv"),
             F.col("nrm").alias("cn"),
         )
     )
 
 
-def assign_clusters(vectors: DataFrame, seeds: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def assign_clusters(vectors: DataFrame, seeds: DataFrame) -> DataFrame:
     """Nearest-seed assignment, keeping the winning score.
 
     Broadcast cross join (K rows per vector, same partition), the
@@ -68,13 +68,13 @@ def assign_clusters(vectors: DataFrame, seeds: DataFrame, id_col: str = "vec_id"
     exchange still carries one row per vector. max_by keys on
     (cos_c, -cell) = highest cosine, lowest cell on ties — the same
     decision ROUND(...,9) lets DuckDB replay.
-    returns: (id_col, v, nrm, cell, cent_cos[9dp]).
+    returns: (vec_id, v, nrm, cell, cent_cos[9dp]).
     """
     from etfconstituentextractor_spark.operators.veckernel import append_pair_dot
 
     paired = append_pair_dot(
         vectors.crossJoin(F.broadcast(seeds)).select(
-            id_col, "v", "nrm", "cell", "cn", "cv"
+            "vec_id", "v", "nrm", "cell", "cn", "cv"
         ),
         "v",
         "cv",
@@ -83,8 +83,8 @@ def assign_clusters(vectors: DataFrame, seeds: DataFrame, id_col: str = "vec_id"
     )
     cos = F.round(F.col("__dot") / (F.col("nrm") * F.col("cn")), 9)
     return (
-        paired.select(id_col, "v", "nrm", "cell", cos.alias("cos_c"))
-        .groupBy(id_col)
+        paired.select("vec_id", "v", "nrm", "cell", cos.alias("cos_c"))
+        .groupBy("vec_id")
         .agg(
             F.first("v").alias("v"),
             F.first("nrm").alias("nrm"),
@@ -93,16 +93,11 @@ def assign_clusters(vectors: DataFrame, seeds: DataFrame, id_col: str = "vec_id"
                 F.struct(F.col("cos_c"), (-F.col("cell")).alias("tb")),
             ).alias("__win"),
         )
-        .select(id_col, "v", "nrm", "__win.cell", "__win.cent_cos")
+        .select("vec_id", "v", "nrm", "__win.cell", "__win.cent_cos")
     )
 
 
-def semantic_dedup(
-    assigned: DataFrame,
-    tau: float,
-    cap: int,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def semantic_dedup(assigned: DataFrame, tau: float, cap: int) -> DataFrame:
     """Keep-first dedup within clusters: one output row per vector.
 
     A vector is a duplicate when ANY lower-id vector in its cluster
@@ -110,7 +105,7 @@ def semantic_dedup(
     from the pairwise stage (their rows emit n_close=0, kept) — the
     bounded-quadratic guard; the kept-cells frame is one row per cell,
     broadcast.
-    returns: (id_col, cell, cent_cos[6dp], n_close, is_kept).
+    returns: (vec_id, cell, cent_cos[6dp], n_close, is_kept).
     """
     kept = (
         assigned.groupBy("cell")
@@ -126,9 +121,9 @@ def semantic_dedup(
         a.join(
             b,
             (F.col("a.cell") == F.col("b.cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         ).select(
-            F.col(f"b.{id_col}").alias("__b_id"),
+            F.col("b.vec_id").alias("__b_id"),
             F.col("a.v").alias("__va"),
             F.col("b.v").alias("__vb"),
             F.col("a.nrm").alias("__na"),
@@ -142,13 +137,13 @@ def semantic_dedup(
     close = (
         paired.withColumn("cos_sim", cos)
         .filter(F.col("cos_sim") >= tau)
-        .groupBy(F.col("__b_id").alias(id_col))
+        .groupBy(F.col("__b_id").alias("vec_id"))
         .agg(F.count(F.lit(1)).alias("n_close"))
     )
     return (
-        assigned.join(close, id_col, "left")
+        assigned.join(close, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "cell",
             F.round(F.col("cent_cos"), 6).cast("double").alias("cent_cos"),
             F.coalesce(F.col("n_close"), F.lit(0).cast("long")).alias("n_close"),

@@ -39,12 +39,15 @@ from etfconstituentextractor_spark.operators.text import hex_to_long
 #: 16^13 — the normalization denominator for 13-hex-char prefixes.
 _DENOM = 16**13
 
+#: the catalog's sketch size: k smallest hashes kept per group
+_K = 32
+
 
 def kmv_distinct(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    k: int = 32,
+    k: int = _K,
 ) -> DataFrame:
     """(group_cols..., kmv_est) — deterministic KMV distinct-count
     estimate of ``value_col`` per group, rounded to 4 dp. Groups with
@@ -76,15 +79,14 @@ def kmv_distinct(
     return sk.select(*group_cols, F.round(est, 4).alias("kmv_est"))
 
 
-def sql_kmv_distinct(
-    from_sql: str, group_col: str, value_col: str, k: int = 32
-) -> str:
-    """DuckDB spelling of the identical sketch (shared construction,
-    independent engine) — a CTE body yielding (group_col, kmv_est)."""
+def sql_kmv_distinct(from_sql: str, group_col: str, value_col: str) -> str:
+    """DuckDB spelling of the identical sketch at k = ``_K`` (shared
+    construction, independent engine) — a CTE body yielding
+    (group_col, kmv_est)."""
     return f"""
     SELECT {group_col},
-           ROUND(CASE WHEN COUNT(*) < {k} THEN CAST(COUNT(*) AS DOUBLE)
-                 ELSE {k - 1}.0 / (CAST('0x' || substr(MAX(__h), 1, 13) AS BIGINT)
+           ROUND(CASE WHEN COUNT(*) < {_K} THEN CAST(COUNT(*) AS DOUBLE)
+                 ELSE {_K - 1}.0 / (CAST('0x' || substr(MAX(__h), 1, 13) AS BIGINT)
                                    / {float(_DENOM)}) END, 4) AS kmv_est
     FROM (
       SELECT {group_col}, __h,
@@ -94,6 +96,6 @@ def sql_kmv_distinct(
             FROM {from_sql}
             WHERE {value_col} IS NOT NULL)
     )
-    WHERE __rn <= {k}
+    WHERE __rn <= {_K}
     GROUP BY {group_col}
     """

@@ -28,10 +28,9 @@ def salted_join(
     on: list[str],
     salt_from: Column,
     factor: int,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join ``probe ⋈ build`` on ``on`` with the shuffle spread
-    over ``factor`` salted sub-keys.
+    """Inner equi-join ``probe ⋈ build`` on ``on`` with the shuffle
+    spread over ``factor`` salted sub-keys.
 
     salt_from: deterministic expression over probe columns (NOT the
     join key — salting the key's own hash would undo the spread) used
@@ -39,20 +38,9 @@ def salted_join(
     ``F.crc32(F.col("some_col").cast("string"))``. A NULL salt_from
     value lands in salt bucket 0 (coalesced) so key-matching rows are
     never silently dropped.
-
-    ``how`` is restricted to probe-side-preserving types: the build
-    side is replicated ``factor`` times, so 'right'/'full' would emit
-    ``factor`` duplicate null-extended rows for unmatched build rows.
     """
     if factor < 1:
         raise ValueError("factor must be >= 1")
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports only probe-preserving join types {sorted(allowed)}; "
-            f"got {how!r} (build side is replicated, so right/full would duplicate "
-            "unmatched build rows)"
-        )
     if "__salt" in probe.columns or "__salt" in build.columns:
         raise ValueError("__salt column already present")
     p = probe.withColumn(
@@ -62,4 +50,4 @@ def salted_join(
     b = build.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(factor)]))
     )
-    return p.join(b, on + ["__salt"], how).drop("__salt")
+    return p.join(b, on + ["__salt"]).drop("__salt")

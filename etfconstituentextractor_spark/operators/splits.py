@@ -54,29 +54,25 @@ def leakage_safe_split(
     df: DataFrame,
     group_col: str,
     salt: str = "split",
-    fractions: tuple[int, int, int] = (80, 10, 10),
-    out_col: str = "split_id",
 ) -> DataFrame:
-    """Adds ``out_col``: 0=train, 1=val, 2=test, constant within each
-    ``group_col`` value. ``fractions`` are integer percents summing to
-    100 (integer thresholds keep the two engines' comparisons exact).
+    """Adds ``split_id``: 0=train, 1=val, 2=test at 80/10/10 percent,
+    constant within each ``group_col`` value (integer percent
+    thresholds keep the two engines' comparisons exact).
     NULL groups raise in-plan (an F.assert_true guard, not an eager
     count): a NULL label means the dedup stage upstream failed, and
     hashing NULL would silently funnel every such doc into one split.
     """
-    if len(fractions) != 3 or any(f < 0 for f in fractions) or sum(fractions) != _BUCKETS:
-        raise ValueError(f"fractions must be 3 nonneg ints summing to 100: {fractions}")
     g = F.col(group_col)
     guard = F.assert_true(
         g.isNotNull(), F.lit(f"leakage_safe_split: NULL {group_col}")
     )
     b = split_bucket(g, salt)
     split = (
-        F.when(b < F.lit(fractions[0]), F.lit(0))
-        .when(b < F.lit(fractions[0] + fractions[1]), F.lit(1))
+        F.when(b < F.lit(80), F.lit(0))
+        .when(b < F.lit(90), F.lit(1))
         .otherwise(F.lit(2))
     )
-    return df.withColumn(out_col, F.when(guard.isNull(), split))
+    return df.withColumn("split_id", F.when(guard.isNull(), split))
 
 
 def sql_split_bucket(group_expr: str, salt: str) -> str:

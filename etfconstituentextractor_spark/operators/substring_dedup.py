@@ -52,6 +52,9 @@ from etfconstituentextractor_spark.operators.text import (
     sql_shingles,
 )
 
+#: intra-document repetition n-gram width (tokens)
+_REP_N = 3
+
 #: default shingle width (tokens). 50-token shingles are the paper's
 #: setting for full-scale corpora; the synthetic corpus' repeated
 #: banners are shorter, and the construction is width-agnostic.
@@ -61,31 +64,28 @@ DEFAULT_K = 8
 def repeated_ngram_stats(
     docs: DataFrame,
     k: int = DEFAULT_K,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, n_dup_shingles, dup_covered_tokens) per document that has
-    at least one duplicated k-shingle; docs without any produce no row
-    (callers left-join and coalesce to 0 — the LM-leg contract)."""
+    """(doc_id, n_dup_shingles, dup_covered_tokens) per document that
+    has at least one duplicated k-shingle; docs without any produce no
+    row (callers left-join and coalesce to 0 — the LM-leg contract)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    toks = nonempty_tokens(text_col)
+    toks = nonempty_tokens()
     sh = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.expr(spark_shingles(toks, k))).alias("pos", "s"),
-    ).select(id_col, "pos", F.md5("s").alias("h"))
+    ).select("doc_id", "pos", F.md5("s").alias("h"))
     marked = (
         sh.withColumn("__n", F.count(F.lit(1)).over(W.partitionBy("h")))
         .filter(F.col("__n") > 1)
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
-    w = W.partitionBy(id_col).orderBy("pos")
+    w = W.partitionBy("doc_id").orderBy("pos")
     gap = F.col("pos") - F.lag("pos").over(w)
     contrib = F.when(gap.isNull(), F.lit(k)).otherwise(F.least(F.lit(k), gap))
     return (
         marked.withColumn("contrib", contrib)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_dup_shingles"),
             F.sum("contrib").cast("bigint").alias("dup_covered_tokens"),
@@ -128,13 +128,11 @@ def sql_repeated_ngram_stats(from_sql: str, k: int = DEFAULT_K) -> str:
 def intra_doc_repetition(
     docs: DataFrame,
     *,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokens_col: str | None = None,
 ) -> DataFrame:
     """INTRA-document repetition signals — the Gopher quality rules
-    (Rae et al. 2021, §A1.1) restated token-wise on one n-gram width:
+    (Rae et al. 2021, §A1.1) restated token-wise on the n = ``_REP_N``
+    n-gram width:
     `top{n}_cnt` is the occurrence count of the document's most
     frequent n-gram (Gopher's "fraction of characters in the most
     frequent n-gram", here over tokens — callers divide by n_tokens),
@@ -145,8 +143,8 @@ def intra_doc_repetition(
     CROSS-corpus version of this signal.
 
     Docs with at least one n-gram always get a row (top{n}_cnt >= 1);
-    `dup{n}_cov` is 0 when nothing repeats. Callers left-join on id
-    and coalesce.
+    `dup{n}_cov` is 0 when nothing repeats. Callers left-join on
+    doc_id and coalesce.
 
     Plan shape (round-7 rework, measured ~2x cheaper than the
     two-stream window spelling): ONE posexplode feeds ONE
@@ -160,11 +158,10 @@ def intra_doc_repetition(
     hash is a pure in-engine grouping key, absent from output and
     from the oracle, which groups by its own md5).
     """
-    if n < 2:
-        raise ValueError(f"need n >= 2, got {n}")
+    n = _REP_N
     # tokens_col lets callers reuse an already-tokenized (often
     # checkpointed) array instead of re-splitting text
-    toks = tokens_col or nonempty_tokens(text_col)
+    toks = tokens_col or nonempty_tokens()
 
     # xxhash64, not md5: this hash is ONLY an in-engine grouping key —
     # it never appears in output and never crosses to the oracle (the
@@ -172,10 +169,10 @@ def intra_doc_repetition(
     # yields identical counts) — so the 8-byte JVM intrinsic beats the
     # 32-hex md5 string in both CPU and shuffle width
     sh = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.expr(spark_shingles(toks, n))).alias("pos", "s"),
-    ).select(id_col, "pos", F.xxhash64("s").alias("h"))
-    grp = sh.groupBy(id_col, "h").agg(
+    ).select("doc_id", "pos", F.xxhash64("s").alias("h"))
+    grp = sh.groupBy("doc_id", "h").agg(
         F.count(F.lit(1)).alias("c"), F.collect_list("pos").alias("poss")
     )
     # interval union of [pos, pos+n) over sorted duplicated positions:
@@ -187,24 +184,25 @@ def intra_doc_repetition(
         f"'tot', acc.tot + least({n}, i - acc.prev)), acc -> acc.tot)"
     )
     return (
-        grp.groupBy(id_col)
+        grp.groupBy("doc_id")
         .agg(
             F.max("c").cast("bigint").alias(f"top{n}_cnt"),
             F.collect_list(F.when(F.col("c") >= 2, F.col("poss"))).alias("dup_poss"),
         )
         .select(
-            id_col,
+            "doc_id",
             f"top{n}_cnt",
             F.expr(cov_fold).cast("bigint").alias(f"dup{n}_cov"),
         )
     )
 
 
-def sql_intra_doc_repetition(from_sql: str, *, n: int = 3) -> str:
+def sql_intra_doc_repetition(from_sql: str) -> str:
     """DuckDB spelling of the identical measure — a CTE body yielding
     (doc_id, top{n}_cnt, dup{n}_cov). Deliberately the RELATIONAL
     form (per-doc lag window for the interval union) rather than the
     fold: the engines must agree on results, not plans."""
+    n = _REP_N
     toks = "list_filter(string_split(text, ' '), x -> x != '')"
     return f"""
     SELECT t.doc_id, t.top{n}_cnt, COALESCE(c.dup{n}_cov, 0) AS dup{n}_cov

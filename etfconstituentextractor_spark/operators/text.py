@@ -31,21 +31,23 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 STOPWORDS = LANG_STOPWORDS["en"]
 
 
-def nonempty_tokens(col: str = "text") -> str:
-    """THE corpus word-tokenization expression (whitespace split,
-    empties dropped) as a SQL fragment — one definition for every
-    operator that tokenizes this way (substring dedup, the q80 LM
-    frame): a tokenization change must happen in one place."""
-    return f"filter(split({col}, ' '), x -> x != '')"
+def nonempty_tokens() -> str:
+    """THE corpus word-tokenization expression over ``text``
+    (whitespace split, empties dropped) as a SQL fragment — one
+    definition for every operator that tokenizes this way (substring
+    dedup, the q80 LM frame): a tokenization change must happen in
+    one place."""
+    return "filter(split(text, ' '), x -> x != '')"
 
 
-def tokens(text_col: str = "text") -> Column:
-    """Whitespace tokenization (corpus is single-space separated)."""
-    return F.split(F.col(text_col), " ")
+def tokens() -> Column:
+    """Whitespace tokenization of ``text`` (corpus is single-space
+    separated)."""
+    return F.split(F.col("text"), " ")
 
 
-def sql_tokens(expr: str = "text") -> str:
-    return f"string_split({expr}, ' ')"
+def sql_tokens() -> str:
+    return "string_split(text, ' ')"
 
 
 def spark_shingles(tokens_expr: str, n: int = 3) -> str:
@@ -109,16 +111,14 @@ def sql_stopword_hits(tokens_expr: str, words: tuple[str, ...]) -> str:
     )
 
 
-def minhash(shingles_expr: str, salt: str = "") -> Column:
-    """Min of md5 over (salted) shingles — one LSH band signature.
+def minhash(shingles_expr: str) -> Column:
+    """Min of md5 over shingles — one LSH band signature.
     Empty shingle set → NULL (array_min of empty)."""
-    h = f"md5(concat('{salt}', s))" if salt else "md5(s)"
-    return F.expr(f"array_min(transform({shingles_expr}, s -> {h}))")
+    return F.expr(f"array_min(transform({shingles_expr}, s -> md5(s)))")
 
 
-def sql_minhash(shingles_expr: str, salt: str = "") -> str:
-    h = f"md5(concat('{salt}', s))" if salt else "md5(s)"
-    return f"list_min(list_transform({shingles_expr}, s -> {h}))"
+def sql_minhash(shingles_expr: str) -> str:
+    return f"list_min(list_transform({shingles_expr}, s -> md5(s)))"
 
 
 #: hex chars whose high nibble bit is set — the portable "random bit"
@@ -218,15 +218,16 @@ def sql_jaccard_predistinct(a_expr: str, b_expr: str) -> str:
 SUBTOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def subtoken_count(text_expr: str = "text") -> Column:
-    """Count of BPE-style subtokens (the token-count feature a real
-    pipeline computes with a learned tokenizer; the regex is the
-    deterministic stand-in both engines evaluate identically)."""
-    return F.expr(f"size(regexp_extract_all({text_expr}, '{SUBTOKEN_PATTERN}', 0))")
+def subtoken_count() -> Column:
+    """Count of BPE-style subtokens of ``text`` (the token-count
+    feature a real pipeline computes with a learned tokenizer; the
+    regex is the deterministic stand-in both engines evaluate
+    identically)."""
+    return F.expr(f"size(regexp_extract_all(text, '{SUBTOKEN_PATTERN}', 0))")
 
 
-def sql_subtoken_count(text_expr: str = "text") -> str:
-    return f"len(regexp_extract_all({text_expr}, '{SUBTOKEN_PATTERN}'))"
+def sql_subtoken_count() -> str:
+    return f"len(regexp_extract_all(text, '{SUBTOKEN_PATTERN}'))"
 
 
 _FP_MOD = 1_000_000_007
@@ -265,14 +266,13 @@ def sql_hex_to_long(hex_expr: str) -> str:
 def simhash_pairs(
     docs,
     *,
-    tokens_expr: str = "split(text, ' ')",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     n_bits: int = 16,
     n_bands: int = 4,
 ):
     """SimHash near-dup candidate pairs: documents whose fingerprints
-    differ in at most ``max_hamming`` bits (SURVEY.md §2B "LLM-pipeline
+    over the space-separated tokens of ``text`` differ in at most
+    ``max_hamming`` bits (SURVEY.md §2B "LLM-pipeline
     — near-dup": the SimHash member of the dedup family, beside q62's
     MinHash-LSH and q63's exact Jaccard).
 
@@ -299,10 +299,7 @@ def simhash_pairs(
         raise ValueError(f"n_bands={n_bands} must divide n_bits={n_bits}")
     w = n_bits // n_bands
 
-    fp = docs.select(
-        F.col(id_col).alias("doc_id"),
-        simhash_bits(tokens_expr, n_bits).alias("fp"),
-    )
+    fp = docs.select("doc_id", simhash_bits("split(text, ' ')", n_bits).alias("fp"))
     banded = fp.select(
         "doc_id",
         "fp",

@@ -31,36 +31,25 @@ from pyspark.sql import functions as F
 RESOLUTIONS = ("hour", "day", "week")
 
 
-def time_rollup(
-    events: DataFrame,
-    resolutions: tuple[str, ...] = RESOLUTIONS,
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def time_rollup(events: DataFrame) -> DataFrame:
     """(resolution, bucket_start, n, v_sum, v_min, v_max, v_open,
-    v_close) — one row per (resolution, time bucket), all resolutions
+    v_close) over ``events``' (event_id, ts, value) — one row per
+    (resolution in ``RESOLUTIONS``, time bucket), all resolutions
     from one scan + one shuffle (GROUPING SETS over per-resolution
     truncations). ``bucket_start`` is a formatted string (engine-
     neutral hashing, module convention); ``v_sum`` rounds at 2 dp on a
     decimal cast so partial/final merge order cannot shift the hash."""
-    if not resolutions:
-        raise ValueError("need at least one resolution")
     bucketed = events.select(
-        F.col(id_col).alias("__id"),
-        F.col(value_col).alias("__v"),
-        *[
-            F.date_trunc(r, F.col(ts_col)).alias(f"__b_{r}")
-            for r in resolutions
-        ],
+        F.col("event_id").alias("__id"),
+        F.col("value").alias("__v"),
+        *[F.date_trunc(r, F.col("ts")).alias(f"__b_{r}") for r in RESOLUTIONS],
     )
-    cols = [f"__b_{r}" for r in resolutions]
+    cols = [f"__b_{r}" for r in RESOLUTIONS]
     # grouping() is only resolvable inside the grouping-sets aggregate,
     # so the resolution tag is computed there: each grouping set keeps
     # exactly one bucket column, so "grouping(col) == 0" identifies it.
     resolution = None
-    for r in resolutions:
+    for r in RESOLUTIONS:
         cond = F.grouping(f"__b_{r}") == 0
         resolution = F.when(cond, r) if resolution is None else resolution.when(cond, r)
     agg = bucketed.groupingSets([[c] for c in cols], *[F.col(c) for c in cols]).agg(

@@ -127,21 +127,18 @@ def append_pair_dot(
     return df.mapInArrow(kernel, schema)
 
 
-def append_pair_dot_i64(
-    df: DataFrame, va: str, vb: str, out: str, drop: tuple[str, ...] | None = None
-) -> DataFrame:
+def append_pair_dot_i64(df: DataFrame, va: str, vb: str, out: str) -> DataFrame:
     """Integer twin of ``append_pair_dot``: ``out`` (bigint) =
-    sum_j va[j]·vb[j] in int64. Integer addition is EXACT, so — unlike
-    the double fold — summation order cannot matter and a plain
-    vectorized row-sum is bit-identical to the JVM's
+    sum_j va[j]·vb[j] in int64, dropping both vector columns. Integer
+    addition is EXACT, so — unlike the double fold — summation order
+    cannot matter and a plain vectorized row-sum is bit-identical to
+    the JVM's
     ``aggregate(zip_with(a, b, (x, y) -> CAST(x AS BIGINT) * y), 0L,
     ...)`` fold (no overflow by the callers' construction:
     dim·127² ≪ 2⁶³)."""
     from pyspark.sql.types import LongType
 
-    if drop is None:
-        drop = (va, vb)
-    keep = [f for f in df.schema.fields if f.name not in drop]
+    keep = [f for f in df.schema.fields if f.name not in (va, vb)]
     schema = StructType(keep + [StructField(out, LongType(), False)])
     keep_names = [f.name for f in keep]
 
@@ -163,10 +160,9 @@ def append_plane_dots(
     v: str,
     planes: list[list[float]],
     out: str,
-    drop_v: bool = True,
 ) -> DataFrame:
-    """Append ``out`` = array<double> of strict-left-fold dots of the
-    vector column ``v`` against each LITERAL plane (the q71 SRP
+    """Replace the vector column ``v`` with ``out`` = array<double> of
+    strict-left-fold dots of ``v`` against each LITERAL plane (the q71 SRP
     signature pass: 60 planes × 64 dims per vector was the leg's
     dominant interpreted-HOF cost). The planes ship as a kernel
     closure constant — they were plan literals before, so nothing new
@@ -181,7 +177,7 @@ def append_plane_dots(
     from pyspark.sql.types import ArrayType
 
     plane_rows = tuple(tuple(float(x) for x in row) for row in planes)
-    keep = [f for f in df.schema.fields if not (drop_v and f.name == v)]
+    keep = [f for f in df.schema.fields if f.name != v]
     schema = StructType(
         keep + [StructField(out, ArrayType(DoubleType(), False), False)]
     )

@@ -108,17 +108,15 @@ def minmax_bucket(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
     return F.least(F.floor(frac * (1 << bits)).cast("bigint"), top.cast("bigint"))
 
 
-def zorder_layout(
-    df: DataFrame, *cols: str, bits: int = 12, z_col: str = "__z"
-) -> DataFrame:
-    """``df`` + a Morton key column over N columns (2-column callers
+def zorder_layout(df: DataFrame, *cols: str, bits: int = 12) -> DataFrame:
+    """``df`` + a Morton key column ``__z`` over N columns (2-column callers
     unchanged: ``zorder_layout(df, "a", "b")``). The global min/max
     come from ONE scalar aggregate broadcast back — a 1-row frame,
     never a global window. For N >= 3 the per-dimension bit budget
     shrinks to keep the key in 63 bits (the resolution each dimension
     loses is the standard Z-order trade as dimensions grow)."""
-    if z_col in df.columns:
-        raise ValueError(f"input already has a {z_col!r} column")
+    if "__z" in df.columns:
+        raise ValueError("input already has a '__z' column")
     if len(cols) < 2:
         raise ValueError("zorder_layout needs at least 2 columns")
     bits = min(bits, 63 // len(cols))
@@ -133,7 +131,7 @@ def zorder_layout(
     drop = [f"__{m}{i}" for i in range(len(cols)) for m in ("min", "max")]
     return (
         df.crossJoin(F.broadcast(bounds))
-        .withColumn(z_col, z_value_n(bucketed, bits))
+        .withColumn("__z", z_value_n(bucketed, bits))
         .drop(*drop)
     )
 

@@ -59,7 +59,6 @@ from etfconstituentextractor_spark.plans.llm_dedup import lsh_pairs
 def curate(
     docs: DataFrame,
     min_tokens: int = 15,
-    min_stop_ratio: float = 0.02,
     eval_docs: Optional[DataFrame] = None,
     contaminated_at: int = 8,
     mix_rates: Optional[Mapping[str, float]] = None,
@@ -69,7 +68,8 @@ def curate(
     its quality features, gate flags, and a single ``verdict``.
 
     Survivors are ``verdict = 'kept'``; everything else names the
-    first gate that dropped it. Optional gates engage when their
+    first gate that dropped it. The quality gate keeps docs of at
+    least ``min_tokens`` tokens, 2% or more of them stopwords. Optional gates engage when their
     inputs are provided: ``eval_docs`` (a (doc_id, text) benchmark
     frame) enables decontamination, ``mix_rates`` (stratum → keep
     rate over ``strat_col``) enables mixture sampling. Expensive
@@ -90,7 +90,7 @@ def curate(
     ).withColumn(
         "quality_pass",
         (F.col("n_tokens") >= min_tokens)
-        & (F.col("stop_hits") / F.col("n_tokens") >= min_stop_ratio),
+        & (F.col("stop_hits") / F.col("n_tokens") >= 0.02),
     )
 
     if eval_docs is not None:

@@ -837,11 +837,10 @@ _Q63_MAX_BLOCK = 2000
 def ngram_jaccard_pairs(
     docs: DataFrame,
     max_block: int = _Q63_MAX_BLOCK,
-    threshold: float = 0.3,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, skipped_blocks) for blocked exact n-gram Jaccard.
 
-    pairs: (doc_a, doc_b, jaccard_sim >= threshold) for all pairs
+    pairs: (doc_a, doc_b, jaccard_sim >= 0.3) for all pairs
     within (source, len_bucket) blocks of size <= max_block.
     skipped_blocks: (source, len_bucket, block_n, skipped_pairs) — the
     work the cap refused; at scale this is the frame a pipeline logs
@@ -902,7 +901,7 @@ def ngram_jaccard_pairs(
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .withColumn("jaccard_sim", sim)
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= 0.3)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -445,14 +445,12 @@ def q70_similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fpts = fixed_point_subvectors(emb, m=_PQFP_M, dsub=_PQFP_DSUB, scale=_PQFP_SCALE)
-    # mode="sync" (default): each Lloyd round is one distributed job
-    # whose M*K-row count/sum result syncs to the driver and re-enters
-    # as a literal LocalRelation — constant plan shape, no lineage
-    # growth, no truncate-vs-lazy tuning knob, and the identical
-    # codebook at any data size (the MLlib-KMeans discipline; measured
-    # ~3x faster here than either the per-round-checkpoint or the
-    # fully-lazy 2^iters-plan alternatives, both of which this leg
-    # cycled through in rounds 6-7). pqfp_train persists fcand for the
+    # each Lloyd round is one distributed job whose M*K-row count/sum
+    # result syncs to the driver and re-enters as a literal
+    # LocalRelation — constant plan shape, no lineage growth, and the
+    # identical codebook at any data size (the MLlib-KMeans
+    # discipline; measured ~3x faster here than either a
+    # per-round-checkpoint or a fully-lazy 2^iters-plan loop). pqfp_train persists fcand for the
     # duration of its rounds; encode below re-derives it from the
     # parquet scan — a cheap re-read, the repo's re-scan-beats-
     # checkpoint doctrine. fpts inherits the query-level hash

@@ -199,7 +199,7 @@ def q80_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-executor (MEMORY_AND_DISK), released when the plan is GC'd.
     d = (
         fanout(load(spark, sf_dir, "documents"))
-        .withColumn("tk", F.expr(nonempty_tokens("text")))
+        .withColumn("tk", F.expr(nonempty_tokens()))
         .localCheckpoint()
     )
     rep = intra_doc_repetition(d, tokens_col="tk")

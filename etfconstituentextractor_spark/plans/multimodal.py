@@ -46,14 +46,14 @@ def _decode_meta(payload: bytes) -> tuple[int, int]:
     return len(payload) % 640 + 1, len(payload) % 480 + 1
 
 
-def decode_blobs(blobs: DataFrame, blob_col: str = "blob") -> DataFrame:
+def decode_blobs(blobs: DataFrame) -> DataFrame:
     """Binary → typed metadata via mapInPandas (Arrow batches carry the
     raw bytes; one Python call per ~10k-row batch, not per row)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 b = bytes(blob)
                 if b[:4] != _MAGIC:
                     out.append((doc_id, "bad_magic", None, None, None, None))
@@ -75,7 +75,7 @@ def decode_blobs(blobs: DataFrame, blob_col: str = "blob") -> DataFrame:
                 columns=["doc_id", "error", "payload_len", "payload_md5", "width", "height"],
             )
 
-    return blobs.select("doc_id", blob_col).mapInPandas(gen, schema=DECODE_SCHEMA)
+    return blobs.select("doc_id", "blob").mapInPandas(gen, schema=DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

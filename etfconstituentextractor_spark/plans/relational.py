@@ -65,6 +65,12 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg(dec_rate("l_discount"), "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
+        # The aggregate has at most |l_returnflag| x |l_linestatus| rows,
+        # and its hash-partitioned reducers already hold at most that
+        # many non-empty groups, so one task sorting them is scale-safe;
+        # a plain orderBy spends a sampling job and a range exchange on
+        # these few rows.
+        .coalesce(1)
         .orderBy("l_returnflag", "l_linestatus")
     )
 

@@ -44,7 +44,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -55,6 +54,8 @@ from pyspark.sql.types import (
 )
 
 _CRLF = b"\r\n"
+#: the WARC-Date every written record carries (output is deterministic)
+_WARC_DATE = "2024-01-01T00:00:00Z"
 
 #: Schema of the parsed record stream (one row per WARC record, plus
 #: one error row per unparseable region).
@@ -87,17 +88,16 @@ def build_record(
     payload: bytes,
     *,
     record_id: str,
-    date: str = "2024-01-01T00:00:00Z",
     target_uri: str | None = None,
     content_type: str = "application/octet-stream",
-    version: str = "1.1",
 ) -> bytes:
-    """Serialize ONE spec-shaped WARC record (uncompressed)."""
+    """Serialize ONE spec-shaped WARC/1.1 record (uncompressed), dated
+    ``_WARC_DATE``."""
     lines = [
-        f"WARC/{version}".encode(),
+        b"WARC/1.1",
         f"WARC-Type: {warc_type}".encode(),
         f"WARC-Record-ID: <urn:uuid:{record_id}>".encode(),
-        f"WARC-Date: {date}".encode(),
+        f"WARC-Date: {_WARC_DATE}".encode(),
     ]
     if target_uri is not None:
         lines.append(f"WARC-Target-URI: {target_uri}".encode())
@@ -111,16 +111,14 @@ def build_http_response_record(
     html: bytes,
     *,
     record_id: str,
-    date: str = "2024-01-01T00:00:00Z",
-    status: int = 200,
-    mime: str = "text/html; charset=utf-8",
 ) -> bytes:
-    """A ``response`` record whose payload is a captured HTTP
-    response — the record type crawl pipelines actually consume."""
+    """A ``response`` record whose payload is a captured ``200 OK``
+    HTML response — the record type crawl pipelines actually
+    consume."""
     http = (
-        f"HTTP/1.1 {status} OK".encode()
+        b"HTTP/1.1 200 OK"
         + _CRLF
-        + f"Content-Type: {mime}".encode()
+        + b"Content-Type: text/html; charset=utf-8"
         + _CRLF
         + f"Content-Length: {len(html)}".encode()
         + _CRLF
@@ -131,7 +129,6 @@ def build_http_response_record(
         "response",
         http,
         record_id=record_id,
-        date=date,
         target_uri=url,
         content_type="application/http;msgtype=response",
     )
@@ -335,14 +332,11 @@ def write_warc(
     df: DataFrame,
     out_dir: str,
     *,
-    url_col: str = "url",
-    html_col: str = "html",
-    date_col: str | None = None,
     n_files: int = 8,
 ) -> None:
-    """Distributed WARC sink: repartition, then each task writes one
-    ``part-NNNNN.warc.gz`` (leading ``warcinfo`` record + one gzip
-    member per response record). Record IDs derive from md5(url) so
+    """Distributed WARC sink over (url, html) rows: repartition, then
+    each task writes one ``part-NNNNN.warc.gz`` (leading ``warcinfo``
+    record + one gzip member per response record). Record IDs derive from md5(url) so
     output is deterministic for a deterministic input frame."""
     os.makedirs(out_dir, exist_ok=True)
     # overwrite semantics: clear prior part files so a re-run with a
@@ -350,11 +344,7 @@ def write_warc(
     for name in os.listdir(out_dir):
         if name.startswith("part-") and name.endswith(".warc.gz"):
             os.remove(os.path.join(out_dir, name))
-    cols = [F.col(url_col).alias("url"), F.col(html_col).alias("html")]
-    cols.append(
-        (F.col(date_col) if date_col else F.lit("2024-01-01T00:00:00Z")).alias("date")
-    )
-    slim = df.select(*cols)
+    slim = df.select("url", "html")
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -373,13 +363,10 @@ def write_warc(
         with open(os.path.join(out_dir, f"part-{pid:05d}.warc.gz"), "wb") as fh:
             fh.write(gzip_member(info))
             for pdf in batches:
-                for url, html, date in zip(pdf["url"], pdf["html"], pdf["date"]):
+                for url, html in zip(pdf["url"], pdf["html"]):
                     raw = html.encode() if isinstance(html, str) else bytes(html)
                     rec = build_http_response_record(
-                        url,
-                        raw,
-                        record_id=hashlib.md5(url.encode()).hexdigest(),
-                        date=str(date),
+                        url, raw, record_id=hashlib.md5(url.encode()).hexdigest()
                     )
                     fh.write(gzip_member(rec))
                     n += 1

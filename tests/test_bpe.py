@@ -7,6 +7,7 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.operators.bpe import END, encode_corpus, symbolize
 
@@ -92,8 +93,10 @@ def test_encode_corpus_drops_wordless_docs_and_guards_names(spark):
     df = spark.createDataFrame([(0, "a b"), (1, "")], "doc_id long, text string")
     out = encode_corpus(df, [("a", END)]).collect()
     assert {r.doc_id for r in out} == {0}
-    with pytest.raises(ValueError):
-        encode_corpus(df.withColumnRenamed("doc_id", "pos"), [], id_col="pos")
+    # input columns named like the internal word/pos/syms columns are
+    # never read, so they cannot collide
+    clash = df.withColumn("pos", F.lit(7)).withColumn("word", F.lit("x"))
+    assert encode_corpus(clash, [("a", END)]).collect() == out
 
 
 def test_encode_corpus_plan_broadcast_join_single_doc_shuffle(spark, iddocs):

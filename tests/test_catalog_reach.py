@@ -12,16 +12,15 @@ follows ``import`` / ``from ... import`` statements anywhere in the
 file, including those inside function bodies, without importing
 anything. Three levels are checked:
 
-- module: every engine module is in the closure, apart from the
-  ``OUTSIDE_CATALOG`` ones still kept;
+- module: every engine module is in the closure;
 - function: every public top-level function or class of a closure
   module is imported by (module, name) from another closure module, or
   used in its own module, apart from the ``NOT_CATALOG_FUNCS`` the
   harness and the tests keep; package ``__init__`` re-exports do not
   count;
-- parameter, for ``sources/snapshot_table.py``: each optional
-  parameter of its public functions is passed by some call in the
-  closure, apart from the ``TEST_TIER_PARAMS`` its tests alone set.
+- parameter: each optional parameter of those functions is passed by
+  some call in the closure, apart from the ``TEST_TIER_PARAMS`` the
+  tests alone set.
 """
 
 from __future__ import annotations
@@ -33,14 +32,6 @@ from etfconstituentextractor_spark.plans.registry import PLAN_MODULES
 
 PKG = "etfconstituentextractor_spark"
 PKG_DIR = Path(__file__).resolve().parents[1] / PKG
-
-#: engine modules no registered query reaches that the project still
-#: keeps; shrink-only — a module the catalog starts reaching, or that
-#: is deleted, must leave the set
-OUTSIDE_CATALOG = frozenset(
-    f"{PKG}.operators.{m}"
-    for m in ("vp8l",)
-)
 
 def _module_files() -> dict[str, Path]:
     """Dotted module name -> source file, for every module in the package."""
@@ -90,14 +81,11 @@ def _catalog_closure(mods: dict[str, Path]) -> set[str]:
 
 def test_every_engine_module_is_reachable_from_the_catalog():
     mods = _module_files()
-    unreached = set(mods) - _catalog_closure(mods)
-    orphans = sorted(unreached - OUTSIDE_CATALOG)
+    orphans = sorted(set(mods) - _catalog_closure(mods))
     assert not orphans, (
         f"{len(orphans)} engine module(s) no registered query reaches: "
         f"{orphans}; wire each into a hash-checked query or delete it"
     )
-    stale = sorted(OUTSIDE_CATALOG - unreached)
-    assert not stale, f"drop these from OUTSIDE_CATALOG: {stale}"
 
 
 #: public engine functions and classes the catalog does not reach but
@@ -213,13 +201,25 @@ def test_every_engine_function_is_reached_by_the_catalog():
     assert set(exported) == snapshot_public, sorted(set(exported) ^ snapshot_public)
 
 
-#: optional snapshot_table parameters only tests set; shrink-only, like
+#: optional engine parameters only tests set, each with the behaviour
+#: its tests check at a non-default value; shrink-only, like
 #: NOT_CATALOG_FUNCS — an entry the catalog starts passing, or that is
-#: deleted, must leave the set
+#: deleted, must leave the dict
 TEST_TIER_PARAMS = {
     "snapshot_merge.stats_cols": "merge-then-prune tests; q86 never prunes a merged table",
     "snapshot_read.merge_schema": "footer-merged reads of untracked schemas; catalog tables record one",
     "snapshot_stream_ingest.stats_cols": "prune-after-ingest tests; q15 reads its ingest table whole",
+    "cms_from_counts.d": "the CMS tests sweep (d, w): three-way agreement, d=0 rejected",
+    "cms_from_counts.w": "forced collisions at w=16, exact estimates at w=2^20",
+    "sql_cms_from_counts.d": "the DuckDB side of the (d, w) three-way agreement sweep",
+    "sql_cms_from_counts.w": "the DuckDB side of the (d, w) three-way agreement sweep",
+    "connected_components.max_iter": "max_iter=2 raises on a long chain instead of returning wrong labels",
+    "curate.min_tokens": "the curate fuzz test's short random docs reach every later gate at 5",
+    "embedding_cosine_pairs.cap": "the block cap trips on a 6-row label at cap=5",
+    "kmv_distinct.k": "the KMV property test sweeps k=2..12 so small inputs reach the estimate",
+    "ngram_jaccard_pairs.max_block": "the block cap trips on an 8-doc block at max_block=5",
+    "psl_rules.path": "rule-cache eviction over distinct rule files; deployments load a fresher list",
+    "write_zordered.block_size": "small row groups give a test-scale table stats to prune on",
 }
 
 
@@ -236,7 +236,7 @@ def _optional_params(fn: ast.FunctionDef) -> tuple[list[str], set[str]]:
 def _passed_params(path: Path, funcs: dict[str, list[str]]) -> set[str]:
     """``func.param`` for every parameter a call in ``path`` gives to
     one of ``funcs`` ({name: positional parameter names}), by keyword
-    or by position."""
+    or by position; calls are matched by bare name."""
     passed: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if not isinstance(node, ast.Call):
@@ -254,29 +254,39 @@ def _passed_params(path: Path, funcs: dict[str, list[str]]) -> set[str]:
     return passed
 
 
-def test_every_snapshot_table_option_is_passed_by_the_catalog():
-    """Parameter-level reach for ``sources/snapshot_table.py``: every
-    optional parameter of a public function is passed, by keyword or
-    by position, by a call in a module the catalog reaches (calls
-    inside the module itself do not count), or is named in
-    ``TEST_TIER_PARAMS``."""
+def test_every_engine_option_is_passed_by_the_catalog():
+    """Parameter-level reach for every module the catalog imports: each
+    optional parameter of a public top-level function (``@query`` ones
+    and ``NOT_CATALOG_FUNCS`` apart) is passed, by keyword or by
+    position, by a call in some closure module, its own included, or is
+    named in ``TEST_TIER_PARAMS``. Calls match by bare name, so public
+    function names must be unique across the closure."""
     mods = _module_files()
-    name = f"{PKG}.sources.snapshot_table"
-    tree = ast.parse(mods[name].read_text())
-    funcs = {
-        n.name: _optional_params(n)
-        for n in tree.body
-        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
-    }
+    closure = sorted(_catalog_closure(mods))
+    funcs: dict[str, tuple[list[str], set[str]]] = {}
+    owners: dict[str, list[str]] = {}
+    for m in closure:
+        if mods[m].name == "__init__.py":
+            continue
+        tree = ast.parse(mods[m].read_text(), str(mods[m]))
+        public = _public_defs(tree)
+        for n in tree.body:
+            if (
+                isinstance(n, ast.FunctionDef)
+                and n.name in public
+                and f"{m}.{n.name}" not in NOT_CATALOG_FUNCS
+            ):
+                owners.setdefault(n.name, []).append(m)
+                funcs[n.name] = _optional_params(n)
+    clashes = {name: ms for name, ms in owners.items() if len(ms) > 1}
+    assert not clashes, f"public function names must be unique: {clashes}"
     optional = {f"{fn}.{p}" for fn, (_, opts) in funcs.items() for p in opts}
     positional = {fn: pos for fn, (pos, _) in funcs.items()}
-    passed = set().union(
-        *(_passed_params(mods[m], positional) for m in _catalog_closure(mods) if m != name)
-    )
+    passed = set().union(*(_passed_params(mods[m], positional) for m in closure))
     unpassed = sorted(optional - passed - set(TEST_TIER_PARAMS))
     assert not unpassed, (
-        f"no registered query passes {unpassed}; delete each option or "
-        "pass it from a hash-checked query"
+        f"no registered query passes {len(unpassed)} option(s): {unpassed}; "
+        "delete each option or pass it from a hash-checked query"
     )
     stale = sorted(set(TEST_TIER_PARAMS) - (optional - passed))
     assert not stale, f"drop these from TEST_TIER_PARAMS: {stale}"

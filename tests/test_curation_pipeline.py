@@ -269,7 +269,6 @@ def test_curate_matches_python_reference(spark, data, n_docs, rate):
         for r in curate(
             sdf.withColumn("lang", F.lit("x")),
             min_tokens=5,
-            min_stop_ratio=0.02,
             eval_docs=edf,
             contaminated_at=3,
             mix_rates={"x": rate},

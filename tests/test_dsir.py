@@ -1,5 +1,5 @@
 """DSIR importance scoring (operators/dsir.py): pure-Python replay,
-selection direction, and guard rails."""
+selection direction, and plan shape."""
 
 from __future__ import annotations
 
@@ -10,9 +10,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from etfconstituentextractor_spark.operators.dsir import N_BUCKETS as _B
 from etfconstituentextractor_spark.operators.dsir import dsir_scores
-
-_B = 16  # few buckets so collisions are exercised
 
 
 def _bucket(tok: str) -> int:
@@ -59,7 +58,7 @@ def test_matches_python_replay(spark):
     )
     got = {
         r["doc_id"]: r["dsir_score"]
-        for r in dsir_scores(df, F.col("t"), n_buckets=_B).collect()
+        for r in dsir_scores(df, F.col("t")).collect()
     }
     want = _py_replay(_DOCS)
     assert got == pytest.approx(want, abs=1e-9)
@@ -72,23 +71,17 @@ def test_target_like_scores_higher(spark):
     )
     got = {
         r["doc_id"]: r["dsir_score"]
-        for r in dsir_scores(df, F.col("t"), n_buckets=_B).collect()
+        for r in dsir_scores(df, F.col("t")).collect()
     }
     # the doc made of target vocabulary must outrank the disjoint one
     assert got[3] > got[4]
     assert got[5] > got[4]
 
 
-def test_rejects_tiny_bucket_count(spark):
-    df = spark.createDataFrame(pd.DataFrame(_DOCS, columns=["doc_id", "text", "t"]))
-    with pytest.raises(ValueError, match="n_buckets"):
-        dsir_scores(df, F.col("t"), n_buckets=1)
-
-
 def test_no_python_stages(spark):
     df = spark.createDataFrame(pd.DataFrame(_DOCS, columns=["doc_id", "text", "t"]))
     plan = (
-        dsir_scores(df, F.col("t"), n_buckets=_B)
+        dsir_scores(df, F.col("t"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

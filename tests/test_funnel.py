@@ -67,14 +67,12 @@ def test_funnel_micro(spark):
 def test_funnel_sql_twin_matches():
     con = duckdb.connect()
     con.register(
-        "events_py",
+        "events",
         pd.DataFrame(ROWS, columns=["user_id", "ts", "event_type"]),
     )
     got = {
         r[0]: (r[1], r[-1])
-        for r in con.execute(
-            sql_funnel(("view", "click", "purchase"), "events_py")
-        ).fetchall()
+        for r in con.execute(sql_funnel(("view", "click", "purchase"))).fetchall()
     }
     assert got == WANT
 

@@ -505,7 +505,7 @@ def test_ngram_jaccard_block_cap(spark):
     docs = spark.createDataFrame(
         rows, "doc_id bigint, source string, n_chars bigint, text string"
     )
-    pairs, skipped = ngram_jaccard_pairs(docs, max_block=5, threshold=0.3)
+    pairs, skipped = ngram_jaccard_pairs(docs, max_block=5)
 
     got_pairs = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     assert got_pairs == {(100, 101)}, got_pairs  # nothing from the big block
@@ -1258,8 +1258,7 @@ def test_epoch_shard_shuffle(spark):
 def test_samplers_reject_reserved_columns(spark):
     """Every sampler materializes internal/output columns via
     withColumn, which would silently OVERWRITE a caller column of the
-    same name — so colliding inputs must be rejected up front (the
-    encode_corpus reserved-name contract)."""
+    same name — so colliding inputs must be rejected up front."""
     import pytest as _pytest
 
     from etfconstituentextractor_spark.operators.sampling import (
@@ -1423,7 +1422,6 @@ def test_intra_doc_repetition(spark):
     DuckDB SQL twin on hand-built docs covering: no repetition,
     adjacent self-overlap, disjoint repeats, and short docs."""
     import duckdb
-    import pytest as _pytest
 
     from etfconstituentextractor_spark.operators.substring_dedup import (
         intra_doc_repetition,
@@ -1471,6 +1469,3 @@ def test_intra_doc_repetition(spark):
         ).fetchall()
     }
     assert oracle == want
-
-    with _pytest.raises(ValueError, match="n >= 2"):
-        intra_doc_repetition(df, n=1)

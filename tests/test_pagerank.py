@@ -13,11 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from etfconstituentextractor_spark.operators.pagerank import (
+    SCALE,
     pagerank_fixed_point,
     sql_pagerank_ctes,
 )
 
-SCALE = 10**12
 ITERS = 4
 
 # a star (0 hub, 1-3 spokes) bridged to a path 4-5; symmetric edges
@@ -44,7 +44,7 @@ def ranks(spark):
     edges = spark.createDataFrame(
         pd.DataFrame(_SYM, columns=["src", "dst"]).astype("int64")
     )
-    got = pagerank_fixed_point(edges, iters=ITERS, scale=SCALE)
+    got = pagerank_fixed_point(edges, iters=ITERS)
     return {r["node"]: r["rank"] for r in got.collect()}
 
 
@@ -61,7 +61,7 @@ def test_matches_duckdb_unrolled_cte_replay(ranks):
     )
     sql = (
         "WITH "
-        + sql_pagerank_ctes("sym", iters=ITERS, scale=SCALE)
+        + sql_pagerank_ctes("sym", iters=ITERS)
         + f" SELECT node, rank FROM pr_r{ITERS} ORDER BY node"
     )
     got = dict(con.execute(sql).fetchall())

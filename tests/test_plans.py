@@ -246,8 +246,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
 
 def test_salted_join_null_salt_and_left_join(spark):
     """A NULL salt_from value must not drop the row (it coalesces to
-    salt 0), and left joins preserve unmatched probe rows exactly once."""
-    import pytest
+    salt 0)."""
     from etfconstituentextractor_spark.operators.skew import salted_join
     from pyspark.sql import functions as F
 
@@ -260,14 +259,6 @@ def test_salted_join_null_salt_and_left_join(spark):
     assert sorted(((r.k, r.salt_src, r.v) for r in inner.collect()), key=str) == sorted(
         [(1, None, "a"), (1, 7, "a"), (2, 3, "b")], key=str
     )
-    left = salted_join(probe, build, ["k"], salt_from=F.col("salt_src"), factor=4, how="left")
-    assert sorted(((r.k, r.v) for r in left.collect()), key=str) == sorted(
-        [(1, "a"), (1, "a"), (2, "b"), (3, None)], key=str
-    )
-    # build-replicating join types are rejected, not silently wrong
-    for how in ("right", "full", "outer"):
-        with pytest.raises(ValueError, match="probe-preserving"):
-            salted_join(probe, build, ["k"], salt_from=F.col("salt_src"), factor=4, how=how)
 
 
 def test_connected_components_raises_on_truncation(spark):
@@ -747,26 +738,6 @@ def test_dynamic_partition_pruning_fires(spark, sf_dir, tmp_path):
     assert got.n == want[0] and round(got.s, 2) == round(want[1], 2)
 
 
-def test_bpe_encode_shuffle_join_fallback_matches_broadcast(spark):
-    """encode_corpus(broadcast_dict=False) — the unbroadcastable-
-    vocabulary fallback — must produce identical pieces via a shuffle
-    join."""
-    from etfconstituentextractor_spark.operators.bpe import encode_corpus
-
-    docs = spark.createDataFrame(
-        [(1, "the fox"), (2, "the the fox"), (3, "")],
-        "doc_id bigint, text string",
-    )
-    merges = [("t", "h"), ("th", "e"), ("the", "</w>")]
-    a = {r.doc_id: r.pieces for r in encode_corpus(docs, merges).collect()}
-    b = {
-        r.doc_id: r.pieces
-        for r in encode_corpus(docs, merges, broadcast_dict=False).collect()
-    }
-    assert a == b and 3 not in a
-    assert a[1][0] == "the</w>"
-
-
 def test_catalog_wide_plan_hygiene(spark, sf_dir):
     """Sweep EVERY registered batch query's physical plan for the two
     red flags that silently kill a 100 TB run: an unbroadcast
@@ -818,6 +789,16 @@ def test_q27_single_asof_pass(spark, sf_dir):
     assert nodes.count("Exchange") == 1, plan
     for absent in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastExchange"):
         assert absent not in nodes, plan
+
+
+def test_q01_sorts_without_range_exchange(spark, sf_dir):
+    """q01's final sort runs in one task over the coalesced aggregate:
+    no range exchange (and no sampling job for its bounds), only the
+    aggregate's hash exchange."""
+    plan = _plan(spark, sf_dir, "q01_pricing_summary")
+    assert "rangepartitioning" not in plan, plan
+    nodes = [ln.lstrip(" :+-").split(" ", 1)[0] for ln in plan.splitlines()]
+    assert nodes.count("Exchange") == 1, plan
 
 
 def test_q44_rank_trio_adds_no_exchange(spark, sf_dir):

@@ -32,7 +32,7 @@ def pq_setup(spark, sf_dir):
 
 def test_pq_encode_matches_python_oracle(spark, sf_dir, pq_setup):
     emb, cb, rows = pq_setup
-    sample = _hash_order_sample(emb, "vec_id", "embedding", SAMPLE_N)
+    sample = _hash_order_sample(emb, SAMPLE_N)
     vectors = [(r["vec_id"], list(r["embedding"])) for r in rows]
     books_py, codes_py = py_pq_oracle(sample, vectors, M, KSUB, iters=ITERS)
     # training: numpy vs scalar replay agree to fp noise (np.mean is

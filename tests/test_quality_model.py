@@ -20,7 +20,6 @@ W = make_weights(64)
 
 def test_weights_deterministic_and_dyadic():
     assert make_weights(64) == W
-    assert make_weights(64, salt="other") != W
     # dyadic rationals with |w| <= 1/4: exact-sum guarantee
     assert all(abs(w) <= 0.25 and (w * 256) == int(w * 256) for w in W)
 

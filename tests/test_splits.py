@@ -58,8 +58,6 @@ def test_split_null_group_raises(spark):
 def test_split_validation():
     import pandas as pd
 
-    with pytest.raises(ValueError, match="fractions"):
-        leakage_safe_split(None, "g", fractions=(80, 10, 5))
     with pytest.raises(ValueError, match="quotes"):
         split_bucket(F.lit(1), "bad'salt")
     with pytest.raises(ValueError, match="quotes"):

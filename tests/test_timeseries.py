@@ -66,8 +66,3 @@ def test_time_rollup_single_scan_single_shuffle(spark, sf_dir):
     assert "Expand" in plan
     ensure = [l for l in plan.splitlines() if "ENSURE_REQUIREMENTS" in l]
     assert len(ensure) == 1, ensure
-
-
-def test_time_rollup_guards(spark, sf_dir):
-    with pytest.raises(ValueError):
-        time_rollup(load(spark, sf_dir, "events"), resolutions=())

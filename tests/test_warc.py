@@ -35,9 +35,7 @@ def test_record_serialization_is_spec_shaped():
 
 
 def test_parse_roundtrip_plain_and_gzip():
-    r1 = build_http_response_record(
-        "https://x.test/a", b"<html>A</html>", record_id="r1", status=200
-    )
+    r1 = build_http_response_record("https://x.test/a", b"<html>A</html>", record_id="r1")
     r2 = build_record("warcinfo", b"software: t\r\n", record_id="r2",
                       content_type="application/warc-fields")
     for blob in (r2 + r1, gzip_member(r2) + gzip_member(r1)):
